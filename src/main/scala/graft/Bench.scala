@@ -40,23 +40,8 @@ import graft.streaming.EventsStream
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.localHarness(SparkSession.builder()
-        .master(s"local[$cpus]")
-        // byte-derived, NOT cpus — see EngineConf.harnessShufflePartitions
-        .config("spark.sql.shuffle.partitions",
-          EngineConf.harnessShufflePartitions(sfDir))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The deliberately-global post-aggregation windows (q19 cumsum, q90
-    // vocab slope — documented bounded-row plans) each trip WindowExec's
-    // "No Partition Defined" warning; at 2 iterations × 90 queries that
-    // floods the driver-captured tail. Expected, so squelch that one
-    // logger rather than chase it every round.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = EngineConf.localCpus
+    val spark = EngineConf.localSession(Some(sfDir))
     // JVM/codegen warmup outside the timed region: the first query
     // otherwise absorbs several seconds of JIT + reader initialization
     // that a long-running cluster never sees per-query.

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The engine's shuffle-coalescing posture, shared by every harness
-  * session (Bench, Verify, the tools/ loops) so a timing measured in one
-  * is the timing the others see.
+/** The engine's shuffle-coalescing posture, and the ONE place the local
+  * harness sessions are made: Bench, Verify and every `graft.tools` main
+  * open their session through [[localSession]], so a timing measured in
+  * one is the timing the others see. (`perfbench/` builds its own
+  * session from [[localHarness]] and [[harnessShufflePartitions]].)
   *
   * Three AQE settings, all scale-adaptive BY MECHANISM (they read actual
   * shuffle byte sizes at runtime, so behavior derives from data volume,
@@ -23,8 +25,8 @@ import org.apache.spark.sql.SparkSession
   *    chunking at TB-scale shuffles) so a production deployment that
   *    builds a session through [[coalescing]] gets the 100 TB-safe value
   *    with no env set. The LOCAL harnesses (Bench/Verify/tools — the
-  *    sf0.1 single-box regime) go through [[localHarness]], which
-  *    defaults the same knob to 1m: at KB-scale shuffles 1 MB keeps tiny
+  *    sf0.1 single-box regime) get [[localHarness]]'s knobs, which
+  *    default the same knob to 1m: at KB-scale shuffles 1 MB keeps tiny
   *    stages at 1 task while leaving MB-scale CPU-dense stages (exact
   *    quantiles, array set-ops) 8-32-wide, which 64m would collapse to a
   *    single task at this corpus size — measured +0.9..+1.6 s each on
@@ -44,21 +46,74 @@ import org.apache.spark.sql.SparkSession
 object EngineConf {
   /** Production posture: 64m advisory (the 100 TB-safe code default). */
   def coalescing(b: SparkSession.Builder,
-                 advisoryDefault: String = "64m"): SparkSession.Builder = b
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", advisoryDefault))
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                 advisoryDefault: String = "64m"): SparkSession.Builder =
+    withConf(b, coalescingConf(advisoryDefault))
+
+  private def coalescingConf(advisoryDefault: String): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", advisoryDefault),
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
       sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPLAN", "true"))
 
-  /** The single-box harness posture (Bench/Verify/tools): identical knobs,
-    * 1m advisory default — the measured-right target for this fixture's
-    * KB-scale shuffles (see the scaladoc above). Every harness session
-    * must go through ONE of these two entry points so a timing measured
-    * in one tool is the timing the others see. */
+  private def withConf(b: SparkSession.Builder,
+                       conf: Seq[(String, String)]): SparkSession.Builder =
+    conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** The single-box harness posture: identical knobs, 1m advisory
+    * default — the measured-right target for this fixture's KB-scale
+    * shuffles (see the scaladoc above). [[localSession]] applies it. */
   def localHarness(b: SparkSession.Builder): SparkSession.Builder =
-    coalescing(b, advisoryDefault = "1m")
+    withConf(b, coalescingConf("1m"))
+
+  /** `local[N]` thread count of every harness session:
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The full conf of a [[localSession]], in the order it is applied:
+    * master, the [[localHarness]] AQE knobs, the shuffle width, UTC, no
+    * UI, the local-mode liveness timeouts, then `extra` (which wins).
+    *
+    * Width: a caller that reads `inputDir` as-is gets the byte-derived
+    * [[harnessShufflePartitions]]; a caller that generates or inflates
+    * its inputs passes `None` and keeps Spark's default width, which
+    * AQE coalesces by measured bytes (`SPARK_GRAFT_SHUFFLE_PARTITIONS`
+    * still overrides). Liveness: a >120 s full-GC pause under a 10M-row
+    * stage trips the default heartbeat timeout, and in local mode
+    * "removing" the executor deregisters its BlockManager, whose
+    * shuffle dirs are then cleaned under running tasks — a local JVM
+    * has no liveness concern a heartbeat protects. */
+  def localPosture(inputDir: Option[String],
+                   extra: Map[String, String] = Map.empty): Seq[(String, String)] = {
+    val width = inputDir.map(harnessShufflePartitions)
+      .orElse(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
+    val base = Seq("spark.master" -> s"local[$localCpus]") ++ coalescingConf("1m") ++
+      width.map("spark.sql.shuffle.partitions" -> _) ++ Seq(
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.ui.enabled" -> "false",
+        "spark.network.timeout" -> "600s",
+        "spark.executor.heartbeatInterval" -> "60s")
+    base.filterNot(kv => extra.contains(kv._1)) ++ extra.toSeq.sortBy(_._1)
+  }
+
+  /** The local harness session: [[localPosture]]'s conf, log level
+    * WARN, the WindowExec "No Partition Defined" warning squelched (the
+    * deliberately-global post-aggregation windows — q19 cumsum, q90
+    * vocab slope — trip it on every run), and the effective posture
+    * printed once, as one JSON line on stderr. */
+  def localSession(inputDir: Option[String],
+                   extra: Map[String, String] = Map.empty): SparkSession = {
+    val posture = localPosture(inputDir, extra)
+    val spark = withConf(SparkSession.builder(), posture).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    System.err.println(posture
+      .map { case (k, v) => s""""$k":"$v"""" }.mkString("""{"posture":{""", ",", "}}"))
+    spark
+  }
 
   /** Initial `spark.sql.shuffle.partitions` for a harness session,
     * derived from the INPUT DIRECTORY's bytes instead of the core count
@@ -75,7 +130,10 @@ object EngineConf {
     * the core count; a production deployment sizes its own conf
     * (SPARK_GRAFT_SHUFFLE_PARTITIONS overrides, or set
     * spark.sql.shuffle.partitions directly — the engine's operators
-    * never touch this knob, only the local harnesses do). */
+    * never touch this knob, only the local harnesses do;
+    * HarnessFenceSpec holds that fence: the [2, 4096] clamp and 2 MB
+    * target are single-box rules that would give 25 GB partitions at
+    * 100 TB). */
   def harnessShufflePartitions(inputDir: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", {
       val dir = new java.io.File(inputDir)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,15 +13,7 @@ object Verify {
     }
     def selected(name: String): Boolean =
       only.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.localHarness(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions",
-          EngineConf.harnessShufflePartitions(sfDir))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.localSession(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD in the artifact, not just stderr: in round 7
     // ten throwing queries were simply absent from the correctness JSON,

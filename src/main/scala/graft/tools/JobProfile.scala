@@ -1,91 +1,55 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-/** Profile ONE registry query's execution shape (driver-side tooling):
+/** Time and profile registry queries:
   *
-  *   runMain graft.tools.JobProfile <query_name> [sfDir] [reps]
+  *   runMain graft.tools.JobProfile <name>[,<name>...] [sfDir] [reps]
   *
-  * For each rep (noop sink, cache cleared first — the Bench protocol)
-  * prints wall seconds, Spark job count, stage count, task count, summed
-  * task time, and summed executor CPU time. The gap between wall time
-  * and sum(task_time)/cores is driver/scheduling/barrier overhead —
-  * guide §1's "decide whether the time is compute, shuffle, or
-  * scheduler" without the UI (spark.ui.enabled is off in the bench).
+  * Comma-separate names to profile a subset in ONE JVM (the fast loop
+  * for conf A/Bs — JVM spin-up would otherwise dominate). Reps
+  * interleave across the set like Bench passes: each rep clears the
+  * cache and runs the query into the noop sink, printing one
+  * [[RunMetrics]] line (wall, jobs, stages, tasks, executor run / CPU /
+  * GC / ser / other time, shuffle, spill). The gap between wall and
+  * run_s / cores is driver, scheduling and barrier overhead — "is the
+  * time compute, shuffle or scheduler" without the Spark UI, which the
+  * harness disables. Rep 1 is cold; one line per query then gives the
+  * min over the warm reps. Last, each query runs once more to print its
+  * executed (final adaptive) plan with generate / reused-exchange /
+  * exchange counts — the plan-iteration loop: run, read the exchanges,
+  * adjust. Caveat: each InMemoryTableScan re-prints its cached subtree,
+  * so node counts over the text overstate what actually runs. Extra
+  * Spark confs come in via SPARK_GRAFT_EXTRA_JAVA_OPTS -D passthrough
+  * (build.sbt).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.EngineConf.localHarness(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions",
-          graft.EngineConf.harnessShufflePartitions(dir))
-        .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskMs = new AtomicLong(0L)
-    val cpuNs = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    val serMs = new AtomicLong(0L)
-    val schedMs = new AtomicLong(0L)
-    val shufReadB = new AtomicLong(0L)
-    val shufWriteB = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          serMs.addAndGet(m.resultSerializationTime + m.executorDeserializeTime)
-          schedMs.addAndGet(math.max(0L, t.taskInfo.finishTime - t.taskInfo.launchTime - m.executorRunTime - m.executorDeserializeTime - m.resultSerializationTime))
-          shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-
-    val q = graft.SparkEntry.queries(name)
-    for (r <- 1 to reps) {
+    val spark = graft.EngineConf.localSession(Some(dir))
+    val rm = new RunMetrics(spark, "jobprofile")
+    val qs = names.map(n => n -> graft.SparkEntry.queries(n))
+    val warm = scala.collection.mutable.Map.empty[String, Double]
+    for (r <- 1 to reps; (name, q) <- qs) {
       spark.catalog.clearCache()
-      jobs.set(0); stages.set(0); tasks.set(0)
-      taskMs.set(0L); cpuNs.set(0L); shufReadB.set(0L); shufWriteB.set(0L)
-      gcMs.set(0L); serMs.set(0L); schedMs.set(0L)
-      val t0 = System.nanoTime()
-      q(spark, dir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async (draining it is a private API); poll the
-      // task counter until it is stable across two 200 ms windows (max
-      // 3 s) instead of one fixed sleep — a loaded box could otherwise
-      // deliver task-end events after the print and bleed them into the
-      // next rep's counters (advisor r18)
-      var settled = false
-      var waited = 0
-      while (!settled && waited < 3000) {
-        val before = tasks.get
-        Thread.sleep(200); waited += 200
-        settled = tasks.get == before && waited >= 400
+      val secs = rm.stage(s"$name rep$r") {
+        val t0 = System.nanoTime()
+        RunMetrics.noop(q(spark, dir))
+        (System.nanoTime() - t0) / 1e9
       }
-      println(f"[prof] $name rep$r wall=$wall%7.2fs jobs=${jobs.get}%3d " +
-        f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
-        f"taskTime=${taskMs.get / 1000.0}%8.2fs cpu=${cpuNs.get / 1e9}%8.2fs " +
-        f"gc=${gcMs.get / 1000.0}%6.2fs ser=${serMs.get / 1000.0}%6.2fs " +
-        f"other=${schedMs.get / 1000.0}%6.2fs " +
-        f"shufR=${shufReadB.get / 1048576.0}%7.1fMB shufW=${shufWriteB.get / 1048576.0}%7.1fMB")
+      if (r > 1) warm(name) = warm.getOrElse(name, secs) min secs
+    }
+    for ((name, _) <- qs; secs <- warm.get(name))
+      println(f"""{"tool":"jobprofile","query":"$name","warm_min_s":$secs%.3f}""")
+    for ((name, q) <- qs) {
+      spark.catalog.clearCache()
+      val df = q(spark, dir)
+      df.queryExecution.toRdd.count() // finalizes the adaptive plan
+      val p = df.queryExecution.executedPlan.toString
+      println(s"[plan] $name generates=${"Generate".r.findAllIn(p).size} " +
+        s"reusedExchange=${"ReusedExchange".r.findAllIn(p).size} " +
+        s"exchanges=${"Exchange hashpartitioning".r.findAllIn(p).size}")
+      println(p)
     }
     spark.stop()
   }

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for EVERY registry query plus a one-line
@@ -26,14 +25,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans_r18"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.EngineConf.localHarness(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions",
-          graft.EngineConf.harnessShufflePartitions(sfDir))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.EngineConf.localSession(Some(sfDir))
     Files.createDirectories(Paths.get(outDir))
 
     def count(p: String, needle: String): Int = needle.r.findAllIn(p).size

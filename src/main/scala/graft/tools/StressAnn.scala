@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Similarity
@@ -21,97 +21,77 @@ object StressAnn {
     val n = sys.env.getOrElse("SPARK_GRAFT_ANN_N", "1000000").toLong
     val nQ = 20
     val k = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // a >120 s full-GC pause under a 10M-row stage trips the default
-      // heartbeat timeout, and in LOCAL mode "removing" the executor
-      // deregisters its BlockManager — whose shuffle dirs then get
-      // cleaned under running tasks (FileNotFound mid-write, fatal).
-      // A probe JVM has no liveness concern a heartbeat protects.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
     // deterministic clustered corpus: vector i sits near center
     // xxhash64(i) % 1000; dim d = center(c, d) + 0.05·noise(i, d), all
     // hash-folded into [-1, 1] — fully replayable, no RNG state
-    val cl = pmod(xxhash64(col("id")), lit(1000L))
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), d =>
-        (pmod(xxhash64(lit("c"), cl, d), lit(2000001L)).cast("double") / 1e6 - 1.0) +
-          (pmod(xxhash64(col("id"), d), lit(2001L)).cast("double") / 1e3 - 1.0) * 0.05)
-        .as("embedding"))
-      .repartition(32).cache()
-    println(s"[ann] corpus ${corpus.count()} vectors x 64 dims")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[ann] $label%-38s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
+    def clustered(ids: Dataset[_]): DataFrame = {
+      val cl = pmod(xxhash64(col("id")), lit(1000L))
+      ids.select(col("id").as("vec_id"),
+        transform(sequence(lit(0), lit(63)), d =>
+          (pmod(xxhash64(lit("c"), cl, d), lit(2000001L)).cast("double") / 1e6 - 1.0) +
+            (pmod(xxhash64(col("id"), d), lit(2001L)).cast("double") / 1e3 - 1.0) * 0.05)
+          .as("embedding"))
     }
+    val corpus = clustered(spark.range(n)).repartition(32).cache()
+    println(s"[ann] corpus ${corpus.count()} vectors x 64 dims")
+    val rm = new RunMetrics(spark, "ann")
     val sample = corpus.filter(pmod(col("vec_id"), lit(50L)) === 0).select(col("embedding"))
-    val centroids = time("codebook: KMeans k=256 on 20k sample")(
+    val centroids = rm.stage("codebook: KMeans k=256 on 20k sample")(
       Similarity.trainCentroids(sample, col("embedding"), k = 256))
-    val cells = time("cell assignment (map-side, inlined codebook)") {
+    val cells = rm.stage("cell assignment (map-side, inlined codebook)") {
       val c = Similarity.withIvfCell(corpus, col("vec_id"), col("embedding"), centroids).cache()
       c.count(); c
     }
     val queries = corpus.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val brute = time(s"brute batch kNN ($nQ queries x ${n} vectors)") {
+    val brute = rm.stage(s"brute batch kNN ($nQ queries x ${n} vectors)") {
       val b = Similarity.knnBatch(corpus, col("vec_id"), col("embedding"),
         queries, col("query_id"), col("qv"), k).cache()
       b.count(); b
     }
-    time("brute single query (per-query exact cost)")(
+    rm.stage("brute single query (per-query exact cost)")(
       Similarity.knnBrute(corpus.filter(col("vec_id") =!= 0L), col("vec_id"),
         col("embedding"), corpus.filter(col("vec_id") === 0L), col("embedding"), k)
         .collect())
     val qVecs = queries.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    var hits = 0L
-    val tIvf = System.nanoTime()
-    val ivfResults = qVecs.map { case (qid, qv) =>
-      qid -> Similarity.annIvf(cells.filter(col("vec_id") =!= qid), qv, centroids,
-        nProbe = 8, k = k).collect().map(_.getLong(0)).toSet
+    // (query_id, vec_id) rows -> neighbor set per query
+    def neighborSets(df: DataFrame): Map[Long, Set[Long]] =
+      df.select("query_id", "vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+    val bruteSets = neighborSets(brute)
+    def recall(label: String, sets: Iterable[(Long, Set[Long])]): Unit = {
+      val hits = sets.iterator.map { case (q, s) => (s & bruteSets(q)).size }.sum
+      println(f"[ann] $label recall@$k vs brute: ${hits.toDouble / (nQ * k)}%.3f")
     }
-    println(f"[ann] IVF nProbe=8 ($nQ queries, job each)   ${(System.nanoTime() - tIvf) / 1e9}%8.2f s")
-    val tB = System.nanoTime()
-    val batchSets = Similarity.annIvfBatch(cells, qVecs.toSeq, centroids, nProbe = 8, k = k)
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    println(f"[ann] IVF batched, ONE job ($nQ queries)     ${(System.nanoTime() - tB) / 1e9}%8.2f s")
-    val bruteSets = brute.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    ivfResults.foreach { case (qid, ivf) => hits += (ivf & bruteSets(qid)).size }
-    println(f"[ann] recall@$k vs brute: ${hits.toDouble / (nQ * k)}%.3f")
-    var bHits = 0L
-    batchSets.foreach { case (qid, s) => bHits += (s & bruteSets(qid)).size }
-    println(f"[ann] batched recall@$k vs brute: ${bHits.toDouble / (nQ * k)}%.3f")
+    val ivfResults = rm.stage(s"IVF nProbe=8 ($nQ queries, job each)")(qVecs.map {
+      case (qid, qv) =>
+        qid -> Similarity.annIvf(cells.filter(col("vec_id") =!= qid), qv, centroids,
+          nProbe = 8, k = k).collect().map(_.getLong(0)).toSet
+    })
+    val batchSets = rm.stage(s"IVF batched, ONE job ($nQ queries)")(neighborSets(
+      Similarity.annIvfBatch(cells, qVecs.toSeq, centroids, nProbe = 8, k = k)))
+    recall("per-query", ivfResults)
+    recall("batched", batchSets)
 
     // Refined-codebook recall (r15): kmeansRefine's distributed Lloyd
     // iterations over the FULL corpus, seeded from the sample-trained
     // codebook — the q113 production path (sample-train then full-corpus
     // refine). Recall must hold (or improve) under the refined cells.
-    val refined = time("kmeansRefine: 5 Lloyd iters over 1M") {
+    val refined = rm.stage("kmeansRefine: 5 Lloyd iters over 1M") {
       Similarity.kmeansRefine(corpus, col("vec_id"), col("embedding"),
         centroids, iters = 5)
     }
-    val refinedCells = time("refined cell re-assignment") {
+    val refinedCells = rm.stage("refined cell re-assignment") {
       val c = Similarity.withIvfCell(corpus, col("vec_id"), col("embedding"),
         refined).cache()
       c.count(); c
     }
-    val tRb = System.nanoTime()
-    val refinedSets = Similarity.annIvfBatch(refinedCells, qVecs.toSeq,
-        refined, nProbe = 8, k = k)
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    println(f"[ann] IVF batched over refined codebook       ${(System.nanoTime() - tRb) / 1e9}%8.2f s")
-    var rHits = 0L
-    refinedSets.foreach { case (qid, s) => rHits += (s & bruteSets(qid)).size }
-    println(f"[ann] refined-codebook recall@$k vs brute: ${rHits.toDouble / (nQ * k)}%.3f")
+    recall("refined-codebook", rm.stage("IVF batched over refined codebook")(
+      neighborSets(Similarity.annIvfBatch(refinedCells, qVecs.toSeq,
+        refined, nProbe = 8, k = k))))
     refinedCells.unpersist()
 
     // Persisted-index lifecycle (r17): the "assign once and persist"
@@ -121,29 +101,19 @@ object StressAnn {
     // and probe: batched-IVF results over the LOADED index must equal
     // the in-memory cells' results on the original corpus ids.
     val ixDir = java.nio.file.Files.createTempDirectory("ivf_ix").toString
-    time("ivf index build (4 on-disk delta batches)") {
+    rm.stage("ivf index build (4 on-disk delta batches)") {
       (0 until 4).foreach { b =>
         Similarity.ivfIndexAppend(corpus.filter(pmod(col("vec_id"), lit(4L)) === b),
           col("vec_id"), col("embedding"), centroids, ixDir, b.toLong)
       }
     }
     val (loadedCells, loadedCb) = Similarity.ivfIndexLoad(spark, ixDir)
-    val tLq = System.nanoTime()
-    val loadedSets = Similarity.annIvfBatch(loadedCells, qVecs.toSeq, loadedCb,
-        nProbe = 8, k = k)
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    println(f"[ann] IVF batched over LOADED index          ${(System.nanoTime() - tLq) / 1e9}%8.2f s")
+    val loadedSets = rm.stage("IVF batched over LOADED index")(neighborSets(
+      Similarity.annIvfBatch(loadedCells, qVecs.toSeq, loadedCb, nProbe = 8, k = k)))
     val mismatch = batchSets.count { case (q, s) => loadedSets.getOrElse(q, Set()) != s }
     println(s"[ann] loaded-index probe equality: ${if (mismatch == 0) "EXACT" else s"$mismatch/$nQ queries differ"}")
-    val delta = spark.range(n, n + n / 10).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), d =>
-        (pmod(xxhash64(lit("c"), pmod(xxhash64(col("id")), lit(1000L)), d),
-          lit(2000001L)).cast("double") / 1e6 - 1.0) +
-          (pmod(xxhash64(col("id"), d), lit(2001L)).cast("double") / 1e3 - 1.0) * 0.05)
-        .as("embedding"))
-    time(s"ivf index delta append (${n / 10} new vectors)") {
+    val delta = clustered(spark.range(n, n + n / 10))
+    rm.stage(s"ivf index delta append (${n / 10} new vectors)") {
       Similarity.ivfIndexAppend(delta, col("vec_id"), col("embedding"),
         centroids, ixDir, 4L)
     }
@@ -158,11 +128,11 @@ object StressAnn {
     // bound; the occupancy line makes it a measured number, then the
     // actual pair join runs through it.
     val kFine = math.max(2, (n / 250 / 256).toInt)
-    val fines = time(s"seeded fine codebooks (256 x $kFine)") {
+    val fines = rm.stage(s"seeded fine codebooks (256 x $kFine)") {
       Similarity.seededFineCodebooks(corpus, col("vec_id"), col("embedding"),
         centroids, kFine)
     }
-    val cells2 = time(s"two-level assignment (${256 * kFine} eff cells)") {
+    val cells2 = rm.stage(s"two-level assignment (${256 * kFine} eff cells)") {
       val c = Similarity.withIvfCell2(corpus, col("vec_id"), col("embedding"),
         centroids, fines, kFine).cache()
       c.count(); c
@@ -173,12 +143,12 @@ object StressAnn {
     println(s"[ann] occupied cells = ${"%,d".format(occ.getLong(0))}, " +
       s"max|cell| = ${"%,d".format(occ.getLong(1))}, " +
       s"sum|cell|^2 = ${"%,d".format(occ.getLong(2))} (pair-work bound)")
-    time("semantic drift over two-level cells (TVD)") {
+    rm.stage("semantic drift over two-level cells (TVD)") {
       val d = graft.operators.Drift.tvdSeries(cells2, pmod(col("vec_id"), lit(4L)),
         col("cell")).collect()
       println(s"[ann]   drift rows = ${d.length}")
     }
-    time("semanticDedup pair join (threshold 0.999)") {
+    rm.stage("semanticDedup pair join (threshold 0.999)") {
       val st = Similarity.semanticDedupOnCells(cells2, 0.999)
         .groupBy("status").count().orderBy("status").collect()
       println(s"[ann]   " + st.map(r => s"${r.getString(0)}=${"%,d".format(r.getLong(1))}")
@@ -191,7 +161,7 @@ object StressAnn {
     // pairs from that one cell) is bounded by construction.
     val meanCell = math.max(2L, n / math.max(1L, occ.getLong(0)))
     val capAt = 3L * meanCell
-    time(s"semanticDedup CAPPED pair join (maxCell=$capAt)") {
+    rm.stage(s"semanticDedup CAPPED pair join (maxCell=$capAt)") {
       val audit = Similarity.semanticCellAudit(cells2, capAt)
         .filter(col("capped"))
         .agg(count(lit(1)).as("cells"),
@@ -211,42 +181,28 @@ object StressAnn {
     // = 3.1% → nProbe2 = 8·kFine of the 256·kFine composite cells) —
     // the recall trade of coarse-first routing, measured.
     val comp = Similarity.compositeCentroids(centroids, fines, kFine)
-    val tTl = System.nanoTime()
-    val tlSets = Similarity.annIvfBatch(cells2, qVecs.toSeq, comp,
-        nProbe = 8 * kFine, k = k)
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    println(f"[ann] IVF batched over TWO-LEVEL cells        ${(System.nanoTime() - tTl) / 1e9}%8.2f s")
-    var tlHits = 0L
-    tlSets.foreach { case (qid, s1) => tlHits += (s1 & bruteSets(qid)).size }
-    println(f"[ann] two-level recall@$k vs brute (same 3.1%% scan): ${tlHits.toDouble / (nQ * k)}%.3f")
+    recall("two-level (same 3.1% scan)", rm.stage("IVF batched over TWO-LEVEL cells")(
+      neighborSets(Similarity.annIvfBatch(cells2, qVecs.toSeq, comp,
+        nProbe = 8 * kFine, k = k))))
 
     // Two-level END TO END (r18): Lloyd-refine the FINE books under the
     // fixed coarse routing, re-assign, and probe the refined composite
     // table at the SAME scan fraction — the before/after-refinement
     // recall comparison the residual-quantizer training split is for.
-    val finesR = time("refineFineCodebooks: 2 fine-only Lloyd iters") {
+    val finesR = rm.stage("refineFineCodebooks: 2 fine-only Lloyd iters") {
       Similarity.refineFineCodebooks(corpus, col("vec_id"), col("embedding"),
         centroids, fines, kFine, iters = 2)
     }
-    val cells2R = time("two-level re-assignment (refined fines)") {
+    val cells2R = rm.stage("two-level re-assignment (refined fines)") {
       val c = Similarity.withIvfCell2(corpus, col("vec_id"), col("embedding"),
         centroids, finesR, kFine).cache()
       c.count(); c
     }
     cells2.unpersist()
     val compR = Similarity.compositeCentroids(centroids, finesR, kFine)
-    val tTlR = System.nanoTime()
-    val tlrSets = Similarity.annIvfBatch(cells2R, qVecs.toSeq, compR,
-        nProbe = 8 * kFine, k = k)
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    println(f"[ann] IVF batched over REFINED two-level      ${(System.nanoTime() - tTlR) / 1e9}%8.2f s")
-    var tlrHits = 0L
-    tlrSets.foreach { case (qid, s1) => tlrHits += (s1 & bruteSets(qid)).size }
-    println(f"[ann] refined two-level recall@$k vs brute (same scan): ${tlrHits.toDouble / (nQ * k)}%.3f")
+    recall("refined two-level (same scan)", rm.stage("IVF batched over REFINED two-level")(
+      neighborSets(Similarity.annIvfBatch(cells2R, qVecs.toSeq, compR,
+        nProbe = 8 * kFine, k = k))))
     val occR = cells2R.groupBy("cell").count()
       .agg(count(lit(1)), max("count"), sum(col("count") * col("count"))).head
     println(s"[ann] refined occupancy: cells = ${"%,d".format(occR.getLong(0))}, " +
@@ -263,26 +219,17 @@ object StressAnn {
     // persists corpus-sized state — it recomputes the per-batch scoring
     // per consumer — and is the shape that completes at 10M.
     val tgtBatch = corpus.filter(pmod(col("vec_id"), lit(n / 64)) === 7L)
+    def mined(df: DataFrame): Seq[(Long, Long, Long, Long)] = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
     val oneShotTop: Option[Seq[(Long, Long, Long, Long)]] =
-      if (n <= 4000000L) Some {
-        var out: Seq[(Long, Long, Long, Long)] = null
-        time(s"bitext ONE-SHOT mine (64-target batch)") {
-          out = Similarity.bitextMine(corpus, col("vec_id"), col("embedding"),
-              tgtBatch, col("vec_id"), col("embedding"), nnK = 4, topN = 100)
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            .toSeq.sorted
-          println(s"[ann]   mined pairs = ${out.size} (top-100 cut)")
-        }
-        out
-      } else { println("[ann] bitext one-shot SKIPPED at this N (r17: scored-frame persist exceeds local scratch)"); None }
-    var batchedTop: Seq[(Long, Long, Long, Long)] = null
-    time(s"bitext BATCHED mine (64 targets, 8 sub-batches)") {
-      batchedTop = Similarity.bitextMineBatched(corpus, col("vec_id"), col("embedding"),
-          tgtBatch, col("vec_id"), col("embedding"), nnK = 4, topN = 100, tgtBatches = 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq.sorted
-      println(s"[ann]   mined pairs = ${batchedTop.size} (top-100 cut)")
-    }
+      if (n <= 4000000L) Some(rm.stage("bitext ONE-SHOT mine (64-target batch)")(
+        mined(Similarity.bitextMine(corpus, col("vec_id"), col("embedding"),
+          tgtBatch, col("vec_id"), col("embedding"), nnK = 4, topN = 100))))
+      else { println("[ann] bitext one-shot SKIPPED at this N (r17: scored-frame persist exceeds local scratch)"); None }
+    val batchedTop = rm.stage("bitext BATCHED mine (64 targets, 8 sub-batches)")(
+      mined(Similarity.bitextMineBatched(corpus, col("vec_id"), col("embedding"),
+        tgtBatch, col("vec_id"), col("embedding"), nnK = 4, topN = 100, tgtBatches = 8)))
+    println(s"[ann]   mined pairs = ${batchedTop.size} (top-100 cut)")
     oneShotTop.foreach { os =>
       println(s"[ann] batched == one-shot: ${if (os == batchedTop) "EXACT" else "MISMATCH"}")
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.Bpe
@@ -19,44 +19,38 @@ import graft.text.Bpe
 object StressBpe {
   def main(args: Array[String]): Unit = {
     val k = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "16").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Zipf-ish rank: floor(U^2 * 60000) concentrates draws at low ranks
-    // (quadratic is cheap and close enough to 1/rank for the vocab-size
-    // argument); the rank renders as 1-4 base-26 letters.
-    def corpus(nDocs: Long) = {
-      val wordsPerDoc = 50
-      spark.range(nDocs).select(col("id"),
-        concat_ws(" ", (0 until wordsPerDoc).map { j =>
-          val u = pmod(xxhash64(col("id") * 31 + j), lit(1000000L))
-            .cast("double") / 1000000d
-          val rank = floor(u * u * 60000d).cast("long")
-          // base-26 render: 4 letter positions, leading 'a's harmless
-          concat((3 to 0 by -1).map { p =>
-            val d = pmod(rank.divide(math.pow(26d, p)).cast("long"), lit(26L))
-            chr(d + 97)
-          }: _*)
-        }: _*).as("text"))
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "bpe")
 
     Seq(sys.env.getOrElse("SPARK_GRAFT_BPE_DOCS_SMALL", "100000").toLong,
         sys.env.getOrElse("SPARK_GRAFT_BPE_DOCS_LARGE", "1000000").toLong)
       .foreach { n =>
-        val t0 = System.nanoTime()
-        val vocab = Bpe.initVocab(corpus(n), col("text")).persist()
-        val vRows = vocab.count()
-        val tVocab = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val merges = Bpe.learnMerges(vocab, k)
-        val tMerge = (System.nanoTime() - t1) / 1e9
+        val vocab = Bpe.initVocab(zipfDocs(spark, n), col("text")).persist()
+        val vRows = rm.stage(s"init_vocab ${n}docs")(vocab.count())
+        val merges = rm.stage(s"$k merges ${n}docs")(Bpe.learnMerges(vocab, k))
         vocab.unpersist()
-        println(f"[bpe] $n%,9d docs (${n * 50}%,d tokens): vocab $vRows%,6d rows " +
-          f"in $tVocab%5.1f s; $k merges in $tMerge%5.1f s " +
-          f"(${tMerge / k}%4.2f s/merge); first: ${merges.take(3).mkString(" ")}")
+        println(f"[bpe] $n%,9d docs (${n * 50}%,d tokens): vocab $vRows%,6d rows; " +
+          s"first: ${merges.take(3).mkString(" ")}")
       }
     spark.stop()
+  }
+
+  /** `nDocs` documents of 50 Zipf-ish words, shared by the tokenizer
+    * probes. Rank floor(U^2 * 60000) concentrates draws at low ranks
+    * (quadratic is cheap and close enough to 1/rank for the vocab-size
+    * argument); the rank renders as 1-4 base-26 letters. */
+  def zipfDocs(spark: SparkSession, nDocs: Long): DataFrame = {
+    val wordsPerDoc = 50
+    spark.range(nDocs).select(col("id"),
+      concat_ws(" ", (0 until wordsPerDoc).map { j =>
+        val u = pmod(xxhash64(col("id") * 31 + j), lit(1000000L))
+          .cast("double") / 1000000d
+        val rank = floor(u * u * 60000d).cast("long")
+        // base-26 render: 4 letter positions, leading 'a's harmless
+        concat((3 to 0 by -1).map { p =>
+          val d = pmod(rank.divide(math.pow(26d, p)).cast("long"), lit(26L))
+          chr(d + 97)
+        }: _*)
+      }: _*).as("text"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -25,17 +24,8 @@ object StressCapBands {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_CAP_SCALE", "1000000").toLong
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_CAP_HOTPCT", "10").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cap] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "cap")
 
     val mask60 = (1L << 60) - 1
     val hotV = 0x1ABCL
@@ -59,7 +49,7 @@ object StressCapBands {
     val counts = bands.groupBy("band_idx", "band_val")
       .agg(count(lit(1)).as("np")).persist()
 
-    timed("candidate_mass") {
+    rm.stage("candidate_mass") {
       // np*(np-1) is even, so the div is exact; cast keeps it integral
       // (Spark's `/` on longs is a double divide)
       val c2 = (col("np") * (col("np") - 1) / 2).cast("long")
@@ -70,16 +60,16 @@ object StressCapBands {
         f"post-cap candidates=${m.getLong(1)}%,d  " +
         f"(${m.getLong(0).toDouble / math.max(m.getLong(1), 1)}%,.0fx reduction)")
     }
-    timed("band_audit") {
+    rm.stage("band_audit") {
       val a = Dedup.bandPostingAudit(bands, Seq("band_idx", "band_val"), 1000L)
         .agg(count(lit(1)), count_if(col("capped")), max("n_postings")).head
       println(f"[cap]   buckets>=2=${a.getLong(0)}%,d capped=${a.getLong(1)}%,d " +
         f"max_postings=${a.getLong(2)}%,d")
     }
-    timed("capped_neardup_pipeline") {
-      val pairs = Dedup.simhashNearDupFromSigs(sigs, maxHamming = 3,
+    // result = surviving near-dup pairs
+    rm.stage("capped_neardup_pipeline") {
+      Dedup.simhashNearDupFromSigs(sigs, maxHamming = 3,
         bits = 60, maxPostings = 1000L).count()
-      println(f"[cap]   surviving near-dup pairs=$pairs%,d")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.Instruct
@@ -22,15 +21,9 @@ object StressChat {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_CHAT_COPIES", "100").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(l: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[chat] $l%-46s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "chat")
+    import RunMetrics.noop
 
     val base = graft.sources.Tables.events(spark, sfDir)
     val big = base
@@ -49,10 +42,10 @@ object StressChat {
       s"${big.select("user_id").distinct().count()} users")
 
     val turns = Instruct.turns(big)
-    time("turns (sessionize+index+prefix, 1 exchange)")(turns)
-    time("alternation audit + token budget")(Instruct.alternationAudit(turns))
-    time("loss-mask spans")(Instruct.lossSpans(turns))
-    time("chat-template render")(Instruct.render(turns))
+    rm.stage("turns (sessionize+index+prefix, 1 exchange)")(noop(turns))
+    rm.stage("alternation audit + token budget")(noop(Instruct.alternationAudit(turns)))
+    rm.stage("loss-mask spans")(noop(Instruct.lossSpans(turns)))
+    rm.stage("chat-template render")(noop(Instruct.render(turns)))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, MinHashConfig}
@@ -19,16 +19,8 @@ import graft.dedup.{Dedup, MinHashConfig}
 object StressCollapseGate {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_GATE_SCALE", "100000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[gate] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.1f s  pairs=$r%,d")
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "gate")
 
     // ~40-token docs; a dup family shares its base doc's text. dupPct of
     // the corpus are EXTRA copies: ids with id%10 < dupPct/10 map to the
@@ -48,12 +40,12 @@ object StressCollapseGate {
       val distinctTexts = c.select("text").distinct().count()
       println(s"[gate] dup=$dupPct% -> ${"%,d".format(n)} docs, " +
         s"${"%,d".format(distinctTexts)} distinct texts")
-      timed(s"plain_dup$dupPct") {
+      rm.stage(s"plain_dup$dupPct") {
         scala.util.Using.resource(new graft.operators.CacheScope) { sc =>
           Dedup.nearDuplicates(c, col("doc_id"), col("text"), 0.8, cfg, sc).count()
         }
       }
-      timed(s"collapsed_dup$dupPct") {
+      rm.stage(s"collapsed_dup$dupPct") {
         scala.util.Using.resource(new graft.operators.CacheScope) { sc =>
           Dedup.nearDuplicatesCollapsed(c, col("doc_id"), col("text"), 0.8, cfg, sc)
             .count()

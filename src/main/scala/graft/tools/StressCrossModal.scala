@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.CrossModal
@@ -24,30 +20,8 @@ import graft.multimodal.CrossModal
 object StressCrossModal {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_XMODAL_SCALE", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufW = new LongAdder; val shufR = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    def timed[A](name: String)(f: => A): A = {
-      Thread.sleep(800)
-      val w0 = shufW.sum; val r0 = shufR.sum
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800)
-      println(f"[xmodal] $name%-20s $secs%6.1f s  " +
-        f"shufW=${shufW.sum - w0}%,d shufR=${shufR.sum - r0}%,d")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "xmodal")
 
     // caption template = id/20 truncated to n/4 groups; every 20th pair
     // re-captures its predecessor's (caption, image) with extra
@@ -75,12 +49,12 @@ object StressCrossModal {
       .repartition(32).persist()
     println(f"[xmodal] ${seamed.count()}%,d pairs, ${n / 4}%,d caption templates, ${n / 2}%,d image slots")
 
-    timed("alignment_gate") {
+    rm.stage("alignment_gate") {
       val g = CrossModal.alignmentGate(seamed, col("cap_vec"), col("img_vec"), 0L)
       val r = g.agg(count(lit(1)), count_if(col("aligned"))).head
       println(f"[xmodal]   pairs = ${r.getLong(0)}%,d  aligned = ${r.getLong(1)}%,d")
     }
-    timed("crossmodal_dedup") {
+    rm.stage("crossmodal_dedup") {
       val d = CrossModal.crossModalDedup(seamed, col("pair_id"),
         col("caption"), col("img_key"))
       val r = d.agg(count(lit(1)), count_if(col("is_dup")),
@@ -88,7 +62,7 @@ object StressCrossModal {
       println(f"[xmodal]   rows = ${r.getLong(0)}%,d  dups = ${r.getLong(1)}%,d  " +
         f"cap_reuse = ${r.getLong(2)}%,d  img_reuse = ${r.getLong(3)}%,d")
     }
-    timed("curate_pairs_e2e") {
+    rm.stage("curate_pairs_e2e") {
       val c = CrossModal.curatePairs(seamed, col("pair_id"), col("caption"),
         col("cap_vec"), col("img_vec"), col("img_key"), minMicro = 0L)
       val r = c.agg(count(lit(1)), count_if(!col("is_dup"))).head

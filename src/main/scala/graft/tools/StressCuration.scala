@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -16,8 +12,8 @@ import graft.text.{LanguageModel, TextAnalysis}
   * tooling): inflate the sf0.1 documents table (SPARK_GRAFT_COPIES:
   * 200 → ~1M docs, 2000 → the 10M rep; give the 10M rep
   * SPARK_DRIVER_MEM=24g) and run the pipeline STAGE BY STAGE, timing
-  * each and reading the stage's shuffle record counts off a
-  * SparkListener — the evidence that no stage goes super-linear in the
+  * each and reading the stage's shuffle record counts off
+  * [[RunMetrics]] — the evidence that no stage goes super-linear in the
   * corpus. Unlike StressDedup's pathological all-copies corpus, the
   * inflation here salts each copy's text to keep docs unique (the
   * realistic shape for gating/DSIR) while planting an exact duplicate
@@ -32,30 +28,8 @@ object StressCuration {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "200").toInt
     require(copies > 0, s"SPARK_GRAFT_COPIES must be positive, got $copies")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufW = new LongAdder; val shufR = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    // listener events are async; a short settle keeps the per-stage
-    // deltas honest (tooling, not engine code)
-    def snap(): (Long, Long) = { Thread.sleep(800); (shufW.sum, shufR.sum) }
-    def stage(label: String)(f: => Long): Unit = {
-      val (w0, r0) = snap(); val t0 = System.nanoTime()
-      val rows = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (w1, r1) = snap()
-      println(f"[curation] $label%-30s ${secs}%8.2f s  rows=$rows%,13d" +
-        f"  shufW=${w1 - w0}%,13d  shufR=${r1 - r0}%,13d")
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "curation")
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "lang", "text")
     // ONE explode, not an N-way union — the union form taxes every stage
@@ -85,7 +59,7 @@ object StressCuration {
         .filter(!(col("fail_min_tokens") || col("fail_word_len") ||
           col("fail_repetition") || col("fail_stopwords")))
         .select("doc_id", "lang", "text"))
-    stage("1 canonicalize+gates")(gated.count())
+    rm.stage("1 canonicalize+gates")(gated.count())
 
     // Stage 1b/1c — standalone comparison baselines (they do not feed
     // the survivor chain). Skippable: the 1c fold baselines exist to
@@ -95,7 +69,7 @@ object StressCuration {
     val baselines = sys.env.getOrElse("SPARK_GRAFT_CURATION_BASELINES",
       "1") != "0"
     if (baselines) {
-    stage("1b safety gate (standalone)")(
+    rm.stage("1b safety gate (standalone)")(
       TextAnalysis.withSafetyGate(canonical, col("text"),
         Seq("dup"), Seq("slow", "broken"), softPermille = 80L)
         .filter(col("safety") === "pass").count())
@@ -106,17 +80,17 @@ object StressCuration {
     val blocklist = Seq("art", "rea", "dup", "merg", "spark", "windo",
       "batc", "strea", "filt", "cust", "vecto", "colum", "valu", "quer",
       "tabl", "scan", "sort", "group", "lin", "bigx")
-    stage("1c substring DFA (20 terms)")(
+    rm.stage("1c substring DFA (20 terms)")(
       canonical.select(
         graft.functions.TextFunctions.substringHits(col("text"), blocklist)
           .as("h")).filter(col("h") > 0).count())
-    stage("1c substring fold/regexp (20 terms)")(
+    rm.stage("1c substring fold/regexp (20 terms)")(
       canonical.select(
         blocklist.map(p =>
           (length(col("text")) - length(regexp_replace(col("text"),
             java.util.regex.Pattern.quote(p), ""))) / p.length)
           .reduce(_ + _).as("h")).filter(col("h") > 0).count())
-    stage("1c substring fold/replace (20 terms)")(
+    rm.stage("1c substring fold/replace (20 terms)")(
       canonical.select(
         blocklist.map(p =>
           (length(col("text")) - length(replace(col("text"), lit(p),
@@ -128,22 +102,22 @@ object StressCuration {
     val keepers = CacheScope.unmanaged.persist(
       Dedup.exactGroups(gated, col("doc_id"), col("text"), md5)
         .select(col("keeper").as("doc_id")))
-    stage("2 dedup keepers (md5)")(keepers.count())
+    rm.stage("2 dedup keepers (md5)")(keepers.count())
 
     // Stage 3 — survivors semi-join (shuffle on the 8-byte doc id)
     val surv = CacheScope.unmanaged.persist(
       gated.join(keepers, Seq("doc_id"), "left_semi"))
-    stage("3 survivors semi-join")(surv.count())
+    rm.stage("3 survivors semi-join")(surv.count())
 
     // Stage 4 — DSIR importance weights (ONE doc-token shuffle feeds
     // both LMs; see LanguageModel.importanceWeights)
     val iw = CacheScope.unmanaged.persist(
       LanguageModel.importanceWeights(
         surv, col("doc_id"), TextFunctions.tokens(col("text")), col("lang") === "en"))
-    stage("4 DSIR importance weights")(iw.count())
+    rm.stage("4 DSIR importance weights")(iw.count())
 
     // Stage 5 — deterministic weighted draw (TakeOrderedAndProject)
-    stage("5 weighted draw top-40")(
+    rm.stage("5 weighted draw top-40")(
       Sampling.weightedTopN(iw, col("doc"), col("iw"), 40)
         .join(surv.select(col("doc_id").as("sid"), col("lang")), Seq("sid"))
         .count())

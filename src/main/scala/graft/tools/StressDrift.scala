@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Drift
@@ -22,30 +18,8 @@ import graft.operators.Drift
 object StressDrift {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_DRIFT_SCALE", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufW = new LongAdder; val shufR = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    def timed[A](name: String)(f: => A): A = {
-      Thread.sleep(800)
-      val w0 = shufW.sum; val r0 = shufR.sum
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800)
-      println(f"[drift] $name%-18s $secs%6.1f s  " +
-        f"shufW=${shufW.sum - w0}%,d shufR=${shufR.sum - r0}%,d")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "drift")
 
     // 30 days (hash-assigned, independent of id parity); even ids land
     // in the mega bucket b0 — except on the last day, where the mega
@@ -60,7 +34,7 @@ object StressDrift {
 
     // each stage cold then warm (fresh plan each time — only codegen/JIT
     // warm across reps, matching the Bench counting discipline)
-    for (rep <- Seq("cold", "warm")) timed(s"tvd_series_$rep") {
+    for (rep <- Seq("cold", "warm")) rm.stage(s"tvd_series_$rep") {
       // scope closed per rep: warm measures a full recompute (only
       // codegen/JIT carry over), not a cache read
       val s = scala.util.Using.resource(new graft.operators.CacheScope) { sc =>
@@ -69,7 +43,7 @@ object StressDrift {
       }
       println(s"[drift]   pairs=${s.getLong(0)} drifted=${s.getLong(1)} max_ppm=${s.getLong(2)}")
     }
-    for (rep <- Seq("cold", "warm")) timed(s"psi_series_$rep") {
+    for (rep <- Seq("cold", "warm")) rm.stage(s"psi_series_$rep") {
       val s = scala.util.Using.resource(new graft.operators.CacheScope) { sc =>
         Drift.psiSeries(rows, col("day"), col("bucket"), scope = sc)
           .agg(count(lit(1)),
@@ -77,7 +51,7 @@ object StressDrift {
       }
       println(s"[drift]   pairs=${s.getLong(0)} nonstable=${s.getLong(1)} max_psi_micro=${s.getLong(2)}")
     }
-    for (rep <- Seq("cold", "warm")) timed(s"tvd_gate_$rep") {
+    for (rep <- Seq("cold", "warm")) rm.stage(s"tvd_gate_$rep") {
       val ref = rows.filter(col("day") < 15)
       val cur = rows.filter(col("day") >= 15)
       val g = Drift.tvdBetween(ref, col("bucket"), cur, col("bucket"), 1L, 16L)
@@ -87,7 +61,7 @@ object StressDrift {
     // fleet form: 64 stable hash-assigned sources, one series each —
     // every source carries the same day/bucket structure (mega bucket,
     // day-29 flip) at 1/64 the mass
-    for (rep <- Seq("cold", "warm")) timed(s"tvd_series_by_$rep") {
+    for (rep <- Seq("cold", "warm")) rm.stage(s"tvd_series_by_$rep") {
       val grouped = spark.range(n).select(
         day.as("day"),
         when(col("id") % 2 === 0 && day =!= 29, lit("b0"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, MinHashConfig}
@@ -19,17 +18,8 @@ import graft.operators.CacheScope
 object StressEstimate {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_ESTIMATE_SCALE", "100000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(name: String)(f: => Long): Long = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[estimate] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.1f s  pairs=$r%,d")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "estimate")
 
     // member m of family f perturbs its first (id%10) token positions
     val base = col("id") - pmod(col("id"), lit(10L))
@@ -45,12 +35,12 @@ object StressEstimate {
     corpus.count()
 
     val cfg = MinHashConfig.generated(64, 16)
-    val exactPairs = timed("exact_verify_j0.8") {
+    val exactPairs = rm.stage("exact_verify_j0.8") {
       scala.util.Using.resource(new CacheScope) { sc =>
         Dedup.nearDuplicates(corpus, col("doc_id"), col("text"), 0.8, cfg, sc).count()
       }
     }
-    val estPairs = timed("estimated_52of64") {
+    val estPairs = rm.stage("estimated_52of64") {
       scala.util.Using.resource(new CacheScope) { sc =>
         Dedup.nearDuplicatesEstimated(corpus, col("doc_id"), col("text"), 52, cfg, sc)
           .count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -17,10 +16,7 @@ import graft.operators.Graph
 object StressGraph {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_GRAPH_NODES", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
 
     val nodes = spark.range(n).select(col("id").as("node")).cache()
     nodes.count()
@@ -35,19 +31,13 @@ object StressGraph {
     val ne = edges.count()
     println(f"[graph] $n%,d nodes, $ne%,d edges")
 
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[graph] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      r
-    }
-
-    timed("pagerank(3)") {
+    val rm = new RunMetrics(spark, "graph")
+    rm.stage("pagerank(3)") {
       val pr = Graph.pageRank(nodes, col("node"), edges, col("src"), col("dst"), 3)
       val m = pr.agg(sum("rank")).head.getDouble(0)
       println(f"[graph]   rank mass = $m%.6f (must be ~1)")
     }
-    timed("personalized_pr(3)") {
+    rm.stage("personalized_pr(3)") {
       val seeds = nodes.filter(col("node") % 10 === 0)
         .select(col("node"), lit(1.0).as("w"))
       val pr = Graph.personalizedPageRank(nodes, col("node"),
@@ -55,18 +45,18 @@ object StressGraph {
       val m = pr.agg(sum("rank")).head.getDouble(0)
       println(f"[graph]   rank mass = $m%.6f (must be ~1)")
     }
-    timed("hits(2)") {
+    rm.stage("hits(2)") {
       val h = Graph.hits(nodes, col("node"), edges, col("src"), col("dst"), 2)
       val tops = h.agg(max("hub"), max("auth")).head
       println(s"[graph]   max hub = ${tops.getDouble(0)}, max auth = ${tops.getDouble(1)} (must be 1.0)")
     }
-    timed("triangles") {
+    rm.stage("triangles") {
       val t = Graph.triangleCounts(edges, col("src"), col("dst"))
       val agg = t.agg(sum("n_tri"), max("deg"), avg("lcc")).head
       println(f"[graph]   Σtri/3 = ${agg.getLong(0) / 3}%,d triangles, " +
         f"max deg = ${agg.getLong(1)}, mean lcc = ${agg.getDouble(2)}%.6f")
     }
-    timed("label_prop(3)") {
+    rm.stage("label_prop(3)") {
       val seeded = nodes.withColumn("seed",
         when(col("node") % 1000 === 0, col("node") % 5)
           .otherwise(lit(null).cast("long")))
@@ -103,7 +93,7 @@ object StressGraph {
       .orderBy(desc("count")).limit(3).collect()
     println(f"[graph] zipf: $nze%,d edges, hottest in-degrees = " +
       hot.map(r => f"${r.getLong(0)}:${r.getLong(1)}%,d").mkString(", "))
-    timed("zipf_pagerank(3)") {
+    rm.stage("zipf_pagerank(3)") {
       val pr = Graph.pageRank(nodes, col("node"), zedges,
         col("src"), col("dst"), 3)
       val top = pr.orderBy(desc("rank")).limit(1).collect().head
@@ -111,7 +101,7 @@ object StressGraph {
       println(f"[graph]   rank mass = $m%.6f, top rank node ${top.getLong(0)} " +
         f"= ${top.getDouble(1)}%.6f")
     }
-    timed("zipf_label_prop(3)") {
+    rm.stage("zipf_label_prop(3)") {
       val seeded = nodes.withColumn("seed",
         when(col("node") % 1000 === 0, col("node") % 5)
           .otherwise(lit(null).cast("long")))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
@@ -17,10 +16,7 @@ object StressHierarchy {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_HIER_ROWS", "1000000").toLong
     val chainLen = 5000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
 
     val roots = 50000L
     // forest: id < roots → root; otherwise 80% attach directly to a
@@ -39,14 +35,14 @@ object StressHierarchy {
         .otherwise(col("id") + 10000000L - 1).as("parent"))
     val nodes = forest.unionByName(chain)
 
-    val t0 = System.nanoTime()
-    val depths = Relational.hierarchyDepth(nodes, col("id"), col("parent"),
-      maxDoubling = 20,
-      roundProbe = (r, open) => println(f"[hier] round $r%2d open walks = $open%,12d"))
-    val byDepth = depths.groupBy("depth").count().orderBy(col("depth"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[hier] ${n + chainLen}%,d nodes resolved in $secs%.1f s; " +
+    val byDepth = new RunMetrics(spark, "hier").stage("hierarchy_depth") {
+      val depths = Relational.hierarchyDepth(nodes, col("id"), col("parent"),
+        maxDoubling = 20,
+        roundProbe = (r, open) => println(f"[hier] round $r%2d open walks = $open%,12d"))
+      depths.groupBy("depth").count().orderBy(col("depth"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    println(f"[hier] ${n + chainLen}%,d nodes resolved; " +
       s"max depth ${byDepth.last._1} (chain intact: ${byDepth.last._2} node)")
     println(s"[hier] depth histogram head: ${byDepth.take(8).mkString(" ")}")
     spark.stop()

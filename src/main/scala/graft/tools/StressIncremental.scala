@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, MinHashConfig}
@@ -22,17 +21,11 @@ object StressIncremental {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sizes = sys.env.getOrElse("SPARK_GRAFT_BASE_COPIES", "50,100,200")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "inc")
     val cfg = MinHashConfig.generated(64, 16, portable = false)
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
     val baseN = base.count()
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     sizes.foreach { copies =>
       spark.catalog.clearCache()
       // ONE explode, not an N-way union (EXPLAIN.md probe-methodology
@@ -44,19 +37,16 @@ object StressIncremental {
         .repartition(32)
         .localCheckpoint()
       val idxDir = java.nio.file.Files.createTempDirectory(s"graft_inc_idx_$copies").toString
-      val (_, tBuild) = timed(
+      rm.stage(s"base=${copies * baseN} index build")(
         Dedup.buildIndex(corpus, col("doc_id"), col("text"), cfg)
           .write.mode("overwrite").parquet(idxDir))
-      println(f"[inc] base=${copies * baseN}%8d docs  index build ${tBuild}%7.2f s")
       val index = spark.read.parquet(idxDir)
       (1 to 3).foreach { b =>
         val delta = base.select(
           (col("doc_id") + (1000 + b) * 1000000L).as("doc_id"), col("text"))
-        val (_, tC) = timed(
+        rm.stage(s"base=${copies * baseN} batch $b classify")(RunMetrics.noop(
           Dedup.incrementalDedupAgainstIndex(index, delta,
-              col("doc_id"), col("text"), 0.8, cfg)
-            .write.format("noop").mode("overwrite").save())
-        println(f"[inc] base=${copies * baseN}%8d docs  batch $b classify ${tC}%7.2f s")
+            col("doc_id"), col("text"), 0.8, cfg)))
       }
     }
     spark.stop()

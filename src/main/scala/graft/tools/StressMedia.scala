@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{Media, MediaCodec}
@@ -33,20 +32,9 @@ object StressMedia {
     val nImg = sys.env.getOrElse("SPARK_GRAFT_MEDIA_N", "300000").toLong
     val nHash = sys.env.getOrElse("SPARK_GRAFT_MEDIA_HASHES", "1000000").toLong
     val flood = 50000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // see StressAnn: local-mode heartbeat timeout under a long GC
-      // pause deletes live shuffle dirs — a probe JVM needs no liveness
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
     import spark.implicits._
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[media] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    val rm = new RunMetrics(spark, "media")
 
     // ---- section 1: real codec pass ----
     // 10 images per seed group: group members are PIXEL-identical PNGs
@@ -57,13 +45,9 @@ object StressMedia {
       val w = 32 + (seed % 5).toInt * 8
       Media.MediaRow(i, "image", MediaCodec.synthPng(seed, w, w), w, w, 0L)
     }
-    val t0 = System.nanoTime()
     val hashes = Media.withPerceptualHash(images).cache()
-    val nHashed = hashes.count()
-    val codecSecs = (System.nanoTime() - t0) / 1e9
-    println(f"[media] withPerceptualHash ($nImg real PNG decodes)     $codecSecs%8.2f s " +
-      f"(${nHashed / codecSecs}%,.0f images/s)")
-    time("phash near-dup pairs over persisted hashes") {
+    rm.stage(s"withPerceptualHash ($nImg real PNG decodes)")(hashes.count())
+    rm.stage("phash near-dup pairs over persisted hashes") {
       val pairs = Media.phashNearDupPairsFromHashes(hashes, radius = 3,
         maxPostings = 1000L)
       println(s"[media]   pairs = ${"%,d".format(pairs.count())} " +
@@ -93,16 +77,16 @@ object StressMedia {
     val clean = clustered(nHash, withFlood = false).cache()
     val flooded = clustered(nHash, withFlood = true).cache()
     clean.count(); flooded.count()
-    time(s"banding baseline: $nHash hashes, NO flood, cap 1000") {
+    rm.stage(s"banding baseline: $nHash hashes, NO flood, cap 1000") {
       val p = Media.phashNearDupPairsFromHashes(clean, 3, 1000L)
       println(s"[media]   pairs = ${"%,d".format(p.count())}")
     }
-    time(s"banding FLOODED: $flood-row hot value, cap 1000") {
+    rm.stage(s"banding FLOODED: $flood-row hot value, cap 1000") {
       val p = Media.phashNearDupPairsFromHashes(flooded, 3, 1000L)
       println(s"[media]   pairs = ${"%,d".format(p.count())} " +
         "(flood bucket contributes ZERO — capped, not 1.25G pairs)")
     }
-    time("band audit: flood buckets named") {
+    rm.stage("band audit: flood buckets named") {
       val a = Media.phashBandAuditFromHashes(flooded, 3, 1000L)
         .filter(col("capped"))
         .agg(count(lit(1)).as("buckets"), max("n_postings").as("maxPost")).head

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{Media, MediaCodec}
@@ -30,17 +29,8 @@ object StressMediaCap {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_MEDIACAP_SCALE", "1000000").toLong
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_MEDIACAP_HOTPCT", "10").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[mediacap] $name%-26s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "mediacap")
 
     // ---- grounding: REAL dHashes of solid/near-solid thumbnails ------
     // a flat 8-bit gray PNG at several levels, plus one with a faint
@@ -92,7 +82,7 @@ object StressMediaCap {
     val counts = bands.groupBy("band_idx", "band_val")
       .agg(count(lit(1)).as("np")).persist()
 
-    timed("candidate_mass") {
+    rm.stage("candidate_mass") {
       val c2 = (col("np") * (col("np") - 1) / 2).cast("long")
       val m = counts.agg(
         sum(c2).cast("long").as("pre"),
@@ -101,14 +91,14 @@ object StressMediaCap {
         f"post-cap candidates=${m.getLong(1)}%,d  " +
         f"(${m.getLong(0).toDouble / math.max(m.getLong(1), 1)}%,.0fx reduction)")
     }
-    timed("band_audit") {
+    rm.stage("band_audit") {
       val a = Media.phashBandAuditFromHashes(hashes, radius = 3,
           maxPostings = 1000L)
         .agg(count(lit(1)), count_if(col("capped")), max("n_postings")).head
       println(f"[mediacap]   buckets>=2=${a.getLong(0)}%,d capped=${a.getLong(1)}%,d " +
         f"max_postings=${a.getLong(2)}%,d")
     }
-    timed("capped_pair_pipeline") {
+    rm.stage("capped_pair_pipeline") {
       val pairs = Media.phashNearDupPairsFromHashes(hashes, radius = 3,
         maxPostings = 1000L).count()
       println(f"[mediacap]   surviving near-dup pairs=$pairs%,d")

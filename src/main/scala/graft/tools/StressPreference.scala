@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BradleyTerry, Frontier}
@@ -17,7 +13,7 @@ import graft.text.Preference
   * expansion at n pages (3n links) against an n-URL crawled index, the
   * full expand→robots→politeness composite, and bitext margin mining at
   * n source vectors × 64 targets. Each stage reports wall time AND its
-  * shuffle record deltas off a SparkListener (the StressCuration
+  * shuffle record deltas off [[RunMetrics]] (the StressCuration
   * discipline) — the evidence that no stage goes super-linear in
   * conversations/hosts/targets. Committed numbers in EXPLAIN.md.
   *
@@ -26,31 +22,8 @@ import graft.text.Preference
 object StressPreference {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_PREF_SCALE", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufW = new LongAdder; val shufR = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    def timed[A](name: String)(f: => A): A = {
-      // listener events are async; settle before snapping deltas
-      Thread.sleep(800)
-      val w0 = shufW.sum; val r0 = shufR.sum
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800)
-      println(f"[pref] $name%-24s $secs%6.1f s  " +
-        f"shufW=${shufW.sum - w0}%,d shufR=${shufR.sum - r0}%,d")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "pref")
 
     // ---- Bradley–Terry: n comparisons over 10k items -------------------
     val items = 10000L
@@ -69,7 +42,7 @@ object StressPreference {
       .cache()
     val nc = cmp.count()
     println(f"[pref] $nc%,d comparisons over $items%,d items")
-    timed("bradley_terry(3)") {
+    rm.stage("bradley_terry(3)") {
       val p = BradleyTerry.fit(cmp, col("w"), col("l"), 3)
       val row = p.agg(sum("strength"), max("strength")).head
       println(f"[pref]   mass = ${row.getDouble(0)}%.6f  top = ${row.getDouble(1)}%.2e")
@@ -97,7 +70,7 @@ object StressPreference {
       .cache()
     val nt = turns.count()
     println(f"[pref] $nt%,d turns, ${n}%,d conversations, 5 prompt groups")
-    timed("pairs") {
+    rm.stage("pairs") {
       val np = Preference.pairs(turns).count()
       println(f"[pref]   pairs = $np%,d")
     }
@@ -105,11 +78,11 @@ object StressPreference {
     // conversations per prompt): the range-partitioned fallback must
     // beat-or-match the windowed form here, since this is exactly the
     // skew it exists for
-    timed("pairs_range_part") {
+    rm.stage("pairs_range_part") {
       val np = Preference.pairsRangePartitioned(turns, partitions = 32).count()
       println(f"[pref]   pairs = $np%,d (range-partitioned)")
     }
-    timed("dpo_pack") {
+    rm.stage("dpo_pack") {
       val pk = Preference.dpoPack(turns)
       val r = pk.agg(count(lit(1)), sum("chosen_len")).head
       println(f"[pref]   packs = ${r.getLong(0)}%,d  chosen chars = ${r.getLong(1)}%,d")
@@ -122,12 +95,12 @@ object StressPreference {
         concat(lit("alpha bravo charlie delta echo foxtrot golf hotel "),
           lit("india juliet kilo lima mike november oscar papa d"),
           col("id") % 1000).as("text"))
-    timed("span_corrupt") {
+    rm.stage("span_corrupt") {
       val r = graft.text.Masking.spanCorrupt(docs, col("doc_id"), col("text"))
         .agg(count(lit(1)), sum("n_masked"), sum(length(col("target_text")))).head
       println(f"[pref]   docs = ${r.getLong(0)}%,d  masked blocks = ${r.getLong(1)}%,d  target chars = ${r.getLong(2)}%,d")
     }
-    timed("fim") {
+    rm.stage("fim") {
       val r = graft.text.Masking.fim(docs, col("doc_id"), col("text"))
         .agg(count(lit(1)), sum(length(col("fim_text")))).head
       println(f"[pref]   docs = ${r.getLong(0)}%,d  fim chars = ${r.getLong(1)}%,d")
@@ -152,13 +125,13 @@ object StressPreference {
     val crawled = spark.range(n)
       .select(concat(lit("https://h"), col("id") % 1000, lit(".example/p"),
         col("id")).as("url"))
-    timed("frontier_expand") {
+    rm.stage("frontier_expand") {
       val fr = Frontier.expand(pages, org.apache.spark.sql.functions.col("src"),
         col("html"), crawled, col("url"))
       val r = fr.agg(count(lit(1)), sum("n_refs")).head
       println(f"[pref]   frontier urls = ${r.getLong(0)}%,d  refs = ${r.getLong(1)}%,d")
     }
-    timed("frontier_budget(16)") {
+    rm.stage("frontier_budget(16)") {
       val fr = Frontier.expand(pages, col("src"), col("html"), crawled, col("url"))
       val b = Frontier.hostBudget(fr, 16).count()
       println(f"[pref]   budgeted urls = $b%,d (≤ 16 × 1000 hosts)")
@@ -176,7 +149,7 @@ object StressPreference {
             concat(lit("Crawl-delay: "), col("id") % 40 + 1, lit("\n")))
             .otherwise(lit("")),
           lit("Sitemap: https://example/s.xml")).as("txt"))
-    timed("frontier_composite") {
+    rm.stage("frontier_composite") {
       val fr = Frontier.expand(pages, col("src"), col("html"), crawled, col("url"))
       val gated = Frontier.robotsGate(fr, robots, col("host"), col("txt"))
       val admitted = Frontier.politenessBudget(
@@ -198,7 +171,7 @@ object StressPreference {
           (pmod(xxhash64(col("id"), d), lit(2001L)).cast("double") / 1e3 - 1.0) * 0.05)
         .as("embedding"))
     val tgtBatch = vecs.filter(pmod(col("vec_id"), lit(n / 64)) === 7L)
-    timed("bitext_two_level") {
+    rm.stage("bitext_two_level") {
       val mined = Similarity.bitextMine(vecs, col("vec_id"), col("embedding"),
         tgtBatch, col("vec_id"), col("embedding"), nnK = 4, topN = 100)
       println(f"[pref]   mined pairs = ${mined.count()}%,d (top-100 cut)")
@@ -220,7 +193,7 @@ object StressPreference {
           lit("<a href=\"sub/p"),
           pmod(xxhash64(concat(lit("r3:"), col("id"))), lit(n * 5)),
           lit("\">c</a></body></html>")).as("html"))
-    timed("discovered_resolved") {
+    rm.stage("discovered_resolved") {
       val r = Frontier.discoveredResolved(relPages, col("src"), col("html"))
         .agg(count(lit(1)), sum("n_refs")).head
       println(f"[pref]   resolved urls = ${r.getLong(0)}%,d  refs = ${r.getLong(1)}%,d")

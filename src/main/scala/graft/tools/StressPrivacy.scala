@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Privacy
@@ -22,30 +18,8 @@ import graft.operators.Privacy
 object StressPrivacy {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_PRIVACY_SCALE", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufW = new LongAdder; val shufR = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    def timed[A](name: String)(f: => A): A = {
-      Thread.sleep(800)
-      val w0 = shufW.sum; val r0 = shufR.sum
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800)
-      println(f"[privacy] $name%-22s $secs%6.1f s  " +
-        f"shufW=${shufW.sum - w0}%,d shufR=${shufR.sum - r0}%,d")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "privacy")
 
     // even ids: ONE mega group ("xx", 0). Odd ids: ~20k combinations
     // with xxhash64 spread; ids divisible by 31 collapse src to a
@@ -64,17 +38,17 @@ object StressPrivacy {
     println(f"[privacy] ${rows.count()}%,d rows (half in one mega group)")
     val quasi = Seq(col("lang"), col("src"))
 
-    timed("k_anonymize") {
+    rm.stage("k_anonymize") {
       val r = Privacy.kAnonymize(rows, quasi, k = 5L)
         .agg(count(lit(1)), count_if(col("suppressed"))).head
       println(s"[privacy]   rows=${r.getLong(0)} suppressed=${r.getLong(1)}")
     }
-    timed("l_diversity") {
+    rm.stage("l_diversity") {
       val r = Privacy.lDiversity(rows, quasi, col("sens"), l = 5L)
         .agg(count(lit(1)), count_if(!col("diverse"))).head
       println(s"[privacy]   groups=${r.getLong(0)} homogeneous=${r.getLong(1)}")
     }
-    timed("generalize_ladder") {
+    rm.stage("generalize_ladder") {
       // num spreads ~n/100k rows per value -> width-25 buckets hold
       // ~n/4000; k = n/1000 forces the ladder to level 2 (width 100)
       val r = Privacy.generalizeUntilK(rows, col("id"), col("num"),
@@ -82,12 +56,12 @@ object StressPrivacy {
         .agg(count(lit(1)), count_if(col("level") >= 0), max(col("level"))).head
       println(s"[privacy]   rows=${r.getLong(0)} generalized=${r.getLong(1)} maxLevel=${r.getLong(2)}")
     }
-    timed("t_closeness") {
+    rm.stage("t_closeness") {
       val r = Privacy.tCloseness(rows, quasi, col("sens"), tNum = 1L, tDen = 3L)
         .agg(count(lit(1)), count_if(col("close"))).head
       println(s"[privacy]   groups=${r.getLong(0)} close=${r.getLong(1)}")
     }
-    timed("dp_noisy_release") {
+    rm.stage("dp_noisy_release") {
       val r = Privacy.dpNoisyCounts(rows, quasi, eps = 0.5, seed = "stress")
         .agg(count(lit(1)), sum(abs(col("noise"))), count_if(col("released") === 0)).head
       println(s"[privacy]   groups=${r.getLong(0)} sum|noise|=${r.getLong(1)} zeroed=${r.getLong(2)}")
@@ -95,7 +69,7 @@ object StressPrivacy {
     // user-level DP: ~100k synthetic users (mega-user u0 owns every
     // 10th row — the contribution skew the bound exists for); the
     // per-user rank window is the family's only corpus-scale shuffle
-    timed("dp_user_counts") {
+    rm.stage("dp_user_counts") {
       val withUser = rows.withColumn("user",
         when(col("id") % 10 === 0, lit(0L))
           .otherwise(pmod(xxhash64(lit("usr"), col("id")), lit(100000L))))
@@ -104,7 +78,7 @@ object StressPrivacy {
         .agg(count(lit(1)), sum("group_size")).head
       println(s"[privacy]   groups=${r.getLong(0)} bounded_rows=${r.getLong(1)}")
     }
-    timed("dp_user_sums") {
+    rm.stage("dp_user_sums") {
       val withUser = rows.withColumn("user",
         when(col("id") % 10 === 0, lit(0L))
           .otherwise(pmod(xxhash64(lit("usr"), col("id")), lit(100000L))))
@@ -118,7 +92,7 @@ object StressPrivacy {
     // so the derived frame's owner ids — first id per odd-id group —
     // are reachable too); audited through the base frame AND a derived
     // per-(lang, src) materialization
-    timed("erasure_cascade") {
+    rm.stage("erasure_cascade") {
       val requests = rows.filter(col("id") % 17 === 0).select("id")
       val derived = rows.groupBy("lang", "src")
         .agg(count(lit(1)).as("n"), first(col("id")).as("owner_id"))

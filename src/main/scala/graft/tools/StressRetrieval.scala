@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.CacheScope
@@ -21,17 +20,8 @@ object StressRetrieval {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_RETRIEVAL_SCALE", "1000000").toLong
     val nq = sys.env.getOrElse("SPARK_GRAFT_RETRIEVAL_QUERIES", "100").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[retrieval] $name%-26s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      r
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "retrieval")
 
     // 40 tokens/doc: positions 0-9 draw from ~100-value pools (common,
     // df ≈ n/100), positions 10-39 from ~100k pools (rare, df ≈ n/100k).
@@ -50,7 +40,7 @@ object StressRetrieval {
       .select(col("id").as("qid"), array(qterms: _*).as("qtoks"))
 
     scala.util.Using.resource(new CacheScope) { scope =>
-      val ix = timed(s"index_build_${n / 1000}k") {
+      val ix = rm.stage(s"index_build_${n / 1000}k") {
         val i = Retrieval.bm25Index(corpus, col("doc_id"),
           split(col("text"), " "), scope)
         println(s"[retrieval] postings rows = ${"%,d".format(i.postings.count())}")
@@ -61,14 +51,14 @@ object StressRetrieval {
         "token")
       println(s"[retrieval] pruned postings for $nq queries = " +
         s"${"%,d".format(pruned.count())}")
-      val top = timed(s"bm25_top10_${nq}q") {
+      val top = rm.stage(s"bm25_top10_${nq}q") {
         val t = Retrieval.bm25TopKFromIndex(ix, queries,
           col("qid"), col("qtoks"), 10, scope = scope)
         println(s"[retrieval] result rows = ${t.count()}")
         t
       }
       // re-query against the warm index: the per-batch marginal cost
-      timed(s"bm25_top10_${nq}q_warm") {
+      rm.stage(s"bm25_top10_${nq}q_warm") {
         Retrieval.bm25TopKFromIndex(ix, queries,
           col("qid"), col("qtoks"), 10, scope = scope).count()
       }
@@ -110,7 +100,7 @@ object StressRetrieval {
         .cache()
     println(s"[retrieval] graded corpus = ${"%,d".format(corp.count())} docs")
     val dir = java.nio.file.Files.createTempDirectory("graded_ix").toString
-    timed(s"graded_ingest_8_batches") {
+    rm.stage(s"graded_ingest_8_batches") {
       (0 until 8).foreach { b =>
         Retrieval.bm25IndexAppend(corp.filter(pmod(col("doc"), lit(8)) === b),
           col("doc"), col("tk"), dir, b.toLong)
@@ -122,23 +112,23 @@ object StressRetrieval {
         "and the exact-metrics assertions depend on that count")
     val gq = fams.filter(col("qid") % (nFam / nGq) === 0)
       .select(col("qid"), array(kt("a"), kt("b"), kt("c")).as("qtoks"))
-    def metrics(label: String): Array[org.apache.spark.sql.Row] =
+    def metrics(label: String, ixDir: String): Array[org.apache.spark.sql.Row] =
       scala.util.Using.resource(new CacheScope) { scope =>
-        val ixg = Retrieval.bm25IndexLoad(spark, dir)
-        val sp = timed(s"${label}_bm25_top5") {
+        val ixg = Retrieval.bm25IndexLoad(spark, ixDir)
+        val sp = rm.stage(s"${label}_bm25_top5") {
           val r = Retrieval.bm25TopKFromIndex(ixg, gq,
             col("qid"), col("qtoks"), 5, scope = scope)
             .select("qid", "doc", "rank").cache()
           r.count(); r
         }
         val qv = gq.select(col("qid"), array(lit(1.0), lit(1.0)).as("qv"))
-        val dn = timed(s"${label}_rerank_top5") {
+        val dn = rm.stage(s"${label}_rerank_top5") {
           val r = Retrieval.rerankDense(sp.select("qid", "doc"), qv,
             corp.select(col("doc"), col("v")), 5)
             .select("qid", "doc", "rank").cache()
           r.count(); r
         }
-        val rr = timed(s"${label}_rrf") {
+        val rr = rm.stage(s"${label}_rrf") {
           val r = Retrieval.rrfFuse(Seq(sp, dn), k = 5)
             .select("qid", "doc", "rank").cache()
           r.count(); r
@@ -158,7 +148,7 @@ object StressRetrieval {
         Seq(sp, dn, rr).foreach(_.unpersist())
         rows
       }
-    val before = metrics(s"graded_${nGq / 1000}kq")
+    val before = metrics(s"graded_${nGq / 1000}kq", dir)
     val want = Map("bm25" -> (0L, 2 * nGq), "rrf" -> (nGq, 2 * nGq),
       "rerank" -> (nGq, 3 * nGq))
     before.foreach { r =>
@@ -167,45 +157,18 @@ object StressRetrieval {
         s"graded metrics off the provable ideal: $r (want $h/$c)")
     }
     val dir2 = java.nio.file.Files.createTempDirectory("graded_ix2").toString
-    timed("graded_compact_16p") {
+    rm.stage("graded_compact_16p") {
       Retrieval.bm25IndexCompact(spark, dir, dir2, targetPartitions = 16)
     }
     def partFiles(d: String) =
       java.nio.file.Files.walk(java.nio.file.Paths.get(d))
         .filter(p => p.toString.endsWith(".parquet")).count()
     println(s"[retrieval] part files: ${partFiles(dir)} -> ${partFiles(dir2)}")
-    val dirOld = dir
-    // re-point loads at the compacted dir and re-measure: rows identical
-    val after = {
-      val save = dir2
-      // metrics() closes over `dir`; inline the reload against dir2
-      scala.util.Using.resource(new CacheScope) { scope =>
-        val ixg = Retrieval.bm25IndexLoad(spark, save)
-        val sp = Retrieval.bm25TopKFromIndex(ixg, gq,
-          col("qid"), col("qtoks"), 5, scope = scope)
-          .select("qid", "doc", "rank").cache()
-        val qv = gq.select(col("qid"), array(lit(1.0), lit(1.0)).as("qv"))
-        val dn = Retrieval.rerankDense(sp.select("qid", "doc"), qv,
-          corp.select(col("doc"), col("v")), 5)
-        val rr = Retrieval.rrfFuse(Seq(sp,
-          dn.select("qid", "doc", "rank")), k = 5)
-        val sys0 = sp.withColumn("ranker", lit("bm25"))
-          .unionByName(dn.select("qid", "doc", "rank")
-            .withColumn("ranker", lit("rerank")))
-          .unionByName(rr.select("qid", "doc", "rank")
-            .withColumn("ranker", lit("rrf")))
-        sys0.join(corp.select("doc", "grade"), "doc")
-          .groupBy("ranker")
-          .agg(count_if(col("grade") === 2 && col("rank") === 1)
-              .as("hits_at_1"),
-            sum(when(col("rank") <= 2, col("grade")).otherwise(0L))
-              .as("cg_at_2"))
-          .orderBy("ranker").collect()
-      }
-    }
+    // re-measure against the compacted index: rows identical
+    val after = metrics(s"graded_${nGq / 1000}kq_compacted", dir2)
     assert(before.map(_.toString).toSeq == after.map(_.toString).toSeq,
       s"compacted index changed the metrics: ${after.mkString(";")}")
-    println(s"[retrieval] post-compact metrics identical (${dirOld} -> $dir2)")
+    println(s"[retrieval] post-compact metrics identical ($dir -> $dir2)")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
@@ -10,7 +10,7 @@ import graft.operators.Relational
   * — a Zipfian link_id where the hot key owns ~1.6% of the whole
   * corpus. This synthesizes that shape at 20M fact rows by default
   * (SPARK_GRAFT_SKEW_ROWS), hot key scaled to 30% of rows to make the
-  * straggler unmissable on 32 local cores, and runs the q09-shaped
+  * straggler unmissable on a few local cores, and runs the q09-shaped
   * link_id equi-join three ways:
   *
   *  1. sort-merge join, AQE skew-join OFF — the straggler baseline;
@@ -27,18 +27,16 @@ import graft.operators.Relational
 object StressSkew {
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val spark = graft.EngineConf.localSession(None, Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // default 256m advisory sizes never split a local-scale partition;
       // thresholds scaled so "skewed" means what it would mean per-task
       // on a 100 TB cluster (a partition ≫ the median)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0"))
+    val rm = new RunMetrics(spark, "skew")
 
     val nKeys = 100000L
     // Zipf-ish: key 0 ("the game thread") owns 30% of all comments; the
@@ -56,14 +54,7 @@ object StressSkew {
       concat(lit("thread_"), col("id")).as("title"),
       pmod(col("id"), lit(32)).as("home_team"))
 
-    def time(label: String)(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[skew] $label%-34s $secs%8.2f s")
-      secs
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import RunMetrics.noop
     // collect() drives the DataFrame's OWN QueryExecution (write() spawns
     // a fresh one), so the adaptive plan we print is the finalized one
     def smjPlan(df: DataFrame): String = {
@@ -93,10 +84,10 @@ object StressSkew {
         distributor = col("comment_id"), buckets = 32)
       .groupBy("home_team").agg(count(lit(1)).as("n"), sum("score").as("s"))
     for (round <- 1 to 2) {
-      withSkewJoin(on = false)(time(s"r$round SMJ, AQE skew-join OFF")(noop(joined)))
-      withSkewJoin(on = true)(time(s"r$round SMJ, AQE skew-join ON")(noop(joined)))
+      withSkewJoin(on = false)(rm.stage(s"r$round SMJ, AQE skew-join OFF")(noop(joined)))
+      withSkewJoin(on = true)(rm.stage(s"r$round SMJ, AQE skew-join ON")(noop(joined)))
       // salting must not lean on AQE
-      withSkewJoin(on = false)(time(s"r$round saltedJoin(32), AQE skew OFF")(noop(salted)))
+      withSkewJoin(on = false)(rm.stage(s"r$round saltedJoin(32), AQE skew OFF")(noop(salted)))
     }
     withSkewJoin(on = false)(println("plan OFF:\n" + smjPlan(joined)))
     withSkewJoin(on = true)(println("plan ON:\n" + smjPlan(joined)))

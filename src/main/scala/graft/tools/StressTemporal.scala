@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{Media, MediaCodec}
@@ -24,19 +23,10 @@ object StressTemporal {
   def main(args: Array[String]): Unit = {
     val nVideo = sys.env.getOrElse("SPARK_GRAFT_TEMPORAL_VIDEOS", "30000").toLong
     val nAudio = sys.env.getOrElse("SPARK_GRAFT_TEMPORAL_AUDIOS", "100000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineConf.localSession(None)
     import spark.implicits._
 
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[temporal] $name%-32s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      r
-    }
-
+    val rm = new RunMetrics(spark, "temporal")
     // --- video: 6-frame 48x32 MJPEG, every 5th clip with a cut at 3.
     // Payloads are MATERIALIZED first so the timed stages measure the
     // operators (decode/detect), not the seeded synthesis.
@@ -48,25 +38,25 @@ object StressTemporal {
     }.persist()
     println(s"[temporal] ${"%,d".format(nVideo)} videos x 6 frames, " +
       s"${"%,d".format(nAudio)} audios (<=2 s @ 8 kHz)")
-    timed("synth video payloads")(videos.count())
+    rm.stage("synth video payloads")(videos.count())
 
-    val track = timed("withEveryFrameHash (decode)") {
+    val track = rm.stage("withEveryFrameHash (decode)") {
       val t = Media.withEveryFrameHash(videos).persist()
       println(s"[temporal]   frame rows: ${"%,d".format(t.count())}")
       t
     }
-    timed("sceneCutsFromHashes t=25") {
+    rm.stage("sceneCutsFromHashes t=25") {
       val cuts = Media.sceneCutsFromHashes(track, 25)
         .filter(col("is_cut") && col("frame_idx") > 0).count()
       println(s"[temporal]   cuts: ${"%,d".format(cuts)} " +
         s"(planted ${"%,d".format(nVideo / 5)})")
     }
-    timed("re-threshold t=40 (no codec)") {
+    rm.stage("re-threshold t=40 (no codec)") {
       val cuts = Media.sceneCutsFromHashes(track, 40)
         .filter(col("is_cut") && col("frame_idx") > 0).count()
       println(s"[temporal]   cuts@40: ${"%,d".format(cuts)}")
     }
-    timed("keyFrames (1 pass, 0 shuffle)") {
+    rm.stage("keyFrames (1 pass, 0 shuffle)") {
       val kf = Media.keyFrames(videos, 25).count()
       println(s"[temporal]   keyframes: ${"%,d".format(kf)} " +
         s"(expected ~${"%,d".format(nVideo + nVideo / 5)})")
@@ -79,20 +69,20 @@ object StressTemporal {
       MediaRow(id, "audio", MediaCodec.synthWavGapped(id, dur, 250L, 150L),
         0, 0, dur)
     }.persist()
-    timed("synth audio payloads")(audios.count())
-    val energy = timed("withAudioEnergy (decode)") {
+    rm.stage("synth audio payloads")(audios.count())
+    val energy = rm.stage("withAudioEnergy (decode)") {
       val e = Media.withAudioEnergy(audios, 50).persist()
       println(s"[temporal]   energy windows: ${"%,d".format(e.count())}")
       e
     }
-    timed("audioActivityFromEnergy") {
+    rm.stage("audioActivityFromEnergy") {
       val segs = Media.audioActivityFromEnergy(energy, 100.0)
       val st = segs.agg(count(lit(1)), sum(col("end_ms") - col("start_ms")))
         .head()
       println(s"[temporal]   segments: ${"%,d".format(st.getLong(0))}, " +
         s"active: ${"%,d".format(st.getLong(1) / 1000)} s of audio")
     }
-    timed("re-threshold rms>=3000 (no codec)") {
+    rm.stage("re-threshold rms>=3000 (no codec)") {
       println(s"[temporal]   segments@3000: ${"%,d".format(
         Media.audioActivityFromEnergy(energy, 3000.0).count())}")
     }
@@ -112,8 +102,8 @@ object StressTemporal {
           MediaCodec.withRiffInfo(MediaCodec.synthWav(id, 300L),
             s"artist-$id <u$id@example.com>"), 0, 0, 300L)
     }.persist()
-    timed("synth tagged payloads")(tagged.count())
-    timed("scrubMetadataStats (byte surgery)") {
+    rm.stage("synth tagged payloads")(tagged.count())
+    rm.stage("scrubMetadataStats (byte surgery)") {
       val st = Media.scrubMetadataStats(tagged)
         .agg(count(lit(1)), sum("bytes_removed"), sum("bytes_before")).head()
       println(s"[temporal]   scrubbed ${"%,d".format(st.getLong(0))} payloads, " +

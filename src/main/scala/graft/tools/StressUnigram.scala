@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.UnigramLm
@@ -13,59 +12,33 @@ import graft.text.UnigramLm
   * plus a piece-count aggregation, so a 10× corpus must not make EM
   * rounds 10× slower. Encode IS corpus-sized by definition (every doc
   * is segmented) and is timed separately. Committed numbers in
-  * EXPLAIN.md. Reuses StressBpe's Zipf corpus generator shape. */
+  * EXPLAIN.md. Reuses [[StressBpe.zipfDocs]]. */
 object StressUnigram {
   def main(args: Array[String]): Unit = {
     val rounds = sys.env.getOrElse("SPARK_GRAFT_UNI_ROUNDS", "2").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def corpus(nDocs: Long) = {
-      val wordsPerDoc = 50
-      spark.range(nDocs).select(col("id"),
-        concat_ws(" ", (0 until wordsPerDoc).map { j =>
-          val u = pmod(xxhash64(col("id") * 31 + j), lit(1000000L))
-            .cast("double") / 1000000d
-          val rank = floor(u * u * 60000d).cast("long")
-          concat((3 to 0 by -1).map { p =>
-            val d = pmod(rank.divide(math.pow(26d, p)).cast("long"), lit(26L))
-            chr(d + 97)
-          }: _*)
-        }: _*).as("text"))
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "uni")
 
     Seq(sys.env.getOrElse("SPARK_GRAFT_UNI_DOCS_SMALL", "100000").toLong,
         sys.env.getOrElse("SPARK_GRAFT_UNI_DOCS_LARGE", "1000000").toLong)
       .foreach { n =>
-        val docs = corpus(n)
-        val t0 = System.nanoTime()
+        val docs = StressBpe.zipfDocs(spark, n)
         val words = UnigramLm.wordCounts(docs, col("text")).cache()
-        val nWords = words.count()
-        val tWords = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
+        rm.stage(s"word_counts ${n}docs")(words.count())
         var counts = UnigramLm.seedVocab(words, maxPieceLen = 4, seedSize = 8000)
           .localCheckpoint()
-        val seedRows = counts.count()
-        val tSeed = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        for (_ <- 1 to rounds)
-          counts = UnigramLm.emRound(words,
-            UnigramLm.scoresFromCounts(counts), maxPieceLen = 4)
-            .localCheckpoint()
-        val tEm = (System.nanoTime() - t2) / 1e9
+        rm.stage(s"seed_vocab ${n}docs")(counts.count())
+        rm.stage(s"$rounds em_rounds ${n}docs") {
+          for (_ <- 1 to rounds)
+            counts = UnigramLm.emRound(words,
+              UnigramLm.scoresFromCounts(counts), maxPieceLen = 4)
+              .localCheckpoint()
+        }
         val scores = UnigramLm.scoresFromCounts(counts).localCheckpoint()
-        val t3 = System.nanoTime()
-        val enc = UnigramLm.encode(docs, col("id"), col("text"), scores,
-          maxPieceLen = 4)
-        val nPieces = enc.select(explode(col("pieces"))).count()
-        val tEnc = (System.nanoTime() - t3) / 1e9
+        // result = pieces emitted for n * 50 input tokens
+        rm.stage(s"encode ${n}docs")(UnigramLm.encode(docs, col("id"), col("text"),
+          scores, maxPieceLen = 4).select(explode(col("pieces"))).count())
         words.unpersist()
-        println(f"[uni] $n%,9d docs: $nWords%,6d distinct words in $tWords%5.1f s; " +
-          f"seed $seedRows%,6d pieces in $tSeed%5.1f s; " +
-          f"$rounds EM rounds in $tEm%5.1f s (${tEm / rounds}%4.2f s/round); " +
-          f"encode ${n * 50}%,d tokens -> $nPieces%,d pieces in $tEnc%5.1f s")
       }
     spark.stop()
   }

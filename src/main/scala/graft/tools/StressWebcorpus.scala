@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, MinHashConfig}
@@ -33,17 +33,9 @@ object StressWebcorpus {
     // run C in its own JVM for clean numbers
     val stages = args.headOption.getOrElse("ABC").toUpperCase
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(label: String)(f: => Unit): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime(); f
-      println(f"[webcorpus] $label%-52s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "webcorpus")
+    import RunMetrics.noop
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
     // inflate via ONE explode, not an N-way union: a 200-branch union
@@ -69,7 +61,7 @@ object StressWebcorpus {
     val clustered = inflate(20, salt = false)
     println(s"[webcorpus] clustered corpus: ${clustered.count()} docs " +
       "(20 copies — every doc in a 20-strong near-dup class)")
-    time("pairs + CC + best-quality election (100k docs)") {
+    rm.stage("pairs + CC + best-quality election (100k docs)") {
       val pairs = Dedup.nearDuplicates(clustered, col("doc_id"), col("text"),
         0.8, cfg)
       noop(Dedup.bestQualityCanon(pairs, col("d1"), col("d2"),
@@ -81,38 +73,32 @@ object StressWebcorpus {
 
     // --- B: gate + domain quota over 1M unique docs -------------------
     if (stages.contains('B')) {
+    spark.catalog.clearCache() // drop stage A's persisted frames
     val corpus1m = inflate(200, salt = true)
     println(s"[webcorpus] unique corpus: ${corpus1m.count()} docs (salted copies)")
-    var gated: org.apache.spark.sql.DataFrame = null
-    time("classifier gate, per-row logistic (1M docs)") {
-      gated = CacheScope.unmanaged.persist(
-        WeightedSentiment(gateW, 0.0).score(corpus1m, col("text"))
-          .filter(col("sentiment") === "positive")
-          .select("doc_id", "text"))
-      gated.count()
-    }
-    println(s"[webcorpus] gate kept ${gated.count()} docs")
+    val gated = CacheScope.unmanaged.persist(
+      WeightedSentiment(gateW, 0.0).score(corpus1m, col("text"))
+        .filter(col("sentiment") === "positive")
+        .select("doc_id", "text"))
+    // result = docs the gate kept
+    rm.stage("classifier gate, per-row logistic (1M docs)")(gated.count())
     // materialize the narrow (doc_id, q, domain) projection so the quota
     // timing isolates the rank window from the gate re-execution
     val withDomain = CacheScope.unmanaged.persist(
       gated.select(col("doc_id"), length(col("text")).as("q"),
         TextFunctions.registeredDomain(concat(lit("www.site"),
           pmod(col("doc_id"), lit(300)), lit(".com"))).as("domain")))
-    val t0 = System.nanoTime(); withDomain.count()
-    println(f"[webcorpus] domain projection materialized " +
-      f"${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    val t1 = System.nanoTime()
-    noop(Relational.topKPerGroup(withDomain, Seq(col("domain")),
-      Seq(col("q").desc, col("doc_id")), 1000))
-    println(f"[webcorpus] domain quota: top-1000 per domain, 300 domains " +
-      f"${(System.nanoTime() - t1) / 1e9}%8.2f s")
+    rm.stage("domain projection materialized")(withDomain.count())
+    rm.stage("domain quota: top-1000 per domain, 300 domains")(
+      noop(Relational.topKPerGroup(withDomain, Seq(col("domain")),
+        Seq(col("q").desc, col("doc_id")), 1000)))
     }
 
     // --- C/D: the FULL q123 composite end-to-end at 1M docs -----------
     // Stages A/B time election and gate/quota in isolation; C runs the
     // composed pipeline (gate → near-dup + best-rep election → domain
-    // quota → per-domain report) the way q123 chains it, with a
-    // SparkListener reading per-stage shuffle rows; D is the identical
+    // quota → per-domain report) the way q123 chains it, with
+    // RunMetrics reading per-stage shuffle rows; D is the identical
     // composite with `Dedup.nearDuplicatesCollapsed` — the exact-dup
     // collapse fast path the C numbers motivated. Corpus: 200 copies
     // per base doc where each group of 10 consecutive copies shares a
@@ -121,26 +107,6 @@ object StressWebcorpus {
     // on a ≤100-token doc caps J at ~0.65) — so the dedup stage carries
     // real mass: ~100k 10-member families, ~45 candidate pairs each.
     if (stages.contains('C') || stages.contains('D')) {
-    val shufW = new java.util.concurrent.atomic.LongAdder
-    val shufR = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufW.add(m.shuffleWriteMetrics.recordsWritten)
-        shufR.add(m.shuffleReadMetrics.recordsRead)
-      }
-    })
-    def snap(): (Long, Long) = { Thread.sleep(800); (shufW.sum, shufR.sum) }
-    def cstage(label: String)(f: => Long): Double = {
-      val (w0, r0) = snap(); val t0 = System.nanoTime()
-      val rows = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (w1, r1) = snap()
-      println(f"[webcorpus] $label%-52s $secs%8.2f s  rows=$rows%,d " +
-        f"shufW=${w1 - w0}%,d shufR=${r1 - r0}%,d")
-      secs
-    }
     // salt keyed on the BASE id under a name distinct from the output
     // alias: referencing col("doc_id") here would lateral-alias-capture
     // the NEW per-copy id computed in the same select (observed: every
@@ -173,42 +139,38 @@ object StressWebcorpus {
       s"($cGroup-member exact-dup families, " +
       s"${cCopies / cGroup} groups per base doc)")
 
-    def composite(tag: String,
-                  nearDup: org.apache.spark.sql.DataFrame =>
-                    org.apache.spark.sql.DataFrame): Unit = {
-      val wall0 = System.nanoTime()
-      var g2: org.apache.spark.sql.DataFrame = null
-      cstage(s"composite[$tag]: classifier gate (persist barrier)") {
-        g2 = CacheScope.unmanaged.persist(
-          WeightedSentiment(gateW, 0.0).score(families, col("text"))
-            .filter(col("sentiment") === "positive")
-            .select("doc_id", "text", "n_chars"))
-        g2.count()
+    def composite(tag: String, nearDup: DataFrame => DataFrame): Unit =
+      rm.stage(s"composite[$tag]: all three stages") {
+        var g2: DataFrame = null
+        rm.stage(s"composite[$tag]: classifier gate (persist barrier)") {
+          g2 = CacheScope.unmanaged.persist(
+            WeightedSentiment(gateW, 0.0).score(families, col("text"))
+              .filter(col("sentiment") === "positive")
+              .select("doc_id", "text", "n_chars"))
+          g2.count()
+        }
+        var sv: DataFrame = null
+        rm.stage(s"composite[$tag]: near-dup + election -> survivors") {
+          val pairs = nearDup(g2)
+          val removed = Dedup.bestQualityCanon(pairs, col("d1"), col("d2"),
+              g2, col("doc_id"), col("n_chars"))
+            .filter(col("node") =!= col("rep")).select("node")
+          sv = CacheScope.unmanaged.persist(
+            g2.join(removed, g2("doc_id") === col("node"), "left_anti")
+              .withColumn("domain", concat(lit("site"),
+                pmod(col("doc_id"), lit(300)), lit(".com"))))
+          sv.count()
+        }
+        rm.stage(s"composite[$tag]: domain quota + per-domain report") {
+          val kept = Relational.topKPerGroup(sv, Seq(col("domain")),
+              Seq(col("n_chars").desc, col("doc_id")), 1000)
+            .groupBy("domain").agg(count(lit(1)).as("n_kept"),
+              sum("n_chars").as("kept_chars"))
+          val rep = sv.groupBy("domain").agg(count(lit(1)).as("n_dedup"))
+            .join(kept, Seq("domain"))
+          noop(rep); rep.count()
+        }
       }
-      var sv: org.apache.spark.sql.DataFrame = null
-      cstage(s"composite[$tag]: near-dup + election -> survivors") {
-        val pairs = nearDup(g2)
-        val removed = Dedup.bestQualityCanon(pairs, col("d1"), col("d2"),
-            g2, col("doc_id"), col("n_chars"))
-          .filter(col("node") =!= col("rep")).select("node")
-        sv = CacheScope.unmanaged.persist(
-          g2.join(removed, g2("doc_id") === col("node"), "left_anti")
-            .withColumn("domain", concat(lit("site"),
-              pmod(col("doc_id"), lit(300)), lit(".com"))))
-        sv.count()
-      }
-      cstage(s"composite[$tag]: domain quota + per-domain report") {
-        val kept = Relational.topKPerGroup(sv, Seq(col("domain")),
-            Seq(col("n_chars").desc, col("doc_id")), 1000)
-          .groupBy("domain").agg(count(lit(1)).as("n_kept"),
-            sum("n_chars").as("kept_chars"))
-        val rep = sv.groupBy("domain").agg(count(lit(1)).as("n_dedup"))
-          .join(kept, Seq("domain"))
-        noop(rep); rep.count()
-      }
-      println(f"[webcorpus] composite[$tag] wall (all three stages) " +
-        f"${(System.nanoTime() - wall0) / 1e9}%8.2f s")
-    }
 
     if (stages.contains('C'))
       composite("full", g =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.WordPiece
@@ -24,52 +23,29 @@ import graft.text.WordPiece
 object StressWordPiece {
   def main(args: Array[String]): Unit = {
     val k = sys.env.getOrElse("SPARK_GRAFT_WP_MERGES", "16").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def corpus(nDocs: Long) = {
-      val wordsPerDoc = 50
-      spark.range(nDocs).select(col("id"),
-        concat_ws(" ", (0 until wordsPerDoc).map { j =>
-          val u = pmod(xxhash64(col("id") * 31 + j), lit(1000000L))
-            .cast("double") / 1000000d
-          val rank = floor(u * u * 60000d).cast("long")
-          concat((3 to 0 by -1).map { p =>
-            val d = pmod(rank.divide(math.pow(26d, p)).cast("long"), lit(26L))
-            chr(d + 97)
-          }: _*)
-        }: _*).as("text"))
-    }
+    val spark = graft.EngineConf.localSession(None)
+    val rm = new RunMetrics(spark, "wordpiece")
 
     var vocabLarge: Seq[String] = null
     Seq(sys.env.getOrElse("SPARK_GRAFT_WP_DOCS_SMALL", "100000").toLong,
         sys.env.getOrElse("SPARK_GRAFT_WP_DOCS_LARGE", "1000000").toLong)
       .foreach { n =>
-        val t0 = System.nanoTime()
-        val vocab0 = WordPiece.initVocab(corpus(n), col("text")).persist()
-        val vRows = vocab0.count()
-        val tVocab = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val merges = WordPiece.learnMerges(vocab0, k)
-        val tMerge = (System.nanoTime() - t1) / 1e9
+        val vocab0 =
+          WordPiece.initVocab(StressBpe.zipfDocs(spark, n), col("text")).persist()
+        val vRows = rm.stage(s"init_vocab ${n}docs")(vocab0.count())
+        val merges = rm.stage(s"$k merges ${n}docs")(WordPiece.learnMerges(vocab0, k))
         vocabLarge = WordPiece.vocabulary(vocab0, merges)
         vocab0.unpersist()
-        println(f"[wordpiece] $n%,9d docs (${n * 50}%,d tokens): vocab $vRows%,6d rows " +
-          f"in $tVocab%5.1f s; $k merges in $tMerge%5.1f s " +
-          f"(${tMerge / k}%4.2f s/merge); |V|=${vocabLarge.size}; " +
-          f"first: ${merges.take(2).map(m => s"${m.pa}+${m.pb}").mkString(" ")}")
+        println(f"[wordpiece] $n%,9d docs (${n * 50}%,d tokens): vocab $vRows%,6d rows; " +
+          s"|V|=${vocabLarge.size}; " +
+          s"first: ${merges.take(2).map(m => s"${m.pa}+${m.pb}").mkString(" ")}")
       }
 
     // encode throughput at the large size with the trained vocabulary
     val nLarge = sys.env.getOrElse("SPARK_GRAFT_WP_DOCS_LARGE", "1000000").toLong
-    val enc = corpus(nLarge).select(col("id"),
+    val enc = StressBpe.zipfDocs(spark, nLarge).select(col("id"),
       WordPiece.encode(col("text"), vocabLarge).as("pieces"))
-    val t2 = System.nanoTime()
-    enc.write.format("noop").mode("overwrite").save()
-    println(f"[wordpiece] encode $nLarge%,d docs (${nLarge * 50}%,d tokens) " +
-      f"${(System.nanoTime() - t2) / 1e9}%5.1f s (|V|=${vocabLarge.size})")
+    rm.stage(s"encode ${nLarge}docs |V|=${vocabLarge.size}")(RunMetrics.noop(enc))
     spark.stop()
   }
 }

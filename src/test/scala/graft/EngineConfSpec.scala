@@ -1,0 +1,70 @@
+package graft
+
+import java.io.{File, RandomAccessFile}
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The local harness posture: [[EngineConf.harnessShufflePartitions]]'s
+  * byte-derived width and the conf [[EngineConf.localSession]] applies,
+  * checked as pure values (no session is opened). */
+class EngineConfSpec extends AnyFunSuite {
+  private def envUnset(names: String*): Unit =
+    names.foreach(n => assume(sys.env.get(n).isEmpty, s"$n is set"))
+
+  private def withTempDir[T](f: File => T): T = {
+    val dir = Files.createTempDirectory("graft_width").toFile
+    try f(dir) finally {
+      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
+      dir.delete()
+    }
+  }
+
+  private def writeMb(dir: File, name: String, mb: Int): Unit =
+    Files.write(new File(dir, name).toPath, new Array[Byte](mb << 20))
+
+  test("harnessShufflePartitions: ceil(dir bytes / 2 MB) clamped to [2, 4096]") {
+    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    withTempDir { dir =>
+      assert(EngineConf.harnessShufflePartitions(dir.getPath) == "2")
+      (1 to 5).foreach(i => writeMb(dir, s"part$i", 1))
+      assert(EngineConf.harnessShufflePartitions(dir.getPath) == "3")
+    }
+    assert(EngineConf.harnessShufflePartitions("/nonexistent/graft/input") == "2")
+    withTempDir { dir =>
+      // sparse: 9 GB of length, no blocks written
+      val f = new RandomAccessFile(new File(dir, "huge"), "rw")
+      try f.setLength(9L << 30) finally f.close()
+      assert(EngineConf.harnessShufflePartitions(dir.getPath) == "4096")
+    }
+  }
+
+  test("localPosture: AQE harness knobs, UTC, no UI, byte width for a read dir") {
+    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_AQE_PARALLELISM_FIRST",
+      "SPARK_GRAFT_AQE_ADVISORY", "SPARK_GRAFT_AQE_CACHED_REPLAN")
+    withTempDir { dir =>
+      (1 to 5).foreach(i => writeMb(dir, s"part$i", 1))
+      val posture = EngineConf.localPosture(Some(dir.getPath))
+      assert(posture.map(_._1).distinct.length == posture.length)
+      val conf = posture.toMap
+      assert(conf("spark.master") == s"local[${EngineConf.localCpus}]")
+      assert(conf("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+      assert(conf("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "1m")
+      assert(conf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+      assert(conf("spark.sql.session.timeZone") == "UTC")
+      assert(conf("spark.ui.enabled") == "false")
+      assert(conf("spark.sql.shuffle.partitions") == "3")
+    }
+  }
+
+  test("localPosture: generated inputs keep Spark's default width; extra wins") {
+    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    val posture = EngineConf.localPosture(None,
+      Map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m"))
+    val keys = posture.map(_._1)
+    assert(!keys.contains("spark.sql.shuffle.partitions"))
+    assert(keys.count(_ == "spark.sql.adaptive.advisoryPartitionSizeInBytes") == 1)
+    assert(posture.toMap.apply("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "2m")
+    assert(posture.toMap.apply("spark.sql.session.timeZone") == "UTC")
+  }
+}

@@ -408,7 +408,7 @@ class PlanAuditSpec extends SparkSpec {
     // wedge/closing/degree joins must all be hashed equi-joins; the
     // BroadcastNestedLoopJoin occurrences in the TEXT are the 1-row Nb
     // scalar broadcast of the synthetic edge generator, re-printed once
-    // per cached-subtree reference (the PlanProbe caveat), so their
+    // per cached-subtree reference (the JobProfile plan caveat), so their
     // count is not assertable — the CartesianProduct absence is
     val hashJoins = ("BroadcastHashJoin".r.findAllIn(p).size
       + "SortMergeJoin".r.findAllIn(p).size
