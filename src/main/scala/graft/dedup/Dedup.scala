@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.functions.TextFunctions._
 import graft.operators.CacheScope
@@ -76,34 +77,47 @@ object Dedup {
     * map-side Generate (the window-lead formulation this replaces needed
     * an Exchange + Sort per evaluation just to see adjacent tokens).
     * Values are unchanged: per-token portable hash mod M folded with the
-    * same constants the oracle uses. */
+    * same constants the oracle uses. The posting-list operators
+    * ([[jaccardPairs]], [[sharedSpanPairs]], [[contamination]]) join on
+    * these flat rows; the MinHash operators use [[sketches]] instead. */
   def shingleHashes(df: DataFrame, idCol: Column, textCol: Column,
-                    k: Int = 3, portable: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
+                    k: Int = 3, portable: Boolean = true): DataFrame =
     df.select(idCol.as("doc"),
       Bridge.column(graft.functions.expressions.ShingleHashGenerator(
         Bridge.expression(tokens(textCol)), k, portable)).as("sh"))
-  }
 
-  /** Per-doc MinHash signature over k-token shingles: one grouped
-    * aggregation with a min() per permutation — map-side partials make the
-    * shuffle carry |perms| longs per doc regardless of document size. */
+  /** The per-doc frame every MinHash operator runs on: `(doc, sig, shs)`
+    * from one [[graft.functions.expressions.MinHashSketch]] per row — the
+    * signature array and the sorted distinct shingle set. Docs with fewer
+    * than `shingleK` tokens have no shingles and no row. No shuffle: a
+    * document's shingles all sit in its row.
+    *
+    * Precondition of every operator built on it: ids are unique. The
+    * sketch is per ROW, so two rows sharing an id stay two sketches. */
+  private def sketches(df: DataFrame, idCol: Column, textCol: Column,
+                       cfg: MinHashConfig): DataFrame =
+    // inline over a compacted one-element array: the Generate drops the
+    // null (sub-k) sketches with no Filter — a Filter on the sketch would
+    // be pushed below the projection and evaluate the sketch twice
+    df.select(idCol.as("doc"), inline(array_compact(array(sketch(textCol, cfg)))))
+
+  private def sketch(textCol: Column, cfg: MinHashConfig): Column =
+    Bridge.column(graft.functions.expressions.MinHashSketch(
+      Bridge.expression(tokens(textCol)), cfg.shingleK, cfg.perms, cfg.portable))
+
+  /** The `mh0…` signature columns of a `sig` array column, and back. */
+  private def mhColumns(sig: Column, cfg: MinHashConfig): Seq[Column] =
+    cfg.perms.indices.map(i => sig.getItem(i).as(s"mh$i"))
+
+  private def sigArray(cfg: MinHashConfig): Column =
+    array(cfg.perms.indices.map(i => col(s"mh$i")): _*).as("sig")
+
+  /** Per-doc MinHash signature over k-token shingles: `(doc, mh0…)`, one
+    * row per doc with at least `shingleK` tokens (shorter docs have no
+    * shingles and no row). Ids must be unique ([[sketches]]). */
   def minhashSignatures(df: DataFrame, idCol: Column, textCol: Column,
                         cfg: MinHashConfig = MinHashConfig.OraclePinned): DataFrame =
-    signaturesFromShingles(
-      shingleHashes(df, idCol, textCol, cfg.shingleK, cfg.portable), cfg)
-
-  /** The signature aggregation alone, over an existing (doc, sh) frame —
-    * the shape [[nearDuplicates]] uses so the shingle Generate runs ONCE
-    * per corpus and both its consumers (this aggregation and the verify
-    * tail's shingle sets) read the same persisted rows. min() is
-    * multiplicity-blind, so the frame needs no distinct. */
-  private def signaturesFromShingles(sh: DataFrame, cfg: MinHashConfig): DataFrame = {
-    val aggs = cfg.perms.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * (col("sh") % MinHashP) + lit(b)) % MinHashP).as(s"mh$i")
-    }
-    sh.groupBy("doc").agg(aggs.head, aggs.tail: _*)
-  }
+    sketches(df, idCol, textCol, cfg).select(col("doc") +: mhColumns(col("sig"), cfg): _*)
 
   /** LSH banding: candidate pairs whose signatures collide on at least one
     * band (b bands × r rows from the b·r perms). One equi-join shuffle
@@ -111,26 +125,24 @@ object Dedup {
     * all-pairs cross join entirely. */
   def lshCandidates(sigs: DataFrame,
                     cfg: MinHashConfig = MinHashConfig.OraclePinned): DataFrame = {
-    // Single pass: explode all bands per doc, one equi-join on
-    // (band_idx, band_key) — the signature pipeline is evaluated once,
-    // not once per band as a per-band union of joins would.
-    val bands = bandRows(sigs, cfg)
-    bands.as("a").join(bands.as("b"), Seq("band_idx", "band_key"))
-      .filter(col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
-      .distinct()
+    val s = sigs.select(col("doc"), sigArray(cfg))
+    bandPairs(s, s, cfg).filter(col("d1") < col("d2"))
   }
 
-  /** One (doc, band_idx, band_key) row per band of each signature —
-    * the join key material shared by [[lshCandidates]] (self-join) and
-    * [[incrementalDedup]] (delta⋈base join). */
-  private def bandRows(sigs: DataFrame, cfg: MinHashConfig): DataFrame = {
+  /** Distinct (d1, d2) pairs of `(doc, sig)` rows from `a` and `b` that
+    * collide on at least one band: band i's key is the exact `array<long>`
+    * slice of its r signature rows, and one equi-join on
+    * (band_idx, band_key) finds the pairs — the self-join of
+    * [[lshCandidates]] and [[nearDuplicates]] and the delta⋈index join of
+    * the incremental family. */
+  private def bandPairs(a: DataFrame, b: DataFrame, cfg: MinHashConfig): DataFrame = {
     val r = cfg.rowsPerBand
-    val bandKeys = (0 until cfg.bands).map { b =>
-      concat_ws(":", (b * r until (b + 1) * r).map(i => col(s"mh$i")): _*)
-    }
-    sigs.select(col("doc"),
-      posexplode(array(bandKeys: _*)).as(Seq("band_idx", "band_key")))
+    def bands(sigs: DataFrame, doc: String): DataFrame =
+      sigs.select(col("doc").as(doc), posexplode(array((0 until cfg.bands).map(i =>
+        slice(col("sig"), i * r + 1, r)): _*)).as(Seq("band_idx", "band_key")))
+    bands(a, "d1").join(bands(b, "d2"), Seq("band_idx", "band_key"))
+      .select("d1", "d2")
+      .distinct()
   }
 
   /** Incremental dedup: classify every document of a `delta` batch
@@ -142,87 +154,41 @@ object Dedup {
     * of scope by design — run [[nearDuplicates]] on the (small) delta
     * for that before or after this pass.
     *
-    * Scale shape: every join is keyed on content hashes or band keys —
-    * exact check = semi-join of delta hashes against distinct base
-    * hashes (at scale those live precomputed next to the base); near
-    * check = delta bands ⋈ base bands (NO base×base or delta×delta
-    * pair work anywhere), then exact-Jaccard verification on the
-    * candidate pairs only, with shingle re-hashing bounded to candidate
-    * docs on both sides. Cost is linear in |base| + |delta| plus the
-    * candidate count LSH was tuned for. */
+    * This is [[incrementalDedupAgainstIndex]]'s classification run over
+    * an in-plan, scope-persisted [[buildIndex]] of `base`: one base text
+    * pass, then every join is keyed on content hashes or band keys (NO
+    * base×base or delta×delta pair work anywhere) and exact-Jaccard
+    * verification touches candidate pairs only. Ids must be unique on
+    * each side. */
   def incrementalDedup(base: DataFrame, baseId: Column, baseText: Column,
                        delta: DataFrame, deltaId: Column, deltaText: Column,
                        threshold: Double,
                        cfg: MinHashConfig = MinHashConfig.OraclePinned,
-                       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val d = scope.persist(delta.select(deltaId.as("doc_id"), deltaText.as("text")))
-    // exact: md5 content-hash semi-join (portable, oracle-replayable)
-    val baseHashes = base.select(md5(baseText).as("bh")).distinct()
-    val exactIds = d.join(baseHashes, md5(col("text")) === col("bh"), "left_semi")
-      .select(col("doc_id")).withColumn("_exact", lit(1))
-    // near: delta bands ⋈ base bands → candidate (delta, base) pairs.
-    // ONE shingle pass per side (the nearDuplicates r19 discipline):
-    // signatures and the verify tail's shingle sets both read the
-    // persisted (doc, sh) rows, so each side's text feeds the shingle
-    // Generate exactly once (base text is still md5-scanned by the
-    // exact check — 2 base text reads total, down from 3; the
-    // amortized multi-batch shape that never re-reads base is
-    // [[buildIndex]] + [[incrementalDedupAgainstIndex]]).
-    val dSh = scope.persist(
-      shingleHashes(d, col("doc_id"), col("text"), cfg.shingleK, cfg.portable))
-    val bSh = scope.persist(
-      shingleHashes(base, baseId, baseText, cfg.shingleK, cfg.portable))
-    val dSigs = signaturesFromShingles(dSh, cfg)
-    val bSigs = signaturesFromShingles(bSh, cfg)
-    val cand = scope.persist(
-      bandRows(dSigs, cfg).withColumnRenamed("doc", "ddoc")
-        .join(bandRows(bSigs, cfg).withColumnRenamed("doc", "bdoc"),
-          Seq("band_idx", "band_key"))
-        .select("ddoc", "bdoc").distinct())
-    // exact-Jaccard verification on candidate docs only (|cand| ≪ corpus)
-    val dSets = dSh.join(broadcast(cand.select(col("ddoc").as("cdoc")).distinct()),
-        col("doc") === col("cdoc"), "left_semi")
-      .groupBy("doc").agg(collect_set(col("sh")).as("shs"))
-    val bSets = bSh.join(broadcast(cand.select(col("bdoc").as("cdoc")).distinct()),
-        col("doc") === col("cdoc"), "left_semi")
-      .groupBy("doc").agg(collect_set(col("sh")).as("shs"))
-    val nearIds = cand
-      .join(dSets.select(col("doc").as("ddoc"), col("shs").as("s1")), "ddoc")
-      .join(bSets.select(col("doc").as("bdoc"), col("shs").as("s2")), "bdoc")
-      .withColumn("n_inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
-      .filter(col("n_inter").cast("double") /
-        (size(col("s1")) + size(col("s2")) - col("n_inter")) >= threshold)
-      .select(col("ddoc").as("doc_id")).distinct()
-      .withColumn("_near", lit(1))
-    classifyDelta(d, exactIds, nearIds)
-  }
+                       scope: CacheScope = CacheScope.unmanaged): DataFrame =
+    classifyAgainstIndex(scope.persist(buildIndex(base, baseId, baseText, cfg)),
+      delta, deltaId, deltaText, threshold, cfg, scope)
 
-  /** Persistable dedup index of a base corpus: one row per doc carrying
-    * its content hash (md5 — 128-bit equality, the exact-dup key), its
-    * MinHash signature, and its distinct shingle-hash set — everything
-    * [[incrementalDedupAgainstIndex]] needs, so arriving batches NEVER
-    * rescan base text. Built in ONE corpus pass (signature mins and the
-    * shingle set come out of the same grouped aggregate); write it out
-    * with `df.write.parquet(...)` and classify against the re-read frame.
-    * Docs with fewer than `shingleK` tokens keep an index row (exact-dup
-    * checks must still see them) with null signature columns — they can
-    * never band-match, which [[incrementalDedupAgainstIndex]] preserves
-    * by filtering null bands. */
+  /** Persistable dedup index of a base corpus: one row per doc,
+    * `(doc, content_hash, mh0…, shs, _cfg)` — its content hash (md5,
+    * 128-bit equality, the exact-dup key), its MinHash signature, and its
+    * distinct shingle-hash set: everything [[incrementalDedupAgainstIndex]]
+    * needs, so arriving batches NEVER rescan base text. One projection, no
+    * shuffle; write it out with `df.write.parquet(...)` and classify
+    * against the re-read frame. Docs with fewer than `shingleK` tokens
+    * keep an index row (exact-dup checks must still see them) with null
+    * signature columns — they can never band-match, which
+    * [[incrementalDedupAgainstIndex]] preserves by filtering null bands.
+    * Ids must be unique ([[sketches]]). */
   def buildIndex(base: DataFrame, baseId: Column, baseText: Column,
-                 cfg: MinHashConfig = MinHashConfig.OraclePinned): DataFrame = {
-    val ids = base.select(baseId.as("doc"), md5(baseText).as("content_hash"))
-    val aggs = cfg.perms.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * (col("sh") % MinHashP) + lit(b)) % MinHashP).as(s"mh$i")
-    } :+ collect_set(col("sh")).as("shs")
-    val sigSets = shingleHashes(base, baseId, baseText, cfg.shingleK, cfg.portable)
-      .groupBy("doc").agg(aggs.head, aggs.tail: _*)
+                 cfg: MinHashConfig = MinHashConfig.OraclePinned): DataFrame =
     // cfg fingerprint rides with the data: a classify pass with a
     // different config would band-join on never-matching keys and
     // silently miss every near-dup — the stamp turns that into a loud
     // require() in incrementalDedupAgainstIndex
-    ids.join(sigSets, Seq("doc"), "left")
-      .withColumn("_cfg", lit(cfg.fingerprint))
-  }
+    base.select(baseId.as("doc"), md5(baseText).as("content_hash"),
+        sketch(baseText, cfg).as("sk"))
+      .select((col("doc") +: col("content_hash") +: mhColumns(col("sk.sig"), cfg)) ++
+        Seq(col("sk.shs").as("shs"), lit(cfg.fingerprint).as("_cfg")): _*)
 
   /** [[incrementalDedup]] against a PRECOMPUTED [[buildIndex]] frame —
     * the amortized multi-batch shape: the base corpus is hashed, signed,
@@ -230,7 +196,8 @@ object Dedup {
     * joins against the stored index only (content-hash semi-join, delta
     * bands ⋈ index bands, verification against stored shingle sets). Base
     * text is never touched again. Same classification contract as
-    * [[incrementalDedup]]: exact_dup > near_dup > kept per delta doc. */
+    * [[incrementalDedup]]: exact_dup > near_dup > kept per delta doc.
+    * Delta ids must be unique. */
   def incrementalDedupAgainstIndex(index: DataFrame, delta: DataFrame,
                                    deltaId: Column, deltaText: Column,
                                    threshold: Double,
@@ -253,40 +220,28 @@ object Dedup {
             s"index was built with MinHashConfig fingerprint $fp but " +
               s"classification uses ${cfg.fingerprint} — near-dups would be silently missed")
         }
+    classifyAgainstIndex(index, delta, deltaId, deltaText, threshold, cfg, scope)
+  }
+
+  /** The classification body of the incremental family: exact check =
+    * semi-join of delta md5s against the index's distinct content hashes;
+    * near check = delta bands ⋈ index bands, then [[verifyPairs]] against
+    * the index's stored shingle sets; the status column ranks
+    * exact_dup > near_dup > kept. */
+  private def classifyAgainstIndex(index: DataFrame, delta: DataFrame,
+                                   deltaId: Column, deltaText: Column,
+                                   threshold: Double, cfg: MinHashConfig,
+                                   scope: CacheScope): DataFrame = {
     val d = scope.persist(delta.select(deltaId.as("doc_id"), deltaText.as("text")))
     val exactIds = d.join(index.select(col("content_hash").as("bh")).distinct(),
         md5(col("text")) === col("bh"), "left_semi")
       .select(col("doc_id")).withColumn("_exact", lit(1))
-    // one shingle pass over the delta (the nearDuplicates r19
-    // discipline): signatures and the verify-side shingle sets share
-    // the persisted (doc, sh) rows
-    val dSh = scope.persist(
-      shingleHashes(d, col("doc_id"), col("text"), cfg.shingleK, cfg.portable))
-    val dSigs = signaturesFromShingles(dSh, cfg)
-    val sigCols = col("doc") +: cfg.perms.indices.map(i => col(s"mh$i"))
-    val bBands = bandRows(index.filter(col("mh0").isNotNull).select(sigCols: _*), cfg)
-    val cand = scope.persist(
-      bandRows(dSigs, cfg).withColumnRenamed("doc", "ddoc")
-        .join(bBands.withColumnRenamed("doc", "bdoc"), Seq("band_idx", "band_key"))
-        .select("ddoc", "bdoc").distinct())
-    val dSets = dSh.join(broadcast(cand.select(col("ddoc").as("cdoc")).distinct()),
-        col("doc") === col("cdoc"), "left_semi")
-      .groupBy("doc").agg(collect_set(col("sh")).as("shs"))
-    val nearIds = cand
-      .join(dSets.select(col("doc").as("ddoc"), col("shs").as("s1")), "ddoc")
-      .join(index.select(col("doc").as("bdoc"), col("shs").as("s2")), "bdoc")
-      .withColumn("n_inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
-      .filter(col("n_inter").cast("double") /
-        (size(col("s1")) + size(col("s2")) - col("n_inter")) >= threshold)
-      .select(col("ddoc").as("doc_id")).distinct()
+    val dSk = scope.persist(sketches(d, col("doc_id"), col("text"), cfg))
+    val iSk = index.filter(col("mh0").isNotNull).select(col("doc"), sigArray(cfg), col("shs"))
+    val cand = scope.persist(bandPairs(dSk, iSk, cfg))
+    val nearIds = verifyPairs(cand, dSk, iSk, threshold)
+      .select(col("d1").as("doc_id")).distinct()
       .withColumn("_near", lit(1))
-    classifyDelta(d, exactIds, nearIds)
-  }
-
-  /** Shared status assembly of the incremental-dedup family: left-join
-    * the exact / near marker sets, priority exact > near > kept. */
-  private def classifyDelta(d: DataFrame, exactIds: DataFrame,
-                            nearIds: DataFrame): DataFrame =
     d.select("doc_id")
       .join(exactIds, Seq("doc_id"), "left")
       .join(nearIds, Seq("doc_id"), "left")
@@ -294,6 +249,7 @@ object Dedup {
         when(col("_exact") === 1, "exact_dup")
           .when(col("_near") === 1, "near_dup")
           .otherwise("kept").as("status"))
+  }
 
   /** Exact shingle-set Jaccard for doc pairs, via the counting formulation:
     * explode distinct (doc, shingle-hash) pairs, equi-join on the hash,
@@ -383,11 +339,12 @@ object Dedup {
   }
 
   /** MinHash-LSH near-dup pipeline: signatures → banded candidates →
-    * exact-Jaccard verification of the candidate pairs only.
+    * exact-Jaccard verification of the candidate pairs only. Ids must be
+    * unique ([[sketches]]).
     *
     * NOTE this op (and [[jaccardPairs]] / [[containmentPairs]], via their
     * shared intersection core) persists small intermediate
-    * frames (signatures, candidate pairs) that the returned DataFrame
+    * frames (sketches, candidate pairs) that the returned DataFrame
     * cannot release. Long-lived applications calling it repeatedly should
     * pass a [[graft.operators.CacheScope]] and close it after the
     * consuming action; under the default unmanaged scope the frames stay
@@ -402,54 +359,30 @@ object Dedup {
                      threshold: Double,
                      cfg: MinHashConfig = MinHashConfig.OraclePinned,
                      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // ONE shingle pass for the whole pipeline (r19 — the band join and
-    // the verify tail previously each ran their own corpus scan + shingle
-    // Generate; the per-token hashing is the operator's expensive map
-    // stage, and the verify tail's re-scan was the second full read of
-    // document text). Persist the flat (doc, sh) rows — 16 bytes/row,
-    // the same volume the signature aggregation shuffles anyway, and the
-    // §8 "lightweight proxy" frame (buildIndex materializes exactly this
-    // content per doc for the same reason). Signatures aggregate from the
-    // cached rows; the verify tail derives its candidate shingle sets
-    // from them too, so corpus TEXT is read exactly once.
-    // Persist the signature frame as well — |perms| longs per doc, the
-    // smallest per-doc frame here (round 1 cached only `cand`, which left
-    // the shingle scan running once per band-join side — the 26 s → 8 s
-    // fix) — and the candidate pairs (|candidates| ≪ |corpus| by LSH
-    // design) so the candidate-doc broadcast and the pair join don't
-    // re-run the band self-join.
-    val sh = scope.persist(
-      shingleHashes(df, idCol, textCol, cfg.shingleK, cfg.portable))
-    val sigs = scope.persist(signaturesFromShingles(sh, cfg))
-    val cand = scope.persist(lshCandidates(sigs, cfg))
-    exactVerifyPairs(sh, cand, threshold)
+    // the sketch frame is read by both band-join sides and both verify
+    // sides, so corpus text is read once; the candidate pairs are read by
+    // the verify tail's doc broadcasts and its pair join
+    val sk = scope.persist(sketches(df, idCol, textCol, cfg))
+    val cand = scope.persist(bandPairs(sk, sk, cfg).filter(col("d1") < col("d2")))
+    verifyPairs(cand, sk, sk, threshold)
   }
 
-  /** Exact-Jaccard verification of a (d1, d2) candidate frame: the
-    * shared tail of [[nearDuplicates]] and
-    * [[nearDuplicatesEstimateVerify]]. `sh` is the pipeline's ONE
-    * (doc, sh) shingle frame (persisted by the caller — r19: the tail
-    * previously re-scanned corpus text and re-ran the shingle Generate
-    * for candidate docs; now it semi-joins the already-cached rows, so
-    * text is never read twice). The semi-join still prunes to candidate
-    * docs BEFORE collect_set (the LSH point: \|candidates\| ≪ \|corpus\|
-    * — shingle arrays only materialize for candidates). `cand` should be
-    * persisted by the caller (read for the doc broadcast and the pair
-    * join). shSets itself is deliberately NOT persisted: its two
-    * join-side reads share the aggregation's input exchange via
-    * ReuseExchange (only the cheap final merge re-runs), and an r18 A/B
-    * measured that persist as a net LOSS (q155 3.45→3.82 s, q91
-    * +0.26 s — array materialization overhead exceeds the saved
-    * re-aggregation). */
-  private def exactVerifyPairs(sh: DataFrame, cand: DataFrame,
-                               threshold: Double): DataFrame = {
-    val candDocs = cand
-      .select(explode(array(col("d1"), col("d2"))).as("cdoc")).distinct()
-    val candSh = sh.join(broadcast(candDocs), col("doc") === col("cdoc"), "left_semi")
-    val shSets = candSh.groupBy("doc").agg(collect_set(col("sh")).as("shs"))
+  /** Exact-Jaccard verification of a (d1, d2) candidate frame: `d1`
+    * against the `(doc, shs)` rows of `left`, `d2` against `right` — the
+    * one verify tail of the MinHash family. Each side is semi-joined to
+    * its candidate docs (broadcast) before the pair joins, so shingle sets
+    * move only for candidates (\|candidates\| ≪ \|corpus\|, the LSH
+    * point). `cand` should be persisted by the caller (read for the doc
+    * broadcasts and the pair join). Returns `(d1, d2, jaccard)`. */
+  private def verifyPairs(cand: DataFrame, left: DataFrame, right: DataFrame,
+                          threshold: Double): DataFrame = {
+    def side(sk: DataFrame, d: String, s: String): DataFrame =
+      sk.join(broadcast(cand.select(col(d).as("cdoc")).distinct()),
+          col("doc") === col("cdoc"), "left_semi")
+        .select(col("doc").as(d), col("shs").as(s))
     cand
-      .join(shSets.select(col("doc").as("d1"), col("shs").as("s1")), "d1")
-      .join(shSets.select(col("doc").as("d2"), col("shs").as("s2")), "d2")
+      .join(side(left, "d1", "s1"), "d1")
+      .join(side(right, "d2", "s2"), "d2")
       .withColumn("n_inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
       .withColumn("jaccard",
         col("n_inter").cast("double") / (size(col("s1")) + size(col("s2")) - col("n_inter")))
@@ -460,11 +393,11 @@ object Dedup {
   /** Estimate-then-verify near-dup — the two-stage verification shape:
     * the signature-agreement floor ([[nearDuplicatesEstimatedFromSigs]])
     * prunes the banded candidates with a CHEAP integer projection over
-    * signature rows, and exact-Jaccard verification (the operator's
-    * only text re-read) runs on the survivors alone. Worth it when
-    * banding emits many sub-threshold candidates: the pre-filter
-    * shrinks the re-shingle by the agreement selectivity at the cost
-    * of one extra pass over signature-sized rows.
+    * signature rows, and exact-Jaccard verification runs on the survivors
+    * alone. Worth it when banding emits many sub-threshold candidates:
+    * the pre-filter shrinks the verify joins by the agreement selectivity
+    * at the cost of one extra pass over signature-sized rows. Ids must be
+    * unique ([[sketches]]).
     *
     * `minAgree` must be LOOSE relative to `threshold` — a pair the
     * floor drops is gone even if exact J ≥ threshold. The estimator's
@@ -478,16 +411,14 @@ object Dedup {
                                    threshold: Double, minAgree: Int,
                                    cfg: MinHashConfig = MinHashConfig.OraclePinned,
                                    scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // same one-shingle-pass discipline as [[nearDuplicates]]: the
-    // estimate prunes candidates from signatures, the verify tail reads
-    // its shingle sets from the SAME cached (doc, sh) rows.
-    val sh = scope.persist(
-      shingleHashes(df, idCol, textCol, cfg.shingleK, cfg.portable))
-    val sigs = scope.persist(signaturesFromShingles(sh, cfg))
+    // the estimate reads the signatures, the verify tail the shingle
+    // sets, both from the one persisted sketch frame
+    val sk = scope.persist(sketches(df, idCol, textCol, cfg))
+    val sigs = sk.select(col("doc") +: mhColumns(col("sig"), cfg): _*)
     val pruned = scope.persist(
       nearDuplicatesEstimatedFromSigs(sigs, minAgree, cfg, scope)
         .select("d1", "d2"))
-    exactVerifyPairs(sh, pruned, threshold)
+    verifyPairs(pruned, sk, sk, threshold)
   }
 
   /** MinHash-LSH near-dup with ESTIMATED similarity: banded candidates
@@ -595,10 +526,9 @@ object Dedup {
     // ~13 s materializing ~600 MB of text nobody re-read in bulk, and
     // at 100 TB the shape is disqualifying). TEXT is only needed for
     // the rep corpus — |distinct texts| rows, the collapse's point —
-    // re-derived from the source by one rep-id semi-join. (r19: the
-    // rep corpus is no longer persisted — nearDuplicates now reads its
-    // input exactly ONCE, its shared shingle pass, so the persist would
-    // materialize text into cache for a single read.)
+    // re-derived from the source by one rep-id semi-join, and not
+    // persisted: nearDuplicates reads its input once (into its sketch
+    // frame), so a persist would copy text into the cache for one read.
     val src = df.select(idCol.as("doc"), textCol.as("text"))
     val keyed = scope.persist(src.select(col("doc"), md5(col("text")).as("h")))
     val Seq(nRows, nTexts) = keyed
@@ -832,10 +762,8 @@ object Dedup {
                           scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     val p = df.select(sourceCol.as("source"), idCol.as("_id"), textCol.as("_t"))
     // (source, sh) is read three times (per-source sizes + both sides of
-    // the overlap self-join); unpersisted, each read re-ran the shingle
-    // Generate and the doc→source join over the corpus (r19, guide §5).
-    // 16 bytes/row — the same proxy-frame discipline as nearDuplicates'
-    // shared shingle pass.
+    // the overlap self-join); unpersisted, each read would re-run the
+    // shingle Generate and the doc→source join over the corpus.
     val sh = scope.persist(
       shingleHashes(p, col("_id"), col("_t"), cfg.shingleK, cfg.portable)
         .join(p.select(col("_id").as("doc"), col("source")), "doc")

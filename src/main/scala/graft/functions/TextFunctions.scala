@@ -123,9 +123,6 @@ object TextFunctions {
   val MinHashPerms: Seq[(Long, Long)] =
     Seq((2971L, 104729L), (5683L, 224737L), (7919L, 350377L), (9973L, 479909L))
 
-  def minhash(shingleHashes: Column, a: Long, b: Long): Column =
-    array_min(transform(shingleHashes, h => (lit(a) * (h % MinHashP) + lit(b)) % MinHashP))
-
   def minhashSql(hashesE: String, a: Long, b: Long): String =
     s"list_min(list_transform($hashesE, h -> ($a * (h % $MinHashP) + $b) % $MinHashP))"
 

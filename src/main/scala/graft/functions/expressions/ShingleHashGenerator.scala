@@ -16,9 +16,8 @@ import graft.functions.TextFunctions
   * `lead` ×(k-1) → fold) needs an Exchange + Sort per evaluation just to
   * see adjacent tokens; this generator sees the whole token array in one
   * row, so shingling becomes a pure map-side Generate with zero shuffles.
-  * Values are identical: per-token `md5Prefix60 % M`, then the
-  * `acc*8191 + h (mod M)` fold — the same constants the DuckDB oracle
-  * uses ([[TextFunctions.shingleHashesSql]]).
+  * Values come from [[ShingleHashGenerator.hashes]], the arithmetic the
+  * DuckDB oracle replays ([[TextFunctions.shingleHashesSql]]).
   *
   * CodegenFallback is fine here: generators run one eval per input ROW
   * (not per output element), and the surrounding Generate node still
@@ -31,33 +30,36 @@ case class ShingleHashGenerator(child: Expression, k: Int,
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
-  private val M = TextFunctions.ShingleM
-
   override def elementSchema: StructType =
     StructType(Seq(StructField("sh", LongType)))
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr == null || arr.numElements() < k) return Iterator.empty
-    val n = arr.numElements()
-    val hs = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      // portable = md5-prefix (oracle-replayable); fast = xxhash64, the
-      // 100 TB path (one mix per token, no digest allocation).
-      hs(i) =
-        if (portable) HashUtil.md5Prefix60(arr.getUTF8String(i)) % M
-        else (HashUtil.xx64(arr.getUTF8String(i)) & Long.MaxValue) % M
-      i += 1
-    }
-    (0 to n - k).iterator.map { j =>
-      var acc = hs(j)
-      var l = 1
-      while (l < k) { acc = (acc * 8191 + hs(j + l)) % M; l += 1 }
-      InternalRow(acc)
-    }
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    ShingleHashGenerator.hashes(child.eval(input).asInstanceOf[ArrayData], k, portable)
+      .iterator.map(InternalRow(_))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object ShingleHashGenerator {
+  private val M = TextFunctions.ShingleM
+
+  /** The k-shingle hashes of one token array, in token order, with
+    * multiplicity; empty when the array is null or shorter than `k`.
+    * Per-token `md5Prefix60 % M` (portable, oracle-replayable) or
+    * sign-cleared `xxhash64 % M` (the fast path: one mix per token, no
+    * digest allocation), then the `acc*8191 + h (mod M)` fold — the one
+    * copy of the shingle arithmetic, shared with [[MinHashSketch]]. */
+  def hashes(toks: ArrayData, k: Int, portable: Boolean): Array[Long] = {
+    if (toks == null || toks.numElements() < k) return Array.emptyLongArray
+    val hs = Array.tabulate(toks.numElements()) { i =>
+      val t = toks.getUTF8String(i)
+      if (portable) HashUtil.md5Prefix60(t) % M else (HashUtil.xx64(t) & Long.MaxValue) % M
+    }
+    Array.tabulate(hs.length - k + 1) { j =>
+      var acc = hs(j)
+      for (l <- 1 until k) acc = (acc * 8191 + hs(j + l)) % M
+      acc
+    }
+  }
 }

@@ -127,9 +127,10 @@ object DedupQueries {
       }),
 
     // Per-doc MinHash signatures (4 permutations over 3-token shingles).
-    // Docs with < k tokens yield no shingles: the engine's generator emits
-    // no rows so the groupBy drops them; the oracle filter matches that
-    // (without it, DuckDB's list_min over an empty list returns a NULL row).
+    // Docs with < k tokens yield no shingles: their sketch is null and
+    // minhashSignatures emits no row for them; the oracle filter matches
+    // that (without it, DuckDB's list_min over an empty list returns a
+    // NULL row).
     Q("q35_minhash_sig",
       Some(s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
               |sh AS (SELECT doc_id, $shSql AS hs FROM t WHERE len(tk) >= 3)

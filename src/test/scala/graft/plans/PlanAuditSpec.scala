@@ -424,6 +424,36 @@ class PlanAuditSpec extends SparkSpec {
         s"audit exchanged on a non-user key: $k\n$p"))
   }
 
+  /** A MinHash plan reads per-doc sketches: no shingle-set collect and no
+    * aggregate keyed on the doc id (signature minima or shingle sets). */
+  private def assertNoDocRegroup(p: String): Unit = {
+    assert(!p.contains("collect_set"), p)
+    assert("Aggregate\\(keys=\\[doc#".r.findFirstIn(p).isEmpty, p)
+  }
+
+  test("q36: LSH near-dup plans no shingle-set collect and no doc-keyed aggregate") {
+    assertNoDocRegroup(plan("q36_lsh_neardup"))
+  }
+
+  test("incrementalDedupAgainstIndex plans no shingle-set collect and no doc-keyed aggregate") {
+    import graft.dedup.Dedup
+    val d = graft.sources.Tables.documents(spark, sfDir).select("doc_id", "text")
+    val index = Dedup.buildIndex(d.filter(col("doc_id") % 4 =!= 1), col("doc_id"), col("text"))
+    val out = Dedup.incrementalDedupAgainstIndex(index, d.filter(col("doc_id") % 4 === 1),
+      col("doc_id"), col("text"), 0.8)
+    out.collect()
+    assertNoDocRegroup(out.queryExecution.executedPlan.toString)
+  }
+
+  test("buildIndex is one projection over the scan: zero exchanges") {
+    // raw parquet read: Tables.documents may add its round-robin scan repair
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val index = graft.dedup.Dedup.buildIndex(docs, col("doc_id"), col("text"))
+    index.collect()
+    val p = index.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+  }
+
   test("GraftExtensions class applies cleanly (spark.sql.extensions entry point)") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
