@@ -571,21 +571,14 @@ object Dedup {
     * alternating large-star/small-star contraction, O(log n) rounds on
     * any topology — instead of grinding out diameter-many rounds.
     * `maxIter` still bounds the fallback; hitting it throws rather than
-    * silently returning a partial clustering. Per-round lineage is
-    * truncated through [[graft.operators.Checkpoints.truncate]] (local
-    * checkpoint by default — fast, not executor-loss-tolerant; set
-    * `spark.graft.reliableCheckpoints=true` + a checkpoint dir on real
-    * clusters); the changed-count action pays the materialization
-    * anyway. */
+    * silently returning a partial clustering. The rounds run through
+    * [[graft.operators.Fixpoint.converge]]: the per-round changed-count
+    * is the action that materializes each round. */
   def connectedComponents(pairs: DataFrame, d1: Column, d2: Column,
                           maxIter: Int = 25, switchAfter: Int = 8): DataFrame = {
     // the symmetric edge list is re-joined every round — materialize it
-    // once instead of replaying the (possibly expensive) pairs pipeline
-    // eager=false throughout this loop: every checkpoint is followed by
-    // an action that materializes it (the changed-count below), so the
-    // lazy form fuses "materialize the round" and "count the changes"
-    // into ONE job instead of two — the count would otherwise re-scan
-    // the partitions the eager checkpoint just cached.
+    // once instead of replaying the (possibly expensive) pairs pipeline;
+    // lazily, so the first round's action stores it.
     // ONE pass over `pairs` (explode both orientations per row), not a
     // union of two projections: the union form replayed the whole pairs
     // pipeline — for the dedup family that is the LSH verify tail
@@ -597,26 +590,19 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("canon", col("node"))
-      .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var it = 0
-    var changed = 1L
-    while (changed > 0 && it < math.min(switchAfter, maxIter)) {
+    val (labels, rounds, settled) = graft.operators.Fixpoint.converge(
+        edges.select(col("src").as("node")).distinct().withColumn("canon", col("node")),
+        math.min(switchAfter, maxIter)) { labels =>
       val nbrMin = edges
         .join(labels, edges("dst") === labels("node"))
         .groupBy(col("src")).agg(min(col("canon")).as("nbr_canon"))
-      val next = labels
+      labels
         .join(nbrMin, labels("node") === nbrMin("src"), "left")
         .select(col("node"),
           least(col("canon"), coalesce(col("nbr_canon"), col("canon"))).as("canon"),
           (coalesce(col("nbr_canon"), col("canon")) < col("canon")).as("chg"))
-        .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-      changed = next.filter(col("chg")).count()
-      labels = next.drop("chg")
-      it += 1
-    }
-    if (changed == 0) labels
+    } { (round, _, labels) => round == 0 || labels.filter(col("chg")).count() > 0 }
+    if (settled) labels.drop("chg")
     else {
       // high-diameter graph: propagation would need diameter-many rounds.
       // Seed the star contraction with the label links already discovered
@@ -625,7 +611,7 @@ object Dedup {
       starComponents(
         edges.union(labels.filter(col("node") =!= col("canon"))
           .select(col("node").as("src"), col("canon").as("dst"))),
-        maxIter - it)
+        maxIter - rounds)
     }
   }
 
@@ -645,28 +631,23 @@ object Dedup {
     * first. Returns the same (node, canon) shape as
     * [[connectedComponents]]. */
   def starComponents(edges0: DataFrame, maxIter: Int = 25): DataFrame = {
-    var e = edges0
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .transform(graft.operators.Checkpoints.truncate(_, eager = false))
     // every node ever seen — from the UNFILTERED input, so a node whose
     // only edge is a self-loop still gets its (x, x) row, matching the
     // propagation path's labeling (the filtered frame would drop it).
-    // eager=false: materialized by its first consumer (same job-fusion
-    // discipline as connectedComponents' loop). One pass over edges0
-    // (explode both endpoints), not a union of two projections — edges0
-    // may be an expensive uncheckpointed frame on direct calls.
+    // Truncated lazily: its one consumer, the final join, stores it. One
+    // pass over edges0 (explode both endpoints), not a union of two
+    // projections — edges0 may be an expensive uncheckpointed frame on
+    // direct calls.
     val allNodes = edges0
       .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
       .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var it = 0
-    var converged = false
-    while (!converged) {
-      if (it >= maxIter)
-        throw new IllegalStateException(
-          s"starComponents did not converge in $maxIter rounds")
+    val (e, _, settled) = graft.operators.Fixpoint.converge(
+        edges0
+          .select(least(col("src"), col("dst")).as("src"),
+            greatest(col("src"), col("dst")).as("dst"))
+          .filter(col("src") =!= col("dst"))
+          .distinct(),
+        maxIter) { e =>
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       // large-star: m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u
       val ls = sym.join(sym.groupBy("src").agg(min(col("dst")).as("mn")), "src")
@@ -681,17 +662,18 @@ object Dedup {
           least(col("src"), col("dst")).as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
       val j = o.join(o.groupBy("src").agg(min(col("dst")).as("m")), "src")
-      val next = j.filter(col("dst") =!= col("m"))
+      j.filter(col("dst") =!= col("m"))
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(j.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
-        .transform(graft.operators.Checkpoints.truncate(_, eager = false)) // next.count() below materializes it
-      converged = next.count() == e.count() &&
-        next.join(e, Seq("src", "dst"), "left_anti").isEmpty
-      e = next
-      it += 1
+    } { (round, e, next) =>
+      round == 0 || !(next.count() == e.count() &&
+        next.join(e, Seq("src", "dst"), "left_anti").isEmpty)
     }
+    if (!settled)
+      throw new IllegalStateException(
+        s"starComponents did not converge in $maxIter rounds")
     // star forest: non-roots point at the component min; roots label themselves
     allNodes.join(e.select(col("src").as("node"), col("dst").as("canon")),
         Seq("node"), "left")

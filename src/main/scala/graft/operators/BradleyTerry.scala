@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * in-loop edge-exchange the HITS operator had to buy out with a second
   * cached copy; broadcasting the small side dissolves it entirely.)
   * The 1-row normalizer broadcasts back in; the driver sees ONE scalar
-  * up front (the item count for p₀); `localCheckpoint` truncates
+  * up front (the item count for p₀); [[Fixpoint.iterate]] truncates
   * lineage per round.
   *
   * Degenerate inputs stay total-function: an item with zero wins fixes
@@ -46,7 +46,6 @@ object BradleyTerry {
   def fit(comparisons: DataFrame, winnerCol: Column, loserCol: Column,
           iterations: Int,
           scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val cmp = comparisons.select(winnerCol.as("w"), loserCol.as("l"))
     // games between i and j, kept in BOTH orientations so one
     // i-partitioned frame serves the per-i denominator sum directly
@@ -63,11 +62,8 @@ object BradleyTerry {
         .repartition(col("item")))
     val k = wins.count().toDouble
     require(k > 0, "BradleyTerry.fit over an empty comparison set")
-
-    var p = wins.select(col("item"), lit(1.0 / k).as("p")).transform(graft.operators.Checkpoints.truncate(_))
-    for (_ <- 1 to iterations)
-      p = iteration(games, wins, p).transform(graft.operators.Checkpoints.truncate(_))
-    p.select(col("item"), col("p").as("strength"))
+    Fixpoint.iterate(wins.select(col("item"), lit(1.0 / k).as("p")), iterations)(
+      iteration(games, wins, _)).select(col("item"), col("p").as("strength"))
   }
 
   /** One MM iteration, un-checkpointed — exposed `private[graft]` so the

@@ -2,13 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-truncation seam for the engine's iterative loops (graph
-  * power iterations, connected components, tokenizer trainers, BT fits).
-  *
-  * Every loop truncates its per-round lineage — without truncation each
-  * round's frame is consumed by 2-3 branches of the next round's plan, so
-  * an un-truncated k-round loop replays round 1 O(3^k) times. The HOW is
-  * a deployment decision:
+/** Lineage-truncation seam for the engine's iterative loops: every
+  * round of [[Fixpoint]] and the few loop-invariant frames a loop reuses
+  * each round truncate through here. The HOW is a deployment decision:
   *
   *  - `localCheckpoint` (the default): blocks live on executor
   *    local storage, no DFS round-trip — the right call single-box and
@@ -33,10 +29,9 @@ object Checkpoints {
   /** The conf key selecting reliable checkpoints. */
   val ReliableConf = "spark.graft.reliableCheckpoints"
 
-  /** Truncate `df`'s lineage per the session's checkpoint posture.
-    * `eager = false` keeps the loops' job-fusion discipline (the round's
-    * convergence action materializes the checkpoint — one job, not two);
-    * pass `eager = true` where no such action follows. */
+  /** Truncate `df`'s lineage per the session's checkpoint posture;
+    * `eager = false` defers the materialization to the first action that
+    * reads the result (see [[Fixpoint]] for when each is right). */
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     if (spark.conf.get(ReliableConf, "false").toBoolean) {

@@ -36,18 +36,14 @@ object Graph {
     * again; only the rank frame (8-byte id + double) shuffles into the
     * contribution join, followed by one `groupBy(dst)` partial-agg
     * shuffle. The dangling mass is a 1-row aggregate crossed back in by
-    * broadcast — never a driver collect. Per-iteration lineage is truncated
-    * through [[Checkpoints.truncate]] (local checkpoint by default; set
-    * `spark.graft.reliableCheckpoints=true` + a checkpoint dir for the
-    * executor-loss-tolerant cluster posture — same discipline as
-    * connectedComponents / hierarchyDepth); the driver sees one scalar
-    * count up front (N) and nothing else.
+    * broadcast — never a driver collect. The rounds run through
+    * [[Fixpoint.iterate]], which truncates each round's lineage; the
+    * driver sees one scalar count up front (N) and nothing else.
     */
   def pageRank(nodes: DataFrame, nodeCol: Column,
                edges: DataFrame, srcCol: Column, dstCol: Column,
                iterations: Int, damping: Double = 0.85,
                scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     // pre-partitioned on node: the per-iteration rank rebuild joins the
     // node frame on `node` every round — partitioning the cached copy
@@ -67,9 +63,8 @@ object Graph {
     // that associativity — (1−d)·(1/N) and dmass·(1/N) can differ from
     // (1−d)/N and dmass/N by an ulp, which the floor-quantized output
     // would surface as a flipped micro-digit.
-    var ranks = nodeDf.select(col("node"), lit(1.0 / n).as("rank"))
-      .transform(graft.operators.Checkpoints.truncate(_))
-    for (_ <- 1 to iterations) {
+    Fixpoint.iterate(nodeDf.select(col("node"), lit(1.0 / n).as("rank")),
+        iterations) { ranks =>
       val contribs = outE
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy("dst")
@@ -77,16 +72,14 @@ object Graph {
       val dangling = ranks
         .join(deg.select(col("src").as("node")), Seq("node"), "left_anti")
         .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      ranks = nodeDf
+      nodeDf
         .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
           (lit((1 - damping) / n) + lit(damping) *
             (coalesce(col("contrib"), lit(0.0)) + col("dmass") / n))
             .as("rank"))
-        .transform(graft.operators.Checkpoints.truncate(_))
     }
-    ranks
   }
 
   /** Personalized (topic-sensitive) PageRank: teleportation lands on a
@@ -111,7 +104,6 @@ object Graph {
                            prefs: DataFrame, prefNodeCol: Column, prefWeightCol: Column,
                            iterations: Int, damping: Double = 0.85,
                            scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val nodeDf = scope.persist(
       nodes.select(nodeCol.as("node")).repartition(col("node")))
@@ -145,9 +137,8 @@ object Graph {
       e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")))
     val outE = scope.persist(e.join(deg, "src").repartition(col("src")))
 
-    var ranks = p.select(col("node"), col("p").as("rank"), col("p"))
-      .transform(graft.operators.Checkpoints.truncate(_))
-    for (_ <- 1 to iterations) {
+    Fixpoint.iterate(p.select(col("node"), col("p").as("rank"), col("p")),
+        iterations) { ranks =>
       val contribs = outE
         .join(ranks.select(col("node").as("src"), col("rank")), "src")
         .groupBy("dst")
@@ -155,7 +146,7 @@ object Graph {
       val dangling = ranks
         .join(deg.select(col("src").as("node")), Seq("node"), "left_anti")
         .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      ranks = p
+      p
         .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
@@ -163,9 +154,7 @@ object Graph {
             (coalesce(col("contrib"), lit(0.0)) + col("dmass") * col("p")))
             .as("rank"),
           col("p"))
-        .transform(graft.operators.Checkpoints.truncate(_))
-    }
-    ranks.select("node", "rank")
+    }.select("node", "rank")
   }
 
   /** Semi-supervised label propagation: seed nodes carry labels, every
@@ -188,14 +177,13 @@ object Graph {
     * src∪reversed, persisted, pre-partitioned on src) joins the current
     * (node, label) frame on src, then one `groupBy(dst, label)` count and
     * one per-dst argmax window over the COUNTS frame (|labeled-neighbor
-    * pairs| rows, not corpus rows); `localCheckpoint` truncates lineage
-    * each round. No driver reads at all.
+    * pairs| rows, not corpus rows); [[Fixpoint.iterate]] truncates
+    * lineage each round. No driver reads at all.
     */
   def labelPropagation(nodes: DataFrame, nodeCol: Column, seedLabelCol: Column,
                        edges: DataFrame, srcCol: Column, dstCol: Column,
                        iterations: Int,
                        scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val seeds = scope.persist(
       nodes.select(nodeCol.as("node"), seedLabelCol.cast("long").as("seed_label"))
         .repartition(col("node")))
@@ -204,9 +192,8 @@ object Graph {
       dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("src")))
 
-    var labels = seeds.select(col("node"), col("seed_label").as("label"))
-      .transform(graft.operators.Checkpoints.truncate(_))
-    for (_ <- 1 to iterations) {
+    Fixpoint.iterate(seeds.select(col("node"), col("seed_label").as("label")),
+        iterations) { labels =>
       val neighborCounts = und
         .join(labels.filter(col("label").isNotNull)
           .select(col("node").as("src"), col("label")), "src")
@@ -218,14 +205,12 @@ object Graph {
         .withColumn("_rk", row_number().over(byCount))
         .filter(col("_rk") === 1)
         .select(col("dst").as("node"), col("label").as("mode_label"))
-      labels = seeds
+      seeds
         .join(labels.select(col("node"), col("label").as("prev")), Seq("node"))
         .join(mode, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("seed_label"), col("mode_label"), col("prev")).as("label"))
-        .transform(graft.operators.Checkpoints.truncate(_))
     }
-    labels
   }
 
   /** HITS hubs-and-authorities (Kleinberg): alternating updates
@@ -255,22 +240,18 @@ object Graph {
     * the dominant per-round cost, so it's bought out once with memory.
     * Per round only the score frames shuffle (into the two joins and two
     * partial-agg exchanges); the two 1-row max normalizers broadcast back
-    * in (never a driver collect); `localCheckpoint` truncates lineage per
-    * round. Nodes without the relevant edges coalesce to score 0.
+    * in (never a driver collect); [[Fixpoint.iterate]] truncates lineage
+    * per round. Nodes without the relevant edges coalesce to score 0.
     */
   def hits(nodes: DataFrame, nodeCol: Column,
            edges: DataFrame, srcCol: Column, dstCol: Column,
            iterations: Int,
            scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val (nodeDf, eSrc, eByDst) =
       hitsEdges(nodes, nodeCol, edges, srcCol, dstCol, scope)
-    var scores = nodeDf
-      .select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
-      .transform(graft.operators.Checkpoints.truncate(_))
-    for (_ <- 1 to iterations)
-      scores = hitsIteration(nodeDf, eSrc, eByDst, scores).transform(graft.operators.Checkpoints.truncate(_))
-    scores
+    Fixpoint.iterate(
+        nodeDf.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth")),
+        iterations)(hitsIteration(nodeDf, eSrc, eByDst, _))
   }
 
   /** Persisted inputs for [[hits]]: the node frame plus the two edge
@@ -299,7 +280,7 @@ object Graph {
   private[graft] def hitsIteration(nodeDf: DataFrame, eSrc: DataFrame,
                                    eByDst: DataFrame, scores: DataFrame): DataFrame =
     hitsHubUpdate(nodeDf, eByDst,
-      hitsAuthUpdate(nodeDf, eSrc, scores).transform(graft.operators.Checkpoints.truncate(_)))
+      Checkpoints.truncate(hitsAuthUpdate(nodeDf, eSrc, scores)))
 
   /** Auth half-update (un-checkpointed): join current hubs into the
     * src-partitioned edge copy, aggregate on dst, max-normalize. */
@@ -325,6 +306,21 @@ object Graph {
     * nodeDf ⋈ hubRaw ⋈ auth chain: the auth frame already carries every
     * node exactly once (it was left-joined off the node set), so using
     * it as the spine drops a third full-width join per iteration. */
+  private[graft] def hitsHubUpdate(nodeDf: DataFrame, eByDst: DataFrame,
+                                   auth: DataFrame): DataFrame = {
+    val hubRaw = eByDst
+      .join(auth.select(col("node").as("dst"), col("auth")), "dst")
+      .groupBy("src").agg(sum("auth").as("hub_raw"))
+    val hMax = hubRaw.agg(
+      coalesce(max("hub_raw"), lit(1.0)).as("h_max"))
+    auth
+      .join(hubRaw.withColumnRenamed("src", "node"), Seq("node"), "left")
+      .crossJoin(broadcast(hMax))
+      .select(col("node"),
+        (coalesce(col("hub_raw"), lit(0.0)) / col("h_max")).as("hub"),
+        col("auth"))
+  }
+
   /** Per-node triangle counts + local clustering coefficient over the
     * UNDIRECTED simple graph induced by `edges` (direction and
     * multiplicity dropped, self-loops removed) — the link-spam /
@@ -388,20 +384,5 @@ object Graph {
           round(lit(2.0) * col("n_tri") /
             (col("deg") * (col("deg") - 1)).cast("double"), 6))
           .otherwise(lit(0.0)))
-  }
-
-  private[graft] def hitsHubUpdate(nodeDf: DataFrame, eByDst: DataFrame,
-                                   auth: DataFrame): DataFrame = {
-    val hubRaw = eByDst
-      .join(auth.select(col("node").as("dst"), col("auth")), "dst")
-      .groupBy("src").agg(sum("auth").as("hub_raw"))
-    val hMax = hubRaw.agg(
-      coalesce(max("hub_raw"), lit(1.0)).as("h_max"))
-    auth
-      .join(hubRaw.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .crossJoin(broadcast(hMax))
-      .select(col("node"),
-        (coalesce(col("hub_raw"), lit(0.0)) / col("h_max")).as("hub"),
-        col("auth"))
   }
 }

@@ -501,8 +501,8 @@ object Relational extends org.apache.spark.internal.Logging {
     * loud, like connectedComponents' maxIter).
     *
     * Scale shape per round: one equi-join on the 8-byte ancestor key +
-    * one convergence count on the driver (a scalar, not data);
-    * `localCheckpoint` truncates lineage each round like
+    * one convergence count on the driver (a scalar, not data); the
+    * rounds run through [[Fixpoint.converge]], like
     * [[graft.dedup.Dedup.connectedComponents]]. Finished walks are SPLIT
     * OUT of the advancing side as soon as they resolve and unioned back
     * at the end — on the common mostly-shallow forest (Reddit-thread
@@ -519,47 +519,40 @@ object Relational extends org.apache.spark.internal.Logging {
                      maxDoubling: Int = 20,
                      roundProbe: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val isRoot = parentCol.isNull || parentCol === idCol
-    // state of an UNFINISHED walk: after `d` hops from `node` it stands
-    // at `anc`; roots resolve immediately into `done` with depth 0
-    // eager=false: every checkpoint here is materialized by the round's
-    // convergence count (or the first hop join that reads it), fusing
-    // "materialize" and "count" into one job per round — the eager form
-    // paid a full extra cached-pass + job launch each round.
-    var done: List[DataFrame] = List(
-      df.filter(isRoot).select(idCol.as("node"), idCol.as("anc"),
-        lit(0L).as("d")).transform(graft.operators.Checkpoints.truncate(_, eager = false)))
-    var open = df.filter(!isRoot)
-      .select(idCol.as("node"), parentCol.as("anc"), lit(1L).as("d"))
-      .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var round = 0
-    var openCount = open.count()
-    while (openCount > 0 && round < maxDoubling) {
-      roundProbe(round, openCount)
-      // hop lookup = every node's best-known walk (open ∪ done); a hop
-      // landing on a done row means the walk has reached its root
-      val hop = (open.withColumn("j_fin", lit(false)) :: done.map(
+    // loop state: (node, anc, d, fin) — after `d` hops from `node` the
+    // walk stands at `anc`, `fin` once that is a root. The init holds
+    // every node (roots resolved at depth 0); each later state holds only
+    // the walks its round advanced. `resolved` collects every stepped
+    // state's finished walks, newest first.
+    val resolved = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val (walks, _, settled) = Fixpoint.converge(
+        df.select(idCol.as("node"), when(isRoot, idCol).otherwise(parentCol).as("anc"),
+          when(isRoot, lit(0L)).otherwise(lit(1L)).as("d"), isRoot.as("fin")),
+        maxDoubling) { walks =>
+      walks.filter(col("fin")).drop("fin") +=: resolved
+      val open = walks.filter(!col("fin")).drop("fin")
+      // hop lookup = every node's best-known walk (open ∪ resolved); a hop
+      // landing on a resolved row means the walk has reached its root
+      val hop = (open.withColumn("j_fin", lit(false)) :: resolved.toList.map(
           _.withColumn("j_fin", lit(true))))
         .reduce(_ unionByName _)
         .select(col("node").as("j_node"), col("anc").as("j_anc"),
           col("d").as("j_d"), col("j_fin"))
-      val advanced = open.join(hop, open("anc") === hop("j_node"), "left")
+      open.join(hop, open("anc") === hop("j_node"), "left")
         .select(col("node"),
           coalesce(col("j_anc"), col("anc")).as("anc"),
           (col("d") + coalesce(col("j_d"), lit(0L))).as("d"),
           coalesce(col("j_fin"), lit(false)).as("fin"))
-        .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-      // done/open are plain filters over the checkpointed `advanced` —
-      // constant-depth lineage already, so checkpointing them again
-      // would only add two more materialization jobs per round. The
-      // openCount action below computes + caches `advanced` once.
-      done ::= advanced.filter(col("fin")).drop("fin")
-      open = advanced.filter(!col("fin")).drop("fin")
-      openCount = open.count()
-      round += 1
+    } { (round, _, walks) =>
+      val openCount = walks.filter(!col("fin")).count()
+      if (openCount > 0 && round < maxDoubling) roundProbe(round, openCount)
+      openCount > 0
     }
-    require(openCount == 0,
-      s"hierarchy deeper than 2^$maxDoubling, cyclic, or dangling parents: $openCount unresolved walks")
-    done.reduce(_ unionByName _).select(col("node"), col("d").as("depth"))
+    require(settled,
+      s"hierarchy deeper than 2^$maxDoubling, cyclic, or dangling parents: " +
+        s"${walks.filter(!col("fin")).count()} unresolved walks")
+    (walks.filter(col("fin")).drop("fin") +: resolved.toList)
+      .reduce(_ unionByName _).select(col("node"), col("d").as("depth"))
   }
 
   def dedupExactKeepFirst(df: DataFrame, key: Column, tieBreaker: Column): DataFrame =

@@ -546,12 +546,7 @@ object Similarity {
     require(init.nonEmpty && iters >= 0, "need a non-empty init codebook")
     var cents = init
     for (_ <- 1 to iters) {
-      val stats = withIvfCell(vectors, idCol, vecCol, cents)
-        .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cell", "dim").agg(sum("x").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2) / r.getLong(3)))
-        .toMap
+      val stats = cellMeans(withIvfCell(vectors, idCol, vecCol, cents))
       cents = cents.zipWithIndex.map { case (old, cell) =>
         if (stats.contains((cell, 0)))
           old.indices.map(d => stats((cell, d))).toArray
@@ -560,6 +555,17 @@ object Similarity {
     }
     cents
   }
+
+  /** The Lloyd update's per-cell mean, collected: `(cell, dim) → mean`
+    * over an assigned `(v, cell)` frame — one grouped aggregate over the
+    * posexploded assignment, k·d result rows (the codebook itself). */
+  private def cellMeans(assigned: DataFrame): Map[(Int, Int), Double] =
+    assigned
+      .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy("cell", "dim").agg(sum("x").as("s"), count(lit(1)).as("n"))
+      .collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2) / r.getLong(3)))
+      .toMap
 
   /** Assign every vector its nearest centroid: `(vec_id, v, cell)` where
     * cell = argmin over ‖c‖² − 2·⟨v,c⟩, ties to the lower cell index.
@@ -630,13 +636,9 @@ object Similarity {
       // null element, or dim mismatch — see CentroidArgMin). Such rows
       // must not train any centroid: an unboxed null Int aliases to
       // cell 0 and would silently replace cell 0's refined centroid.
-      val stats = withIvfCell2(vectors, idCol, vecCol, coarse, fines, fineStride)
-        .filter(col("cell").isNotNull)
-        .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cell", "dim").agg(sum("x").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2) / r.getLong(3)))
-        .toMap
+      val stats = cellMeans(
+        withIvfCell2(vectors, idCol, vecCol, coarse, fines, fineStride)
+          .filter(col("cell").isNotNull))
       fines = fines.zipWithIndex.map { case (book, c) =>
         book.zipWithIndex.map { case (old, f) =>
           val cid = c * fineStride + f

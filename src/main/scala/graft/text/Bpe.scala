@@ -92,35 +92,35 @@ object Bpe {
   /** Learn up to `k` merges: per iteration, argmax pair (count desc,
     * then (pa, pb) lexicographic — the deterministic tiebreak the
     * oracle replays) and a literal-replace rewrite of the vocab.
-    * `localCheckpoint` (not persist) each round, the iterative-operator
-    * discipline shared with [[graft.dedup.Dedup.connectedComponents]]
-    * and `Relational.hierarchyDepth`: persist alone caches the data but
-    * leaves the logical plan chaining back through every prior rewrite
-    * to the corpus scan, so Catalyst re-analyzes an O(rounds)-deep tree
-    * per iteration — with a 32k-merge production vocab that is O(k²)
-    * planning work. Checkpointing truncates the plan to the
-    * materialized vocab, keeping per-iteration planning O(1).
     * Stops early when no pair remains. */
-  def learnMerges(vocab0: DataFrame, k: Int): Seq[(String, String, Long)] = {
+  def learnMerges(vocab0: DataFrame, k: Int): Seq[(String, String, Long)] =
+    mergeLoop(vocab0, k) { vocab =>
+      pairCounts(vocab).orderBy(desc("cnt"), col("pa"), col("pb")).limit(1)
+        .collect().headOption.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    } { case (a, b, _) => (a, b, a + b) }
+
+  /** The merge-training loop [[learnMerges]] and
+    * [[WordPiece.learnMerges]] share: each round `top` scores the
+    * current vocab's adjacent pairs and returns the winning merge (none
+    * when no pair remains, which ends training); `rule` names the
+    * merge's (left, right, merged) symbols for the literal-replace
+    * rewrite. The rounds run through [[graft.operators.Fixpoint.converge]],
+    * truncated, not persisted: persist alone caches the data but leaves
+    * the logical plan chaining back through every prior rewrite to the
+    * corpus scan, so Catalyst would re-analyze an O(rounds)-deep tree per
+    * iteration — O(k²) planning work for a 32k-merge production vocab.
+    * Each round's argmax collect is the action that stores its vocab; the
+    * last rewrite, read by nothing, never runs. */
+  private[text] def mergeLoop[M](vocab0: DataFrame, k: Int)(top: DataFrame => Option[M])(
+      rule: M => (String, String, String)): Seq[M] = {
     require(k >= 0, "merge count must be non-negative")
-    val merges = ArrayBuffer.empty[(String, String, Long)]
-    // eager=false: each round's argmax collect materializes the vocab it
-    // scores, so the rewrite + the argmax fuse into one job — and the
-    // FINAL round's rewrite (whose vocab nothing ever reads; only the
-    // merge list is returned) is never computed at all.
-    var vocab = vocab0.transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var done = false
-    for (_ <- 1 to k if !done) {
-      val top = pairCounts(vocab)
-        .orderBy(desc("cnt"), col("pa"), col("pb")).limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((a, b, c))
-        vocab = vocab.withColumn("seq",
-          replace(col("seq"), lit(L + a + R + L + b + R), lit(L + a + b + R)))
-          .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-      }
+    val merges = ArrayBuffer.empty[M]
+    graft.operators.Fixpoint.converge(vocab0, k) { vocab =>
+      val (a, b, ab) = rule(merges.last)
+      vocab.withColumn("seq", replace(col("seq"), lit(L + a + R + L + b + R), lit(L + ab + R)))
+    } { (round, _, vocab) =>
+      // round k takes no argmax: it would compute a vocab nothing reads
+      round < k && top(vocab).map(merges += _).isDefined
     }
     merges.toSeq
   }

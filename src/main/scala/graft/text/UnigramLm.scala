@@ -174,17 +174,14 @@ object UnigramLm {
   def trainFromWords(wordsIn: DataFrame, maxPieceLen: Int = 6,
                      seedSize: Int = 2000, vocabSize: Int = 500,
                      rounds: Int = 2): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // Persist only if the CALLER hasn't: a pipeline that already cached
     // its word table (the advertised compose case) must not have its
     // persistence silently evicted on return.
     val ownCache = wordsIn.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val words = if (ownCache) wordsIn.cache() else wordsIn
-    var counts = seedVocab(words, maxPieceLen, seedSize).cache()
-    counts.count()
-    for (_ <- 1 to rounds)
-      counts = emRound(words, scoresFromCounts(counts), maxPieceLen)
-        .transform(graft.operators.Checkpoints.truncate(_))
+    val counts = graft.operators.Fixpoint.iterate(
+        seedVocab(words, maxPieceLen, seedSize), rounds)(
+      c => emRound(words, scoresFromCounts(c), maxPieceLen))
     val kept = counts
       .withColumn("_rk", row_number().over(
         org.apache.spark.sql.expressions.Window

@@ -1,7 +1,5 @@
 package graft.text
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,8 @@ import graft.functions.TextFunctions
   *  - ONE corpus-scale shuffle ever ([[initVocab]]'s word count); every
   *    training iteration runs on the Zipf-aggregated vocab frame —
   *    one pair count + one symbol count + a TakeOrderedAndProject(1)
-  *    per merge, `localCheckpoint` per round to keep planning O(1).
+  *    per merge, in [[Bpe]]'s merge loop, which truncates each round's
+  *    lineage to keep planning O(1).
   *  - Encode is one codegen'd per-row projection: the greedy matcher is
   *    a Catalyst `aggregate` fold over character positions (state =
   *    (next position, pieces); each step consumes the longest vocab
@@ -88,20 +87,12 @@ object WordPiece {
     * rewrite the vocab by literal replace. Counts are exact int64 and
     * both engines divide the same IEEE doubles, so scores (not just
     * winners) are bit-reproducible. */
-  def learnMerges(vocab0: DataFrame, k: Int): Seq[Merge] = {
-    require(k >= 0, "merge count must be non-negative")
-    val merges = ArrayBuffer.empty[Merge]
-    // eager=false: the argmax collect each round materializes the vocab,
-    // fusing rewrite + argmax into one job; the final round's rewrite
-    // (read by nothing — only merges are returned) never runs. Same
-    // discipline as Bpe.learnMerges.
-    var vocab = vocab0.transform(graft.operators.Checkpoints.truncate(_, eager = false))
-    var done = false
-    for (_ <- 1 to k if !done) {
+  def learnMerges(vocab0: DataFrame, k: Int): Seq[Merge] =
+    Bpe.mergeLoop(vocab0, k) { vocab =>
       val syms = symbolCounts(vocab)
       val ca = syms.select(col("sym").as("pa"), col("c").as("ca"))
       val cb = syms.select(col("sym").as("pb"), col("c").as("cb"))
-      val top = Bpe.pairCounts(vocab)
+      Bpe.pairCounts(vocab)
         .join(ca, "pa").join(cb, "pb")
         .select(col("pa"), col("pb"), col("cnt"),
           // double the operands BEFORE multiplying: an int64 product of
@@ -110,19 +101,8 @@ object WordPiece {
           (col("cnt").cast("double")
             / (col("ca").cast("double") * col("cb").cast("double"))).as("score"))
         .orderBy(desc("score"), col("pa"), col("pb")).limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val m = Merge(top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2), top(0).getDouble(3))
-        merges += m
-        vocab = vocab.withColumn("seq",
-          replace(col("seq"), lit(L + m.pa + R + L + m.pb + R),
-            lit(L + m.merged + R)))
-          .transform(graft.operators.Checkpoints.truncate(_, eager = false))
-      }
-    }
-    merges.toSeq
-  }
+        .headOption.map(r => Merge(r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+    }(m => (m.pa, m.pb, m.merged))
 
   /** Final vocabulary = every base symbol of the initial vocab (single
     * chars, plain + `##` forms, driver-tiny: ≤ 52 for the `[a-z]`
