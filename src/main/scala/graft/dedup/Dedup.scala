@@ -390,37 +390,6 @@ object Dedup {
       .select("d1", "d2", "jaccard")
   }
 
-  /** Estimate-then-verify near-dup — the two-stage verification shape:
-    * the signature-agreement floor ([[nearDuplicatesEstimatedFromSigs]])
-    * prunes the banded candidates with a CHEAP integer projection over
-    * signature rows, and exact-Jaccard verification runs on the survivors
-    * alone. Worth it when banding emits many sub-threshold candidates:
-    * the pre-filter shrinks the verify joins by the agreement selectivity
-    * at the cost of one extra pass over signature-sized rows. Ids must be
-    * unique ([[sketches]]).
-    *
-    * `minAgree` must be LOOSE relative to `threshold` — a pair the
-    * floor drops is gone even if exact J ≥ threshold. The estimator's
-    * std bounds the safe gap: with n perms, floor ≈ n·J − 3√(J(1−J)n)
-    * keeps the false-drop rate ~per-mille (40/64 for J 0.8). With a
-    * conservative floor the output EQUALS [[nearDuplicates]]
-    * (spec-pinned); an aggressive floor trades recall for verify
-    * cost — measured, not silent, via [[nearDuplicatesEstimated]]'s
-    * audit view of what the floor keeps. */
-  def nearDuplicatesEstimateVerify(df: DataFrame, idCol: Column, textCol: Column,
-                                   threshold: Double, minAgree: Int,
-                                   cfg: MinHashConfig = MinHashConfig.OraclePinned,
-                                   scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // the estimate reads the signatures, the verify tail the shingle
-    // sets, both from the one persisted sketch frame
-    val sk = scope.persist(sketches(df, idCol, textCol, cfg))
-    val sigs = sk.select(col("doc") +: mhColumns(col("sig"), cfg): _*)
-    val pruned = scope.persist(
-      nearDuplicatesEstimatedFromSigs(sigs, minAgree, cfg, scope)
-        .select("d1", "d2"))
-    verifyPairs(pruned, sk, sk, threshold)
-  }
-
   /** MinHash-LSH near-dup with ESTIMATED similarity: banded candidates
     * scored by their signature agreement count instead of exact-Jaccard
     * verification — the variance-for-cost trade at 100 TB, where exact
@@ -434,9 +403,8 @@ object Dedup {
     * (std ≈ √(J(1−J)/n), ~0.05 at n=64 near J=0.8), so the caller
     * expresses the threshold as an integer `minAgree` (e.g. 52 ≈ 0.8·64)
     * — the output is all-integer `(d1, d2, n_agree)`, engine-portable
-    * with no float anywhere. Survivors can feed [[nearDuplicates]]-style
-    * exact verification as a final filter (estimate-then-verify) when
-    * the decision boundary must be exact.
+    * with no float anywhere. Where the decision boundary must be exact,
+    * use [[nearDuplicates]].
     *
     * `sigs` is read four times (band self-join ×2, agreement join ×2) —
     * pass the frame [[minhashSignatures]] produced under a persist (the
@@ -641,6 +609,9 @@ object Dedup {
     val allNodes = edges0
       .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
       .transform(graft.operators.Checkpoints.truncate(_, eager = false))
+    // each round's check counts `next`; the next round's `e` is that frame,
+    // so its count is reused instead of run again
+    var counted: Option[Long] = None
     val (e, _, settled) = graft.operators.Fixpoint.converge(
         edges0
           .select(least(col("src"), col("dst")).as("src"),
@@ -668,8 +639,12 @@ object Dedup {
         .filter(col("src") =!= col("dst"))
         .distinct()
     } { (round, e, next) =>
-      round == 0 || !(next.count() == e.count() &&
-        next.join(e, Seq("src", "dst"), "left_anti").isEmpty)
+      round == 0 || {
+        val n = next.count()
+        val same = counted.getOrElse(e.count()) == n
+        counted = Some(n)
+        !(same && next.join(e, Seq("src", "dst"), "left_anti").isEmpty)
+      }
     }
     if (!settled)
       throw new IllegalStateException(

@@ -68,11 +68,6 @@ object TextFunctions {
     * interpreted higher-order functions in the hot path. */
   val ShingleM: Long = 2147483647L
 
-  /** Fold `k` per-position token-hash expressions into one shingle hash;
-    * `h(j)` must yield a value already reduced mod [[ShingleM]]. */
-  def combineShingle(h: Int => Column): Column =
-    (1 until 3).foldLeft(h(0))((acc, j) => (acc * 8191L + h(j)) % ShingleM)
-
   /** Ordered k-shingle hash ARRAY: element `i` (0-based) is the hash of
     * the k-gram starting at token `i` — the POSITIONAL twin of
     * [[graft.functions.expressions.ShingleHashGenerator]] (which emits

@@ -1081,19 +1081,8 @@ object Similarity {
   def semanticDedupOnCells(cells: DataFrame, threshold: Double,
                            maxCell: Long = Long.MaxValue): DataFrame = {
     require(maxCell >= 2, s"maxCell must be >= 2, got $maxCell")
-    val joinable =
-      if (maxCell == Long.MaxValue) cells
-      else {
-        // ok-cell list is codebook-sized (≤ k rows of one int) — AQE
-        // broadcasts the semi-join side; cells of 1 member are pruned
-        // too (they can emit no pair — pure join-input savings)
-        val ok = cells.groupBy("cell")
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") >= 2 && col("_n") <= maxCell)
-          .select("cell")
-        cells.join(ok, "cell")
-      }
-    semanticDropByPairs(cells, joinable, threshold)
+    if (maxCell == Long.MaxValue) semanticDropByPairs(cells, cells, threshold)
+    else semanticDedupCapped(cells, threshold, _.withColumn("_mx", lit(maxCell)))
   }
 
   /** [[semanticDedupOnCells]] with a CORPUS-RELATIVE cap, derived inside
@@ -1111,9 +1100,18 @@ object Similarity {
     require(nCells > 0, s"nCells must be > 0, got $nCells")
     val cap = cells.agg(
       ceil(lit(capFactor) * count(lit(1)) / lit(nCells)).cast("long").as("_mx"))
-    val ok = cells.groupBy("cell")
-      .agg(count(lit(1)).as("_n"))
-      .crossJoin(broadcast(cap))
+    semanticDedupCapped(cells, threshold, _.crossJoin(broadcast(cap)))
+  }
+
+  /** The capped pair join of both [[semanticDedupOnCells]] forms:
+    * `withCap` adds the cap column `_mx` to the per-cell member counts
+    * `(cell, _n)`, and only cells with 2 ≤ `_n` ≤ `_mx` pair. The ok-cell
+    * list is codebook-sized (≤ k rows of one int), so AQE broadcasts the
+    * semi-join side; 1-member cells are pruned too (they can emit no
+    * pair — pure join-input savings). */
+  private def semanticDedupCapped(cells: DataFrame, threshold: Double,
+                                  withCap: DataFrame => DataFrame): DataFrame = {
+    val ok = withCap(cells.groupBy("cell").agg(count(lit(1)).as("_n")))
       .filter(col("_n") >= 2 && col("_n") <= col("_mx"))
       .select("cell")
     semanticDropByPairs(cells, cells.join(ok, "cell"), threshold)

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `tools.RunMetrics`, tools neither pin a core count nor sleep, and the
   * byte-derived harness width (whose [2, 4096] clamp and 2 MB target are
   * single-box rules that would give 25 GB partitions at 100 TB) is read
-  * only by the harnesses. Comment lines are skipped: docs may name them. */
+  * only by the harnesses. Tools take their scale from the [[tools.Stress]]
+  * tier, not from environment knobs, and have three mains. Comment lines
+  * are skipped: docs may name them. */
 class HarnessFenceSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
 
@@ -47,6 +49,17 @@ class HarnessFenceSpec extends AnyFunSuite {
   test("tools/ pins no local[N] master and never sleeps") {
     assert(filesWith("local[").filter(_.startsWith(tools)).isEmpty)
     assert(filesWith("Thread.sleep").filter(_.startsWith(tools)).isEmpty)
+  }
+
+  test("tools/ reads no SPARK_GRAFT_* variable but the input directory") {
+    val read = sources.filter(_._1.startsWith(tools)).flatMap(_._2)
+      .flatMap("SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(_)).toSet
+    assert(read.subsetOf(Set("SPARK_GRAFT_SF_DIR")), read)
+  }
+
+  test("tools/ has three mains: Stress, JobProfile and PlanSweep") {
+    assert(filesWith("def main").filter(_.startsWith(tools)) ==
+      Set("Stress", "JobProfile", "PlanSweep").map(t => s"$tools$t.scala"))
   }
 
   test("the harness width and AQE posture are read only by the harnesses") {

@@ -66,21 +66,6 @@ class EstimateSpec extends SparkSpec {
     assert(oneShot == viaSigs)
   }
 
-  test("estimateVerify: conservative floor equals nearDuplicates; tight floor is a subset") {
-    val exact = Dedup.nearDuplicates(corpus, col("doc_id"), col("text"), 0.5, cfg)
-      .collect().map(_.toSeq).toSet
-    assert(exact.nonEmpty)
-    // conservative floor (well under any true pair's agreement): identical
-    val loose = Dedup.nearDuplicatesEstimateVerify(corpus, col("doc_id"),
-      col("text"), 0.5, minAgree = 10, cfg).collect().map(_.toSeq).toSet
-    assert(loose == exact)
-    // aggressive floor: strict subset, and every survivor is exact-verified
-    val tight = Dedup.nearDuplicatesEstimateVerify(corpus, col("doc_id"),
-      col("text"), 0.5, minAgree = 60, cfg).collect().map(_.toSeq).toSet
-    assert(tight.subsetOf(exact))
-    assert(tight.size < exact.size, "fixture must exercise the floor")
-  }
-
   test("estimated: minAgree outside [1, perms] fails loudly") {
     val sigs = Dedup.minhashSignatures(corpus, col("doc_id"), col("text"), cfg)
     intercept[IllegalArgumentException] {
