@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The engine's shuffle-coalescing posture, and the ONE place the local
+/** The engine's session posture, and the ONE place the local
   * harness sessions are made: Bench, Verify and every `graft.tools` main
   * open their session through [[localSession]], so a timing measured in
   * one is the timing the others see. (`perfbench/` builds its own
@@ -42,9 +42,39 @@ import org.apache.spark.sql.SparkSession
   * interleaved A/D runs): 49.2 s -> 41.2 s, with every former loser
   * within ±0.1 s. Results are identical — partition counts change,
   * row sets don't (re-verified tri-scale against the DuckDB oracle).
+  *
+  * One codegen setting rides in the same list, [[CodegenCacheEntries]];
+  * see its doc.
   */
 object EngineConf {
-  /** Production posture: 64m advisory (the 100 TB-safe code default). */
+  /** `spark.sql.codegen.cache.maxEntries`, a static conf, so it is set
+    * here when the session is built, in every posture alike: production
+    * ([[coalescing]]), the perfbench harness ([[localHarness]]) and
+    * Bench, Verify and the tools ([[localPosture]]).
+    *
+    * Spark keeps every class Janino compiles in a cache keyed by the
+    * generated source (and the compiling thread's class loader), 100
+    * entries by default, evicting the least recently used. A loop over a
+    * cyclic working set larger than the cache therefore misses on EVERY
+    * access: each class is evicted just before its next use. The
+    * registry is such a loop. At sf0.01 (JobProfile, 4 threads) the nine
+    * perfbench registry queries compile 214 classes per rep; with 100
+    * entries every warm rep compiled 203-207 of them again, with this
+    * size 14-16. All 235 queries in one JVM: with 100 entries the first
+    * rep compiled 5,615 classes and the second 5,596; with this size
+    * 3,450 and 267. The 267 are classes whose key changes run to run (a
+    * permuted codegen stage id; a streaming run's fresh class loader), so
+    * 4,096 holds the registry's working set plus one rep's residue.
+    *
+    * The cache holds compiled classes only — never data, plans or
+    * results — so a query's answer cannot come from it. Its cost is
+    * driver heap: after that census, 490 MB in use after a full GC
+    * against 437 MB with 100 entries. It is a constant, read from no
+    * environment variable. */
+  val CodegenCacheEntries = 4096
+
+  /** Production posture: 64m advisory (the 100 TB-safe code default)
+    * and the codegen cache size. */
   def coalescing(b: SparkSession.Builder,
                  advisoryDefault: String = "64m"): SparkSession.Builder =
     withConf(b, coalescingConf(advisoryDefault))
@@ -55,7 +85,8 @@ object EngineConf {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
       sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", advisoryDefault),
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPLAN", "true"))
+      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPLAN", "true"),
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
 
   private def withConf(b: SparkSession.Builder,
                        conf: Seq[(String, String)]): SparkSession.Builder =
@@ -72,7 +103,7 @@ object EngineConf {
   def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** The full conf of a [[localSession]], in the order it is applied:
-    * master, the [[localHarness]] AQE knobs, the shuffle width, UTC, no
+    * master, the [[localHarness]] knobs, the shuffle width, UTC, no
     * UI, the local-mode liveness timeouts, then `extra` (which wins).
     *
     * Width: a caller that reads `inputDir` as-is gets the byte-derived

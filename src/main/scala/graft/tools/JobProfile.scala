@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
+
 /** Time and profile registry queries:
   *
   *   runMain graft.tools.JobProfile <name>[,<name>...] [sfDir] [reps]
@@ -17,7 +19,9 @@ package graft.tools
   * executed (final adaptive) plan with generate / reused-exchange /
   * exchange counts — the plan-iteration loop: run, read the exchanges,
   * adjust. Caveat: each InMemoryTableScan re-prints its cached subtree,
-  * so node counts over the text overstate what actually runs. Extra
+  * so node counts over the text overstate what actually runs. The last
+  * line gives the heap in use after a full GC, Spark's codegen cache
+  * included, so two postures' driver memory can be compared. Extra
   * Spark confs come in via SPARK_GRAFT_EXTRA_JAVA_OPTS -D passthrough
   * (build.sbt).
   */
@@ -51,6 +55,9 @@ object JobProfile {
         s"exchanges=${"Exchange hashpartitioning".r.findAllIn(p).size}")
       println(p)
     }
+    System.gc()
+    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    println(f"""{"tool":"jobprofile","heap_after_gc_mb":$heapMb%.1f}""")
     spark.stop()
   }
 }

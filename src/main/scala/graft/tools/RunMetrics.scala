@@ -4,21 +4,24 @@ import java.util.Locale
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one run recorder of the `graft.tools` mains: a SparkListener
   * counting jobs, stages, tasks, executor run / CPU / GC /
   * (de)serialization / other time, shuffle read and write records and
-  * bytes, and disk spill. [[stage]] times a block and prints ONE JSON
-  * line with the counter deltas over it:
+  * bytes, and disk spill, plus the generated classes Janino compiled and
+  * the time it took. [[stage]] times a block and prints ONE JSON line
+  * with the counter deltas over it:
   *
   * {{{
   * {"tool":"curation","stage":"2 dedup keepers","wall_s":1.234,"result":96141,
   *  "jobs":3,"stages":5,"tasks":41,"run_s":3.210,"cpu_s":2.950,"gc_s":0.040,
   *  "ser_s":0.120,"other_s":0.015,"shuffle_read_records":101234,
   *  "shuffle_read_mb":4.1,"shuffle_write_records":101234,
-  *  "shuffle_write_mb":4.1,"spill_mb":0.0}
+  *  "shuffle_write_mb":4.1,"spill_mb":0.0,"compiles":12,"compile_s":0.431}
   * }}}
   *
   * (`result` appears when the block returns an Int or a Long — a row
@@ -26,7 +29,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[ListenerBus.drain]]), so no event of one stage lands in the next
   * stage's deltas however loaded the box is. `other_s` is task wall time
   * outside run, deserialize and result serialization: scheduling and
-  * fetch waits. Closing removes the listener. */
+  * fetch waits. `compiles` and `compile_s` are JVM-wide (Spark's static
+  * codegen counters, read in [[totals]]): classes compiled by any thread
+  * of this JVM, summed compile time over threads, so `compile_s` can
+  * exceed `wall_s`. A class found in Spark's generated-code cache costs
+  * neither. Closing removes the listener. */
 final class RunMetrics(spark: SparkSession, tool: String)
     extends SparkListener with AutoCloseable {
   import RunMetrics._
@@ -37,6 +44,7 @@ final class RunMetrics(spark: SparkSession, tool: String)
   /** In [[RunMetrics.Fields]] order. */
   private val adders = Vector(jobs, stages, tasks, runMs, cpuNs, gcMs, serMs,
     otherMs, readRecords, readBytes, writeRecords, writeBytes, spillBytes)
+  private val compiled0 = compiled()
   sc.addSparkListener(this)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
@@ -64,7 +72,7 @@ final class RunMetrics(spark: SparkSession, tool: String)
   /** Cumulative counts since this recorder opened, after a bus drain. */
   def totals(): Counts = {
     ListenerBus.drain(sc, DrainTimeoutMs)
-    Counts(adders.map(_.sum))
+    Counts(adders.map(_.sum) ++ compiled().zip(compiled0).map { case (a, b) => a - b })
   }
 
   /** Time `f`, print its JSON line, return its result. */
@@ -101,7 +109,12 @@ object RunMetrics {
     ("ser_s", 1e-3, 3), ("other_s", 1e-3, 3),
     ("shuffle_read_records", 1, 0), ("shuffle_read_mb", MB, 1),
     ("shuffle_write_records", 1, 0), ("shuffle_write_mb", MB, 1),
-    ("spill_mb", MB, 1))
+    ("spill_mb", MB, 1),
+    ("compiles", 1, 0), ("compile_s", 1e-9, 3))
+
+  /** Classes compiled and compile ns, JVM-wide since start-up. */
+  private def compiled(): Vector[Long] = Vector(
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   final case class Counts(raw: Vector[Long]) {
     def -(o: Counts): Counts = Counts(raw.zip(o.raw).map { case (a, b) => a - b })
@@ -115,8 +128,15 @@ object RunMetrics {
     if (decimals == 0) v.toLong.toString
     else String.format(Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
-  private def quote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** A JSON string literal in plain ASCII: everything outside printable
+    * ASCII goes out as a JSON unicode escape, so a label reads the same
+    * whatever charset the JVM writes stdout in. */
+  private[tools] def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' || c > '~' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
 
   /** Materialize every column of every row without collecting: the
     * Bench sink. */

@@ -3,6 +3,7 @@ package graft
 import java.io.{File, RandomAccessFile}
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The local harness posture: [[EngineConf.harnessShufflePartitions]]'s
@@ -51,10 +52,25 @@ class EngineConfSpec extends AnyFunSuite {
       assert(conf("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
       assert(conf("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "1m")
       assert(conf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+      assert(conf("spark.sql.codegen.cache.maxEntries") == "4096")
       assert(conf("spark.sql.session.timeZone") == "UTC")
       assert(conf("spark.ui.enabled") == "false")
       assert(conf("spark.sql.shuffle.partitions") == "3")
     }
+  }
+
+  test("coalescing: production sets the harness's codegen cache size") {
+    val set = scala.collection.mutable.Map.empty[String, String]
+    val recorder = new SparkSession.Builder {
+      override def config(key: String, value: String): this.type = {
+        set(key) = value
+        this
+      }
+    }
+    EngineConf.coalescing(recorder)
+    assert(set("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(set("spark.sql.codegen.cache.maxEntries") ==
+      EngineConf.localPosture(None).toMap.apply("spark.sql.codegen.cache.maxEntries"))
   }
 
   test("localPosture: generated inputs keep Spark's default width; extra wins") {

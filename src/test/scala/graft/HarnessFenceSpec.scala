@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * byte-derived harness width (whose [2, 4096] clamp and 2 MB target are
   * single-box rules that would give 25 GB partitions at 100 TB) is read
   * only by the harnesses. Tools take their scale from the [[tools.Stress]]
-  * tier, not from environment knobs, and have three mains. Comment lines
+  * tier, not from environment knobs, and have three mains. The codegen
+  * cache size is one constant line of EngineConf. Comment lines
   * are skipped: docs may name them. */
 class HarnessFenceSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
@@ -60,6 +61,16 @@ class HarnessFenceSpec extends AnyFunSuite {
   test("tools/ has three mains: Stress, JobProfile and PlanSweep") {
     assert(filesWith("def main").filter(_.startsWith(tools)) ==
       Set("Stress", "JobProfile", "PlanSweep").map(t => s"$tools$t.scala"))
+  }
+
+  test("the codegen cache size is set once, in EngineConf, from no environment variable") {
+    val lines = sources.flatMap { case (f, code) =>
+      code.filter(l => l.contains("spark.sql.codegen.cache.maxEntries") ||
+        l.contains("CodegenCacheEntries")).map(f -> _)
+    }
+    assert(lines.map(_._1).toSet == Set("graft/EngineConf.scala"), lines)
+    assert(lines.count(_._2.contains("spark.sql.codegen.cache.maxEntries")) == 1, lines)
+    assert(lines.forall(l => !l._2.contains("SPARK_GRAFT_") && !l._2.contains("sys.")), lines)
   }
 
   test("the harness width and AQE posture are read only by the harnesses") {

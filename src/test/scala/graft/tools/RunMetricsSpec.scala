@@ -44,4 +44,38 @@ class RunMetricsSpec extends SparkSpec {
       assert(rm.totals() == closed)
     } finally sc.removeSparkListener(slow)
   }
+
+  test("a frame this JVM never ran compiles classes; re-running it compiles none") {
+    val rm = new RunMetrics(spark, "spec")
+    try {
+      // a literal no other query carries makes the generated source new
+      val df = spark.range(0L, 1000L, 1L, 2)
+        .selectExpr(s"id * ${System.nanoTime()}L % 97 AS k").groupBy("k").count()
+      def compiled(): RunMetrics.Counts = {
+        val before = rm.totals()
+        assert(df.collect().length == 97)
+        rm.totals() - before
+      }
+      val cold = compiled()
+      assert(cold("compiles") > 0)
+      assert(cold("compile_s") > 0)
+      val warm = compiled()
+      assert(warm("compiles") == 0)
+      assert(warm("compile_s") == 0)
+    } finally rm.close()
+  }
+
+  test("a non-ASCII stage label leaves as an ASCII escape and parses back intact") {
+    val label = "dedup index build (2\u00d7corpus, 64/16)"
+    val rm = new RunMetrics(spark, "spec")
+    val out = new ByteArrayOutputStream()
+    try Console.withOut(out)(rm.stage(label)(0)) finally rm.close()
+    val line = out.toString("US-ASCII").trim
+    assert(line.forall(c => c >= ' ' && c <= '~'), line)
+    assert(line.contains("2\\u00d7corpus"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("stage").asText == label)
+    assert(json.get("tool").asText == "spec")
+    assert(RunMetrics.quote("a\"b\\c\n") == "\"a\\\"b\\\\c\\u000a\"")
+  }
 }
