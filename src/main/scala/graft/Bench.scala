@@ -60,7 +60,7 @@ object Bench {
         // noop sink (watermark bounds state; nothing collects on the
         // driver). The Complete-mode memory sink stays in Verify only.
         // statePartitions: byte-derived state-store count sized to the
-        // events stream's state volume (see runToNoop scaladoc) — at 32,
+        // events stream's state volume (see StreamDriver.drain) — at 32,
         // per-partition state-store open/commit costs 3× the query.
         case ("q28_stream_tumbling", _) =>
           "q28_stream_tumbling" -> ((s: SparkSession) =>

@@ -20,18 +20,17 @@ import org.apache.spark.sql.SparkSession
   *    per-task launch/fetch overhead dominates every small stage (the
   *    measured q74 profile: 964 tasks, 18 s of task time for 5 s of
   *    wall on 32 cores).
-  *  - `advisoryPartitionSizeInBytes` (env-tunable) — the byte target.
-  *    The CODE default is 64m (Spark's own default, sized to amortize IO
-  *    chunking at TB-scale shuffles) so a production deployment that
-  *    builds a session through [[coalescing]] gets the 100 TB-safe value
-  *    with no env set. The LOCAL harnesses (Bench/Verify/tools — the
-  *    sf0.1 single-box regime) get [[localHarness]]'s knobs, which
-  *    default the same knob to 1m: at KB-scale shuffles 1 MB keeps tiny
-  *    stages at 1 task while leaving MB-scale CPU-dense stages (exact
-  *    quantiles, array set-ops) 8-32-wide, which 64m would collapse to a
-  *    single task at this corpus size — measured +0.9..+1.6 s each on
-  *    q29/q37/q59/q77 (round 18). SPARK_GRAFT_AQE_ADVISORY overrides
-  *    either default.
+  *  - `advisoryPartitionSizeInBytes` — the byte target. Production
+  *    ([[coalescing]]) sets 64m (Spark's own default, sized to amortize
+  *    IO chunking at TB-scale shuffles), the 100 TB-safe value. The
+  *    LOCAL harnesses (Bench/Verify/tools — the sf0.1 single-box regime)
+  *    get [[localHarness]]'s knobs, which set the same knob to 1m: at
+  *    KB-scale shuffles 1 MB keeps tiny stages at 1 task while leaving
+  *    MB-scale CPU-dense stages (exact quantiles, array set-ops)
+  *    8-32-wide, which 64m would collapse to a single task at this corpus
+  *    size — measured +0.9..+1.6 s each on q29/q37/q59/q77 (round 18).
+  *    Every knob here is a constant; a caller that wants another value
+  *    sets the conf on its own builder, which wins.
   *  - `canChangeCachedPlanOutputPartitioning=true` — lets AQE apply the
   *    same coalescing to stages that read persisted frames; the
   *    iterative operators (graph loops, LSH pipelines) persist their
@@ -75,17 +74,13 @@ object EngineConf {
 
   /** Production posture: 64m advisory (the 100 TB-safe code default)
     * and the codegen cache size. */
-  def coalescing(b: SparkSession.Builder,
-                 advisoryDefault: String = "64m"): SparkSession.Builder =
-    withConf(b, coalescingConf(advisoryDefault))
+  def coalescing(b: SparkSession.Builder): SparkSession.Builder =
+    withConf(b, coalescingConf("64m"))
 
-  private def coalescingConf(advisoryDefault: String): Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", advisoryDefault),
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPLAN", "true"),
+  private def coalescingConf(advisory: String): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
 
   private def withConf(b: SparkSession.Builder,
@@ -93,7 +88,7 @@ object EngineConf {
     conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** The single-box harness posture: identical knobs, 1m advisory
-    * default — the measured-right target for this fixture's KB-scale
+    * — the measured-right target for this fixture's KB-scale
     * shuffles (see the scaladoc above). [[localSession]] applies it. */
   def localHarness(b: SparkSession.Builder): SparkSession.Builder =
     withConf(b, coalescingConf("1m"))
@@ -109,8 +104,7 @@ object EngineConf {
     * Width: a caller that reads `inputDir` as-is gets the byte-derived
     * [[harnessShufflePartitions]]; a caller that generates or inflates
     * its inputs passes `None` and keeps Spark's default width, which
-    * AQE coalesces by measured bytes (`SPARK_GRAFT_SHUFFLE_PARTITIONS`
-    * still overrides). Liveness: a >120 s full-GC pause under a 10M-row
+    * AQE coalesces by measured bytes. Liveness: a >120 s full-GC pause under a 10M-row
     * stage trips the default heartbeat timeout, and in local mode
     * "removing" the executor deregisters its BlockManager, whose
     * shuffle dirs are then cleaned under running tasks — a local JVM
@@ -118,7 +112,6 @@ object EngineConf {
   def localPosture(inputDir: Option[String],
                    extra: Map[String, String] = Map.empty): Seq[(String, String)] = {
     val width = inputDir.map(harnessShufflePartitions)
-      .orElse(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
     val base = Seq("spark.master" -> s"local[$localCpus]") ++ coalescingConf("1m") ++
       width.map("spark.sql.shuffle.partitions" -> _) ++ Seq(
         "spark.sql.session.timeZone" -> "UTC",
@@ -159,20 +152,18 @@ object EngineConf {
     * and the map-side bucket count. Scale-honest: the width grows with
     * the input (sf0.01 → 2, sf0.1 → 9, 10 GB → 4096 cap) and NEVER reads
     * the core count; a production deployment sizes its own conf
-    * (SPARK_GRAFT_SHUFFLE_PARTITIONS overrides, or set
-    * spark.sql.shuffle.partitions directly — the engine's operators
+    * (spark.sql.shuffle.partitions — the engine's operators
     * never touch this knob, only the local harnesses do;
     * HarnessFenceSpec holds that fence: the [2, 4096] clamp and 2 MB
     * target are single-box rules that would give 25 GB partitions at
     * 100 TB). */
-  def harnessShufflePartitions(inputDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", {
-      val dir = new java.io.File(inputDir)
-      val bytes =
-        if (dir.isDirectory)
-          dir.listFiles().filter(_.isFile).map(_.length()).sum
-        else 0L
-      val target = 2L << 20
-      math.max(2L, math.min(4096L, (bytes + target - 1) / target)).toString
-    })
+  def harnessShufflePartitions(inputDir: String): String = {
+    val dir = new java.io.File(inputDir)
+    val bytes =
+      if (dir.isDirectory)
+        dir.listFiles().filter(_.isFile).map(_.length()).sum
+      else 0L
+    val target = 2L << 20
+    math.max(2L, math.min(4096L, (bytes + target - 1) / target)).toString
+  }
 }

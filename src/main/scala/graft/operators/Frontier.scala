@@ -368,20 +368,18 @@ object Frontier {
     *
     * `checkpointDir`: pass a durable location in production so replays
     * after a restart land on their original commit dirs (the run token
-    * is derived from the checkpoint path); the default is a temp
-    * checkpoint for tests/local use, deleted on exit. */
+    * is the hash of the checkpoint path); the default is the stream
+    * driver's throwaway checkpoint, deleted when the run ends, with a
+    * fresh random run token. */
   def runFrontierStream(pages: DataFrame, srcUrlCol: Column, htmlCol: Column,
                         crawledDir: String, frontierDir: String,
                         checkpointDir: Option[String] = None): Unit = {
-    import graft.streaming.EventsStream
     val spark = pages.sparkSession
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventsStream.tempCkpt("graft-frontier-ckpt"))
     // stable across replays of the SAME checkpoint (a replayed batch
     // must overwrite its own commit dir), distinct across independent
     // runs (each fresh checkpoint restarts batch ids at 0)
-    val runTok = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(ckpt.toString))
+    val runTok = java.lang.Integer.toHexString(checkpointDir
+      .fold(scala.util.Random.nextInt())(scala.util.hashing.MurmurHash3.stringHash))
     val hconf = spark.sparkContext.hadoopConfiguration
     def exists(dir: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -395,32 +393,25 @@ object Frontier {
         .filter(_.getName.startsWith("commit="))
         .filterNot(_.getName == except).map(_.toString)
     }
-    try {
-      val q = pages.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val commitName = s"commit=$runTok-$batchId"
-          val agg = discovered(batch, srcUrlCol, htmlCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val index =
-              (if (exists(crawledDir))
-                 Seq(spark.read.option("recursiveFileLookup", "true")
-                   .parquet(crawledDir).select("url"))
-               else Seq.empty) ++ {
-                val dirs = priorCommitDirs(except = commitName)
-                if (dirs.isEmpty) Seq.empty
-                else Seq(spark.read.parquet(dirs: _*).select("url"))
-              }
-            val fresh = index.reduceOption(_.unionByName(_)).fold(agg: DataFrame)(
-              idx => Relational.bloomAntiJoin(agg, col("url"), idx, col("url")))
-            fresh.write.mode("overwrite").parquet(s"$frontierDir/$commitName")
-          } finally agg.unpersist(false)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally if (checkpointDir.isEmpty) EventsStream.deleteRecursively(ckpt)
+    graft.streaming.StreamDriver.eachBatch(pages, checkpointDir) { (batch, batchId) =>
+      val commitName = s"commit=$runTok-$batchId"
+      val agg = discovered(batch, srcUrlCol, htmlCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val index =
+          (if (exists(crawledDir))
+             Seq(spark.read.option("recursiveFileLookup", "true")
+               .parquet(crawledDir).select("url"))
+           else Seq.empty) ++ {
+            val dirs = priorCommitDirs(except = commitName)
+            if (dirs.isEmpty) Seq.empty
+            else Seq(spark.read.parquet(dirs: _*).select("url"))
+          }
+        val fresh = index.reduceOption(_.unionByName(_)).fold(agg: DataFrame)(
+          idx => Relational.bloomAntiJoin(agg, col("url"), idx, col("url")))
+        fresh.write.mode("overwrite").parquet(s"$frontierDir/$commitName")
+      } finally agg.unpersist(false)
+    }
   }
 
   /** The accumulated crawled index of a [[runFrontierStream]] loop:

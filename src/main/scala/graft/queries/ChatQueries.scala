@@ -21,8 +21,6 @@ import graft.text.{Instruct, Preference}
   */
 object ChatQueries {
 
-  private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
 
@@ -186,13 +184,12 @@ object ChatQueries {
       (s, dir) => {
         // statePartitions: byte-derived (see harnessStatePartitions);
         // state volume is (user, session) keys — the
-        // q28/q58 sizing (see runToNoop scaladoc); at 32 the per-batch
+        // q28/q58 sizing (see StreamDriver.drain); at 32 the per-batch
         // state-store open/commit overhead costs ~3× the query. Emitted
         // rows are identical at any setting.
         val emitted = graft.streaming.EventsStream.runToMemory(
           graft.streaming.ChatStream.audit(
             graft.streaming.EventsStream.read(s, dir)).toDF(),
-          s"q158_chat_${runId.incrementAndGet()}",
           org.apache.spark.sql.streaming.OutputMode.Append(),
           statePartitions = graft.streaming.EventsStream.harnessStatePartitions(dir))
         val events = ev(s, dir)

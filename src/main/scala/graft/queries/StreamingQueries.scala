@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -13,8 +11,6 @@ import graft.streaming.EventsStream
   * proving the streaming aggregation matches its batch semantics. */
 object StreamingQueries {
 
-  private val runId = new AtomicInteger(0)
-
   val queries: Seq[Q] = Seq(
     Q("q28_stream_tumbling",
       Some("""SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
@@ -22,14 +18,11 @@ object StreamingQueries {
              |FROM events GROUP BY 1, 2""".stripMargin),
       (s, dir) => {
         val agg = EventsStream.tumblingCounts(EventsStream.read(s, dir))
-        // Complete mode emits every window over the static input; a unique
-        // sink name keeps repeated invocations in one session independent.
-        // statePartitions: byte-derived (see harnessStatePartitions) —
-        // the bench's runToNoop sizing (see its
-        // scaladoc) applied to the verify path too — identical rows,
+        // Complete mode emits every window over the static input.
+        // statePartitions: byte-derived (see harnessStatePartitions), the
+        // bench's sizing applied to the verify path too — identical rows,
         // 4× less per-batch state-store open/commit overhead.
-        val out = EventsStream.runToMemory(agg,
-          s"q28_stream_${runId.incrementAndGet()}", OutputMode.Complete(),
+        val out = EventsStream.runToMemory(agg, OutputMode.Complete(),
           statePartitions = EventsStream.harnessStatePartitions(dir))
         out.select(col("window.start").as("ws"), col("event_type"),
           col("n"), round(col("sum_value"), 4).as("sum_value"))
@@ -49,8 +42,7 @@ object StreamingQueries {
              | AND p.ts <= c.ts + INTERVAL '1 hour'""".stripMargin),
       (s, dir) => {
         val joined = EventsStream.clickPurchaseJoin(EventsStream.read(s, dir))
-        EventsStream.runToMemory(joined,
-          s"q58_join_${runId.incrementAndGet()}", OutputMode.Append(),
+        EventsStream.runToMemory(joined, OutputMode.Append(),
           statePartitions = EventsStream.harnessStatePartitions(dir))
       }),
 

@@ -91,10 +91,10 @@ object Tables {
     * both through a Repartition.
     *
     * The repair width is derived from INPUT BYTES, not pinned to the core
-    * count (r19 — the 32-slower-than-8 fix): ceil(scanBytes /
-    * SPARK_GRAFT_SCAN_TASK_BYTES, default 32 KB of parquet per task — the
-    * shingle/md5 pipelines cost ~2-4 µs of CPU per compressed byte, so a
-    * 32 KB slice is a ~100 ms task), capped at defaultParallelism. A
+    * count (r19 — the 32-slower-than-8 fix): ceil(scanBytes / 32 KB of
+    * parquet per task — the shingle/md5 pipelines cost ~2-4 µs of CPU per
+    * compressed byte, so a 32 KB slice is a ~100 ms task), capped at
+    * defaultParallelism. A
     * core-pinned width made EVERY documents-derived stage `cpus` tasks
     * wide regardless of data volume; at 32 threads on this fixture the
     * per-task launch+serde overhead made whole families measurably slower
@@ -106,8 +106,7 @@ object Tables {
   private def balanced(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val cores = BigInt(spark.sparkContext.defaultParallelism)
-    val perTask = BigInt(sys.env.get("SPARK_GRAFT_SCAN_TASK_BYTES")
-      .map(_.toLong).getOrElse(32L << 10))
+    val perTask = BigInt(32L << 10)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val target = ((bytes + perTask - 1) / perTask).min(cores).max(BigInt(1)).toInt
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df

@@ -26,28 +26,17 @@ object DocDedupStream {
     * a batch retried after a mid-write failure (or replayed from the
     * checkpoint) replaces its partition instead of appending duplicate
     * rows, making the sink effectively-once per batch id; readers see
-    * `batch_id` as a discovered partition column. Throwaway tmpfs
-    * checkpoint, same contract as the other test/bench harnesses —
-    * production passes a durable checkpoint dir. */
+    * `batch_id` as a discovered partition column. The checkpoint is
+    * [[StreamDriver]]'s throwaway one, so every call classifies the
+    * stream's input from the start. */
   def classifyToParquet(deltaStream: DataFrame, index: DataFrame,
                         outDir: String, threshold: Double,
                         deltaId: Column = col("doc_id"),
                         deltaText: Column = col("text"),
-                        cfg: MinHashConfig = MinHashConfig.OraclePinned): Unit = {
-    val ckpt = EventsStream.tempCkpt("graft-docdedup-ckpt")
-    try {
-      val q = deltaStream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Dedup.incrementalDedupAgainstIndex(index, batch,
-              deltaId, deltaText, threshold, cfg)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      EventsStream.deleteRecursively(ckpt)
+                        cfg: MinHashConfig = MinHashConfig.OraclePinned): Unit =
+    StreamDriver.eachBatch(deltaStream) { (batch, batchId) =>
+      Dedup.incrementalDedupAgainstIndex(index, batch,
+          deltaId, deltaText, threshold, cfg)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
     }
-  }
 }

@@ -24,29 +24,18 @@ object DriftStream {
     * tool (not a stateful operator): the histogram is a static
     * artifact, and Spark's streaming aggregation state store would
     * hold exactly the same counts WITHOUT the replayable on-disk
-    * layout. Throwaway tmpfs checkpoint — production passes a durable
-    * checkpoint dir. */
+    * layout. The checkpoint is [[StreamDriver]]'s throwaway one, so
+    * every call counts the stream's input from the start. */
   def histogramsToParquet(events: DataFrame, dir: String,
-                          periodCol: Column, bucketCol: Column): Unit = {
-    val ckpt = EventsStream.tempCkpt("graft-drift-hist-ckpt")
-    try {
-      val q = events.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(periodCol.cast("long").as("period"),
-              bucketCol.as("bucket"))
-            .groupBy("period", "bucket")
-            .agg(count(lit(1)).as("c"))
-            .write.mode("overwrite")
-            .parquet(s"$dir/batch_id=$batchId")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      EventsStream.deleteRecursively(ckpt)
+                          periodCol: Column, bucketCol: Column): Unit =
+    StreamDriver.eachBatch(events) { (batch, batchId) =>
+      batch.select(periodCol.cast("long").as("period"),
+          bucketCol.as("bucket"))
+        .groupBy("period", "bucket")
+        .agg(count(lit(1)).as("c"))
+        .write.mode("overwrite")
+        .parquet(s"$dir/batch_id=$batchId")
     }
-  }
 
   /** Load the accumulated histogram generations: `(period, bucket, c)`
     * with one row per (batch, period, bucket) — intentionally NOT

@@ -197,33 +197,23 @@ object EventsStream {
   def runCdcToParquet(changes: DataFrame, snapshotDir: String,
                       keyCol: String, versionCol: String, opCol: String): Unit = {
     val spark = changes.sparkSession
-    val ckpt = tempCkpt("graft-cdc-ckpt")
-    try {
-      val q = changes.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val base =
-            try spark.read.parquet(snapshotDir)
-            catch { case _: org.apache.spark.sql.AnalysisException =>
-              // empty base with the payload schema (no version/op cols)
-              batch.drop(versionCol, opCol).limit(0)
-            }
-          val merged = graft.operators.Relational
-            .applyCdc(base, batch, keyCol, versionCol, opCol)
-          val tmp = snapshotDir + ".tmp"
-          merged.write.mode("overwrite").parquet(tmp)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          val dst = new org.apache.hadoop.fs.Path(snapshotDir)
-          fs.delete(dst, true)
-          if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-            throw new java.io.IOException(s"CDC snapshot swap failed: $tmp -> $dst")
+    StreamDriver.eachBatch(changes) { (batch, _) =>
+      val base =
+        try spark.read.parquet(snapshotDir)
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          // empty base with the payload schema (no version/op cols)
+          batch.drop(versionCol, opCol).limit(0)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      deleteRecursively(ckpt)
+      val merged = graft.operators.Relational
+        .applyCdc(base, batch, keyCol, versionCol, opCol)
+      val tmp = snapshotDir + ".tmp"
+      merged.write.mode("overwrite").parquet(tmp)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val dst = new org.apache.hadoop.fs.Path(snapshotDir)
+      fs.delete(dst, true)
+      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
+        throw new java.io.IOException(s"CDC snapshot swap failed: $tmp -> $dst")
     }
   }
 
@@ -342,18 +332,6 @@ object EventsStream {
       }
   }
 
-  /** Throwaway checkpoint dir for the local harnesses, preferring tmpfs
-    * (/dev/shm): the state store writes delta files per microbatch, and on
-    * a plain-disk /tmp that I/O dominates the local stream-stream join
-    * wall time. Production streams pass their own DURABLE (DFS) checkpoint
-    * path — a throwaway checkpoint forfeits exactly-once on restart. */
-  private[graft] def tempCkpt(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
-  }
-
   /** Depth-first recursive delete for the throwaway checkpoints —
     * deleteOnExit can't remove a populated directory, and leftover
     * checkpoints from repeated or FAILED harness runs would accumulate
@@ -377,24 +355,14 @@ object EventsStream {
   def runToParquetDedup(df: DataFrame, outDir: String,
                         keyCol: String = "event_id"): Unit = {
     val spark = df.sparkSession
-    val ckpt = tempCkpt("graft-febatch-ckpt")
-    try {
-      val q = df.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val fresh = batch.dropDuplicates(keyCol)
-          val existing =
-            try Some(spark.read.parquet(outDir).select(keyCol))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          val toWrite = existing.fold(fresh)(e =>
-            fresh.join(e, Seq(keyCol), "left_anti"))
-          toWrite.write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      deleteRecursively(ckpt)
+    StreamDriver.eachBatch(df) { (batch, _) =>
+      val fresh = batch.dropDuplicates(keyCol)
+      val existing =
+        try Some(spark.read.parquet(outDir).select(keyCol))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      val toWrite = existing.fold(fresh)(e =>
+        fresh.join(e, Seq(keyCol), "left_anti"))
+      toWrite.write.mode("append").parquet(outDir)
     }
   }
 
@@ -420,25 +388,14 @@ object EventsStream {
     require(requests.columns.length == 1,
       s"requests must be a single-column key frame, got ${requests.columns.mkString(", ")}")
     val index = requests.toDF("_erase_key").distinct().localCheckpoint()
-    val ckpt = tempCkpt("graft-erase-ckpt")
-    try {
-      val q = df.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.join(index, batch(keyCol) === index("_erase_key"), "left_anti")
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      deleteRecursively(ckpt)
+    StreamDriver.eachBatch(df) { (batch, _) =>
+      batch.join(index, batch(keyCol) === index("_erase_key"), "left_anti")
+        .write.mode("append").parquet(outDir)
     }
   }
 
   /** State-store partition count for the harness's in-query streams
-    * (q28/q58/q158): `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides;
-    * the default derives from the stream input's BYTES —
+    * (q28/q58/q158), derived from the stream input's BYTES:
     * ceil(events.parquet bytes / 1 MB), clamped to [2, 4096] — the same
     * byte-derived-width discipline as EngineConf.harnessShufflePartitions,
     * never the core count (r18 profiled 32 partitions paying 3× the
@@ -447,83 +404,43 @@ object EventsStream {
     * 2.78/3.63 s at 8/2/4/1/8 — 1 over-serializes the join, 8 pays 4×
     * the open/commits; the byte rule lands on the measured-best value
     * and GROWS with input volume. Production sizes state partitions to
-    * keys × retention per the [[runToNoop]] scaladoc, and the count is
+    * keys × retention ([[StreamDriver.drain]]), and the count is
     * frozen into the checkpoint at first start — this method is the
     * single place the harness's choice lives instead of a constant
     * repeated per query builder. */
   private[graft] def harnessStatePartitions(dir: String,
-                                            glob: String = "events.parquet"): Option[Int] =
-    Some(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse {
-        val f = new java.io.File(dir, glob)
-        val bytes = if (f.exists) f.length else 0L
-        (((bytes + (1L << 20) - 1) / (1L << 20)) max 2L min 4096L).toInt
-      })
+                                            glob: String = "events.parquet"): Option[Int] = {
+    val f = new java.io.File(dir, glob)
+    val bytes = if (f.exists) f.length else 0L
+    Some((((bytes + (1L << 20) - 1) / (1L << 20)) max 2L min 4096L).toInt)
+  }
 
   /** Drive a stream to completion into the noop sink in Append mode — the
     * BENCH harness. Append + a distributed sink is the shape that scales:
     * the watermark actually evicts window state (it is inert in Complete
     * mode) and nothing is materialized on the driver. The Complete-mode
     * memory sink ([[runToMemory]]) stays verify-only: it re-collects every
-    * window into driver memory each trigger.
-    *
-    * `statePartitions` sets `spark.sql.shuffle.partitions` for the stream
-    * (restored after). For a stateful stream this is the STATE-STORE
-    * partition count — a first-class sizing decision, not a tuning nit: it
-    * is frozen into the checkpoint at first start (a restart cannot change
-    * it), and every microbatch pays one state-store open/commit per
-    * partition regardless of row volume. Size it to expected state volume
-    * (keys × window retention), not to the batch shuffle width; profiling
-    * at sf0.1 showed 32 partitions spending 3× the wall time of 8 on
-    * per-partition state-store overhead for identical results. */
-  def runToNoop(df: DataFrame, statePartitions: Option[Int] = None): Unit = {
-    val spark = df.sparkSession
-    val ckpt = tempCkpt("graft-stream-ckpt")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-      val q = df.writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(OutputMode.Append()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
-  }
+    * window into driver memory each trigger. `statePartitions`: see
+    * [[StreamDriver.drain]]. */
+  def runToNoop(df: DataFrame, statePartitions: Option[Int] = None): Unit =
+    StreamDriver.drain(df, statePartitions)(_.format("noop").outputMode(OutputMode.Append()))
 
   /** Drive a stream to completion against static input and return the
-    * result (memory sink) — the synchronous harness for tests/verify.
-    * `statePartitions` is the same state-store sizing knob as on
-    * [[runToNoop]] (set for the stream, restored after): emitted rows
-    * are identical at any setting — only the state-store partition
-    * count changes — but every microbatch pays one store open/commit
-    * per partition, so oversizing it dominates small streams.
-    *
-    * CONCURRENCY CONSTRAINT (both runners): `statePartitions` mutates the
-    * session-global `spark.sql.shuffle.partitions` for the stream's
-    * duration (set/restore is exception-safe). A batch query planned
-    * CONCURRENTLY on the same session would silently plan with the
-    * stream's width — fine for the strictly sequential Bench/Verify
-    * harnesses; a parallel harness must scope the conf via a cloned
-    * session (`spark.newSession()`). */
-  def runToMemory(df: DataFrame, name: String, outputMode: OutputMode,
+    * result (memory sink) — the synchronous harness for tests and Verify.
+    * The sink's view gets a unique internal name and is dropped before
+    * this returns, so repeated runs leave nothing in the session catalog;
+    * the returned frame keeps the sink's rows. `statePartitions` is the
+    * state-store sizing of [[StreamDriver.drain]] (emitted rows are
+    * identical at any setting), with its concurrency constraint: the
+    * width is session-global while the stream runs. */
+  def runToMemory(df: DataFrame, outputMode: OutputMode,
                   statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
-    val ckpt = tempCkpt("graft-mem-ckpt")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    val name = "graft_mem_" + java.util.UUID.randomUUID().toString.replace('-', '_')
     try {
-      statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(outputMode).start()
-      q.processAllAvailable()
-      q.stop()
-      df.sparkSession.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckpt)
-    }
+      StreamDriver.drain(df, statePartitions)(
+        _.format("memory").queryName(name).outputMode(outputMode))
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
   }
 }

@@ -43,34 +43,15 @@ object MediaStream {
 
   /** foreachBatch sink: every arriving micro-batch of media rows decodes
     * ONCE and appends its per-frame hash track generation under `dir`.
-    * Throwaway tmpfs checkpoint, same contract as the other test/bench
-    * harnesses — production passes a durable checkpoint dir. */
+    * The checkpoint is [[StreamDriver]]'s throwaway one, so every call
+    * decodes the stream's input from the start. */
   def frameHashesToParquet(media: Dataset[MediaRow], dir: String): Unit =
-    runSink(media, "graft-media-vtrack-ckpt") { (batch, batchId) =>
-      writeFrameHashGeneration(batch, batchId, dir)
-    }
+    StreamDriver.eachBatch(media)(writeFrameHashGeneration(_, _, dir))
 
   /** foreachBatch sink for the audio energy track, same shape. */
   def audioEnergyToParquet(media: Dataset[MediaRow], dir: String,
                            windowMs: Int = 50): Unit =
-    runSink(media, "graft-media-atrack-ckpt") { (batch, batchId) =>
-      writeAudioEnergyGeneration(batch, batchId, dir, windowMs)
-    }
-
-  private def runSink(media: Dataset[MediaRow], ckptPrefix: String)(
-      write: (Dataset[MediaRow], Long) => Unit): Unit = {
-    val ckpt = EventsStream.tempCkpt(ckptPrefix)
-    try {
-      val q = media.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch(write)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      EventsStream.deleteRecursively(ckpt)
-    }
-  }
+    StreamDriver.eachBatch(media)(writeAudioEnergyGeneration(_, _, dir, windowMs))
 
   /** Load the accumulated track with LATEST-GENERATION-WINS resolution:
     * a media_id that arrived in several batches (a re-crawl) keeps only

@@ -20,24 +20,13 @@ object RetrievalStream {
     * under `dir` keyed by its batch id — replays REPLACE their batch
     * partitions (effectively-once per batch id). foreachBatch is the
     * right tool (not a stateful operator): indexing is a batch
-    * aggregation pipeline writing a static artifact. Throwaway tmpfs
-    * checkpoint, same contract as the other test/bench harnesses —
-    * production passes a durable checkpoint dir. */
+    * aggregation pipeline writing a static artifact. The checkpoint is
+    * [[StreamDriver]]'s throwaway one, so every call indexes the
+    * stream's input from the start. */
   def indexToParquet(docStream: DataFrame, dir: String,
                      idCol: Column = col("doc_id"),
-                     toksCol: Column = TextFunctions.tokens(col("text"))): Unit = {
-    val ckpt = EventsStream.tempCkpt("graft-bm25-ckpt")
-    try {
-      val q = docStream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Retrieval.bm25IndexAppend(batch, idCol, toksCol, dir, batchId)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      EventsStream.deleteRecursively(ckpt)
+                     toksCol: Column = TextFunctions.tokens(col("text"))): Unit =
+    StreamDriver.eachBatch(docStream) { (batch, batchId) =>
+      Retrieval.bm25IndexAppend(batch, idCol, toksCol, dir, batchId)
     }
-  }
 }

@@ -297,9 +297,10 @@ object DedupScenarios {
     * the quality join and the per-canon election window carry every row. */
   def webcorpusElection(spark: SparkSession, rm: RunMetrics, p: Params): Unit = {
     val clustered = copiesOf(documents(spark, p), 20)
-    println(s"[webcorpus] clustered corpus: ${clustered.count()} docs " +
+    val n = clustered.count()
+    println(s"[webcorpus] clustered corpus: $n docs " +
       "(20 copies — every doc in a 20-strong near-dup class)")
-    rm.stage("pairs + CC + best-quality election (100k docs)") {
+    rm.stage(s"pairs + CC + best-quality election ($n docs)") {
       val pairs = Dedup.nearDuplicates(clustered, col("doc_id"), col("text"), 0.8, fastCfg)
       noop(Dedup.bestQualityCanon(pairs, col("d1"), col("d2"),
         clustered.select(col("doc_id"), length(col("text")).as("q")),
@@ -314,12 +315,13 @@ object DedupScenarios {
     val corpus = inflate(documents(spark, p), 200)(
       (col("doc_id") + col("i") * 1000000L).as("doc_id"),
       concat(col("text"), lit(" c"), col("i")).as("text"))
-    println(s"[webcorpus] unique corpus: ${corpus.count()} docs (salted copies)")
+    val n = corpus.count()
+    println(s"[webcorpus] unique corpus: $n docs (salted copies)")
     val gated = CacheScope.unmanaged.persist(
       WeightedSentiment(gateW, 0.0).score(corpus, col("text"))
         .filter(col("sentiment") === "positive")
         .select("doc_id", "text"))
-    rm.stage("classifier gate, per-row logistic (1M docs)")(gated.count())
+    rm.stage(s"classifier gate, per-row logistic ($n docs)")(gated.count())
     // the narrow (doc_id, q, domain) projection is materialized so the
     // quota timing isolates the rank window from the gate
     val withDomain = CacheScope.unmanaged.persist(

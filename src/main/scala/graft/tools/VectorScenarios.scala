@@ -35,7 +35,7 @@ object VectorScenarios {
     println(s"[ann] corpus ${corpus.count()} vectors x 64 dims")
     def cached(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
     val sample = corpus.filter(pmod(col("vec_id"), lit(50L)) === 0).select(col("embedding"))
-    val centroids = rm.stage("codebook: KMeans k=256 on 20k sample")(
+    val centroids = rm.stage(s"codebook: KMeans k=256 on ${n / 50} sample")(
       Similarity.trainCentroids(sample, col("embedding"), k = 256))
     val cells = rm.stage("cell assignment (map-side, inlined codebook)")(cached(
       Similarity.withIvfCell(corpus, col("vec_id"), col("embedding"), centroids)))
@@ -72,7 +72,7 @@ object VectorScenarios {
     recall("batched", batchSets)
 
     // sample-train then full-corpus refine: the q113 production path
-    val refined = rm.stage("kmeansRefine: 5 Lloyd iters over 1M")(
+    val refined = rm.stage(s"kmeansRefine: 5 Lloyd iters over $n")(
       Similarity.kmeansRefine(corpus, col("vec_id"), col("embedding"), centroids, iters = 5))
     val refinedCells = rm.stage("refined cell re-assignment")(cached(
       Similarity.withIvfCell(corpus, col("vec_id"), col("embedding"), refined)))
@@ -277,7 +277,7 @@ object VectorScenarios {
         Seq(sp, dn, rr).foreach(_.unpersist())
         rows
       }
-    val before = metrics(s"graded_${nGq / 1000}kq", dir)
+    val before = metrics(s"graded_${nGq}q", dir)
     val want = Map("bm25" -> (0L, 2 * nGq), "rrf" -> (nGq, 2 * nGq), "rerank" -> (nGq, 3 * nGq))
     before.foreach { r =>
       val (h, c) = want(r.getString(0))
@@ -290,7 +290,7 @@ object VectorScenarios {
     def partFiles(d: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
       .filter(_.toString.endsWith(".parquet")).count()
     println(s"[retrieval] part files: ${partFiles(dir)} -> ${partFiles(dir2)}")
-    val after = metrics(s"graded_${nGq / 1000}kq_compacted", dir2)
+    val after = metrics(s"graded_${nGq}q_compacted", dir2)
     assert(before.map(_.toString).toSeq == after.map(_.toString).toSeq,
       s"compacted index changed the metrics: ${after.mkString(";")}")
     println(s"[retrieval] post-compact metrics identical ($dir -> $dir2)")

@@ -10,9 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * byte-derived width and the conf [[EngineConf.localSession]] applies,
   * checked as pure values (no session is opened). */
 class EngineConfSpec extends AnyFunSuite {
-  private def envUnset(names: String*): Unit =
-    names.foreach(n => assume(sys.env.get(n).isEmpty, s"$n is set"))
-
   private def withTempDir[T](f: File => T): T = {
     val dir = Files.createTempDirectory("graft_width").toFile
     try f(dir) finally {
@@ -25,7 +22,6 @@ class EngineConfSpec extends AnyFunSuite {
     Files.write(new File(dir, name).toPath, new Array[Byte](mb << 20))
 
   test("harnessShufflePartitions: ceil(dir bytes / 2 MB) clamped to [2, 4096]") {
-    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     withTempDir { dir =>
       assert(EngineConf.harnessShufflePartitions(dir.getPath) == "2")
       (1 to 5).foreach(i => writeMb(dir, s"part$i", 1))
@@ -41,8 +37,6 @@ class EngineConfSpec extends AnyFunSuite {
   }
 
   test("localPosture: AQE harness knobs, UTC, no UI, byte width for a read dir") {
-    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_AQE_PARALLELISM_FIRST",
-      "SPARK_GRAFT_AQE_ADVISORY", "SPARK_GRAFT_AQE_CACHED_REPLAN")
     withTempDir { dir =>
       (1 to 5).foreach(i => writeMb(dir, s"part$i", 1))
       val posture = EngineConf.localPosture(Some(dir.getPath))
@@ -74,7 +68,6 @@ class EngineConfSpec extends AnyFunSuite {
   }
 
   test("localPosture: generated inputs keep Spark's default width; extra wins") {
-    envUnset("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     val posture = EngineConf.localPosture(None,
       Map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m"))
     val keys = posture.map(_._1)

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-box rules that would give 25 GB partitions at 100 TB) is read
   * only by the harnesses. Tools take their scale from the [[tools.Stress]]
   * tier, not from environment knobs, and have three mains. The codegen
-  * cache size is one constant line of EngineConf. Comment lines
+  * cache size is one constant line of EngineConf. Streams start, drain
+  * and stop only in `streaming.StreamDriver`, and the engine reads four
+  * environment variables, none of them a tuning knob. Comment lines
   * are skipped: docs may name them. */
 class HarnessFenceSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
@@ -71,6 +73,18 @@ class HarnessFenceSpec extends AnyFunSuite {
     assert(lines.map(_._1).toSet == Set("graft/EngineConf.scala"), lines)
     assert(lines.count(_._2.contains("spark.sql.codegen.cache.maxEntries")) == 1, lines)
     assert(lines.forall(l => !l._2.contains("SPARK_GRAFT_") && !l._2.contains("sys.")), lines)
+  }
+
+  test("the stream lifecycle lives only in the stream driver") {
+    Seq("writeStream", "processAllAvailable", "checkpointLocation").foreach { needle =>
+      assert(filesWith(needle) == Set("graft/streaming/StreamDriver.scala"), needle)
+    }
+  }
+
+  test("src/main/scala reads four SPARK_GRAFT_* variables") {
+    val read = sources.flatMap(_._2).flatMap("SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(_)).toSet
+    assert(read == Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_BENCH_ITERS", "SPARK_GRAFT_BENCH_BUDGET_SECS"), read)
   }
 
   test("the harness width and AQE posture are read only by the harnesses") {

@@ -67,7 +67,7 @@ class EventsEncodingSpec extends SparkSpec {
     encodings.foreach { e =>
       val dir = fixture(e)
       val streamed = EventsStream.runToMemory(
-        EventsStream.read(spark, dir), s"enc_parity_$e", OutputMode.Append())
+        EventsStream.read(spark, dir), OutputMode.Append())
       assert(canon(streamed) == canon(Tables.events(spark, dir)),
         s"stream decode of $e diverges from batch decode")
     }
@@ -107,7 +107,7 @@ class EventsEncodingSpec extends SparkSpec {
       val src = Paths.get(
         getClass.getResource("/events_ts_fixtures/us_ntz/events.parquet").toURI)
       java.nio.file.Files.copy(src, dir.resolve("events.parquet"))
-      val streamed = EventsStream.runToMemory(stream, "enc_prestart", OutputMode.Append())
+      val streamed = EventsStream.runToMemory(stream, OutputMode.Append())
       assert(canon(streamed) == canon(Tables.events(spark, fixture("us_ntz"))),
         "pre-started stream decoded the late-arriving file differently from batch")
     } finally {

@@ -22,7 +22,7 @@ class ChatStreamSpec extends SparkSpec {
   test("streaming chat audit matches the batch alternationAudit row-for-row") {
     val streamed = EventsStream.runToMemory(
       ChatStream.audit(EventsStream.read(spark, streamDir)).toDF(),
-      "chat_audit_test", OutputMode.Append())
+      OutputMode.Append())
     val batch = Instruct.alternationAudit(
       Instruct.turns(Tables.events(spark, sfDir)))
 

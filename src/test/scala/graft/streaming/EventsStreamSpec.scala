@@ -24,7 +24,7 @@ class EventsStreamSpec extends SparkSpec {
     // the trailing windows still inside the watermark on static input.
     val streamed = EventsStream.runToMemory(
       EventsStream.tumblingCounts(EventsStream.read(spark, streamDir)),
-      "tumbling_test", OutputMode.Complete())
+      OutputMode.Complete())
     val batch = Tables.events(spark, sfDir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
@@ -52,7 +52,7 @@ class EventsStreamSpec extends SparkSpec {
         Seq("dup"), Seq("slow", "broken"), softPermille = 80L)
         .select("doc_id", "safety")
     val streamed = EventsStream.runToMemory(
-      gate(stream), "safety_stream_test", OutputMode.Append())
+      gate(stream), OutputMode.Append())
       .as[(Long, String)].collect().toMap
     val batch = gate(d).as[(Long, String)].collect().toMap
     assert(streamed == batch,
@@ -354,7 +354,7 @@ class EventsStreamSpec extends SparkSpec {
   test("sliding-window averages produce overlapping windows") {
     val out = EventsStream.runToMemory(
       EventsStream.slidingAvg(EventsStream.read(spark, streamDir)),
-      "sliding_test", OutputMode.Append())
+      OutputMode.Append())
     assert(out.count() > 0)
     // 1h window sliding every 30m -> ~2x as many windows as tumbling 1h
     val tumbling = Tables.events(spark, sfDir)
@@ -510,7 +510,7 @@ class EventsStreamSpec extends SparkSpec {
     Files.copy(Paths.get(s"$sfDir/events.parquet"), d.resolve("b.parquet"))
     val streamed = EventsStream.runToMemory(
       EventsStream.dedupe(EventsStream.read(spark, d.toString, glob = "*.parquet")),
-      "dedupe_test", OutputMode.Append())
+      OutputMode.Append())
     val batch = Tables.events(spark, sfDir)
     assert(streamed.count() == batch.select("event_id").distinct().count())
     assert(streamed.select("event_id").distinct().count() == streamed.count())
@@ -519,7 +519,7 @@ class EventsStreamSpec extends SparkSpec {
   test("flatMapGroupsWithState sessionization matches the batch gaps-and-islands (q25)") {
     val streamed = EventsStream.runToMemory(
       EventsStream.sessionize(EventsStream.read(spark, streamDir)).toDF(),
-      "session_test", OutputMode.Append())
+      OutputMode.Append())
     // Batch twin: lag + cumulative sum session ids (the q25 formulation),
     // with each session's last event time for the emission-boundary check.
     val w = org.apache.spark.sql.expressions.Window
@@ -625,7 +625,7 @@ class EventsStreamSpec extends SparkSpec {
     val joined = EventsStream.runToMemory(
       EventsStream.clickPurchaseJoin(EventsStream.read(spark, streamDir),
         watermark = "0 seconds", joinType = "leftOuter"),
-      "louter_join_test", OutputMode.Append())
+      OutputMode.Append())
       .select($"user_id", unix_timestamp($"click_ts").as("ct"),
         unix_timestamp($"purchase_ts").as("pt"))
       .collect().map(r => (r.getLong(0), r.getLong(1),
@@ -665,7 +665,7 @@ class EventsStreamSpec extends SparkSpec {
         .withWatermark("ts", "0 seconds")
         .groupBy($"user_id", session_window($"ts", "1 hour").as("sw"))
         .agg(count(lit(1)).as("n")),
-      "swin_test", OutputMode.Append())
+      OutputMode.Append())
       .select($"user_id", unix_timestamp($"sw.start").as("ss"),
         unix_timestamp($"sw.end").as("se"), $"n")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -703,7 +703,7 @@ class EventsStreamSpec extends SparkSpec {
         .groupBy($"user_id", session_window($"ts", "1 hour").as("sw"))
         .agg(count(lit(1)).as("n_events"),
           round(sum($"value"), 4).as("sum_value")),
-      "swin_trap_test", OutputMode.Append())
+      OutputMode.Append())
       .select($"user_id", $"sw.start".as("session_start"),
         $"sw.end".as("session_end"), $"n_events", $"sum_value")
     val batch = EventsStream.sessionAggComposable(Tables.events(spark, sfDir))
@@ -727,7 +727,7 @@ class EventsStreamSpec extends SparkSpec {
   test("mapGroupsWithState per-user totals equal the batch group-by") {
     val streamed = EventsStream.runToMemory(
       EventsStream.userTotals(EventsStream.read(spark, streamDir)).toDF(),
-      "state_test", OutputMode.Update())
+      OutputMode.Update())
     // last update per user holds the final running totals
     val last = streamed.groupBy("user_id").agg(max("n").as("n_stream"))
     val batch = Tables.events(spark, sfDir).groupBy("user_id")
@@ -771,7 +771,7 @@ class EventsStreamSpec extends SparkSpec {
     val streamed = EventsStream.runToMemory(
       EventsStream.enrichWithStatic(EventsStream.read(spark, streamDir), dim, "user_id")
         .select("user_id", "tier"),
-      "enrich_test", OutputMode.Append())
+      OutputMode.Append())
     val batch = Tables.events(spark, sfDir).join(dim, Seq("user_id"), "left")
     assert(streamed.count() == batch.count())
     val s = streamed.groupBy("tier").count().withColumnRenamed("count", "ns")
