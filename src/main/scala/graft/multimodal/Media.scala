@@ -145,8 +145,8 @@ object Media {
     * `maxPostings` frequency-caps each band bucket
     * ([[graft.dedup.Dedup.capBands]] — a corpus-common value like the
     * solid-color thumbnail's dHash would otherwise make one bucket
-    * quadratic in its membership); [[phashBandAudit]] reports the
-    * capped buckets. The hash frame (the expensive codec pass) is
+    * quadratic in its membership); [[phashBandAuditFromHashes]]
+    * reports the capped buckets. The hash frame (the expensive codec pass) is
     * persisted through `scope` — the cap count and both join sides
     * read it. */
   def phashNearDupPairs(media: Dataset[MediaRow], radius: Int = 3,
@@ -164,22 +164,14 @@ object Media {
                                   maxPostings: Long = 1000L): DataFrame =
     bandedHammingPairs(p, "phash", 64, radius, maxPostings)
 
-  /** Capped-bucket audit for [[phashNearDupPairs]]: one row per band
+  /** Capped-bucket audit for [[phashNearDupPairs]] over an
+    * ALREADY-COMPUTED `(media_id, phash)` frame: one row per band
     * bucket with ≥2 postings, `capped` marking the buckets the
     * frequency cap excluded — ships next to the pair output so capped
-    * mass is reported, not silently vanished. Pairs + audit of one
-    * operator run should share one codec pass: persist
-    * [[withPerceptualHash]] once and feed
-    * [[phashNearDupPairsFromHashes]] + [[phashBandAuditFromHashes]] —
-    * this convenience form re-decodes the corpus. */
-  def phashBandAudit(media: Dataset[MediaRow], radius: Int = 3,
-                     maxPostings: Long = 1000L): DataFrame =
-    phashBandAuditFromHashes(withPerceptualHash(media), radius, maxPostings)
-
-  /** [[phashBandAudit]] over an ALREADY-COMPUTED `(media_id, phash)`
-    * frame — one persisted hash frame feeds both the pair join and the
-    * audit, so the corpus decodes once per run, not once per
-    * artifact. */
+    * mass is reported, not silently vanished. Persist
+    * [[withPerceptualHash]] once and feed it to both
+    * [[phashNearDupPairsFromHashes]] and this audit, so the corpus
+    * decodes once per run, not once per artifact. */
   def phashBandAuditFromHashes(p: DataFrame, radius: Int = 3,
                                maxPostings: Long = 1000L): DataFrame =
     graft.dedup.Dedup.bandPostingAudit(
@@ -248,7 +240,7 @@ object Media {
     * `AudioFingerprintSpec` pins that containment). `maxPostings`
     * frequency-caps each band bucket (a corpus-common signature — the
     * silent clip — would otherwise make one bucket quadratic);
-    * [[audioBandAudit]] reports capped buckets. The fingerprint frame
+    * [[audioBandAuditFromHashes]] reports capped buckets. The fingerprint frame
     * is persisted through `scope` (cap count + both join sides). */
   def audioNearDupPairs(media: Dataset[MediaRow], radius: Int = 5,
                         maxPostings: Long = 1000L,
@@ -264,17 +256,9 @@ object Media {
                                   maxPostings: Long = 1000L): DataFrame =
     bandedHammingPairs(p, "ahash", 60, radius, maxPostings)
 
-  /** Capped-bucket audit for [[audioNearDupPairs]] (see
-    * [[phashBandAudit]]). */
-  def audioBandAudit(media: Dataset[MediaRow], radius: Int = 5,
-                     maxPostings: Long = 1000L): DataFrame =
-    audioBandAuditFromHashes(
-      withAudioFingerprint(media).select("media_id", "ahash"),
-      radius, maxPostings)
-
-  /** [[audioBandAudit]] over an ALREADY-COMPUTED `(media_id, ahash)`
-    * frame (see [[phashBandAuditFromHashes]] — one fingerprint pass per
-    * run). */
+  /** Capped-bucket audit for [[audioNearDupPairs]] over an
+    * ALREADY-COMPUTED `(media_id, ahash)` frame (see
+    * [[phashBandAuditFromHashes]] — one fingerprint pass per run). */
   def audioBandAuditFromHashes(p: DataFrame, radius: Int = 5,
                                maxPostings: Long = 1000L): DataFrame =
     graft.dedup.Dedup.bandPostingAudit(
@@ -323,7 +307,7 @@ object Media {
     * shingle posting lists; a corpus-wide frame is boilerplate, not a
     * duplicate signal). Pairs agreeing ONLY on capped positions still
     * need `minShared` uncapped agreements to qualify — by design.
-    * [[videoFrameBandAudit]] reports the capped buckets. The frame-hash
+    * [[videoFrameBandAuditFromHashes]] reports the capped buckets. The frame-hash
     * frame (the codec pass) is persisted through `scope`. */
   def videoNearDupPairs(media: Dataset[MediaRow], nFrames: Int = 4,
                         minShared: Int = 3,
@@ -354,15 +338,10 @@ object Media {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Capped-bucket audit for [[videoNearDupPairs]]: one row per
-    * `(frame_idx, fhash)` bucket with ≥2 postings, `capped` marking
-    * the buckets the frequency cap excluded. */
-  def videoFrameBandAudit(media: Dataset[MediaRow], nFrames: Int = 4,
-                          maxPostings: Long = 1000L): DataFrame =
-    videoFrameBandAuditFromHashes(withFrameHashes(media, nFrames), maxPostings)
-
-  /** [[videoFrameBandAudit]] over an ALREADY-COMPUTED
-    * `(media_id, frame_idx, fhash)` frame (see
+  /** Capped-bucket audit for [[videoNearDupPairs]] over an
+    * ALREADY-COMPUTED `(media_id, frame_idx, fhash)` frame: one row per
+    * `(frame_idx, fhash)` bucket with ≥2 postings, `capped` marking the
+    * buckets the frequency cap excluded (see
     * [[phashBandAuditFromHashes]] — one codec pass per run). */
   def videoFrameBandAuditFromHashes(f: DataFrame,
                                     maxPostings: Long = 1000L): DataFrame =

@@ -94,6 +94,33 @@ object ChatQueries {
        |    CAST(margin AS BIGINT) AS margin
        |  FROM pairs WHERE r_user IS NOT NULL AND margin > 0)""".stripMargin
 
+  /** `turnsCtes` plus `a`: every turn with a repeated-role flag `rep`
+    * and its whitespace token count `n_tok`. Used by q147 and q158. */
+  private val auditTurnsCtes: String =
+    s"""$turnsCtes,
+       |a AS (SELECT *,
+       |    CASE WHEN lag(role) OVER (PARTITION BY user_id, session_id
+       |        ORDER BY turn_idx) = role THEN 1 ELSE 0 END AS rep,
+       |    CAST(len(regexp_split_to_array(trim(content), '\\s+')) AS BIGINT) AS n_tok
+       |  FROM turns)""".stripMargin
+
+  /** The alternation-audit columns of one conversation's rows of `a`:
+    * turn and role counts, repeats, first/last role, loss and total
+    * tokens and the validity verdict. Used by q147 and q158. */
+  private val auditColumns: String =
+    s"""  count(*) AS n_turns,
+       |  CAST(count_if(role = 'user') AS BIGINT) AS n_user,
+       |  CAST(count_if(role = 'assistant') AS BIGINT) AS n_assistant,
+       |  CAST(sum(rep) AS BIGINT) AS n_repeats,
+       |  max(CASE WHEN turn_idx = 1 THEN role = 'user' END) AS starts_user,
+       |  max_by(role = 'assistant', turn_idx) AS ends_assistant,
+       |  CAST(sum(CASE WHEN role = 'assistant' THEN n_tok ELSE 0 END) AS BIGINT)
+       |    AS n_loss_tokens,
+       |  CAST(sum(n_tok) AS BIGINT) AS n_total_tokens,
+       |  (max(CASE WHEN turn_idx = 1 THEN role = 'user' END)
+       |    AND max_by(role = 'assistant', turn_idx)
+       |    AND sum(rep) = 0) AS valid""".stripMargin
+
   val queries: Seq[Q] = Seq(
 
     // Role-alternation audit + supervised-token budget per conversation:
@@ -101,25 +128,9 @@ object ChatQueries {
     // alternates, ends on the assistant) plus the loss/total token
     // split the trainer's budget planning needs.
     Q("q147_chat_audit",
-      Some(s"""$turnsCtes,
-              |a AS (SELECT *,
-              |    CASE WHEN lag(role) OVER (PARTITION BY user_id, session_id
-              |        ORDER BY turn_idx) = role THEN 1 ELSE 0 END AS rep,
-              |    CAST(len(regexp_split_to_array(trim(content), '\\s+')) AS BIGINT) AS n_tok
-              |  FROM turns)
+      Some(s"""$auditTurnsCtes
               |SELECT user_id, session_id,
-              |  count(*) AS n_turns,
-              |  CAST(count_if(role = 'user') AS BIGINT) AS n_user,
-              |  CAST(count_if(role = 'assistant') AS BIGINT) AS n_assistant,
-              |  CAST(sum(rep) AS BIGINT) AS n_repeats,
-              |  max(CASE WHEN turn_idx = 1 THEN role = 'user' END) AS starts_user,
-              |  max_by(role = 'assistant', turn_idx) AS ends_assistant,
-              |  CAST(sum(CASE WHEN role = 'assistant' THEN n_tok ELSE 0 END) AS BIGINT)
-              |    AS n_loss_tokens,
-              |  CAST(sum(n_tok) AS BIGINT) AS n_total_tokens,
-              |  (max(CASE WHEN turn_idx = 1 THEN role = 'user' END)
-              |    AND max_by(role = 'assistant', turn_idx)
-              |    AND sum(rep) = 0) AS valid
+              |$auditColumns
               |FROM a GROUP BY user_id, session_id""".stripMargin),
       (s, dir) => Instruct.alternationAudit(Instruct.turns(ev(s, dir)))),
 
@@ -154,25 +165,9 @@ object ChatQueries {
     // q147 audit columns, so this row proves stream==batch==DuckDB in
     // one hash.
     Q("q158_chat_audit_stream",
-      Some(s"""$turnsCtes,
-              |a AS (SELECT *,
-              |    CASE WHEN lag(role) OVER (PARTITION BY user_id, session_id
-              |        ORDER BY turn_idx) = role THEN 1 ELSE 0 END AS rep,
-              |    CAST(len(regexp_split_to_array(trim(content), '\\s+')) AS BIGINT) AS n_tok
-              |  FROM turns),
+      Some(s"""$auditTurnsCtes,
               |audit AS (SELECT user_id, session_id,
-              |  count(*) AS n_turns,
-              |  CAST(count_if(role = 'user') AS BIGINT) AS n_user,
-              |  CAST(count_if(role = 'assistant') AS BIGINT) AS n_assistant,
-              |  CAST(sum(rep) AS BIGINT) AS n_repeats,
-              |  max(CASE WHEN turn_idx = 1 THEN role = 'user' END) AS starts_user,
-              |  max_by(role = 'assistant', turn_idx) AS ends_assistant,
-              |  CAST(sum(CASE WHEN role = 'assistant' THEN n_tok ELSE 0 END) AS BIGINT)
-              |    AS n_loss_tokens,
-              |  CAST(sum(n_tok) AS BIGINT) AS n_total_tokens,
-              |  (max(CASE WHEN turn_idx = 1 THEN role = 'user' END)
-              |    AND max_by(role = 'assistant', turn_idx)
-              |    AND sum(rep) = 0) AS valid,
+              |$auditColumns,
               |  max(CAST(floor(epoch(ts)) AS BIGINT)) AS last_epoch
               |FROM a GROUP BY user_id, session_id)
               |SELECT user_id, session_id, n_turns, n_user, n_assistant,

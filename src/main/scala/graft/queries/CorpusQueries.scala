@@ -58,34 +58,67 @@ object CorpusQueries {
        |best AS (SELECT vec_id, m, code FROM scored
        |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) = 1)""".stripMargin
 
+  /** The q124 link graph as SQL: CTE `name` (src, dst) holds three
+    * hash-drawn out-links per doc of CTE `docs`, self-loops dropped,
+    * modulo `Nb` (the doc count, from CTE `nd`). The twin of
+    * `linkEdges`. Used by q124, q131, q133, q134 and q159. */
+  private def linkEdgesCte(name: String): String = {
+    val h = TextFunctions.portableHashSql(
+      "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
+    s"""$name AS (SELECT d.doc_id AS src, $h % Nb AS dst
+       |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
+       |  WHERE $h % Nb <> d.doc_id)""".stripMargin
+  }
+
+  /** The q124 link graph as a frame over `d` (doc_id): the twin of
+    * `linkEdgesCte`. Used by q124, q131, q133, q134 and q159. */
+  private def linkEdges(d: DataFrame): DataFrame = {
+    val nb = d.agg(count(lit(1)).as("Nb"))
+    d.crossJoin(broadcast(nb))
+      .select(col("doc_id").as("src"),
+        explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
+      .withColumn("dst",
+        TextFunctions.portableHash(
+          concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
+      .filter(col("dst") =!= col("src"))
+      .select("src", "dst")
+  }
+
+  /** The random-surfer graph: `docs`, `nd` (N and Nb), `edges` and each
+    * source's out-degree `deg`. Used by `pagerankSql` and `pprSql`. */
+  private def rankGraphCtes: String =
+    s"""WITH docs AS (SELECT doc_id FROM documents),
+       |nd AS (SELECT CAST(count(*) AS DOUBLE) AS N,
+       |  CAST(count(*) AS BIGINT) AS Nb FROM docs),
+       |${linkEdgesCte("edges")},
+       |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg
+       |  FROM edges GROUP BY src)""".stripMargin
+
+  /** Round `i`'s rank flow from ranks `r(i-1)`: the out-degree-divided
+    * contributions into each node (`c$i`) and the dangling mass of nodes
+    * with no out-link (`m$i`). Used by `pagerankSql` and `pprSql`. */
+  private def rankFlowCtes(i: Int): String =
+    s"""c$i AS (SELECT e.dst AS node, sum(r.rank / g.outdeg) AS contrib
+       |  FROM edges e JOIN r${i - 1} r ON r.node = e.src
+       |  JOIN deg g ON g.src = e.src
+       |  GROUP BY e.dst),
+       |m$i AS (SELECT coalesce(sum(r.rank), 0.0) AS dmass
+       |  FROM r${i - 1} r LEFT JOIN deg g ON g.src = r.node
+       |  WHERE g.src IS NULL)""".stripMargin
+
   /** DuckDB replay of the q124 PageRank: hash-generated 3-out-degree
     * graph over doc_ids (self-loops removed), then `iters` unrolled
     * power iterations with out-degree division, teleport, and the
     * dangling-mass term — the operator's exact update rule. */
   private def pagerankSql(iters: Int): String = {
-    val h = TextFunctions.portableHashSql(
-      "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
     val iterCtes = (1 to iters).map { i =>
-      s"""c$i AS (SELECT e.dst AS node, sum(r.rank / g.outdeg) AS contrib
-         |  FROM edges e JOIN r${i - 1} r ON r.node = e.src
-         |  JOIN deg g ON g.src = e.src
-         |  GROUP BY e.dst),
-         |m$i AS (SELECT coalesce(sum(r.rank), 0.0) AS dmass
-         |  FROM r${i - 1} r LEFT JOIN deg g ON g.src = r.node
-         |  WHERE g.src IS NULL),
+      s"""${rankFlowCtes(i)},
          |r$i AS (SELECT d.doc_id AS node,
          |    (1 - 0.85) / N + 0.85 * (coalesce(c.contrib, 0.0) + m.dmass / N) AS rank
          |  FROM docs d CROSS JOIN nd CROSS JOIN m$i m
          |  LEFT JOIN c$i c ON c.node = d.doc_id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH docs AS (SELECT doc_id FROM documents),
-       |nd AS (SELECT CAST(count(*) AS DOUBLE) AS N,
-       |  CAST(count(*) AS BIGINT) AS Nb FROM docs),
-       |edges AS (SELECT d.doc_id AS src, $h % Nb AS dst
-       |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-       |  WHERE $h % Nb <> d.doc_id),
-       |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg
-       |  FROM edges GROUP BY src),
+    s"""$rankGraphCtes,
        |r0 AS (SELECT doc_id AS node, 1.0 / N AS rank FROM docs CROSS JOIN nd),
        |$iterCtes
        |SELECT node AS doc_id,
@@ -104,30 +137,15 @@ object CorpusQueries {
     * 1614 vs 1615 micro). Forcing the subtraction into binary64 makes
     * both engines compute the identical constant. */
   private def pprSql(iters: Int): String = {
-    val h = TextFunctions.portableHashSql(
-      "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
     val iterCtes = (1 to iters).map { i =>
-      s"""c$i AS (SELECT e.dst AS node, sum(r.rank / g.outdeg) AS contrib
-         |  FROM edges e JOIN r${i - 1} r ON r.node = e.src
-         |  JOIN deg g ON g.src = e.src
-         |  GROUP BY e.dst),
-         |m$i AS (SELECT coalesce(sum(r.rank), 0.0) AS dmass
-         |  FROM r${i - 1} r LEFT JOIN deg g ON g.src = r.node
-         |  WHERE g.src IS NULL),
+      s"""${rankFlowCtes(i)},
          |r$i AS (SELECT pp.node,
          |    (1 - CAST(0.85 AS DOUBLE)) * pp.p + 0.85 * (coalesce(c.contrib, 0.0) + m.dmass * pp.p) AS rank,
          |    pp.p AS p
          |  FROM p pp CROSS JOIN m$i m
          |  LEFT JOIN c$i c ON c.node = pp.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH docs AS (SELECT doc_id FROM documents),
-       |nd AS (SELECT CAST(count(*) AS DOUBLE) AS N,
-       |  CAST(count(*) AS BIGINT) AS Nb FROM docs),
-       |edges AS (SELECT d.doc_id AS src, $h % Nb AS dst
-       |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-       |  WHERE $h % Nb <> d.doc_id),
-       |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg
-       |  FROM edges GROUP BY src),
+    s"""$rankGraphCtes,
        |wt AS (SELECT sum(CASE WHEN doc_id % 20 = 0 THEN 2.0 ELSE 1.0 END) AS total
        |  FROM docs WHERE doc_id % 10 = 0),
        |p AS (SELECT d.doc_id AS node,
@@ -156,8 +174,6 @@ object CorpusQueries {
     * point quantizes up — a documented definition choice, applied
     * identically on both sides. */
   private def hitsSql(iters: Int): String = {
-    val h = TextFunctions.portableHashSql(
-      "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
     val iterCtes = (1 to iters).map { i =>
       s"""ar$i AS (SELECT e.dst AS node, sum(r.hub) AS auth_raw
          |  FROM edges e JOIN r${i - 1} r ON r.node = e.src GROUP BY e.dst),
@@ -177,9 +193,7 @@ object CorpusQueries {
     }.mkString(",\n")
     s"""WITH docs AS (SELECT doc_id FROM documents),
        |nd AS (SELECT CAST(count(*) AS BIGINT) AS Nb FROM docs),
-       |edges AS (SELECT d.doc_id AS src, $h % Nb AS dst
-       |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-       |  WHERE $h % Nb <> d.doc_id),
+       |${linkEdgesCte("edges")},
        |r0 AS (SELECT doc_id AS node, 1.0 AS hub, 1.0 AS auth FROM docs),
        |$iterCtes
        |SELECT node AS doc_id,
@@ -194,8 +208,6 @@ object CorpusQueries {
     * no-labeled-neighbor keeps previous). Counting is integer end to
     * end — no float anywhere, so parity is exact by construction. */
   private def labelPropSql(iters: Int): String = {
-    val h = TextFunctions.portableHashSql(
-      "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
     val iterCtes = (1 to iters).map { i =>
       s"""nc$i AS (SELECT u.dst, l.label, count(*) AS cnt
          |  FROM und u JOIN l${i - 1} l ON l.node = u.src
@@ -208,9 +220,7 @@ object CorpusQueries {
     }.mkString(",\n")
     s"""WITH docs AS (SELECT doc_id FROM documents),
        |nd AS (SELECT CAST(count(*) AS BIGINT) AS Nb FROM docs),
-       |edges AS (SELECT d.doc_id AS src, $h % Nb AS dst
-       |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-       |  WHERE $h % Nb <> d.doc_id),
+       |${linkEdgesCte("edges")},
        |und AS (SELECT src, dst FROM edges
        |  UNION ALL SELECT dst AS src, src AS dst FROM edges),
        |sd AS (SELECT doc_id AS node,
@@ -362,6 +372,75 @@ object CorpusQueries {
       "CAST(doc_id % 50 AS VARCHAR) || " +
       "CASE WHEN doc_id % 2 = 1 THEN '?utm_campaign=abc' ELSE '' END)"
 
+  /** Caption key of a crossmodal pair: the portable hash of its
+    * canonicalized caption, as SQL and as a column. Used by q184 and
+    * q185. */
+  private val capKeySql = TextFunctions.portableHashSql(
+    TextFunctions.canonicalizeSql("caption"))
+  private def capKey = TextFunctions.portableHash(
+    TextFunctions.canonicalize(col("caption")))
+
+  /** `j`: each pair of CTE `ki` (pair_id, cv, cap_key, img_key) with its
+    * caption–image cosine as floored micro-units, over the vectors of
+    * CTE `e`. Used by q184 and q185. */
+  private val alignCte =
+    s"""j AS (SELECT pair_id, cap_key, img_key,
+       |    CAST(floor(round(${Similarity.cosineSql("a.v", "b.v")}, 4)
+       |      * 10000 + 0.001) AS BIGINT) AS align_micro
+       |  FROM ki JOIN e a ON a.vec_id = ki.cv
+       |    JOIN e b ON b.vec_id = ki.img_key)""".stripMargin
+
+  /** `pairs` with the caption vector of `cv` and the image vector of `iv`
+    * joined in from the embeddings `e`. Used by q184 and q185. */
+  private def pairVectors(e: DataFrame, pairs: DataFrame): DataFrame = {
+    val v = e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    pairs
+      .join(broadcast(v.select(col("vec_id").as("cv"),
+        col("v").as("cap_vec"))), Seq("cv"))
+      .join(broadcast(v.select(col("vec_id").as("iv"),
+        col("v").as("img_vec"))), Seq("iv"))
+  }
+
+  /** The synthetic scene track: six frames per doc, ids ≡0 (mod 5)
+    * cutting to a second scene at frame 3, each frame hashed by
+    * (media, scene); as a frame and as the SQL hash. Used by q213 and
+    * q224. */
+  private def sceneTrack(d: DataFrame): DataFrame =
+    d.select(col("doc_id").as("media_id"),
+        explode(sequence(lit(0), lit(5))).as("frame_idx"))
+      .withColumn("scene",
+        when(col("media_id") % 5 === 0 && col("frame_idx") >= 3, 1)
+          .otherwise(0))
+      .withColumn("fhash", TextFunctions.portableHash(
+        concat(col("media_id").cast("string"), lit(":scene:"),
+          col("scene").cast("string"))))
+      .drop("scene")
+  private val sceneHashSql = TextFunctions.portableHashSql(
+    "(CAST(media_id AS VARCHAR) || ':scene:' || CAST(scene AS VARCHAR))")
+
+  /** The synthetic energy track: forty 50 ms windows per doc, a tone on
+    * windows ≡0..4 (mod 8) at a per-doc amplitude, silence otherwise.
+    * Used by q214 and q224. */
+  private def energyTrack(d: DataFrame): DataFrame =
+    d.select(col("doc_id").as("media_id"),
+        explode(sequence(lit(0), lit(39))).as("win_idx"))
+      .withColumn("start_ms", (col("win_idx") * 50L).cast("long"))
+      .withColumn("end_ms", ((col("win_idx") + 1) * 50L).cast("long"))
+      .withColumn("rms",
+        when(col("win_idx") % 8 < 5,
+          (lit(2000L) + col("media_id") % 100).cast("double"))
+          .otherwise(lit(0.0)))
+
+  /** Two synthetic corpus releases of the docs `d`: ids ≡7 (mod 10)
+    * only in the new one, ≡4 only in the old one, ≡0 (mod 5) edited in
+    * the new one. Used by q128 and q215. */
+  private def releases(d: DataFrame): (DataFrame, DataFrame) =
+    (d.filter(col("doc_id") % 10 =!= 7),
+      d.filter(col("doc_id") % 10 =!= 4)
+        .withColumn("text",
+          when(col("doc_id") % 5 === 0, concat(col("text"), lit(" [rev2]")))
+            .otherwise(col("text"))))
+
   val queries: Seq[Q] = Seq(
 
     // PageRank over a hash-generated web graph (3 outlinks per doc,
@@ -383,15 +462,7 @@ object CorpusQueries {
       Some(pagerankSql(3)),
       (s, dir) => {
         val d = docs(s, dir).select(col("doc_id"))
-        val nb = d.agg(count(lit(1)).as("Nb"))
-        val edges = d.crossJoin(broadcast(nb))
-          .select(col("doc_id").as("src"),
-            explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
-          .withColumn("dst",
-            TextFunctions.portableHash(
-              concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst")
+        val edges = linkEdges(d)
         Graph.pageRank(d, col("doc_id"), edges, col("src"), col("dst"),
             iterations = 3)
           .select(col("node").as("doc_id"),
@@ -406,13 +477,9 @@ object CorpusQueries {
     // (deg, id) orientation, wedge pairs of a shared low vertex, closing
     // equi-join — each triangle found once from its key-minimum vertex.
     Q("q159_triangles", {
-      val h = TextFunctions.portableHashSql(
-        "(CAST(d.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
       Some(s"""WITH docs AS (SELECT doc_id FROM documents),
               |nd AS (SELECT CAST(count(*) AS BIGINT) AS Nb FROM docs),
-              |raw AS (SELECT d.doc_id AS src, $h % Nb AS dst
-              |  FROM docs d CROSS JOIN nd CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-              |  WHERE $h % Nb <> d.doc_id),
+              |${linkEdgesCte("raw")},
               |und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
               |  FROM raw),
               |deg AS (SELECT n, count(*) AS deg FROM (
@@ -443,15 +510,7 @@ object CorpusQueries {
     },
       (s, dir) => {
         val d = docs(s, dir).select(col("doc_id"))
-        val nb = d.agg(count(lit(1)).as("Nb"))
-        val edges = d.crossJoin(broadcast(nb))
-          .select(col("doc_id").as("src"),
-            explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
-          .withColumn("dst",
-            TextFunctions.portableHash(
-              concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst")
+        val edges = linkEdges(d)
         Graph.triangleCounts(edges, col("src"), col("dst"))
       }),
 
@@ -545,12 +604,7 @@ object CorpusQueries {
            |FROM o FULL OUTER JOIN nn ON o.doc_id = nn.doc_id""".stripMargin
       },
       (s, dir) => {
-        val d = docs(s, dir)
-        val old = d.filter(col("doc_id") % 10 =!= 7)
-        val neu = d.filter(col("doc_id") % 10 =!= 4)
-          .withColumn("text",
-            when(col("doc_id") % 5 === 0, concat(col("text"), lit(" [rev2]")))
-              .otherwise(col("text")))
+        val (old, neu) = releases(docs(s, dir))
         Relational.snapshotDiff(old, neu, col("doc_id"),
             TextFunctions.portableHash(col("text")))
           .select(col("key").as("doc_id"), col("status"))
@@ -595,12 +649,7 @@ object CorpusQueries {
               |    AS bytes_delta
               |FROM j GROUP BY source""".stripMargin),
       (s, dir) => {
-        val d = docs(s, dir)
-        val old = d.filter(col("doc_id") % 10 =!= 7)
-        val neu = d.filter(col("doc_id") % 10 =!= 4)
-          .withColumn("text",
-            when(col("doc_id") % 5 === 0, concat(col("text"), lit(" [rev2]")))
-              .otherwise(col("text")))
+        val (old, neu) = releases(docs(s, dir))
         graft.operators.Release.releaseDelta(old, neu,
           col("doc_id"), col("source"), col("text"))
       }),
@@ -653,15 +702,7 @@ object CorpusQueries {
       Some(pprSql(3)),
       (s, dir) => {
         val d = docs(s, dir).select(col("doc_id"))
-        val nb = d.agg(count(lit(1)).as("Nb"))
-        val edges = d.crossJoin(broadcast(nb))
-          .select(col("doc_id").as("src"),
-            explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
-          .withColumn("dst",
-            TextFunctions.portableHash(
-              concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst")
+        val edges = linkEdges(d)
         val seeds = d.filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"),
             when(col("doc_id") % 20 === 0, 2.0).otherwise(1.0).as("w"))
@@ -680,15 +721,7 @@ object CorpusQueries {
       Some(hitsSql(2)),
       (s, dir) => {
         val d = docs(s, dir).select(col("doc_id"))
-        val nb = d.agg(count(lit(1)).as("Nb"))
-        val edges = d.crossJoin(broadcast(nb))
-          .select(col("doc_id").as("src"),
-            explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
-          .withColumn("dst",
-            TextFunctions.portableHash(
-              concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst")
+        val edges = linkEdges(d)
         Graph.hits(d, col("doc_id"), edges, col("src"), col("dst"),
             iterations = 2)
           .select(col("node").as("doc_id"),
@@ -705,15 +738,7 @@ object CorpusQueries {
       Some(labelPropSql(3)),
       (s, dir) => {
         val d = docs(s, dir).select(col("doc_id"))
-        val nb = d.agg(count(lit(1)).as("Nb"))
-        val edges = d.crossJoin(broadcast(nb))
-          .select(col("doc_id").as("src"),
-            explode(sequence(lit(1), lit(3))).as("j"), col("Nb"))
-          .withColumn("dst",
-            TextFunctions.portableHash(
-              concat(col("src").cast("string"), lit(":"), col("j"))) % col("Nb"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst")
+        val edges = linkEdges(d)
         val seeded = d.withColumn("seed",
           when(col("doc_id") % 25 === 0, expr("(doc_id div 25) % 5"))
             .otherwise(lit(null).cast("long")))
@@ -931,8 +956,6 @@ object CorpusQueries {
     // micro keeps ~1/3 at every sf; all four audit signals fire
     // tri-scale (probed: 8–94 dups, 4–67 caption-reuse keys).
     Q("q184_crossmodal_curation", {
-      val capKey = TextFunctions.portableHashSql(
-        TextFunctions.canonicalizeSql("caption"))
       Some(s"""WITH $eCte,
               |p AS (
               |  SELECT doc_id AS pair_id, text AS caption,
@@ -943,15 +966,11 @@ object CorpusQueries {
               |  UNION ALL
               |  SELECT doc_id + 2000000, text || CHR(9) || ' ',
               |    (doc_id + 5) % 500 FROM documents WHERE doc_id % 11 = 0),
-              |k AS (SELECT pair_id, cv, $capKey AS cap_key FROM p),
+              |k AS (SELECT pair_id, cv, $capKeySql AS cap_key FROM p),
               |ki AS (SELECT pair_id, cv, cap_key,
               |    CASE WHEN pair_id >= 2000000 THEN (cap_key + 1) % 500
               |         ELSE cap_key % 500 END AS img_key FROM k),
-              |j AS (SELECT pair_id, cap_key, img_key,
-              |    CAST(floor(round(${Similarity.cosineSql("a.v", "b.v")}, 4)
-              |      * 10000 + 0.001) AS BIGINT) AS align_micro
-              |  FROM ki JOIN e a ON a.vec_id = ki.cv
-              |    JOIN e b ON b.vec_id = ki.img_key),
+              |$alignCte,
               |al AS (SELECT * FROM j WHERE align_micro >= 500),
               |g AS (SELECT cap_key, img_key,
               |    CAST(min(pair_id) AS BIGINT) AS keeper
@@ -980,18 +999,10 @@ object CorpusQueries {
             concat(col("text"), lit("\t ")).as("caption"),
             ((col("doc_id") + 5) % 500).as("cv"))
         val p = base.unionByName(varA).unionByName(varB)
-        val capKey = TextFunctions.portableHash(
-          TextFunctions.canonicalize(col("caption")))
         val withImg = p.withColumn("iv",
           when(col("pair_id") >= 2000000L, (capKey + 1) % 500)
             .otherwise(capKey % 500))
-        val e = emb(s, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        val pairs = withImg
-          .join(broadcast(e.select(col("vec_id").as("cv"),
-            col("v").as("cap_vec"))), Seq("cv"))
-          .join(broadcast(e.select(col("vec_id").as("iv"),
-            col("v").as("img_vec"))), Seq("iv"))
+        val pairs = pairVectors(emb(s, dir), withImg)
         graft.multimodal.CrossModal.curatePairs(pairs, col("pair_id"),
           col("caption"), col("cap_vec"), col("img_vec"), col("iv"),
           minMicro = 500L)
@@ -1007,8 +1018,6 @@ object CorpusQueries {
     // dup_batch case. All four statuses fire tri-scale (probed:
     // 2–22 dup_batch, 12–117 dup_index, 34–354 kept).
     Q("q185_crossmodal_incremental", {
-      val capKey = TextFunctions.portableHashSql(
-        TextFunctions.canonicalizeSql("caption"))
       Some(s"""WITH $eCte,
               |p AS (
               |  SELECT doc_id AS pair_id, text AS caption,
@@ -1022,14 +1031,10 @@ object CorpusQueries {
               |  UNION ALL
               |  SELECT doc_id + 3000000, '  ' || text,
               |    (doc_id + 6) % 500, 0 FROM documents WHERE doc_id % 21 = 0),
-              |k AS (SELECT pair_id, cv, shift, $capKey AS cap_key FROM p),
+              |k AS (SELECT pair_id, cv, shift, $capKeySql AS cap_key FROM p),
               |ki AS (SELECT pair_id, cv, cap_key,
               |    (cap_key + shift) % 500 AS img_key FROM k),
-              |j AS (SELECT pair_id, cap_key, img_key,
-              |    CAST(floor(round(${Similarity.cosineSql("a.v", "b.v")}, 4)
-              |      * 10000 + 0.001) AS BIGINT) AS align_micro
-              |  FROM ki JOIN e a ON a.vec_id = ki.cv
-              |    JOIN e b ON b.vec_id = ki.img_key),
+              |$alignCte,
               |idx AS (SELECT DISTINCT cap_key, img_key FROM j
               |  WHERE pair_id < 1000000 AND align_micro >= 500),
               |delta AS (SELECT * FROM j WHERE pair_id >= 1000000),
@@ -1060,16 +1065,8 @@ object CorpusQueries {
             concat(col("text"), lit("\t ")), 5, 1L)(d))
           .unionByName(part(col("doc_id") % 21 === 0, 3000000L,
             concat(lit("  "), col("text")), 6, 0L)(d))
-        val capKey = TextFunctions.portableHash(
-          TextFunctions.canonicalize(col("caption")))
         val withImg = p.withColumn("iv", (capKey + col("shift")) % 500)
-        val e = emb(s, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        val pairs = withImg
-          .join(broadcast(e.select(col("vec_id").as("cv"),
-            col("v").as("cap_vec"))), Seq("cv"))
-          .join(broadcast(e.select(col("vec_id").as("iv"),
-            col("v").as("img_vec"))), Seq("iv"))
+        val pairs = pairVectors(emb(s, dir), withImg)
         val xm = graft.multimodal.CrossModal
         val index = xm.manifestIndex(
           xm.curatePairs(pairs.filter(col("pair_id") < 1000000L),
@@ -1176,14 +1173,12 @@ object CorpusQueries {
     // and Media.sceneCutsFromHashes runs the lag window + hamming +
     // threshold exactly as the oracle replays it.
     Q("q213_scene_cuts_track", {
-      val h = TextFunctions.portableHashSql(
-        "(CAST(media_id AS VARCHAR) || ':scene:' || CAST(scene AS VARCHAR))")
       Some(s"""WITH fr AS (SELECT doc_id AS media_id,
               |    unnest([0, 1, 2, 3, 4, 5]) AS frame_idx FROM documents),
               |sc AS (SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
               |    CASE WHEN media_id % 5 = 0 AND frame_idx >= 3
               |         THEN 1 ELSE 0 END AS scene FROM fr),
-              |hx AS (SELECT media_id, frame_idx, $h AS fhash FROM sc),
+              |hx AS (SELECT media_id, frame_idx, $sceneHashSql AS fhash FROM sc),
               |l AS (SELECT media_id, frame_idx, fhash,
               |    lag(fhash) OVER (PARTITION BY media_id ORDER BY frame_idx)
               |      AS prev FROM hx)
@@ -1195,16 +1190,7 @@ object CorpusQueries {
               |FROM l""".stripMargin)
     },
       (s, dir) => {
-        val track = docs(s, dir)
-          .select(col("doc_id").as("media_id"),
-            explode(sequence(lit(0), lit(5))).as("frame_idx"))
-          .withColumn("scene",
-            when(col("media_id") % 5 === 0 && col("frame_idx") >= 3, 1)
-              .otherwise(0))
-          .withColumn("fhash", TextFunctions.portableHash(
-            concat(col("media_id").cast("string"), lit(":scene:"),
-              col("scene").cast("string"))))
-          .drop("scene")
+        val track = sceneTrack(docs(s, dir))
         graft.multimodal.Media.sceneCutsFromHashes(track, threshold = 16)
       }),
 
@@ -1237,15 +1223,7 @@ object CorpusQueries {
               |  start_ms, end_ms, n_windows, mean_rms
               |FROM g""".stripMargin),
       (s, dir) => {
-        val track = docs(s, dir)
-          .select(col("doc_id").as("media_id"),
-            explode(sequence(lit(0), lit(39))).as("win_idx"))
-          .withColumn("start_ms", (col("win_idx") * 50L).cast("long"))
-          .withColumn("end_ms", ((col("win_idx") + 1) * 50L).cast("long"))
-          .withColumn("rms",
-            when(col("win_idx") % 8 < 5,
-              (lit(2000L) + col("media_id") % 100).cast("double"))
-              .otherwise(lit(0.0)))
+        val track = energyTrack(docs(s, dir))
         graft.multimodal.Media.audioActivityFromEnergy(track, minRms = 100.0)
       }),
 
@@ -1258,15 +1236,13 @@ object CorpusQueries {
     // are never touched (the FromSigs discipline's payoff: the card
     // needs no codec pass).
     Q("q224_temporal_card", {
-      val h = TextFunctions.portableHashSql(
-        "(CAST(media_id AS VARCHAR) || ':scene:' || CAST(scene AS VARCHAR))")
       import graft.operators.Sampling.microRatioSql
       Some(s"""WITH fr AS (SELECT doc_id AS media_id,
               |    unnest([0, 1, 2, 3, 4, 5]) AS frame_idx FROM documents),
               |sc AS (SELECT media_id, frame_idx,
               |    CASE WHEN media_id % 5 = 0 AND frame_idx >= 3
               |         THEN 1 ELSE 0 END AS scene FROM fr),
-              |hx AS (SELECT media_id, frame_idx, $h AS fhash FROM sc),
+              |hx AS (SELECT media_id, frame_idx, $sceneHashSql AS fhash FROM sc),
               |l AS (SELECT media_id, fhash,
               |    lag(fhash) OVER (PARTITION BY media_id ORDER BY frame_idx)
               |      AS prev FROM hx),
@@ -1312,25 +1288,8 @@ object CorpusQueries {
     },
       (s, dir) => {
         val m = graft.multimodal.Media
-        val track = docs(s, dir)
-          .select(col("doc_id").as("media_id"),
-            explode(sequence(lit(0), lit(5))).as("frame_idx"))
-          .withColumn("scene",
-            when(col("media_id") % 5 === 0 && col("frame_idx") >= 3, 1)
-              .otherwise(0))
-          .withColumn("fhash", TextFunctions.portableHash(
-            concat(col("media_id").cast("string"), lit(":scene:"),
-              col("scene").cast("string"))))
-          .drop("scene")
-        val energy = docs(s, dir)
-          .select(col("doc_id").as("media_id"),
-            explode(sequence(lit(0), lit(39))).as("win_idx"))
-          .withColumn("start_ms", (col("win_idx") * 50L).cast("long"))
-          .withColumn("end_ms", ((col("win_idx") + 1) * 50L).cast("long"))
-          .withColumn("rms",
-            when(col("win_idx") % 8 < 5,
-              (lit(2000L) + col("media_id") % 100).cast("double"))
-              .otherwise(lit(0.0)))
+        val track = sceneTrack(docs(s, dir))
+        val energy = energyTrack(docs(s, dir))
         m.temporalCard(m.sceneCutsFromHashes(track, threshold = 16),
           m.audioActivityFromEnergy(energy, minRms = 100.0))
       }),

@@ -45,6 +45,68 @@ object DedupQueries {
       .map(i => s"a.mh$i = b.mh$i").mkString("(", " AND ", ")")
   }.mkString("\n     OR ")
 
+  /** The 4-perm, 2-band LSH CTEs over a CTE `t` (doc_id, tk): MinHash
+    * signatures `sig`, banded candidate pairs `cand` (d1 < d2) and each
+    * doc's distinct shingle set `shs`. Used by q36 and, through
+    * `closureCtes`, by q61, q74, q121, q140 and q123. */
+  private val lshCtes =
+    s"""sig AS (
+       |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
+       |    SELECT doc_id,
+       |$minhashExprs
+       |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
+       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+       |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
+       |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t)""".stripMargin
+
+  /** `lshCtes` verified at J >= 0.8 (`pr`), symmetrized (`edges`) and
+    * closed recursively: `reach` (node, c) holds every node reachable
+    * from c, so min(c) per node is its cluster canon — RaSQL's
+    * recursive-aggregate shape. Needs `WITH RECURSIVE`. Used by q61, q74,
+    * q121, q140 and q123. */
+  private val closureCtes =
+    s"""$lshCtes,
+       |pr AS (SELECT c.d1, c.d2 FROM cand c
+       |  JOIN shs a ON a.doc_id = c.d1
+       |  JOIN shs b ON b.doc_id = c.d2
+       |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
+       |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
+       |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
+       |  UNION SELECT d2, d1 FROM pr),
+       |reach AS (
+       |  SELECT src AS node, src AS c FROM edges
+       |  UNION
+       |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node)""".stripMargin
+
+  /** Exact-Jaccard verify tail over `cand` and `shs`: the pairs at
+    * J >= 0.8 with J rounded to 4 places. Used by q36 and q91. */
+  private val verifyTail =
+    """SELECT c.d1, c.d2,
+      |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
+      |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))), 4) AS jaccard_r
+      |FROM cand c
+      |JOIN shs a ON a.doc_id = c.d1
+      |JOIN shs b ON b.doc_id = c.d2
+      |WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
+      |      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8""".stripMargin
+
+  /** Banded candidate pairs over the 64/16 signatures `sig`. Used by q91,
+    * q155 and q202 (q91 and q202 through `wideSigCtes`). */
+  private val wideCandCte =
+    s"""cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+       |   AND ($wideBandCond))""".stripMargin
+
+  /** The 64/16 signatures of every doc in `t` and their `wideCandCte`.
+    * Used by q91 and q202. */
+  private val wideSigCtes =
+    s"""sig AS (
+       |  SELECT doc_id,
+       |$wideMinhashExprs
+       |  FROM (SELECT doc_id, $shSql AS hs FROM t)),
+       |$wideCandCte""".stripMargin
+
   /** Shared rebuild tail for the span-cutting oracles (q138/q139): given
     * CTEs `g` (doc_id, tk, ...) and `cut` (doc_id, cov — 1-based covered
     * token indices), re-join the surviving tokens in order and report
@@ -145,23 +207,8 @@ object DedupQueries {
     // bands miss — deterministic either way).
     Q("q36_lsh_neardup",
       Some(s"""$baseCtes,
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t)
-              |SELECT c.d1, c.d2,
-              |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))), 4) AS jaccard_r
-              |FROM cand c
-              |JOIN shs a ON a.doc_id = c.d1
-              |JOIN shs b ON b.doc_id = c.d2
-              |WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8""".stripMargin),
+              |$lshCtes
+              |$verifyTail""".stripMargin),
       (s, dir) =>
         Dedup.nearDuplicates(docs(s, dir), col("doc_id"), col("text"), 0.8)
           .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard_r"))),
@@ -173,22 +220,9 @@ object DedupQueries {
     // family is hash-checked against DuckDB, not just spec'd.
     Q("q91_lsh_neardup_wide",
       Some(s"""$baseCtes,
-              |sig AS (
-              |  SELECT doc_id,
-              |$wideMinhashExprs
-              |  FROM (SELECT doc_id, $shSql AS hs FROM t)),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ($wideBandCond)),
+              |$wideSigCtes,
               |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t)
-              |SELECT c.d1, c.d2,
-              |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))), 4) AS jaccard_r
-              |FROM cand c
-              |JOIN shs a ON a.doc_id = c.d1
-              |JOIN shs b ON b.doc_id = c.d2
-              |WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8""".stripMargin),
+              |$verifyTail""".stripMargin),
       (s, dir) =>
         Dedup.nearDuplicates(docs(s, dir), col("doc_id"), col("text"), 0.8,
             graft.dedup.MinHashConfig.generated(64, 16))
@@ -217,9 +251,7 @@ object DedupQueries {
               |sig AS (SELECT doc_id,
               |$wideMinhashExprs
               |  FROM (SELECT doc_id, $shSql AS hs FROM t)),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ($wideBandCond)),
+              |$wideCandCte,
               |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
               |near AS (SELECT c.d1, c.d2,
               |    round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
@@ -251,13 +283,7 @@ object DedupQueries {
         .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
         .mkString(" + ")
       Some(s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
-              |sig AS (
-              |  SELECT doc_id,
-              |$wideMinhashExprs
-              |  FROM (SELECT doc_id, $shSql AS hs FROM t)),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ($wideBandCond))
+              |$wideSigCtes
               |SELECT d1, d2, n_agree FROM (
               |  SELECT c.d1, c.d2, CAST(($agreeSum) AS BIGINT) AS n_agree
               |  FROM cand c
@@ -331,26 +357,7 @@ object DedupQueries {
     // closes them with a recursive CTE (min over all reachable nodes).
     Q("q61_dedup_clusters",
       Some(s"""WITH RECURSIVE ${baseCtes.stripPrefix("WITH ")},
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
-              |pr AS (SELECT c.d1, c.d2 FROM cand c
-              |  JOIN shs a ON a.doc_id = c.d1
-              |  JOIN shs b ON b.doc_id = c.d2
-              |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
-              |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
-              |  UNION SELECT d2, d1 FROM pr),
-              |reach AS (
-              |  SELECT src AS node, src AS c FROM edges
-              |  UNION
-              |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node)
+              |$closureCtes
               |SELECT node, min(c) AS canon FROM reach GROUP BY node""".stripMargin),
       (s, dir) => {
         val pairs = Dedup.nearDuplicates(docs(s, dir), col("doc_id"), col("text"), 0.8)
@@ -365,26 +372,7 @@ object DedupQueries {
     // no pair are their own singleton cluster via the left join).
     Q("q140_leakage_split",
       Some(s"""WITH RECURSIVE ${baseCtes.stripPrefix("WITH ")},
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
-              |pr AS (SELECT c.d1, c.d2 FROM cand c
-              |  JOIN shs a ON a.doc_id = c.d1
-              |  JOIN shs b ON b.doc_id = c.d2
-              |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
-              |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
-              |  UNION SELECT d2, d1 FROM pr),
-              |reach AS (
-              |  SELECT src AS node, src AS c FROM edges
-              |  UNION
-              |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node),
+              |$closureCtes,
               |cc AS (SELECT node, min(c) AS canon FROM reach GROUP BY node)
               |SELECT d.doc_id, coalesce(cc.canon, d.doc_id) AS cluster,
               |  CASE WHEN coalesce(cc.canon, d.doc_id) % 10 < 1
@@ -398,26 +386,7 @@ object DedupQueries {
     // This is what a pipeline actually ships — q61 diagnoses, q74 deletes.
     Q("q74_dedup_apply",
       Some(s"""WITH RECURSIVE ${baseCtes.stripPrefix("WITH ")},
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
-              |pr AS (SELECT c.d1, c.d2 FROM cand c
-              |  JOIN shs a ON a.doc_id = c.d1
-              |  JOIN shs b ON b.doc_id = c.d2
-              |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
-              |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
-              |  UNION SELECT d2, d1 FROM pr),
-              |reach AS (
-              |  SELECT src AS node, src AS c FROM edges
-              |  UNION
-              |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node),
+              |$closureCtes,
               |cc AS (SELECT node, min(c) AS canon FROM reach GROUP BY node)
               |SELECT d.lang, count(*) AS n_kept
               |FROM documents d
@@ -442,26 +411,7 @@ object DedupQueries {
     // row_number window with the identical ordering.
     Q("q121_dedup_best_rep",
       Some(s"""WITH RECURSIVE ${baseCtes.stripPrefix("WITH ")},
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
-              |pr AS (SELECT c.d1, c.d2 FROM cand c
-              |  JOIN shs a ON a.doc_id = c.d1
-              |  JOIN shs b ON b.doc_id = c.d2
-              |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
-              |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
-              |  UNION SELECT d2, d1 FROM pr),
-              |reach AS (
-              |  SELECT src AS node, src AS c FROM edges
-              |  UNION
-              |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node),
+              |$closureCtes,
               |cc AS (SELECT node, min(c) AS canon FROM reach GROUP BY node),
               |r AS (SELECT cc.canon, cc.node, d.n_chars,
               |  row_number() OVER (PARTITION BY cc.canon
@@ -500,26 +450,7 @@ object DedupQueries {
               |  ${registeredDomainSql("host")} AS domain, $toksSql AS tk FROM d0),
               |g AS (SELECT doc_id, text, n_chars, domain, tk FROM g0 WHERE $zSql > 0),
               |t AS (SELECT doc_id, tk FROM g),
-              |sig AS (
-              |  SELECT doc_id, mh0, mh1, mh2, mh3 FROM (
-              |    SELECT doc_id,
-              |$minhashExprs
-              |    FROM (SELECT doc_id, $shSql AS hs FROM t))),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-              |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-              |   AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))),
-              |shs AS (SELECT doc_id, list_distinct($shSql) AS shs FROM t),
-              |pr AS (SELECT c.d1, c.d2 FROM cand c
-              |  JOIN shs a ON a.doc_id = c.d1
-              |  JOIN shs b ON b.doc_id = c.d2
-              |  WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-              |        / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) >= 0.8),
-              |edges AS (SELECT d1 AS src, d2 AS dst FROM pr
-              |  UNION SELECT d2, d1 FROM pr),
-              |reach AS (
-              |  SELECT src AS node, src AS c FROM edges
-              |  UNION
-              |  SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.node),
+              |$closureCtes,
               |cc AS (SELECT node, min(c) AS canon FROM reach GROUP BY node),
               |rq AS (SELECT cc.node,
               |  row_number() OVER (PARTITION BY cc.canon

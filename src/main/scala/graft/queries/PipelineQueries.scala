@@ -21,6 +21,29 @@ object PipelineQueries {
 
   private val toksSql = tokensSql("text")
 
+  /** The C4/Gopher rule statistics of a token list `tk` as SQL: mean
+    * word length, the top word's frequency and the English stopword
+    * ratio. Used by q87, q92 (the first two), q105 and q106. */
+  private val meanLen = "CAST(list_reduce(list_transform(tk, t -> CAST(len(t) AS BIGINT)), " +
+    "(a, b) -> a + b) AS DOUBLE) / len(tk)"
+  private val maxFreq = "CAST(list_max(list_transform(list_distinct(tk), " +
+    "w -> len(list_filter(tk, t -> t = w)))) AS DOUBLE) / len(tk)"
+  private val stopRatio = s"CAST(${lexiconHitsSql("tk", LangStopwords.head._2)} AS DOUBLE) / len(tk)"
+
+  /** DSIR importance weights over CTE `dc` (doc, token, c, tgt): the raw
+    * (`r`) and target (`tg`) unigram counts, their totals and each doc's
+    * exponentiated mean add-one log-ratio `sc(doc, iw)`. Used by q99 and
+    * q106. */
+  private val importanceCtes =
+    """r AS (SELECT token, CAST(sum(c) AS DOUBLE) AS cr FROM dc GROUP BY 1),
+      |tg AS (SELECT token, CAST(sum(c) AS DOUBLE) AS ct FROM dc WHERE tgt GROUP BY 1),
+      |tot AS (SELECT CAST(sum(cr) AS DOUBLE) AS Nr, CAST(count(*) AS DOUBLE) AS V FROM r),
+      |tt AS (SELECT CAST(coalesce(sum(ct), 0) AS DOUBLE) AS Nt FROM tg),
+      |sc AS (SELECT doc, exp(sum(c * (ln((coalesce(ct, 0) + 1.0) / (Nt + V))
+      |                             - ln((cr + 1.0) / (Nr + V)))) / sum(c)) AS iw
+      |  FROM dc JOIN r USING (token) LEFT JOIN tg USING (token)
+      |  CROSS JOIN tot CROSS JOIN tt GROUP BY doc)""".stripMargin
+
   val queries: Seq[Q] = Seq(
 
     // Exact-fraction stratified sample (20% per lang), chosen by
@@ -66,11 +89,6 @@ object PipelineQueries {
     // before dropping documents. All rules exact-integer-derived, so
     // pass/fail is bit-identical across engines.
     Q("q87_quality_rules", {
-      val meanLen = "CAST(list_reduce(list_transform(tk, t -> CAST(len(t) AS BIGINT)), " +
-        "(a, b) -> a + b) AS DOUBLE) / len(tk)"
-      val maxFreq = "CAST(list_max(list_transform(list_distinct(tk), " +
-        "w -> len(list_filter(tk, t -> t = w)))) AS DOUBLE) / len(tk)"
-      val stopRatio = s"CAST(${lexiconHitsSql("tk", LangStopwords.head._2)} AS DOUBLE) / len(tk)"
       Some(s"""WITH t AS (SELECT $toksSql AS tk FROM documents),
               |m AS (SELECT len(tk) AS n, $meanLen AS ml, $maxFreq AS mf, $stopRatio AS sr FROM t),
               |f AS (SELECT n < 25 AS f1, NOT (ml >= 3.0 AND ml <= 10.0) AS f2,
@@ -114,10 +132,6 @@ object PipelineQueries {
     // and any-rule counts — the report that shows WHY lang-aware gating
     // matters (es/de/fr stopword failures collapse vs q87).
     Q("q92_quality_rules_by_lang", {
-      val meanLen = "CAST(list_reduce(list_transform(tk, t -> CAST(len(t) AS BIGINT)), " +
-        "(a, b) -> a + b) AS DOUBLE) / len(tk)"
-      val maxFreq = "CAST(list_max(list_transform(list_distinct(tk), " +
-        "w -> len(list_filter(tk, t -> t = w)))) AS DOUBLE) / len(tk)"
       val hitsByLang = LangStopwords.tail
         .map { case (l, ws) => s"WHEN lang = '$l' THEN ${lexiconHitsSql("tk", ws)}" }
         .mkString("CASE ", " ", s" ELSE ${lexiconHitsSql("tk", LangStopwords.head._2)} END")
@@ -249,14 +263,7 @@ object PipelineQueries {
               |    unnest($toksSql) AS token FROM documents),
               |dc AS (SELECT doc, token, count(*) AS c, bool_or(tgt) AS tgt
               |  FROM p GROUP BY 1, 2),
-              |r AS (SELECT token, CAST(sum(c) AS DOUBLE) AS cr FROM dc GROUP BY 1),
-              |tg AS (SELECT token, CAST(sum(c) AS DOUBLE) AS ct FROM dc WHERE tgt GROUP BY 1),
-              |tot AS (SELECT CAST(sum(cr) AS DOUBLE) AS Nr, CAST(count(*) AS DOUBLE) AS V FROM r),
-              |tt AS (SELECT CAST(coalesce(sum(ct), 0) AS DOUBLE) AS Nt FROM tg),
-              |sc AS (SELECT doc, exp(sum(c * (ln((coalesce(ct, 0) + 1.0) / (Nt + V))
-              |                             - ln((cr + 1.0) / (Nr + V)))) / sum(c)) AS iw
-              |  FROM dc JOIN r USING (token) LEFT JOIN tg USING (token)
-              |  CROSS JOIN tot CROSS JOIN tt GROUP BY doc),
+              |$importanceCtes,
               |k AS (SELECT doc AS sid, iw,
               |    ln((${portableHashSql("CAST(doc AS VARCHAR)")} + 1)
               |       / 1152921504606846976.0) / iw AS key
@@ -313,11 +320,6 @@ object PipelineQueries {
     // primitives in one pass over the corpus (tokens exploded once;
     // the rule flags are per-row projections).
     Q("q105_corpus_datasheet", {
-      val meanLen = "CAST(list_reduce(list_transform(tk, t -> CAST(len(t) AS BIGINT)), " +
-        "(a, b) -> a + b) AS DOUBLE) / len(tk)"
-      val maxFreq = "CAST(list_max(list_transform(list_distinct(tk), " +
-        "w -> len(list_filter(tk, t -> t = w)))) AS DOUBLE) / len(tk)"
-      val stopRatio = s"CAST(${lexiconHitsSql("tk", LangStopwords.head._2)} AS DOUBLE) / len(tk)"
       Some(s"""WITH t AS (SELECT lang, n_chars, $toksSql AS tk FROM documents),
               |f AS (SELECT lang, n_chars, len(tk) AS n_tok,
               |    (len(tk) < 25 OR NOT ($meanLen >= 3.0 AND $meanLen <= 10.0)
@@ -363,11 +365,6 @@ object PipelineQueries {
     // dedup and sampling — DuckDB replays the whole pipeline.
     Q("q106_curation_e2e", {
       val canon = canonicalizeSql("text")
-      val meanLen = "CAST(list_reduce(list_transform(tk, t -> CAST(len(t) AS BIGINT)), " +
-        "(a, b) -> a + b) AS DOUBLE) / len(tk)"
-      val maxFreq = "CAST(list_max(list_transform(list_distinct(tk), " +
-        "w -> len(list_filter(tk, t -> t = w)))) AS DOUBLE) / len(tk)"
-      val stopRatio = s"CAST(${lexiconHitsSql("tk", LangStopwords.head._2)} AS DOUBLE) / len(tk)"
       Some(s"""WITH base AS (SELECT doc_id, lang, $canon AS text FROM documents),
               |t AS (SELECT doc_id, lang, text, ${tokensSql("text")} AS tk FROM base),
               |gated AS (SELECT doc_id, lang, text, tk FROM t
@@ -377,14 +374,7 @@ object PipelineQueries {
               |surv AS (SELECT gated.* FROM gated JOIN keepers USING (doc_id)),
               |p AS (SELECT doc_id AS doc, lang = 'en' AS tgt, unnest(tk) AS token FROM surv),
               |dc AS (SELECT doc, token, count(*) AS c, bool_or(tgt) AS tgt FROM p GROUP BY 1, 2),
-              |r AS (SELECT token, CAST(sum(c) AS DOUBLE) AS cr FROM dc GROUP BY 1),
-              |tg AS (SELECT token, CAST(sum(c) AS DOUBLE) AS ct FROM dc WHERE tgt GROUP BY 1),
-              |tot AS (SELECT CAST(sum(cr) AS DOUBLE) AS Nr, CAST(count(*) AS DOUBLE) AS V FROM r),
-              |tt AS (SELECT CAST(coalesce(sum(ct), 0) AS DOUBLE) AS Nt FROM tg),
-              |sc AS (SELECT doc, exp(sum(c * (ln((coalesce(ct, 0) + 1.0) / (Nt + V))
-              |                             - ln((cr + 1.0) / (Nr + V)))) / sum(c)) AS iw
-              |  FROM dc JOIN r USING (token) LEFT JOIN tg USING (token)
-              |  CROSS JOIN tot CROSS JOIN tt GROUP BY doc),
+              |$importanceCtes,
               |k AS (SELECT doc AS sid, iw,
               |    ln((${portableHashSql("CAST(doc AS VARCHAR)")} + 1)
               |       / 1152921504606846976.0) / iw AS key FROM sc)

@@ -18,6 +18,48 @@ object RelationalQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
+  /** Day-over-day histograms of `events`: `h` (period, b, c) with the
+    * bucket `b` given as SQL, then `DriftSql.periodCtes`. Used by q193,
+    * q196, q198, q199, q210 and q220. */
+  private def eventHistCtes(bucket: String): String =
+    s"""WITH h AS (
+       |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
+       |         $bucket AS b, count(*) AS c
+       |  FROM events GROUP BY 1, 2),
+       |${DriftSql.periodCtes}""".stripMargin
+
+  /** The whole TVD series with its 1.5×-of-mean alert over the events
+    * histogram of `bucket`. Used by q193, q196 and q210. */
+  private def tvdSeriesSql(bucket: String): String =
+    s"""${eventHistCtes(bucket)},
+       |${DriftSql.pairCte},
+       |${DriftSql.tvdCtes("s")}
+       |${DriftSql.alertTail}""".stripMargin
+
+  /** `j` like `DriftSql.pairCte`, but keeping the bucket `b` so each
+    * bucket's contribution can be ranked. Used by q198 and q199. */
+  private val bucketPairCte =
+    """j AS (
+      |  SELECT coalesce(h.period, hp.period) AS period, coalesce(h.b, hp.b) AS b,
+      |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
+      |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b)""".stripMargin
+
+  /** Per-bucket TVD contributions over `bucketPairCte` (`a`) and their
+    * per-period rank (`r`, ties to the bucket value). Used by q198 and
+    * q199. */
+  private val attributionCtes =
+    s"""a AS (
+       |  SELECT j.period, b, cp AS c_prev, c AS c_cur,
+       |         CAST(abs(c * n_prev - cp * n_cur) AS BIGINT) AS contrib_num,
+       |         CAST(2 * n_cur * n_prev AS BIGINT) AS den
+       |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period),
+       |r AS (
+       |  SELECT period, b AS bucket, c_prev, c_cur, contrib_num,
+       |         ${Sampling.microRatioSql("contrib_num", "den", "//")} AS contrib_ppm,
+       |         CAST(row_number() OVER (PARTITION BY period
+       |           ORDER BY contrib_num DESC, b) AS BIGINT) AS rk
+       |  FROM a)""".stripMargin
+
   val queries: Seq[Q] = Seq(
 
     // ---- scans + aggregation -------------------------------------------
@@ -1051,30 +1093,7 @@ object RelationalQueries {
     // growth — per-window noise scales ~1/√N). Twin's micro-ratio is
     // generated from the same helper as the engine's (anti-drift).
     Q("q193_drift_series",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         event_type AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-             |s AS (
-             |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
-             |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
-             |  GROUP BY 1),
-             |p AS (
-             |  SELECT period, n_prev, n_cur, tvd_num,
-             |         ${Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
-             |  FROM s)
-             |SELECT period, n_prev, n_cur, tvd_num, tvd_ppm,
-             |       2 * (SELECT count(*) FROM p) * tvd_ppm
-             |         > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p) AS drifted
-             |FROM p""".stripMargin),
+      Some(tvdSeriesSql("event_type")),
       (s, dir) =>
         Drift.tvdSeries(t(s, dir, "events"),
           unix_date(to_date(col("ts"))), col("event_type"))),
@@ -1089,30 +1108,7 @@ object RelationalQueries {
     // verbatim, over raw events — certifies that partial counts
     // recombine EXACTLY, verdicts included.
     Q("q210_drift_series_counts",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         event_type AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-             |s AS (
-             |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
-             |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
-             |  GROUP BY 1),
-             |p AS (
-             |  SELECT period, n_prev, n_cur, tvd_num,
-             |         ${Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
-             |  FROM s)
-             |SELECT period, n_prev, n_cur, tvd_num, tvd_ppm,
-             |       2 * (SELECT count(*) FROM p) * tvd_ppm
-             |         > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p) AS drifted
-             |FROM p""".stripMargin),
+      Some(tvdSeriesSql("event_type")),
       (s, dir) => {
         val counts = t(s, dir, "events")
           .groupBy(unix_date(to_date(col("ts"))).as("period"),
@@ -1135,17 +1131,8 @@ object RelationalQueries {
     // per-bucket term SQL is generated from the same helper as the
     // engine's (anti-drift).
     Q("q220_psi_series",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         event_type AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
+      Some(s"""${eventHistCtes("event_type")},
+             |${DriftSql.pairCte},
              |k AS (
              |  SELECT j.period, c, cp, n_cur, n_prev,
              |         count(*) OVER (PARTITION BY j.period) AS nb
@@ -1265,30 +1252,7 @@ object RelationalQueries {
     // per-bin sparsity noise (floor(value) → ~490 buckets pushes every
     // day-pair TVD to 0.7+ at sf0.001).
     Q("q196_drift_numeric",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         CAST(floor(value / 50) AS BIGINT) AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-             |s AS (
-             |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
-             |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
-             |  GROUP BY 1),
-             |p AS (
-             |  SELECT period, n_prev, n_cur, tvd_num,
-             |         ${graft.operators.Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
-             |  FROM s)
-             |SELECT period, n_prev, n_cur, tvd_num, tvd_ppm,
-             |       2 * (SELECT count(*) FROM p) * tvd_ppm
-             |         > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p) AS drifted
-             |FROM p""".stripMargin),
+      Some(tvdSeriesSql("CAST(floor(value / 50) AS BIGINT)")),
       (s, dir) =>
         Drift.tvdSeries(t(s, dir, "events"),
           unix_date(to_date(col("ts"))),
@@ -1337,28 +1301,9 @@ object RelationalQueries {
     // tvd_num; the spec pins the decomposition). Rank runs over the
     // histogram frame; ties break on the bucket value.
     Q("q198_drift_attribution",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         event_type AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period, coalesce(h.b, hp.b) AS b,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-             |a AS (
-             |  SELECT j.period, b, cp AS c_prev, c AS c_cur,
-             |         CAST(abs(c * n_prev - cp * n_cur) AS BIGINT) AS contrib_num,
-             |         CAST(2 * n_cur * n_prev AS BIGINT) AS den
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period),
-             |r AS (
-             |  SELECT period, b AS bucket, c_prev, c_cur, contrib_num,
-             |         ${graft.operators.Sampling.microRatioSql("contrib_num", "den", "//")} AS contrib_ppm,
-             |         CAST(row_number() OVER (PARTITION BY period
-             |           ORDER BY contrib_num DESC, b) AS BIGINT) AS rk
-             |  FROM a)
+      Some(s"""${eventHistCtes("event_type")},
+             |$bucketPairCte,
+             |$attributionCtes
              |SELECT period, bucket, c_prev, c_cur, contrib_num, contrib_ppm, rk
              |FROM r WHERE rk <= 2""".stripMargin),
       (s, dir) =>
@@ -1372,41 +1317,14 @@ object RelationalQueries {
     // operators read the shared persisted histogram; everything else is
     // histogram-sized.
     Q("q199_drift_report",
-      Some(s"""WITH h AS (
-             |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS period,
-             |         event_type AS b, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-             |hp AS (SELECT period + 1 AS period, b, c FROM h),
-             |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-             |j AS (
-             |  SELECT coalesce(h.period, hp.period) AS period, coalesce(h.b, hp.b) AS b,
-             |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-             |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-             |s AS (
-             |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
-             |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
-             |  GROUP BY 1),
-             |p AS (
-             |  SELECT period, n_prev, n_cur, tvd_num,
-             |         ${Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
-             |  FROM s),
+      Some(s"""${eventHistCtes("event_type")},
+             |$bucketPairCte,
+             |${DriftSql.tvdCtes("s")},
              |alerts AS (
              |  SELECT period, n_prev, n_cur, tvd_num, tvd_ppm FROM p
              |  WHERE 2 * (SELECT count(*) FROM p) * tvd_ppm
              |          > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p)),
-             |a AS (
-             |  SELECT j.period, b, cp AS c_prev, c AS c_cur,
-             |         CAST(abs(c * n_prev - cp * n_cur) AS BIGINT) AS contrib_num,
-             |         CAST(2 * n_cur * n_prev AS BIGINT) AS den
-             |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period),
-             |r AS (
-             |  SELECT period, b AS bucket, c_prev, c_cur, contrib_num,
-             |         ${Sampling.microRatioSql("contrib_num", "den", "//")} AS contrib_ppm,
-             |         CAST(row_number() OVER (PARTITION BY period
-             |           ORDER BY contrib_num DESC, b) AS BIGINT) AS rk
-             |  FROM a)
+             |$attributionCtes
              |SELECT alerts.period, n_prev, n_cur, tvd_num, tvd_ppm,
              |       bucket, c_prev, c_cur, contrib_num, contrib_ppm, rk
              |FROM alerts JOIN r ON alerts.period = r.period
@@ -1415,4 +1333,50 @@ object RelationalQueries {
         Drift.driftReport(t(s, dir, "events"), Nil,
           unix_date(to_date(col("ts"))), col("event_type"), k = 2))
   )
+}
+
+/** The drift-series CTEs shared by the histogram-drift oracles. Each
+  * starts from a CTE `h` (period, b, c): the count of bucket `b` in
+  * `period`. */
+private[queries] object DriftSql {
+  import graft.operators.Sampling
+
+  /** Per-period totals `tot`, and `hp`/`tp`: the histogram and totals
+    * shifted one period forward, so each period meets its predecessor.
+    * Used by q193, q196, q198, q199, q210, q220 and q221. */
+  val periodCtes: String =
+    """tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
+      |hp AS (SELECT period + 1 AS period, b, c FROM h),
+      |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot)""".stripMargin
+
+  /** `j`: each period's bucket counts beside the previous period's, zero
+    * where a bucket is absent on one side. Used by q193, q196, q210, q220
+    * and q221. */
+  val pairCte: String =
+    """j AS (
+      |  SELECT coalesce(h.period, hp.period) AS period,
+      |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
+      |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b)""".stripMargin
+
+  /** The exact-integer TVD numerator per period pair (CTE `name`) and its
+    * ppm ratio `p`, generated from the engine's own micro-ratio helper.
+    * Used by q193, q196, q199, q210 (name `s`) and q221 (`sx`). */
+  def tvdCtes(name: String): String =
+    s"""$name AS (
+       |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
+       |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
+       |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
+       |  GROUP BY 1),
+       |p AS (
+       |  SELECT period, n_prev, n_cur, tvd_num,
+       |         ${Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
+       |  FROM $name)""".stripMargin
+
+  /** The series rows of `p`, each flagged when its TVD exceeds 1.5× the
+    * series mean. Used by q193, q196, q210 and q221. */
+  val alertTail: String =
+    """SELECT period, n_prev, n_cur, tvd_num, tvd_ppm,
+      |       2 * (SELECT count(*) FROM p) * tvd_ppm
+      |         > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p) AS drifted
+      |FROM p""".stripMargin
 }

@@ -17,6 +17,103 @@ object SimilarityQueries {
 
   private val eCte = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
 
+  /** 20 planted exact-duplicate vectors (ids + 100000) added to the
+    * embeddings `e` (vec_id, embedding). Used by q42, q95 and q234. */
+  private def withPlantedDups(e: DataFrame): DataFrame =
+    e.union(
+      e.filter(col("vec_id") < 20)
+        .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
+
+  /** `e` with each vector's hyperplane-LSH bucket over the planes of
+    * vectors 1..4. The twin of `planeBucketCtes`. Used by q40, q41 and
+    * q81. */
+  private def planeBuckets(e: DataFrame): DataFrame =
+    Similarity.withLshBucket(e, col("vec_id"), col("embedding"),
+      e.filter(col("vec_id").between(1, 4)), col("vec_id"), col("embedding"))
+
+  /** The planes `p` (vectors 1..4) and each vector's bucket `b`, over
+    * CTE `e`. Used by q40, q41 and q81. */
+  private val planeBucketCtes =
+    s"""p AS (SELECT vec_id AS plane_rank, v AS pv FROM e WHERE vec_id BETWEEN 1 AND 4),
+       |b AS (SELECT e.vec_id,
+       |    CAST(sum(CASE WHEN ${Similarity.dotSql("v", "pv")} > 0
+       |             THEN (1 << (plane_rank - 1)) ELSE 0 END) AS BIGINT) AS bucket
+       |  FROM e, p GROUP BY e.vec_id)""".stripMargin
+
+  /** The seeded codebook `c`: vectors 1..8 as cells 0..7. Used by q95,
+    * q113 and q234, and through `cellCtes` by q221, q232 and q233. */
+  private val codebookCte =
+    """c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
+      |  FROM e WHERE vec_id BETWEEN 1 AND 8)""".stripMargin
+
+  /** Each vector of `e` assigned its nearest `codebookCte` cell (`asgn`:
+    * argmin ‖c‖² − 2⟨v,c⟩, ties to the lower cell). Used by q221, q232
+    * and q233. */
+  private val cellCtes =
+    s"""$codebookCte,
+       |asgn AS (SELECT vec_id, cell FROM (
+       |    SELECT e.vec_id, c.cell,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
+       |    FROM e CROSS JOIN c) WHERE rn = 1)""".stripMargin
+
+  /** SemDeDup's input: `base` (the embeddings plus the planted
+    * duplicates of `withPlantedDups`) assigned to `codebookCte` cells,
+    * keeping each vector (`asgn`). Used by q95 and q234. */
+  private val semDedupCellCtes =
+    s"""base AS (SELECT vec_id, v FROM e
+       |  UNION ALL SELECT vec_id + 100000, v FROM e WHERE vec_id < 20),
+       |$codebookCte,
+       |asgn AS (SELECT vec_id, cell, v FROM (
+       |    SELECT base.vec_id, base.v, c.cell,
+       |      row_number() OVER (PARTITION BY base.vec_id
+       |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
+       |    FROM base CROSS JOIN c) WHERE rn = 1)""".stripMargin
+
+  /** Every vector of `asgn` classified dropped when it is in `drp`, else
+    * kept. Used by q95 and q234. */
+  private val semDedupTail =
+    """SELECT a.vec_id, a.cell,
+      |  CASE WHEN d.vec_id IS NOT NULL THEN 'dropped' ELSE 'kept' END AS status
+      |FROM asgn a LEFT JOIN drp d USING (vec_id)""".stripMargin
+
+  /** The margin-mining oracle: even ids mine the 40 odd targets up to id
+    * 80, top-4 neighbour sums on both sides, top-50 by margin. One-shot
+    * (q180) and batched (q235) mining must both equal it. */
+  private val bitextOracle =
+    s"""WITH $eCte,
+       |s AS (SELECT vec_id AS src_id, v FROM e WHERE vec_id % 2 = 0),
+       |t AS (SELECT vec_id AS tgt_id, v AS tv FROM e
+       |  WHERE vec_id % 2 = 1 AND vec_id <= 80),
+       |m AS (SELECT src_id, tgt_id,
+       |    CAST(floor(round(${Similarity.cosineSql("v", "tv")}, 4)
+       |      * 10000 + 0.001) AS BIGINT) AS cos_micro
+       |  FROM s CROSS JOIN t),
+       |ax AS (SELECT src_id, CAST(sum(cos_micro) AS BIGINT) AS ax_sum,
+       |    CAST(count(*) AS BIGINT) AS nx
+       |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
+       |    QUALIFY row_number() OVER (PARTITION BY src_id
+       |      ORDER BY cos_micro DESC, tgt_id) <= 4)
+       |  GROUP BY src_id),
+       |ay AS (SELECT tgt_id, CAST(sum(cos_micro) AS BIGINT) AS ay_sum,
+       |    CAST(count(*) AS BIGINT) AS ny
+       |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
+       |    QUALIFY row_number() OVER (PARTITION BY tgt_id
+       |      ORDER BY cos_micro DESC, src_id) <= 4)
+       |  GROUP BY tgt_id)
+       |SELECT m.src_id, m.tgt_id, m.cos_micro,
+       |  (2 * nx * ny * m.cos_micro * 1000000)
+       |    // (ax_sum * ny + ay_sum * nx) AS margin_micro
+       |FROM m JOIN ax USING (src_id) JOIN ay USING (tgt_id)
+       |WHERE m.cos_micro > 0 AND ax_sum * ny + ay_sum * nx > 0
+       |ORDER BY margin_micro DESC, m.src_id, m.tgt_id
+       |LIMIT 50""".stripMargin
+
+  /** The hash that draws negative j of an anchor. Used by q108 and
+    * q109. */
+  private val drawHashSql = graft.functions.TextFunctions
+    .portableHashSql("(CAST(anchor AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
+
   val queries: Seq[Q] = Seq(
 
     // Brute-force cosine top-10 against the vec_id=0 query vector.
@@ -62,16 +159,11 @@ object SimilarityQueries {
     // the oracle so bucketing is engine-portable).
     Q("q40_lsh_buckets",
       Some(s"""WITH $eCte,
-              |p AS (SELECT vec_id AS plane_rank, v AS pv FROM e WHERE vec_id BETWEEN 1 AND 4),
-              |b AS (SELECT e.vec_id,
-              |    CAST(sum(CASE WHEN ${Similarity.dotSql("v", "pv")} > 0
-              |             THEN (1 << (plane_rank - 1)) ELSE 0 END) AS BIGINT) AS bucket
-              |  FROM e, p GROUP BY e.vec_id)
+              |$planeBucketCtes
               |SELECT bucket, count(*) AS n_vectors FROM b GROUP BY bucket""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir)
-        Similarity.withLshBucket(e, col("vec_id"), col("embedding"),
-            e.filter(col("vec_id").between(1, 4)), col("vec_id"), col("embedding"))
+        planeBuckets(e)
           .groupBy("bucket")
           .agg(count(lit(1)).as("n_vectors"))
       }),
@@ -80,11 +172,7 @@ object SimilarityQueries {
     // the candidate-reduction path that replaces the 100 TB cross join.
     Q("q41_ann_bucket",
       Some(s"""WITH $eCte,
-              |p AS (SELECT vec_id AS plane_rank, v AS pv FROM e WHERE vec_id BETWEEN 1 AND 4),
-              |b AS (SELECT e.vec_id,
-              |    CAST(sum(CASE WHEN ${Similarity.dotSql("v", "pv")} > 0
-              |             THEN (1 << (plane_rank - 1)) ELSE 0 END) AS BIGINT) AS bucket
-              |  FROM e, p GROUP BY e.vec_id),
+              |$planeBucketCtes,
               |ev AS (SELECT b.vec_id, bucket, v FROM b JOIN e USING (vec_id)),
               |qq AS (SELECT bucket AS qbucket, v AS qv FROM ev WHERE vec_id = 0)
               |SELECT ev.vec_id, ev.bucket,
@@ -93,8 +181,7 @@ object SimilarityQueries {
               |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir)
-        val bucketed = Similarity.withLshBucket(e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id").between(1, 4)), col("vec_id"), col("embedding"))
+        val bucketed = planeBuckets(e)
         Similarity.annInBucket(bucketed, 0L, 5)
       }),
 
@@ -107,8 +194,7 @@ object SimilarityQueries {
     // only non-ANSI-expressible stage.
     Q("q47_ann_ivf",
       Some(s"""WITH $eCte,
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
+              |$codebookCte,
               |corpus AS (SELECT vec_id, v FROM e WHERE vec_id <> 0),
               |asgn AS (SELECT vec_id, cell FROM (
               |    SELECT corpus.vec_id, c.cell,
@@ -143,11 +229,7 @@ object SimilarityQueries {
     // SQL: bucket XOR 2^i for the 4 planes.
     Q("q81_ann_multiprobe",
       Some(s"""WITH $eCte,
-              |p AS (SELECT vec_id AS plane_rank, v AS pv FROM e WHERE vec_id BETWEEN 1 AND 4),
-              |b AS (SELECT e.vec_id,
-              |    CAST(sum(CASE WHEN ${Similarity.dotSql("v", "pv")} > 0
-              |             THEN (1 << (plane_rank - 1)) ELSE 0 END) AS BIGINT) AS bucket
-              |  FROM e, p GROUP BY e.vec_id),
+              |$planeBucketCtes,
               |ev AS (SELECT b.vec_id, bucket, v FROM b JOIN e USING (vec_id)),
               |q AS (SELECT bucket AS qb, v AS qv FROM ev WHERE vec_id = 0),
               |probes AS (SELECT qb AS pb FROM q
@@ -162,8 +244,7 @@ object SimilarityQueries {
               |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir)
-        val bucketed = Similarity.withLshBucket(e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id").between(1, 4)), col("vec_id"), col("embedding"))
+        val bucketed = planeBuckets(e)
         Similarity.annMultiProbe(bucketed, 0L, nPlanes = 4, k = 5)
       }),
 
@@ -279,9 +360,7 @@ object SimilarityQueries {
               |SELECT d1, d2, cos_sim FROM pr WHERE cos_sim >= 0.99""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir).select("vec_id", "embedding")
-        val corpus = e.union(
-          e.filter(col("vec_id") < 20)
-            .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
+        val corpus = withPlantedDups(e)
         Similarity.nearDupPairsBucketed(corpus, col("vec_id"), col("embedding"),
           corpus.filter(col("vec_id").between(1, 4)), col("vec_id"), col("embedding"), 0.99)
       }),
@@ -293,26 +372,14 @@ object SimilarityQueries {
     // dropped. Whole-corpus classification: every vector kept/dropped.
     Q("q95_semantic_dedup",
       Some(s"""WITH $eCte,
-              |base AS (SELECT vec_id, v FROM e
-              |  UNION ALL SELECT vec_id + 100000, v FROM e WHERE vec_id < 20),
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
-              |asgn AS (SELECT vec_id, cell, v FROM (
-              |    SELECT base.vec_id, base.v, c.cell,
-              |      row_number() OVER (PARTITION BY base.vec_id
-              |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
-              |    FROM base CROSS JOIN c) WHERE rn = 1),
+              |$semDedupCellCtes,
               |drp AS (SELECT DISTINCT b2.vec_id FROM asgn a1 JOIN asgn b2
               |  ON a1.cell = b2.cell AND a1.vec_id < b2.vec_id
               |  WHERE round(${Similarity.cosineSql("a1.v", "b2.v")}, 4) >= 0.99)
-              |SELECT a.vec_id, a.cell,
-              |  CASE WHEN d.vec_id IS NOT NULL THEN 'dropped' ELSE 'kept' END AS status
-              |FROM asgn a LEFT JOIN drp d USING (vec_id)""".stripMargin),
+              |$semDedupTail""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir).select("vec_id", "embedding")
-        val corpus = e.union(
-          e.filter(col("vec_id") < 20)
-            .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
+        val corpus = withPlantedDups(e)
         val cents = Similarity.seededCentroids(e, col("vec_id"), col("embedding"), 1L to 8L)
         Similarity.semanticDedup(corpus, col("vec_id"), col("embedding"), cents, 0.99)
       }),
@@ -323,11 +390,9 @@ object SimilarityQueries {
     // "everything but my neighbors" join). Accidental self/near-positive
     // draws filtered at cosine 0.95.
     Q("q108_negative_samples", {
-      val h = graft.functions.TextFunctions
-        .portableHashSql("(CAST(anchor AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
       Some(s"""WITH $eCte,
               |n AS (SELECT CAST(count(*) AS BIGINT) AS N, min(vec_id) AS minId FROM e),
-              |draws AS (SELECT a.vec_id AS anchor, a.v AS av, j, $h % N + minId AS neg_id
+              |draws AS (SELECT a.vec_id AS anchor, a.v AS av, j, $drawHashSql % N + minId AS neg_id
               |  FROM e a CROSS JOIN n CROSS JOIN (SELECT unnest([1, 2, 3]) AS j))
               |SELECT anchor, CAST(j AS INT) AS j, neg_id,
               |  round(${Similarity.cosineSql("av", "nv")}, 4) + 0 AS cos_sim
@@ -343,11 +408,9 @@ object SimilarityQueries {
     // pairing, rank-limit by draw index j to exactly k survivors per
     // anchor. DuckDB replays the over-draw and the QUALIFY rank.
     Q("q109_negative_samples_exactk", {
-      val h = graft.functions.TextFunctions
-        .portableHashSql("(CAST(anchor AS VARCHAR) || ':' || CAST(j AS VARCHAR))")
       Some(s"""WITH $eCte,
               |n AS (SELECT CAST(count(*) AS BIGINT) AS N, min(vec_id) AS minId FROM e),
-              |draws AS (SELECT a.vec_id AS anchor, a.v AS av, j, $h % N + minId AS neg_id
+              |draws AS (SELECT a.vec_id AS anchor, a.v AS av, j, $drawHashSql % N + minId AS neg_id
               |  FROM e a CROSS JOIN n CROSS JOIN (SELECT unnest(range(1, 12)) AS j)),
               |good AS (SELECT anchor, CAST(j AS INT) AS j, neg_id,
               |    round(${Similarity.cosineSql("av", "nv")}, 4) + 0 AS cos_sim
@@ -372,8 +435,7 @@ object SimilarityQueries {
     // collide and a cell goes empty.
     Q("q113_kmeans_refine",
       Some(s"""WITH $eCte,
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
+              |$codebookCte,
               |asgn AS (SELECT vec_id, cell, v FROM (
               |    SELECT e.vec_id, e.v, c.cell,
               |      row_number() OVER (PARTITION BY e.vec_id
@@ -409,33 +471,7 @@ object SimilarityQueries {
     // when a side has < k candidates), one int64 division. Top-50 by
     // (margin, ids).
     Q("q180_bitext_margin",
-      Some(s"""WITH $eCte,
-              |s AS (SELECT vec_id AS src_id, v FROM e WHERE vec_id % 2 = 0),
-              |t AS (SELECT vec_id AS tgt_id, v AS tv FROM e
-              |  WHERE vec_id % 2 = 1 AND vec_id <= 80),
-              |m AS (SELECT src_id, tgt_id,
-              |    CAST(floor(round(${Similarity.cosineSql("v", "tv")}, 4)
-              |      * 10000 + 0.001) AS BIGINT) AS cos_micro
-              |  FROM s CROSS JOIN t),
-              |ax AS (SELECT src_id, CAST(sum(cos_micro) AS BIGINT) AS ax_sum,
-              |    CAST(count(*) AS BIGINT) AS nx
-              |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
-              |    QUALIFY row_number() OVER (PARTITION BY src_id
-              |      ORDER BY cos_micro DESC, tgt_id) <= 4)
-              |  GROUP BY src_id),
-              |ay AS (SELECT tgt_id, CAST(sum(cos_micro) AS BIGINT) AS ay_sum,
-              |    CAST(count(*) AS BIGINT) AS ny
-              |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
-              |    QUALIFY row_number() OVER (PARTITION BY tgt_id
-              |      ORDER BY cos_micro DESC, src_id) <= 4)
-              |  GROUP BY tgt_id)
-              |SELECT m.src_id, m.tgt_id, m.cos_micro,
-              |  (2 * nx * ny * m.cos_micro * 1000000)
-              |    // (ax_sum * ny + ay_sum * nx) AS margin_micro
-              |FROM m JOIN ax USING (src_id) JOIN ay USING (tgt_id)
-              |WHERE m.cos_micro > 0 AND ax_sum * ny + ay_sum * nx > 0
-              |ORDER BY margin_micro DESC, m.src_id, m.tgt_id
-              |LIMIT 50""".stripMargin),
+      Some(bitextOracle),
       (s, dir) => {
         val e = emb(s, dir)
         Similarity.bitextMine(
@@ -458,35 +494,13 @@ object SimilarityQueries {
     // alone (q47, q193); this row pins the composition.
     Q("q221_semantic_drift",
       Some(s"""WITH $eCte,
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
-              |asgn AS (SELECT vec_id, cell FROM (
-              |    SELECT e.vec_id, c.cell,
-              |      row_number() OVER (PARTITION BY e.vec_id
-              |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
-              |    FROM e CROSS JOIN c) WHERE rn = 1),
+              |$cellCtes,
               |h AS (SELECT vec_id % 4 AS period, cell AS b, count(*) AS c
               |  FROM asgn GROUP BY 1, 2),
-              |tot AS (SELECT period, CAST(sum(c) AS BIGINT) AS n_cur FROM h GROUP BY 1),
-              |hp AS (SELECT period + 1 AS period, b, c FROM h),
-              |tp AS (SELECT period + 1 AS period, n_cur AS n_prev FROM tot),
-              |j AS (
-              |  SELECT coalesce(h.period, hp.period) AS period,
-              |         coalesce(h.c, 0) AS c, coalesce(hp.c, 0) AS cp
-              |  FROM h FULL JOIN hp ON h.period = hp.period AND h.b = hp.b),
-              |sx AS (
-              |  SELECT j.period, max(n_prev) AS n_prev, max(n_cur) AS n_cur,
-              |         CAST(sum(abs(c * n_prev - cp * n_cur)) AS BIGINT) AS tvd_num
-              |  FROM j JOIN tot ON j.period = tot.period JOIN tp ON j.period = tp.period
-              |  GROUP BY 1),
-              |p AS (
-              |  SELECT period, n_prev, n_cur, tvd_num,
-              |         ${graft.operators.Sampling.microRatioSql("tvd_num", "2 * n_cur * n_prev", "//")} AS tvd_ppm
-              |  FROM sx)
-              |SELECT period, n_prev, n_cur, tvd_num, tvd_ppm,
-              |       2 * (SELECT count(*) FROM p) * tvd_ppm
-              |         > 3 * (SELECT CAST(sum(tvd_ppm) AS BIGINT) FROM p) AS drifted
-              |FROM p""".stripMargin),
+              |${DriftSql.periodCtes},
+              |${DriftSql.pairCte},
+              |${DriftSql.tvdCtes("sx")}
+              |${DriftSql.alertTail}""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir)
         val cents = Similarity.seededCentroids(e, col("vec_id"),
@@ -510,13 +524,7 @@ object SimilarityQueries {
     // queries must not re-pay it).
     Q("q232_ivf_index_lifecycle",
       Some(s"""WITH $eCte,
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
-              |asgn AS (SELECT vec_id, cell FROM (
-              |    SELECT e.vec_id, c.cell,
-              |      row_number() OVER (PARTITION BY e.vec_id
-              |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
-              |    FROM e CROSS JOIN c) WHERE rn = 1)
+              |$cellCtes
               |SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
               |  CAST(sum(vec_id) AS BIGINT) AS sum_id,
               |  CAST(min(vec_id) AS BIGINT) AS min_id,
@@ -567,13 +575,7 @@ object SimilarityQueries {
     // levels as chained rank windows over the same ‖c‖²−2⟨v,c⟩ scores.
     Q("q233_two_level_cells",
       Some(s"""WITH $eCte,
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
-              |asgn AS (SELECT vec_id, cell FROM (
-              |    SELECT e.vec_id, c.cell,
-              |      row_number() OVER (PARTITION BY e.vec_id
-              |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
-              |    FROM e CROSS JOIN c) WHERE rn = 1),
+              |$cellCtes,
               |fs AS (SELECT cell, fid, CAST(rk - 1 AS INT) AS fi FROM (
               |    SELECT cell, vec_id AS fid,
               |      row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rk
@@ -619,15 +621,7 @@ object SimilarityQueries {
     // exact q95 dedup semantics, tri-scale.
     Q("q234_semantic_dedup_capped",
       Some(s"""WITH $eCte,
-              |base AS (SELECT vec_id, v FROM e
-              |  UNION ALL SELECT vec_id + 100000, v FROM e WHERE vec_id < 20),
-              |c AS (SELECT CAST(vec_id - 1 AS INT) AS cell, v AS cv
-              |  FROM e WHERE vec_id BETWEEN 1 AND 8),
-              |asgn AS (SELECT vec_id, cell, v FROM (
-              |    SELECT base.vec_id, base.v, c.cell,
-              |      row_number() OVER (PARTITION BY base.vec_id
-              |        ORDER BY (${Similarity.dotSql("cv", "cv")}) - 2*(${Similarity.dotSql("v", "cv")}), c.cell) AS rn
-              |    FROM base CROSS JOIN c) WHERE rn = 1),
+              |$semDedupCellCtes,
               |cap AS (SELECT CAST(ceil(1.5 * count(*) / 8) AS BIGINT) AS mx FROM base),
               |ok AS (SELECT cell FROM asgn GROUP BY cell
               |  HAVING count(*) >= 2 AND count(*) <= (SELECT mx FROM cap)),
@@ -635,14 +629,10 @@ object SimilarityQueries {
               |  ON a1.cell = b2.cell AND a1.vec_id < b2.vec_id
               |  WHERE a1.cell IN (SELECT cell FROM ok)
               |    AND round(${Similarity.cosineSql("a1.v", "b2.v")}, 4) >= 0.99)
-              |SELECT a.vec_id, a.cell,
-              |  CASE WHEN d.vec_id IS NOT NULL THEN 'dropped' ELSE 'kept' END AS status
-              |FROM asgn a LEFT JOIN drp d USING (vec_id)""".stripMargin),
+              |$semDedupTail""".stripMargin),
       (s, dir) => {
         val e = emb(s, dir).select("vec_id", "embedding")
-        val corpus = e.union(
-          e.filter(col("vec_id") < 20)
-            .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
+        val corpus = withPlantedDups(e)
         val cents = Similarity.seededCentroids(e, col("vec_id"), col("embedding"), 1L to 8L)
         // corpus-relative cap, replayed by the oracle's `cap` CTE —
         // derived INSIDE the plan (r19): ceil(1.5·N/8) comes from a 1-row
@@ -667,33 +657,7 @@ object SimilarityQueries {
     // same total order — batched ≡ one-shot is the property this row
     // pins against an independent engine.
     Q("q235_bitext_batched",
-      Some(s"""WITH $eCte,
-              |s AS (SELECT vec_id AS src_id, v FROM e WHERE vec_id % 2 = 0),
-              |t AS (SELECT vec_id AS tgt_id, v AS tv FROM e
-              |  WHERE vec_id % 2 = 1 AND vec_id <= 80),
-              |m AS (SELECT src_id, tgt_id,
-              |    CAST(floor(round(${Similarity.cosineSql("v", "tv")}, 4)
-              |      * 10000 + 0.001) AS BIGINT) AS cos_micro
-              |  FROM s CROSS JOIN t),
-              |ax AS (SELECT src_id, CAST(sum(cos_micro) AS BIGINT) AS ax_sum,
-              |    CAST(count(*) AS BIGINT) AS nx
-              |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
-              |    QUALIFY row_number() OVER (PARTITION BY src_id
-              |      ORDER BY cos_micro DESC, tgt_id) <= 4)
-              |  GROUP BY src_id),
-              |ay AS (SELECT tgt_id, CAST(sum(cos_micro) AS BIGINT) AS ay_sum,
-              |    CAST(count(*) AS BIGINT) AS ny
-              |  FROM (SELECT src_id, tgt_id, cos_micro FROM m
-              |    QUALIFY row_number() OVER (PARTITION BY tgt_id
-              |      ORDER BY cos_micro DESC, src_id) <= 4)
-              |  GROUP BY tgt_id)
-              |SELECT m.src_id, m.tgt_id, m.cos_micro,
-              |  (2 * nx * ny * m.cos_micro * 1000000)
-              |    // (ax_sum * ny + ay_sum * nx) AS margin_micro
-              |FROM m JOIN ax USING (src_id) JOIN ay USING (tgt_id)
-              |WHERE m.cos_micro > 0 AND ax_sum * ny + ay_sum * nx > 0
-              |ORDER BY margin_micro DESC, m.src_id, m.tgt_id
-              |LIMIT 50""".stripMargin),
+      Some(bitextOracle),
       (s, dir) => {
         val e = emb(s, dir)
         Similarity.bitextMineBatched(

@@ -51,6 +51,24 @@ object TextQueries {
   private val Bm25B = 0.75
   private val RrfK0 = 60
 
+  /** BM25 scoring over CTEs `tfr` (doc, dl, token, tf), `q` (qid,
+    * token) and `stats` (n_docs, avgdl): the postings of query terms
+    * `pr`, their df, the micro-int term weights `w` and the summed
+    * `sc(qid, doc, bm25_micro)` scores (exact BIGINTs). Used by
+    * `bm25Ctes` (q200 and its siblings) and q217. */
+  private val bm25ScoreCtes: String =
+    s"""pr AS (SELECT tfr.* FROM tfr
+       |  JOIN (SELECT DISTINCT token FROM q) qd USING (token)),
+       |dfq AS (SELECT token, count(*) AS df FROM pr GROUP BY 1),
+       |w AS (SELECT doc, token,
+       |    CAST(round((ln(1.0 + ((n_docs - df) + 0.5) / (df + 0.5))
+       |      * ((tf * ${Bm25K1 + 1}) / (tf + $Bm25K1 *
+       |          (${1 - Bm25B} + ($Bm25B * dl) / avgdl))))
+       |      * 1000000.0) AS BIGINT) AS w_micro
+       |  FROM pr JOIN dfq USING (token) CROSS JOIN stats),
+       |sc AS (SELECT qid, doc, CAST(sum(w_micro) AS BIGINT) AS bm25_micro
+       |  FROM w JOIN q USING (token) GROUP BY 1, 2)""".stripMargin
+
   /** WITH-chain replaying `Retrieval.bm25TopKFromIndex` over queries =
     * first-10-distinct-token sets of every doc_id%100==0 doc: corpus
     * stats, (doc, dl, token, tf) postings, query terms, query-term-pruned
@@ -66,17 +84,39 @@ object TextQueries {
        |tfr AS (SELECT doc, dl, token, count(*) AS tf FROM p GROUP BY 1, 2, 3),
        |q AS (SELECT doc AS qid, unnest(list_distinct(tk[1:10])) AS token
        |  FROM base WHERE doc % 100 = 0),
-       |pr AS (SELECT tfr.* FROM tfr
-       |  JOIN (SELECT DISTINCT token FROM q) qd USING (token)),
-       |dfq AS (SELECT token, count(*) AS df FROM pr GROUP BY 1),
-       |w AS (SELECT doc, token,
-       |    CAST(round((ln(1.0 + ((n_docs - df) + 0.5) / (df + 0.5))
-       |      * ((tf * ${Bm25K1 + 1}) / (tf + $Bm25K1 *
-       |          (${1 - Bm25B} + ($Bm25B * dl) / avgdl))))
-       |      * 1000000.0) AS BIGINT) AS w_micro
-       |  FROM pr JOIN dfq USING (token) CROSS JOIN stats),
-       |sc AS (SELECT qid, doc, CAST(sum(w_micro) AS BIGINT) AS bm25_micro
-       |  FROM w JOIN q USING (token) GROUP BY 1, 2)""".stripMargin
+       |$bm25ScoreCtes""".stripMargin
+
+  /** The greedy 256-capacity packing walk over CTE `src` (doc_id, shard,
+    * w) as a recursive CTE: each shard's docs in doc_id order (`ord`),
+    * then `pack` carries (bin, fill) from row to row. Needs `WITH
+    * RECURSIVE`. Used by q64, q75, q156, q173 and q226. */
+  private def packCtes(src: String): String =
+    s"""ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
+       |  FROM $src),
+       |pack AS (
+       |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
+       |  FROM ord WHERE rn = 1
+       |  UNION ALL
+       |  SELECT o.shard, o.rn, o.doc_id, o.w,
+       |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
+       |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
+       |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1)""".stripMargin
+
+  /** Every doc sharded by doc_id / 100 and weighed in whitespace tokens
+    * (`d`), then packed by `packCtes`. The twin of `tokenPacking`. Used
+    * by q64, q156 and q226. */
+  private val tokenPackCtes: String =
+    s"""d AS (
+       |  SELECT doc_id, doc_id // 100 AS shard, len($toksSql) AS w
+       |  FROM documents),
+       |${packCtes("d")}""".stripMargin
+
+  /** `Packing.packGreedy` of the docs `d` by whitespace-token count,
+    * sharded by doc_id / 100, capacity 256. Used by q64, q156 and q226. */
+  private def tokenPacking(d: DataFrame): DataFrame =
+    graft.operators.Packing.packGreedy(
+      d.withColumn("w", size(tokens(col("text"))).cast("long")),
+      col("doc_id"), col("w"), expr("doc_id div 100"), capacity = 256L)
 
   // ---- BPE oracle SQL generation ----------------------------------------
   private val BpeK = 4
@@ -114,6 +154,23 @@ object TextQueries {
        |  WHERE regexp_matches(word, '^[a-z]+$$') GROUP BY word),
        |s0 AS (SELECT $BpeWrapWordSql AS seq, n FROM v),
        |${bpeIterCtes(k)}""".stripMargin
+
+  /** A wrapped word with the `BpeK` learned merges `m1..mk` applied in
+    * order by literal replace; the rows need `bpeMergeJoinsSql`. Used by
+    * q117, q137 and q173. */
+  private def bpeEncodeSql(wrapped: String): String =
+    (1 to BpeK).foldLeft(wrapped)((e, i) =>
+      s"replace($e, $BpeL || m$i.pa || $BpeR || $BpeL || m$i.pb || $BpeR, " +
+        s"$BpeL || m$i.pa || m$i.pb || $BpeR)")
+  private val bpeMergeJoinsSql: String =
+    (1 to BpeK).map(i => s"CROSS JOIN m$i").mkString(" ")
+
+  /** A 16-dim dense vector hashed from the text column `c` (components
+    * portableHash(c:j) mod 1000): the retrieval rows' stand-in
+    * embedding. Used by q160 (over chunks), q201 and q205. */
+  private def hashVec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    transform(sequence(lit(0), lit(15)),
+      j => (portableHash(concat(c, lit(":"), j.cast("string"))) % 1000).cast("double"))
 
   // ---- WordPiece oracle SQL generation ----------------------------------
   /** `##`-scheme twin of [[BpeWrapWordSql]]: first char plain,
@@ -599,24 +656,10 @@ object TextQueries {
     // engine walks it in one mapPartitions pass after a shard shuffle
     // (see operators/Packing.scala for why a window can't express it).
     Q("q64_seq_packing",
-      Some(s"""WITH RECURSIVE d AS (
-              |  SELECT doc_id, doc_id // 100 AS shard, len($toksSql) AS w
-              |  FROM documents),
-              |ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-              |  FROM d),
-              |pack AS (
-              |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
-              |  FROM ord WHERE rn = 1
-              |  UNION ALL
-              |  SELECT o.shard, o.rn, o.doc_id, o.w,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
-              |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1)
+      Some(s"""WITH RECURSIVE $tokenPackCtes
               |SELECT doc_id, shard, bin, w, fill FROM pack""".stripMargin),
       (s, dir) =>
-        graft.operators.Packing.packGreedy(
-          docs(s, dir).withColumn("w", size(tokens(col("text"))).cast("long")),
-          col("doc_id"), col("w"), expr("doc_id div 100"), capacity = 256L)),
+        tokenPacking(docs(s, dir))),
 
     // Packed-sequence boundary masks (Packing.packedBoundaries): the
     // per-doc [seq_start, seq_start+seq_len) token spans inside each
@@ -625,26 +668,12 @@ object TextQueries {
     // q64 walk (seq_start = fill − w): zero extra shuffle, and the
     // oracle extends the same recursive CTE by one arithmetic column.
     Q("q156_pack_boundaries",
-      Some(s"""WITH RECURSIVE d AS (
-              |  SELECT doc_id, doc_id // 100 AS shard, len($toksSql) AS w
-              |  FROM documents),
-              |ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-              |  FROM d),
-              |pack AS (
-              |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
-              |  FROM ord WHERE rn = 1
-              |  UNION ALL
-              |  SELECT o.shard, o.rn, o.doc_id, o.w,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
-              |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1)
+      Some(s"""WITH RECURSIVE $tokenPackCtes
               |SELECT shard, bin, doc_id, fill - w AS seq_start, w AS seq_len
               |FROM pack""".stripMargin),
       (s, dir) =>
         graft.operators.Packing.packedBoundaries(
-          graft.operators.Packing.packGreedy(
-            docs(s, dir).withColumn("w", size(tokens(col("text"))).cast("long")),
-            col("doc_id"), col("w"), expr("doc_id div 100"), capacity = 256L))),
+          tokenPacking(docs(s, dir)))),
 
     // Deterministic stratified k-fold assignment: within each language
     // stratum, docs ranked by portable hash (tiebreak doc_id) and dealt
@@ -718,9 +747,7 @@ object TextQueries {
       (s, dir) => {
         val ch = graft.text.Chunking.chunkTokens(docs(s, dir), col("doc_id"),
           tokens(col("text")), chunkSize = 50, stride = 40)
-        val vec = transform(sequence(lit(0), lit(15)),
-          j => (portableHash(concat(col("chunk"), lit(":"), j.cast("string")))
-            % 1000).cast("double"))
+        val vec = hashVec(col("chunk"))
         val e = ch.select(col("doc"), col("chunk_id"), vec.as("v"))
         val qs = e.filter(col("doc") % 100 === 0 && col("chunk_id") === 0)
           .select(col("doc").as("qdoc"), col("v").as("qv"))
@@ -880,16 +907,7 @@ object TextQueries {
               |keepers AS (SELECT min(doc_id) AS keep FROM f GROUP BY md5(text)),
               |train AS (SELECT doc_id, doc_id // 100 AS shard, len(tk) AS w FROM f
               |  WHERE doc_id IN (SELECT keep FROM keepers) AND $h % 10 <= 7),
-              |ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-              |  FROM train),
-              |pack AS (
-              |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
-              |  FROM ord WHERE rn = 1
-              |  UNION ALL
-              |  SELECT o.shard, o.rn, o.doc_id, o.w,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
-              |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1)
+              |${packCtes("train")}
               |SELECT shard, count(DISTINCT bin) AS n_bins, count(*) AS n_docs,
               |  CAST(sum(w) AS BIGINT) AS sum_tokens
               |FROM pack GROUP BY shard""".stripMargin)
@@ -1171,10 +1189,8 @@ object TextQueries {
       Some(s"""${bpeCtes(BpeK)},
               |cw AS (SELECT unnest(${tokensSql(canonicalizeSql("text"))}) AS word
               |  FROM documents),
-              |enc AS (SELECT ${(1 to BpeK).foldLeft(s"$BpeWrapWordSql")((e, i) =>
-                 s"replace($e, $BpeL || m$i.pa || $BpeR || $BpeL || m$i.pb || $BpeR, " +
-                   s"$BpeL || m$i.pa || m$i.pb || $BpeR)")} AS seq
-              |  FROM cw ${(1 to BpeK).map(i => s"CROSS JOIN m$i").mkString(" ")}
+              |enc AS (SELECT ${bpeEncodeSql(BpeWrapWordSql)} AS seq
+              |  FROM cw $bpeMergeJoinsSql
               |  WHERE word <> ''),
               |sym AS (SELECT unnest(string_split(trim(seq, $BpeL || $BpeR),
               |    $BpeR || $BpeL)) AS symbol FROM enc)
@@ -1203,10 +1219,8 @@ object TextQueries {
       Some(s"""${bpeByteCtes(BpeK)},
               |cw AS (SELECT unnest(${tokensSql(s"text || $bytePlantSql")}) AS word
               |  FROM documents),
-              |enc AS (SELECT ${(1 to BpeK).foldLeft(s"$BpeByteWrapWordSql")((e, i) =>
-                 s"replace($e, $BpeL || m$i.pa || $BpeR || $BpeL || m$i.pb || $BpeR, " +
-                   s"$BpeL || m$i.pa || m$i.pb || $BpeR)")} AS seq
-              |  FROM cw ${(1 to BpeK).map(i => s"CROSS JOIN m$i").mkString(" ")}
+              |enc AS (SELECT ${bpeEncodeSql(BpeByteWrapWordSql)} AS seq
+              |  FROM cw $bpeMergeJoinsSql
               |  WHERE word <> ''),
               |sym AS (SELECT unnest(string_split(trim(seq, $BpeL || $BpeR),
               |    $BpeR || $BpeL)) AS symbol FROM enc)
@@ -1593,10 +1607,8 @@ object TextQueries {
       Some(s"""WITH RECURSIVE ${bpeCtes(BpeK).stripPrefix("WITH ")},
               |cw AS (SELECT doc_id, unnest(${tokensSql(canonicalizeSql("text"))}) AS word
               |  FROM documents),
-              |enc AS (SELECT doc_id, ${(1 to BpeK).foldLeft(s"$BpeWrapWordSql")((e, i) =>
-                 s"replace($e, $BpeL || m$i.pa || $BpeR || $BpeL || m$i.pb || $BpeR, " +
-                   s"$BpeL || m$i.pa || m$i.pb || $BpeR)")} AS seq
-              |  FROM cw ${(1 to BpeK).map(i => s"CROSS JOIN m$i").mkString(" ")}
+              |enc AS (SELECT doc_id, ${bpeEncodeSql(BpeWrapWordSql)} AS seq
+              |  FROM cw $bpeMergeJoinsSql
               |  WHERE word <> ''),
               |wc AS (SELECT doc_id,
               |    CAST(sum(len(string_split(trim(seq, $BpeL || $BpeR),
@@ -1605,16 +1617,7 @@ object TextQueries {
               |dd AS (SELECT d.doc_id, d.doc_id // 100 AS shard,
               |    coalesce(wc.w, 0) AS w
               |  FROM documents d LEFT JOIN wc ON wc.doc_id = d.doc_id),
-              |ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-              |  FROM dd),
-              |pack AS (
-              |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
-              |  FROM ord WHERE rn = 1
-              |  UNION ALL
-              |  SELECT o.shard, o.rn, o.doc_id, o.w,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
-              |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1)
+              |${packCtes("dd")}
               |SELECT shard, bin, doc_id, fill - w AS seq_start, w AS seq_len
               |FROM pack""".stripMargin),
       (s, dir) => {
@@ -1750,9 +1753,7 @@ object TextQueries {
             array_distinct(slice(tokens(col("text")), 1, 10)), k = 10,
             k1 = Bm25K1, b = Bm25B)
           .select("qid", "doc", "rank")
-        val vec = transform(sequence(lit(0), lit(15)),
-          j => (portableHash(concat(col("text"), lit(":"), j.cast("string")))
-            % 1000).cast("double"))
+        val vec = hashVec(col("text"))
         val e = d.select(col("doc_id").as("doc"), vec.as("v"))
         val qe = e.filter(col("doc") % 100 === 0)
           .select(col("doc").as("qid"), col("v").as("qv"))
@@ -1798,9 +1799,7 @@ object TextQueries {
             array_distinct(slice(tokens(col("text")), 1, 10)), k = 20,
             k1 = Bm25K1, b = Bm25B)
           .select("qid", "doc")
-        val vec = transform(sequence(lit(0), lit(15)),
-          j => (portableHash(concat(col("text"), lit(":"), j.cast("string")))
-            % 1000).cast("double"))
+        val vec = hashVec(col("text"))
         val e = d.select(col("doc_id").as("doc"), vec.as("v"))
         val qe = e.filter(col("doc") % 100 === 0)
           .select(col("doc").as("qid"), col("v").as("qv"))
@@ -1852,17 +1851,7 @@ object TextQueries {
               |q AS (SELECT qid,
               |    unnest(['k'||qid||'a','k'||qid||'b','k'||qid||'c']) AS token
               |  FROM qs),
-              |pr AS (SELECT tfr.* FROM tfr
-              |  JOIN (SELECT DISTINCT token FROM q) qd USING (token)),
-              |dfq AS (SELECT token, count(*) AS df FROM pr GROUP BY 1),
-              |w AS (SELECT doc, token,
-              |    CAST(round((ln(1.0 + ((n_docs - df) + 0.5) / (df + 0.5))
-              |      * ((tf * ${Bm25K1 + 1}) / (tf + $Bm25K1 *
-              |          (${1 - Bm25B} + ($Bm25B * dl) / avgdl))))
-              |      * 1000000.0) AS BIGINT) AS w_micro
-              |  FROM pr JOIN dfq USING (token) CROSS JOIN stats),
-              |sc AS (SELECT qid, doc, CAST(sum(w_micro) AS BIGINT) AS bm25_micro
-              |  FROM w JOIN q USING (token) GROUP BY 1, 2),
+              |$bm25ScoreCtes,
               |sp AS (SELECT qid, doc, rank FROM (SELECT *,
               |    row_number() OVER (PARTITION BY qid
               |      ORDER BY bm25_micro DESC, doc) AS rank FROM sc)
@@ -2013,19 +2002,7 @@ object TextQueries {
     // over the packGreedy output).
     Q("q226_pack_fill_audit", {
       import graft.operators.Sampling.microRatioSql
-      Some(s"""WITH RECURSIVE d AS (
-              |  SELECT doc_id, doc_id // 100 AS shard, len($toksSql) AS w
-              |  FROM documents),
-              |ord AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-              |  FROM d),
-              |pack AS (
-              |  SELECT shard, rn, doc_id, w, CAST(0 AS BIGINT) AS bin, w AS fill
-              |  FROM ord WHERE rn = 1
-              |  UNION ALL
-              |  SELECT o.shard, o.rn, o.doc_id, o.w,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.bin ELSE p.bin + 1 END,
-              |    CASE WHEN p.fill + o.w <= 256 THEN p.fill + o.w ELSE o.w END
-              |  FROM pack p JOIN ord o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      Some(s"""WITH RECURSIVE $tokenPackCtes,
               |bins AS (SELECT shard, bin, CAST(sum(w) AS BIGINT) AS btok,
               |    count(*) AS bdocs FROM pack GROUP BY 1, 2),
               |lb AS (SELECT CAST(sum(ovf + (st + 255) // 256) AS BIGINT)
@@ -2055,9 +2032,7 @@ object TextQueries {
     },
       (s, dir) =>
         graft.operators.Packing.fillAudit(
-          graft.operators.Packing.packGreedy(
-            docs(s, dir).withColumn("w", size(tokens(col("text"))).cast("long")),
-            col("doc_id"), col("w"), expr("doc_id div 100"), capacity = 256L),
+          tokenPacking(docs(s, dir)),
           capacity = 256L)),
 
     // UnigramLM tokenizer EM, oracle tier (closing the family's last

@@ -24,4 +24,13 @@ class QueriesSmokeSpec extends SparkSpec {
     val names = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(names))
   }
+
+  // `queries` and `oracleSql` are Maps keyed by name: a repeated name
+  // would silently drop a row from Verify, Bench and the oracle dump.
+  test("registry names are unique") {
+    val names = SparkEntry.registry.map(_.name)
+    val repeated = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(repeated.isEmpty, s"repeated registry names: ${repeated.mkString(", ")}")
+    assert(SparkEntry.queries.size == names.size)
+  }
 }

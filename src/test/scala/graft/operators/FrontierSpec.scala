@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class FrontierSpec extends SparkSpec {
+class FrontierSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("extractLinks: hrefs in document order; expand drops relative/mailto") {
@@ -302,8 +302,8 @@ class FrontierSpec extends SparkSpec {
   test("streaming frontier: exactly-once URL emission across batches, seeded index honored") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val crawledDir = java.nio.file.Files.createTempDirectory("graft_fr_crawled").toString
-    val frontierDir = java.nio.file.Files.createTempDirectory("graft_fr_out").toString + "/fr"
+    val crawledDir = tempDir("graft_fr_crawled").toString
+    val frontierDir = tempDir("graft_fr_out").toString + "/fr"
     // seed: t0 is already crawled before the stream starts
     Seq("https://t0.example/seen").toDF("url")
       .write.mode("overwrite").parquet(crawledDir)
@@ -345,7 +345,7 @@ class FrontierSpec extends SparkSpec {
   test("streaming frontier: durable checkpoint — replayed batch overwrites its own commit dir") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_fr_ckpt").toString
+    val base = tempDir("graft_fr_ckpt").toString
     val crawledDir = s"$base/crawled" // never written: no seed
     val frontierDir = s"$base/fr"
     val ckptDir = s"$base/ckpt"

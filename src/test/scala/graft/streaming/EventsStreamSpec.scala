@@ -5,15 +5,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class EventsStreamSpec extends SparkSpec {
+class EventsStreamSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   /** Stage the static events parquet into a stream-source directory. */
   lazy val streamDir: String = {
-    val d = Files.createTempDirectory("graft_stream")
+    val d = suiteTempDir("graft_stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     d.toString
@@ -40,7 +40,7 @@ class EventsStreamSpec extends SparkSpec {
     // two micro-batches through the same withSafetyGate must produce
     // the batch verdict for every doc_id
     val d = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val src = Files.createTempDirectory("graft_safety_stream")
+    val src = tempDir("graft_safety_stream")
     d.filter($"doc_id" % 2 === 0).write.parquet(s"$src/a.parquet.dir")
     d.filter($"doc_id" % 2 === 1).write.parquet(s"$src/b.parquet.dir")
     val stream = spark.readStream.schema(d.schema)
@@ -69,9 +69,8 @@ class EventsStreamSpec extends SparkSpec {
     // batch boundaries must be invisible)
     val d = Tables.documents(spark, sfDir).select("doc_id", "text")
     val patterns = Seq("art", "rea", "dup") // q182's fixture patterns
-    val src = Files.createTempDirectory("graft_substr_stream")
-    val out = Files.createTempDirectory("graft_substr_out")
-    val ckpt = Files.createTempDirectory("graft_substr_ckpt")
+    val src = tempDir("graft_substr_stream")
+    val out = tempDir("graft_substr_out")
     d.filter($"doc_id" % 2 === 0).coalesce(1).write.parquet(s"$src/a.parquet.dir")
     d.filter($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$src/b.parquet.dir")
     val stream = spark.readStream.schema(d.schema)
@@ -79,18 +78,13 @@ class EventsStreamSpec extends SparkSpec {
       .option("recursiveFileLookup", "true")
       .parquet(src.toString)
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        nBatches.incrementAndGet()
-        batch.select(col("doc_id"),
-          graft.functions.TextFunctions.substringHits(col("text"), patterns)
-            .as("n_hits"))
-          .write.mode("append").parquet(out.toString)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamDriver.eachBatch(stream) { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      nBatches.incrementAndGet()
+      batch.select(col("doc_id"),
+        graft.functions.TextFunctions.substringHits(col("text"), patterns)
+          .as("n_hits"))
+        .write.mode("append").parquet(out.toString)
+    }
     val streamed = spark.read.parquet(out.toString)
       .as[(Long, Long)].collect().toMap
     val batchMap = d.select(col("doc_id"),
@@ -121,23 +115,17 @@ class EventsStreamSpec extends SparkSpec {
       graft.multimodal.CrossModal.alignmentGate(seamed(df),
         col("cap_vec"), col("img_vec"), minMicro = 0L)
         .select("doc_id", "align_micro", "aligned")
-    val src = Files.createTempDirectory("graft_xmodal_stream")
-    val out = Files.createTempDirectory("graft_xmodal_out")
-    val ckpt = Files.createTempDirectory("graft_xmodal_ckpt")
+    val src = tempDir("graft_xmodal_stream")
+    val out = tempDir("graft_xmodal_out")
     d.filter($"doc_id" % 2 === 0).coalesce(1).write.parquet(s"$src/a.parquet.dir")
     d.filter($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$src/b.parquet.dir")
     val stream = spark.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true")
       .parquet(src.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        gate(batch).write.mode("append").parquet(out.toString)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamDriver.eachBatch(stream) { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      gate(batch).write.mode("append").parquet(out.toString)
+    }
     val streamed = spark.read.parquet(out.toString)
       .as[(Long, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val batchMap = gate(d)
@@ -166,23 +154,17 @@ class EventsStreamSpec extends SparkSpec {
         .withColumn("suppressed",
           coalesce(col("group_size"), lit(0L)) < 5L)
         .select("doc_id", "group_size", "suppressed")
-    val src = Files.createTempDirectory("graft_kanon_stream")
-    val out = Files.createTempDirectory("graft_kanon_out")
-    val ckpt = Files.createTempDirectory("graft_kanon_ckpt")
+    val src = tempDir("graft_kanon_stream")
+    val out = tempDir("graft_kanon_out")
     d.filter($"doc_id" % 2 === 0).coalesce(1).write.parquet(s"$src/a.parquet.dir")
     d.filter($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$src/b.parquet.dir")
     val stream = spark.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true")
       .parquet(src.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        gate(batch).write.mode("append").parquet(out.toString)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamDriver.eachBatch(stream) { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      gate(batch).write.mode("append").parquet(out.toString)
+    }
     val streamed = spark.read.parquet(out.toString)
       .as[(Long, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val batchMap = graft.operators.Privacy.kAnonymize(d, quasi, k = 5L)
@@ -209,27 +191,21 @@ class EventsStreamSpec extends SparkSpec {
     val stationary = second.select($"event_type", lit("stationary").as("slice"))
     val biased = second.filter($"event_type" =!= "error")
       .select($"event_type", lit("biased").as("slice"))
-    val src = Files.createTempDirectory("graft_drift_stream")
-    val out = Files.createTempDirectory("graft_drift_out")
-    val ckpt = Files.createTempDirectory("graft_drift_ckpt")
+    val src = tempDir("graft_drift_stream")
+    val out = tempDir("graft_drift_out")
     stationary.coalesce(1).write.parquet(s"$src/a.parquet.dir")
     biased.coalesce(1).write.parquet(s"$src/b.parquet.dir")
     val stream = spark.readStream.schema(stationary.schema)
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true")
       .parquet(src.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val tag = batch.agg(max("slice")).head().getString(0)
-        graft.operators.Drift
-          .tvdBetween(ref, col("event_type"), batch, col("event_type"), 1L, 16L)
-          .withColumn("slice", lit(tag))
-          .write.mode("append").parquet(out.toString)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamDriver.eachBatch(stream) { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      val tag = batch.agg(max("slice")).head().getString(0)
+      graft.operators.Drift
+        .tvdBetween(ref, col("event_type"), batch, col("event_type"), 1L, 16L)
+        .withColumn("slice", lit(tag))
+        .write.mode("append").parquet(out.toString)
+    }
     val streamed = spark.read.parquet(out.toString)
       .select("slice", "tvd_ppm", "drifted")
       .as[(String, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -256,8 +232,8 @@ class EventsStreamSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .withColumn("period", ((dayofmonth($"ts") - 1) / lit(10)).cast("long"))
       .select($"event_type", $"period", pmod(hash($"user_id"), lit(2)).as("half"))
-    val src = Files.createTempDirectory("graft_drifthist_stream")
-    val hist = Files.createTempDirectory("graft_drifthist_out")
+    val src = tempDir("graft_drifthist_stream")
+    val hist = tempDir("graft_drifthist_out")
     (0 to 1).foreach { h =>
       ev.filter($"half" === h).drop("half")
         .coalesce(1).write.parquet(s"$src/$h.parquet.dir")
@@ -306,9 +282,8 @@ class EventsStreamSpec extends SparkSpec {
     // cannot know — the streaming form uses the gate threshold instead.
     val ev = Tables.events(spark, sfDir)
       .withColumn("period", ((dayofmonth($"ts") - 1) / lit(10)).cast("long"))
-    val src = Files.createTempDirectory("graft_driftser_stream")
-    val out = Files.createTempDirectory("graft_driftser_out")
-    val ckpt = Files.createTempDirectory("graft_driftser_ckpt")
+    val src = tempDir("graft_driftser_stream")
+    val out = tempDir("graft_driftser_out")
     (0 to 2).foreach { p =>
       ev.filter($"period" === p).select("event_type", "period")
         .coalesce(1).write.parquet(s"$src/$p.parquet.dir")
@@ -320,25 +295,20 @@ class EventsStreamSpec extends SparkSpec {
       .parquet(src.toString)
     // previous window's histogram — the monitor's whole state
     var prevHist: Option[(Long, Seq[(String, Long)])] = None
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val period = batch.agg(max("period")).head().getLong(0)
-        val hist = batch.groupBy("event_type").agg(count(lit(1)).as("n"))
-          .as[(String, Long)].collect().toSeq
-        prevHist.foreach { case (_, ph) =>
-          graft.operators.Drift.tvdFromHistograms(
-              ph.toDF("bucket", "n"), col("bucket"), col("n"),
-              hist.toDF("bucket", "n"), col("bucket"), col("n"), 1L, 16L)
-            .withColumn("period", lit(period))
-            .select("period", "tvd_num", "tvd_ppm")
-            .write.mode("append").parquet(out.toString)
-        }
-        prevHist = Some((period, hist))
+    StreamDriver.eachBatch(stream) { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      val period = batch.agg(max("period")).head().getLong(0)
+      val hist = batch.groupBy("event_type").agg(count(lit(1)).as("n"))
+        .as[(String, Long)].collect().toSeq
+      prevHist.foreach { case (_, ph) =>
+        graft.operators.Drift.tvdFromHistograms(
+            ph.toDF("bucket", "n"), col("bucket"), col("n"),
+            hist.toDF("bucket", "n"), col("bucket"), col("n"), 1L, 16L)
+          .withColumn("period", lit(period))
+          .select("period", "tvd_num", "tvd_ppm")
+          .write.mode("append").parquet(out.toString)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      prevHist = Some((period, hist))
+    }
     val streamed = spark.read.parquet(out.toString)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val batchSeries = graft.operators.Drift
@@ -363,10 +333,10 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch parquet sink is idempotent across batches (replayed file dedupes)") {
-    val src = Files.createTempDirectory("graft_febatch_src")
+    val src = tempDir("graft_febatch_src")
     Files.copy(Paths.get(s"$sfDir/events.parquet"), src.resolve("a.parquet"))
     Files.copy(Paths.get(s"$sfDir/events.parquet"), src.resolve("b.parquet"))
-    val out = Files.createTempDirectory("graft_febatch_out").toString + "/events"
+    val out = tempDir("graft_febatch_out").toString + "/events"
     // one file per trigger forces the duplicate copy into a SECOND batch,
     // exercising the anti-join-against-target path, not just in-batch dedup
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -396,13 +366,13 @@ class EventsStreamSpec extends SparkSpec {
     val requests = (users ++ users).toDF("user_id")
     // stage the corpus as two disjoint halves; one file per trigger ->
     // two micro-batches through the inlet filter
-    val src = Files.createTempDirectory("graft_erase_src")
+    val src = tempDir("graft_erase_src")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val half1 = batch.filter(col("event_id") % 2 === 0)
     val half2 = batch.filter(col("event_id") % 2 =!= 0)
     half1.coalesce(1).write.parquet(src.resolve("p1").toString)
     half2.coalesce(1).write.parquet(src.resolve("p2").toString)
-    val out = Files.createTempDirectory("graft_erase_out").toString + "/events"
+    val out = tempDir("graft_erase_out").toString + "/events"
     val stream = spark.readStream
       .schema(half1.schema)
       .option("maxFilesPerTrigger", "1")
@@ -426,12 +396,12 @@ class EventsStreamSpec extends SparkSpec {
     val base = d.filter(col("doc_id") % 4 =!= 1)
     val index = Dedup.buildIndex(base, col("doc_id"), col("text")).localCheckpoint()
     // stage the delta as TWO files; one file per trigger -> two batches
-    val src = Files.createTempDirectory("graft_docstream_src")
+    val src = tempDir("graft_docstream_src")
     delta.filter(col("doc_id") < 250).coalesce(1)
       .write.parquet(src.resolve("p1").toString)
     delta.filter(col("doc_id") >= 250).coalesce(1)
       .write.parquet(src.resolve("p2").toString)
-    val out = Files.createTempDirectory("graft_docstream_out").toString + "/status"
+    val out = tempDir("graft_docstream_out").toString + "/status"
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", "1")
@@ -452,10 +422,10 @@ class EventsStreamSpec extends SparkSpec {
     import graft.functions.TextFunctions
     import graft.text.Retrieval
     val d = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val src = Files.createTempDirectory("graft_bm25_src")
+    val src = tempDir("graft_bm25_src")
     d.filter(col("doc_id") < 250).coalesce(1).write.parquet(src.resolve("p1").toString)
     d.filter(col("doc_id") >= 250).coalesce(1).write.parquet(src.resolve("p2").toString)
-    val dir = Files.createTempDirectory("graft_bm25_ix").toString + "/ix"
+    val dir = tempDir("graft_bm25_ix").toString + "/ix"
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", "1")
@@ -485,7 +455,7 @@ class EventsStreamSpec extends SparkSpec {
     assert(replayed == want, "a replayed batch id must replace, not duplicate")
     // compaction: batch partitions collapse to one generation, scores
     // bit-identical, part-file count strictly reduced, never in place
-    val compacted = Files.createTempDirectory("graft_bm25_cx").toString + "/ix"
+    val compacted = tempDir("graft_bm25_cx").toString + "/ix"
     Retrieval.bm25IndexCompact(spark, dir, compacted, targetPartitions = 1)
     val viaCompacted = Retrieval.bm25TopKFromIndex(
       Retrieval.bm25IndexLoad(spark, compacted),
@@ -505,7 +475,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("streaming dedupe drops replayed events within the watermark") {
     // stage the same parquet twice: every event arrives as a duplicate
-    val d = Files.createTempDirectory("graft_dup_stream")
+    val d = tempDir("graft_dup_stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"), d.resolve("a.parquet"))
     Files.copy(Paths.get(s"$sfDir/events.parquet"), d.resolve("b.parquet"))
     val streamed = EventsStream.runToMemory(
@@ -738,8 +708,8 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("streaming CDC upsert applies batches in order: update, delete, insert") {
-    val src = Files.createTempDirectory("graft_cdc_src")
-    val snap = Files.createTempDirectory("graft_cdc_out").toString + "/snapshot"
+    val src = tempDir("graft_cdc_src")
+    val snap = tempDir("graft_cdc_out").toString + "/snapshot"
     // batch 1: three inserts (k=4 untouched later); batch 2 (later
     // mtime): update k=1, delete k=2, insert k=3
     Seq((1L, "x", 1L, "U"), (2L, "y", 1L, "U"), (4L, "w", 1L, "U"))

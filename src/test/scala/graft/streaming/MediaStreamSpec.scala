@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.multimodal.{Media, MediaCodec}
 import graft.multimodal.Media.MediaRow
 
@@ -13,7 +12,7 @@ import graft.multimodal.Media.MediaRow
   * batch pass computes, and re-thresholding from the loaded track is
   * row-for-row the batch analysis — plus the generation-replay and
   * re-crawl (latest-wins) semantics the sink/loader pair guarantees. */
-class MediaStreamSpec extends SparkSpec {
+class MediaStreamSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val W = 48
@@ -35,7 +34,7 @@ class MediaStreamSpec extends SparkSpec {
 
   /** Two single-file micro-batches from `rows` split by id parity. */
   private def streamOf(rows: Seq[MediaRow]) = {
-    val src = Files.createTempDirectory("graft_mediastream_src")
+    val src = tempDir("graft_mediastream_src")
     val ds = rows.toDS()
     ds.filter($"media_id" % 2 === 0).coalesce(1)
       .write.parquet(s"$src/even.parquet.dir")
@@ -49,7 +48,7 @@ class MediaStreamSpec extends SparkSpec {
 
   test("streamed frame-hash generations == batch track; scene cuts re-threshold identically") {
     val rows = videoRows
-    val dir = Files.createTempDirectory("graft_mediastream_vtrack")
+    val dir = tempDir("graft_mediastream_vtrack")
     MediaStream.frameHashesToParquet(streamOf(rows), dir.toString)
     val gens = spark.read.parquet(dir.toString)
       .select("batch_id").distinct().count()
@@ -78,7 +77,7 @@ class MediaStreamSpec extends SparkSpec {
 
   test("streamed audio-energy generations == batch track; VAD re-thresholds identically") {
     val rows = audioRows
-    val dir = Files.createTempDirectory("graft_mediastream_atrack")
+    val dir = tempDir("graft_mediastream_atrack")
     MediaStream.audioEnergyToParquet(streamOf(rows), dir.toString, windowMs = 50)
     val streamed = MediaStream.loadTrack(spark, dir.toString)
       .select("media_id", "win_idx", "start_ms", "end_ms", "rms")
@@ -97,7 +96,7 @@ class MediaStreamSpec extends SparkSpec {
   }
 
   test("replayed generation is idempotent; a re-crawled clip resolves latest-wins") {
-    val dir = Files.createTempDirectory("graft_mediastream_replay")
+    val dir = tempDir("graft_mediastream_replay")
     val gen0 = Seq(
       MediaRow(1L, "video", MediaCodec.synthAvi(1L, W, H, 6 * 40L), W, H, 240L),
       MediaRow(2L, "video", MediaCodec.synthAvi(2L, W, H, 6 * 40L), W, H, 240L)).toDS()
