@@ -1116,18 +1116,8 @@ object Dedup {
     * corpus and re-banded per radius without re-scanning text. */
   def simhashNearDupFromSigs(sigs: DataFrame, maxHamming: Int = 3,
                              bits: Int = 60,
-                             maxPostings: Long = 1000L): DataFrame = {
-    val bands = capBands(simhashBands(sigs, maxHamming, bits),
-      Seq("band_idx", "band_val"), maxPostings)
-    bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
-      .filter(col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("d1"), col("b.doc").as("d2"),
-        col("a.simhash").as("s1"), col("b.simhash").as("s2"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("d1", "d2", "hamming")
-  }
+                             maxPostings: Long = 1000L): DataFrame =
+    hammingPairs(sigs, "doc", "simhash", bits, maxHamming, maxPostings, ("d1", "d2"))
 
   /** Capped-bucket audit for [[simhashNearDup]] ([[bandPostingAudit]]
     * over the same banding): `(band_idx, band_val, n_postings, capped)`
@@ -1150,20 +1140,46 @@ object Dedup {
   def simhashBandAuditFromSigs(sigs: DataFrame, maxHamming: Int = 3,
                                bits: Int = 60,
                                maxPostings: Long = 1000L): DataFrame =
-    bandPostingAudit(simhashBands(sigs, maxHamming, bits),
+    bandPostingAudit(hammingBands(sigs, "doc", "simhash", bits, maxHamming),
       Seq("band_idx", "band_val"), maxPostings)
 
-  /** Pigeonhole banding of a simhash signature frame: one
-    * (doc, simhash, band_idx, band_val) row per band. */
-  private def simhashBands(sigs: DataFrame, maxHamming: Int, bits: Int): DataFrame = {
-    require(bits % (maxHamming + 1) == 0, "bands must divide the hash width")
-    val nBands = maxHamming + 1
+  /** Pigeonhole banding of an `(idCol, hashCol)` frame of `bits`-wide
+    * hashes: radius+1 equal bands, one `(idCol, hashCol, band_idx,
+    * band_val)` row per band. A pair within `radius` bits agrees exactly
+    * on at least one band. Serves the simhash text pipeline and
+    * [[graft.multimodal.Media]]'s phash and audio pipelines. */
+  private[graft] def hammingBands(sigs: DataFrame, idCol: String, hashCol: String,
+                                  bits: Int, radius: Int): DataFrame = {
+    require(radius >= 0 && bits % (radius + 1) == 0,
+      s"radius+1 must divide $bits, got $radius")
+    val nBands = radius + 1
     val width = bits / nBands
-    val mask = (1L << width) - 1
+    // 1L << 64 is 1L on the JVM: a single 64-bit band keeps every bit
+    val mask = if (width == 64) -1L else (1L << width) - 1
     val bandVals = (0 until nBands).map(b =>
-      shiftright(col("simhash"), b * width).bitwiseAND(mask))
-    sigs.select(col("doc"), col("simhash"),
+      shiftright(col(hashCol), b * width).bitwiseAND(mask))
+    sigs.select(col(idCol), col(hashCol),
       posexplode(array(bandVals: _*)).as(Seq("band_idx", "band_val")))
+  }
+
+  /** Exact Hamming pairs within `radius` over [[hammingBands]]: a
+    * frequency-capped ([[capBands]]) band equi-join enumerates the
+    * candidates, popcount of the xor verifies each one. Returns
+    * `(pairCols._1, pairCols._2, hamming)` with the lower id first. */
+  private[graft] def hammingPairs(sigs: DataFrame, idCol: String, hashCol: String,
+                                  bits: Int, radius: Int, maxPostings: Long,
+                                  pairCols: (String, String)): DataFrame = {
+    val (lo, hi) = pairCols
+    val bands = capBands(hammingBands(sigs, idCol, hashCol, bits, radius),
+      Seq("band_idx", "band_val"), maxPostings)
+    bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
+      .filter(col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as(lo), col(s"b.$idCol").as(hi),
+        col(s"a.$hashCol").as("h1"), col(s"b.$hashCol").as("h2"))
+      .distinct()
+      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))).cast("long"))
+      .filter(col("hamming") <= radius)
+      .select(lo, hi, "hamming")
   }
 
   /** 16-bit SimHash per doc via explode + grouped bit-weight sums — the

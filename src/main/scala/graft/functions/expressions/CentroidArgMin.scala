@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * 255.5 s at 10M (29× for 10×; round-16 StressAnn). Here the codebook
   * travels as a REFERENCE OBJECT (`ctx.addReferenceObj`) — a flat
   * `double[]` field on the generated class — so the emitted code is a
-  * constant-size pair of loops regardless of k and d, and the stage stays
-  * inside WholeStageCodegen at any codebook size.
+  * constant-size call into [[CentroidArgMinImpl]] regardless of k and d,
+  * and the stage stays inside WholeStageCodegen at any codebook size.
   *
   * Scoring is bit-identical to the literal form it replaces (the q47/q95/
   * q113/q221 oracle contract):
@@ -57,95 +57,73 @@ case class CentroidArgMin(child: Expression, codebook: Seq[Seq[Double]])
 
   /** Row-major flat codebook — one JVM object shared by every task via
     * the generated class's references array (never inlined as source). */
-  @transient private lazy val flat: Array[Double] = {
-    val a = new Array[Double](k * dim)
-    var c = 0
-    while (c < k) {
-      var i = 0
-      while (i < dim) { a(c * dim + i) = codebook(c)(i); i += 1 }
-      c += 1
-    }
-    a
-  }
+  @transient private lazy val flat: Array[Double] = codebook.flatten.toArray
 
   /** ‖c‖² per cell, folded left-to-right exactly as the literal form's
     * driver-side `c.map(x => x * x).sum`. */
   @transient private lazy val norms: Array[Double] =
     codebook.map(c => c.map(x => x * x).sum).toArray
 
-  /** dist < best under Spark's double ordering (NaN greatest). */
-  private def better(dist: Double, best: Double): Boolean =
-    dist < best || (best.isNaN && !dist.isNaN)
-
   override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    if (x.numElements() != dim) return null
-    var i = 0
-    while (i < dim) { if (x.isNullAt(i)) return null; i += 1 }
-    val v = x.toDoubleArray()
-    var best = 0
-    var bestD = Double.NaN
-    var c = 0
-    while (c < k) {
-      var dot = 0.0
-      val off = c * dim
-      i = 0
-      while (i < dim) { dot += v(i) * flat(off + i); i += 1 }
-      val dist = norms(c) - 2.0 * dot
-      if (c == 0 || better(dist, bestD)) { bestD = dist; best = c }
-      c += 1
-    }
-    best
+    val v = CentroidArgMinImpl.vector(a.asInstanceOf[ArrayData], dim)
+    if (v == null) null else CentroidArgMinImpl.argmin(v, flat, norms, 0, k)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val flatRef = ctx.addReferenceObj("cbFlat", flat, "double[]")
     val normRef = ctx.addReferenceObj("cbNorms", norms, "double[]")
     nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val off = ctx.freshName("off")
       val v = ctx.freshName("v")
-      val dot = ctx.freshName("dot")
-      val dist = ctx.freshName("dist")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val anyNull = ctx.freshName("anyNull")
       s"""
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($a.isNullAt($i)) { $anyNull = true; break; }
-         |  }
-         |  if ($anyNull) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    double[] $v = $a.toDoubleArray();
-         |    int $best = 0;
-         |    double $bestD = Double.NaN;
-         |    for (int $c = 0; $c < $k; $c++) {
-         |      double $dot = 0.0;
-         |      int $off = $c * $dim;
-         |      for (int $i = 0; $i < $dim; $i++) {
-         |        $dot += $v[$i] * $flatRef[$off + $i];
-         |      }
-         |      double $dist = $normRef[$c] - 2.0 * $dot;
-         |      // NOTE: generated lines must never START with '|' — an
-         |      // enclosing codegen template's stripMargin would eat it.
-         |      if ($c == 0 || $dist < $bestD ||
-         |          (Double.isNaN($bestD) && !Double.isNaN($dist))) {
-         |        $bestD = $dist; $best = $c;
-         |      }
-         |    }
-         |    ${ev.value} = $best;
-         |  }
-         |}
-       """.stripMargin
+        double[] $v = graft.functions.expressions.CentroidArgMinImpl.vector($a, $dim);
+        if ($v == null) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = graft.functions.expressions.CentroidArgMinImpl.argmin(
+            $v, $flatRef, $normRef, 0, $k);
+        }
+      """
     })
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** The nearest-centroid rule of [[CentroidArgMin]] and [[TwoLevelArgMin]],
+  * shared by their interpreted and generated paths. */
+object CentroidArgMinImpl {
+  /** `x` as a primitive array, or null when its length is not `dim` or an
+    * element is null (the [[DotProduct]] totality rule). */
+  def vector(x: ArrayData, dim: Int): Array[Double] = {
+    if (x.numElements() != dim) return null
+    var i = 0
+    while (i < dim) { if (x.isNullAt(i)) return null; i += 1 }
+    x.toDoubleArray()
+  }
+
+  /** Index, relative to `from`, of the cell among `cnt` cells of the
+    * row-major book `flat` (first cell `from`) with the least
+    * ‖c‖² − 2·⟨v,c⟩: the dot product folds left to right, ties go to the
+    * lower index and a NaN score orders greatest, so an all-NaN book
+    * picks its first cell. */
+  def argmin(v: Array[Double], flat: Array[Double], norms: Array[Double],
+             from: Int, cnt: Int): Int = {
+    val dim = v.length
+    var best = 0
+    var bestD = Double.NaN
+    var c = 0
+    while (c < cnt) {
+      var dot = 0.0
+      val off = (from + c) * dim
+      var i = 0
+      while (i < dim) { dot += v(i) * flat(off + i); i += 1 }
+      val dist = norms(from + c) - 2.0 * dot
+      if (c == 0 || dist < bestD || (bestD.isNaN && !dist.isNaN)) {
+        bestD = dist; best = c
+      }
+      c += 1
+    }
+    best
+  }
 }

@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * Distance and tie rules are [[CentroidArgMin]]'s exactly (score
   * ‖c‖² − 2·⟨v,c⟩ with driver-side left-to-right norm folds, ties to the
   * lower index, NaN orders greatest) at BOTH levels, so an oracle replays
-  * the composite assignment as two chained argmin windows. Codebooks ride
-  * as reference objects — generated code is constant-size in k₀, k₁, d.
+  * the composite assignment as two chained argmin windows: two calls into
+  * [[CentroidArgMinImpl]], the coarse book and then the chosen cell's
+  * slice of the fine book. Codebooks ride as reference objects —
+  * generated code is constant-size in k₀, k₁, d.
   *
   * NULL input / null element / dimension mismatch → NULL (the
   * [[DotProduct]] totality rule). `fineStride` must be ≥ every
@@ -69,32 +71,13 @@ case class TwoLevelArgMin(child: Expression, coarse: Seq[Seq[Double]],
     fine.map(_.length).toArray
 
   override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    if (x.numElements() != dim) return null
-    var i = 0
-    while (i < dim) { if (x.isNullAt(i)) return null; i += 1 }
-    val v = x.toDoubleArray()
-    def argmin(flat: Array[Double], norms: Array[Double],
-               from: Int, cnt: Int): Int = {
-      var best = 0
-      var bestD = Double.NaN
-      var c = 0
-      while (c < cnt) {
-        var dot = 0.0
-        val off = (from + c) * dim
-        var j = 0
-        while (j < dim) { dot += v(j) * flat(off + j); j += 1 }
-        val dist = norms(from + c) - 2.0 * dot
-        if (c == 0 || dist < bestD || (bestD.isNaN && !dist.isNaN)) {
-          bestD = dist; best = c
-        }
-        c += 1
-      }
-      best
+    val v = CentroidArgMinImpl.vector(a.asInstanceOf[ArrayData], dim)
+    if (v == null) null
+    else {
+      val bc = CentroidArgMinImpl.argmin(v, coarseFlat, coarseNorms, 0, k0)
+      bc * fineStride +
+        CentroidArgMinImpl.argmin(v, fineFlat, fineNorms, fineOff(bc), fineCnt(bc))
     }
-    val bc = argmin(coarseFlat, coarseNorms, 0, k0)
-    val bf = argmin(fineFlat, fineNorms, fineOff(bc), fineCnt(bc))
-    bc * fineStride + bf
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -104,68 +87,20 @@ case class TwoLevelArgMin(child: Expression, coarse: Seq[Seq[Double]],
     val fN = ctx.addReferenceObj("fineNorms", fineNorms, "double[]")
     val fO = ctx.addReferenceObj("fineOff", fineOff, "int[]")
     val fC = ctx.addReferenceObj("fineCnt", fineCnt, "int[]")
+    val impl = "graft.functions.expressions.CentroidArgMinImpl"
     nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
       val v = ctx.freshName("v")
-      val dot = ctx.freshName("dot")
-      val dist = ctx.freshName("dist")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val anyNull = ctx.freshName("anyNull")
       val bc = ctx.freshName("bc")
-      val from = ctx.freshName("from")
-      val cnt = ctx.freshName("cnt")
       s"""
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($a.isNullAt($i)) { $anyNull = true; break; }
-         |  }
-         |  if ($anyNull) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    double[] $v = $a.toDoubleArray();
-         |    int $best = 0;
-         |    double $bestD = Double.NaN;
-         |    for (int $c = 0; $c < $k0; $c++) {
-         |      double $dot = 0.0;
-         |      int $off = $c * $dim;
-         |      for (int $j = 0; $j < $dim; $j++) {
-         |        $dot += $v[$j] * $cF[$off + $j];
-         |      }
-         |      double $dist = $cN[$c] - 2.0 * $dot;
-         |      // generated lines must never START with '|' (stripMargin hazard)
-         |      if ($c == 0 || $dist < $bestD ||
-         |          (Double.isNaN($bestD) && !Double.isNaN($dist))) {
-         |        $bestD = $dist; $best = $c;
-         |      }
-         |    }
-         |    int $bc = $best;
-         |    int $from = $fO[$bc];
-         |    int $cnt = $fC[$bc];
-         |    $best = 0;
-         |    $bestD = Double.NaN;
-         |    for (int $c = 0; $c < $cnt; $c++) {
-         |      double $dot = 0.0;
-         |      int $off = ($from + $c) * $dim;
-         |      for (int $j = 0; $j < $dim; $j++) {
-         |        $dot += $v[$j] * $fF[$off + $j];
-         |      }
-         |      double $dist = $fN[$from + $c] - 2.0 * $dot;
-         |      if ($c == 0 || $dist < $bestD ||
-         |          (Double.isNaN($bestD) && !Double.isNaN($dist))) {
-         |        $bestD = $dist; $best = $c;
-         |      }
-         |    }
-         |    ${ev.value} = $bc * $fineStride + $best;
-         |  }
-         |}
-       """.stripMargin
+        double[] $v = $impl.vector($a, $dim);
+        if ($v == null) {
+          ${ev.isNull} = true;
+        } else {
+          int $bc = $impl.argmin($v, $cF, $cN, 0, $k0);
+          ${ev.value} = $bc * $fineStride +
+            $impl.argmin($v, $fF, $fN, $fO[$bc], $fC[$bc]);
+        }
+      """
     })
   }
 

@@ -162,7 +162,8 @@ object Media {
     * re-decoding the corpus. */
   def phashNearDupPairsFromHashes(p: DataFrame, radius: Int = 3,
                                   maxPostings: Long = 1000L): DataFrame =
-    bandedHammingPairs(p, "phash", 64, radius, maxPostings)
+    graft.dedup.Dedup.hammingPairs(p, "media_id", "phash", 64, radius, maxPostings,
+      ("m1", "m2"))
 
   /** Capped-bucket audit for [[phashNearDupPairs]] over an
     * ALREADY-COMPUTED `(media_id, phash)` frame: one row per band
@@ -175,40 +176,8 @@ object Media {
   def phashBandAuditFromHashes(p: DataFrame, radius: Int = 3,
                                maxPostings: Long = 1000L): DataFrame =
     graft.dedup.Dedup.bandPostingAudit(
-      hashBands(p, "phash", 64, radius),
+      graft.dedup.Dedup.hammingBands(p, "media_id", "phash", 64, radius),
       Seq("band_idx", "band_val"), maxPostings)
-
-  /** Shared banding of a 64/60-bit perceptual-hash frame. */
-  private def hashBands(p: DataFrame, hashCol: String, bits: Int,
-                        radius: Int): DataFrame = {
-    require(radius >= 0 && bits % (radius + 1) == 0,
-      s"radius+1 must divide $bits, got $radius")
-    val nBands = radius + 1
-    val width = bits / nBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val bandVals = (0 until nBands).map(b =>
-      shiftright(col(hashCol), b * width).bitwiseAND(lit(mask)))
-    p.select(col("media_id"), col(hashCol),
-      posexplode(array(bandVals: _*)).as(Seq("band_idx", "band_val")))
-  }
-
-  /** Shared banded-join core of [[phashNearDupPairsFromHashes]] /
-    * [[audioNearDupPairsFromHashes]]: frequency-capped band equi-join,
-    * then exact popcount verification on the candidates. */
-  private def bandedHammingPairs(p: DataFrame, hashCol: String, bits: Int,
-                                 radius: Int, maxPostings: Long): DataFrame = {
-    val bands = graft.dedup.Dedup.capBands(
-      hashBands(p, hashCol, bits, radius),
-      Seq("band_idx", "band_val"), maxPostings)
-    bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("m1"), col("b.media_id").as("m2"),
-        col(s"a.$hashCol").as("h1"), col(s"b.$hashCol").as("h2"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))).cast("long"))
-      .filter(col("hamming") <= radius)
-      .select("m1", "m2", "hamming")
-  }
 
   /** Per-row audio fingerprint: window codes + the 60-bit doc signature
     * ([[MediaCodec.audioFingerprint]]/[[MediaCodec.audioSimhash60]]).
@@ -254,7 +223,8 @@ object Media {
     * frame — fingerprints persisted once, re-banded per radius. */
   def audioNearDupPairsFromHashes(p: DataFrame, radius: Int = 5,
                                   maxPostings: Long = 1000L): DataFrame =
-    bandedHammingPairs(p, "ahash", 60, radius, maxPostings)
+    graft.dedup.Dedup.hammingPairs(p, "media_id", "ahash", 60, radius, maxPostings,
+      ("m1", "m2"))
 
   /** Capped-bucket audit for [[audioNearDupPairs]] over an
     * ALREADY-COMPUTED `(media_id, ahash)` frame (see
@@ -262,7 +232,7 @@ object Media {
   def audioBandAuditFromHashes(p: DataFrame, radius: Int = 5,
                                maxPostings: Long = 1000L): DataFrame =
     graft.dedup.Dedup.bandPostingAudit(
-      hashBands(p, "ahash", 60, radius),
+      graft.dedup.Dedup.hammingBands(p, "media_id", "ahash", 60, radius),
       Seq("band_idx", "band_val"), maxPostings)
 
   /** `(media_id, frame_idx, fhash)` for every video row: `nFrames`

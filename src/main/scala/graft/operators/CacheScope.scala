@@ -26,12 +26,15 @@ import org.apache.spark.storage.StorageLevel
   * returned DataFrame is still referenced: unpersist only drops the cached
   * blocks, later actions recompute.
   */
-final class CacheScope extends AutoCloseable {
+final class CacheScope private (track: Boolean) extends AutoCloseable {
+  def this() = this(track = true)
+
   private val frames = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Persist `df` (MEMORY_AND_DISK) and track it for release. */
+  /** Persist `df` (MEMORY_AND_DISK) and, unless this is
+    * [[CacheScope.unmanaged]], track it for release. */
   private[graft] def persist(df: DataFrame): DataFrame = {
-    frames.add(df)
+    if (track) frames.add(df)
     df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -43,8 +46,11 @@ final class CacheScope extends AutoCloseable {
 }
 
 object CacheScope {
-  /** Shared never-closed scope: registered frames live until the session
+  /** Shared never-closed scope: persisted frames live until the session
     * clears its cache. The default for callers that manage caching
-    * globally. */
-  val unmanaged: CacheScope = new CacheScope
+    * globally. It tracks nothing, so `close` is a no-op and a frame it
+    * persisted is collectable once `clearCache()` drops the cache entry
+    * (a tracking queue nobody drains would hold every frame, codebook
+    * literals included, for the life of the JVM). */
+  val unmanaged: CacheScope = new CacheScope(track = false)
 }

@@ -670,8 +670,8 @@ object Similarity {
       val f = id % fineStride
       if (f < fine(c).length) fine(c)(f)
       // Unprobeable filler. INVARIANT: this sentinel is only safe under
-      // the SQUARED-EUCLIDEAN probe ranking Σ(cᵢ−qᵢ)² that annIvf /
-      // annIvfBatch actually compute — every term overflows to +∞, +∞
+      // the SQUARED-EUCLIDEAN probe ranking Σ(cᵢ−qᵢ)² that probeCells
+      // computes for annIvf / annIvfBatch — every term overflows to +∞, +∞
       // sums stay +∞, and the filler sorts last. Under the expanded
       // form ‖c‖²−2⟨v,c⟩ a positive query yields ∞−∞ = NaN, whose IEEE
       // sort position is arbitrary — if the probe ranking is ever
@@ -782,25 +782,28 @@ object Similarity {
     (spark.read.parquet(s"$dir/cells").select("vec_id", "v", "cell"),
       loadCodebook(spark, dir))
 
+  /** The `nProbe` cells nearest to `q`, nearest first, ties to the lower
+    * cell — the probe list of [[annIvf]] and [[annIvfBatch]]. */
+  private def probeCells(q: Array[Double], centroids: Array[Array[Double]],
+                         nProbe: Int): Array[Int] = {
+    // direct squared-difference form only: compositeCentroids' filler
+    // sentinel depends on it (the invariant is stated there)
+    def d2(c: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < c.length) { val t = c(i) - q(i); s += t * t; i += 1 }
+      s
+    }
+    centroids.zipWithIndex.sortBy { case (c, i) => (d2(c), i) }
+      .take(nProbe).map(_._2)
+  }
+
   /** IVF ANN: search only the `nProbe` cells nearest to the query vector
     * (cells ranked driver-side against the tiny codebook). One scan,
     * cell filter, TakeOrdered — no corpus shuffle. */
   def annIvf(cellAssigned: DataFrame, queryVec: Array[Double],
              centroids: Array[Array[Double]], nProbe: Int, k: Int): DataFrame = {
-    // d2 MUST stay in the direct squared-difference form: the
-    // compositeCentroids filler sentinel (Double.MaxValue/4 per dim)
-    // relies on (c−q)² overflowing to +∞ so fillers rank last; the
-    // algebraically-equal ‖c‖²−2⟨q,c⟩ form would produce ∞−∞ = NaN
-    // there and NaN's sort position is arbitrary.
-    def d2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { val t = c(i) - queryVec(i); s += t * t; i += 1 }
-      s
-    }
-    val probes = centroids.zipWithIndex.sortBy { case (c, i) => (d2(c), i) }
-      .take(nProbe).map(_._2)
     val q = typedLit(queryVec.toSeq)
-    cellAssigned.filter(col("cell").isin(probes: _*))
+    cellAssigned.filter(col("cell").isin(probeCells(queryVec, centroids, nProbe): _*))
       .withColumn("cos_sim", round(cosine(col("v"), q), 4) + lit(0.0))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .select("vec_id", "cell", "cos_sim")
@@ -827,16 +830,8 @@ object Similarity {
                   centroids: Array[Array[Double]], nProbe: Int, k: Int): DataFrame = {
     val spark = cellAssigned.sparkSession
     import spark.implicits._
-    // same invariant as annIvf's d2: direct squared-difference form only
-    // (the compositeCentroids filler sentinel depends on it — see there)
-    def d2(c: Array[Double], q: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { val t = c(i) - q(i); s += t * t; i += 1 }
-      s
-    }
     val probes = queries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex.sortBy { case (c, i) => (d2(c, qv), i) }
-        .take(nProbe).map { case (_, cell) => (qid, cell, qv.toSeq) }
+      probeCells(qv, centroids, nProbe).map(cell => (qid, cell, qv.toSeq))
     }.toDF("query_id", "cell", "qv")
     val scored = cellAssigned.join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("query_id"))

@@ -9,14 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The local harness posture: [[EngineConf.harnessShufflePartitions]]'s
   * byte-derived width and the conf [[EngineConf.localSession]] applies,
   * checked as pure values (no session is opened). */
-class EngineConfSpec extends AnyFunSuite {
-  private def withTempDir[T](f: File => T): T = {
-    val dir = Files.createTempDirectory("graft_width").toFile
-    try f(dir) finally {
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-      dir.delete()
-    }
-  }
+class EngineConfSpec extends AnyFunSuite with TempDirs {
+  private def withTempDir[T](f: File => T): T = f(tempDir("graft_width").toFile)
 
   private def writeMb(dir: File, name: String, mb: Int): Unit =
     Files.write(new File(dir, name).toPath, new Array[Byte](mb << 20))

@@ -12,8 +12,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", TempDirs.jvmTempDir("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -10,7 +10,9 @@ import graft.streaming.EventsStream
 
 /** Temp directories a suite makes through [[tempDir]] are deleted when the
   * test that made them ends, pass or fail; those made through
-  * [[suiteTempDir]] (shared by several tests) when the suite ends. */
+  * [[suiteTempDir]] (shared by several tests) when the suite ends, and
+  * those made through [[TempDirs.jvmTempDir]] (shared by every suite)
+  * when the test JVM exits. */
 trait TempDirs extends BeforeAndAfterEach with BeforeAndAfterAll { this: Suite =>
   private val testDirs = ArrayBuffer.empty[Path]
   private val suiteDirs = ArrayBuffer.empty[Path]
@@ -35,4 +37,12 @@ trait TempDirs extends BeforeAndAfterEach with BeforeAndAfterAll { this: Suite =
 
   override def afterAll(): Unit =
     try super.afterAll() finally deleteAll(suiteDirs)
+}
+
+object TempDirs {
+  def jvmTempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(if (Files.exists(d)) EventsStream.deleteRecursively(d))
+    d
+  }
 }

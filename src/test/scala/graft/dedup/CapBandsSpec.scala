@@ -107,6 +107,14 @@ class CapBandsSpec extends SparkSpec {
     assert(uncapped === Set((1L, 2L, 1L), (100L, 101L, 3L)))
   }
 
+  test("one 64-bit band (bits = 64, maxHamming = 0) buckets on the whole signature") {
+    // (1L << 64) - 1 is 0 on the JVM: a mask built that way puts every
+    // signature in one bucket, which the cap then drops with its real pair
+    val sigs = Seq(1L -> 0x123456789ABCDEFL, 2L -> -42L, 3L -> -42L).toDF("doc", "simhash")
+    assert(pairSet(Dedup.simhashNearDupFromSigs(sigs, maxHamming = 0, bits = 64,
+      maxPostings = 2)) === Set((2L, 3L, 0L)))
+  }
+
   test("simhash audit agrees with the cap: exactly the hot bucket is flagged") {
     val audit = Dedup.simhashBandAuditFromSigs(sigsDf, maxPostings = 5)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> (r.getLong(2), r.getBoolean(3)))

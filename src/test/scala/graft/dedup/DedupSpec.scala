@@ -2,10 +2,10 @@ package graft.dedup
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   lazy val docs = Tables.documents(spark, sfDir).cache()
@@ -40,6 +40,21 @@ class DedupSpec extends SparkSpec {
     assert(persisted.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "closing the scope must unpersist every tracked frame")
     scope.close() // idempotent
+  }
+
+  test("the shared unmanaged scope keeps no reference to a frame it persisted") {
+    // persist and release inside a helper so no stack slot here holds it
+    def persistAndRelease(): java.lang.ref.WeakReference[org.apache.spark.sql.DataFrame] = {
+      val df = graft.operators.CacheScope.unmanaged.persist(docs.select("doc_id"))
+      df.count()
+      df.unpersist(blocking = true)
+      new java.lang.ref.WeakReference(df)
+    }
+    val ref = persistAndRelease()
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
+    assert(ref.get == null,
+      "a frame persisted through the unmanaged scope must be collectable once unpersisted")
   }
 
   test("jaccardPairs agrees with LSH-verified jaccard on planted pairs") {
@@ -262,7 +277,7 @@ class DedupSpec extends SparkSpec {
     val d = docs.select("doc_id", "text")
     val delta = d.filter(col("doc_id") % 4 === 1)
     val base = d.filter(col("doc_id") % 4 =!= 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = tempDir("graft_idx").toString
     Dedup.buildIndex(base, col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(dir)
     val fromIndex = Dedup.incrementalDedupAgainstIndex(

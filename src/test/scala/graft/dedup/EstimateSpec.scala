@@ -3,11 +3,11 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** [[Dedup.nearDuplicatesEstimated]] — signature-agreement scoring of
   * banded candidates (the verify-without-text scale path). */
-class EstimateSpec extends SparkSpec {
+class EstimateSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val cfg = MinHashConfig.generated(64, 16)
@@ -57,7 +57,7 @@ class EstimateSpec extends SparkSpec {
   test("estimated: FromSigs over parquet-reloaded signatures equals one-shot") {
     val oneShot = Dedup.nearDuplicatesEstimated(corpus, col("doc_id"), col("text"),
       minAgree = 30, cfg).collect().map(_.toSeq).toSet
-    val tmp = java.nio.file.Files.createTempDirectory("mhsigs").toString
+    val tmp = tempDir("mhsigs").toString
     Dedup.minhashSignatures(corpus, col("doc_id"), col("text"), cfg)
       .write.mode("overwrite").parquet(tmp)
     val viaSigs = Dedup.nearDuplicatesEstimatedFromSigs(

@@ -184,19 +184,28 @@ class CentroidArgMinSpec extends SparkSpec {
   test("interpreted eval (no codegen) agrees with codegen'd eval") {
     val cents = Array(Array(1.0, 2.0, 3.0), Array(-1.0, 0.5, 2.0),
       Array(0.0, 0.0, 0.0))
+    val fines = Array(
+      Array(Array(1.0, 2.0, 3.0), Array(1.1, 1.9, 3.2)),
+      Array(Array(-1.0, 0.5, 2.0)),
+      Array(Array(0.0, 0.0, 0.0), Array(0.1, -0.1, 0.0)))
     val df = Seq(Seq(1.1, 1.9, 3.2), Seq(-0.5, 0.2, 1.0), Seq(0.1, -0.1, 0.0))
       .toDF("v")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp =
-      try df.select(Native.centroidArgMin(col("v"), cents)).as[Int].collect().toSeq
-      finally {
-        spark.conf.unset("spark.sql.codegen.wholeStage")
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
-    val gen = df.select(Native.centroidArgMin(col("v"), cents))
-      .as[Int].collect().toSeq
-    // row 2: dist(c2=origin) = 0 < dist(c1) = 0.05 — the origin wins
-    assert(interp == gen && interp == Seq(0, 2, 2), s"$interp vs $gen")
+    // flat, row 2: dist(c2=origin) = 0 < dist(c1) = 0.05 — the origin wins;
+    // two-level (stride 2): rows 0 and 2 sit on fine centroid 1 of their
+    // coarse cell, row 1 is nearer the origin than (0.1, -0.1, 0)
+    Seq(Native.centroidArgMin(col("v"), cents) -> Seq(0, 2, 2),
+      Native.twoLevelArgMin(col("v"), cents, fines, 2) -> Seq(1, 4, 5)).foreach {
+      case (argmin, want) =>
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        val interp =
+          try df.select(argmin).as[Int].collect().toSeq
+          finally {
+            spark.conf.unset("spark.sql.codegen.wholeStage")
+            spark.conf.unset("spark.sql.codegen.factoryMode")
+          }
+        val gen = df.select(argmin).as[Int].collect().toSeq
+        assert(interp == gen && interp == want, s"$interp vs $gen")
+    }
   }
 }

@@ -1,14 +1,12 @@
 package graft.ml
 
-import java.nio.file.Files
-
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class PipelinesSpec extends SparkSpec {
+class PipelinesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   /** Small supervised table from lineitem: predict return-flag class /
@@ -96,7 +94,7 @@ class PipelinesSpec extends SparkSpec {
     val model = new Pipeline()
       .setStages((stages :+ Pipelines.rfClassifier("label", numTrees = 3)).toArray)
       .fit(data.limit(1000))
-    val dir = Files.createTempDirectory("graft_model").toString + "/rf"
+    val dir = tempDir("graft_model").toString + "/rf"
     model.write.overwrite().save(dir)
     val back = PipelineModel.load(dir)
     val a = model.transform(data.limit(200)).select("prediction").collect().map(_.getDouble(0)).toSeq

@@ -2,23 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The checkpoint-posture seam: default = localCheckpoint (no checkpoint
   * dir needed), `spark.graft.reliableCheckpoints=true` = reliable
   * checkpoint into the configured dir — and an iterative operator run
   * under the reliable posture returns the identical result. */
-class CheckpointsSpec extends SparkSpec {
+class CheckpointsSpec extends SparkSpec with TempDirs {
 
   private def withReliable[A](f: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val dir = tempDir("graft_ckpt")
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.sparkContext.setCheckpointDir(dir.toString)
-    try f
-    finally {
-      spark.conf.unset(Checkpoints.ReliableConf)
-      graft.streaming.EventsStream.deleteRecursively(dir)
-    }
+    try f finally spark.conf.unset(Checkpoints.ReliableConf)
   }
 
   test("reliable posture without a checkpoint dir fails loudly (when no dir leaked in)") {

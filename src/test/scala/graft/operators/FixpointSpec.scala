@@ -3,14 +3,14 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.tools.RunMetrics
 
 /** The one round loop: its job shape (eager truncation for fixed-count
   * loops, one fused job per round for converging ones), its round limit,
   * and — for every operator built on it — posture invariance: the
   * reliable-checkpoint posture returns the same rows as the default. */
-class FixpointSpec extends SparkSpec {
+class FixpointSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   /** `f`'s result and the Spark jobs it ran. */
@@ -100,14 +100,10 @@ class FixpointSpec extends SparkSpec {
   }
 
   private def withReliable[A](f: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixpoint_ckpt")
+    val dir = tempDir("graft_fixpoint_ckpt")
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.sparkContext.setCheckpointDir(dir.toString)
-    try f
-    finally {
-      spark.conf.unset(Checkpoints.ReliableConf)
-      graft.streaming.EventsStream.deleteRecursively(dir)
-    }
+    try f finally spark.conf.unset(Checkpoints.ReliableConf)
   }
 
   test("every Fixpoint user returns the same rows under the reliable-checkpoint posture") {

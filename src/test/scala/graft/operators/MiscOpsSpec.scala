@@ -1,16 +1,14 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
 /** Coverage for the small reference operators that aren't oracle-checkable
   * (engine-specific RNG, ids, caching, sinks — SURVEY §2.1 S2/S5/S7/S11,
   * §2.2 P14/P15/P16/P17). */
-class MiscOpsSpec extends SparkSpec {
+class MiscOpsSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   lazy val orders = Tables.orders(spark, sfDir)
@@ -46,7 +44,7 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("CSV sink/scan round-trip preserves rows (S2/S5, project_starter_script.py:137-141)") {
-    val dir = Files.createTempDirectory("graft_csv").toString + "/out"
+    val dir = tempDir("graft_csv").toString + "/out"
     val src = orders.select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
     src.coalesce(1).write.option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
@@ -55,7 +53,7 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("ORC sink/scan round-trip with predicate pushdown (columnar source beyond parquet)") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/out"
+    val dir = tempDir("graft_orc").toString + "/out"
     val src = orders.select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
     src.write.orc(dir)
     val back = spark.read.orc(dir).filter($"o_totalprice" > 1000.0)
@@ -66,7 +64,7 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("partitioned parquet sink enables partition pruning (S4 + §4)") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/by_status"
+    val dir = tempDir("graft_part").toString + "/by_status"
     orders.write.partitionBy("o_orderstatus").parquet(dir)
     val pruned = spark.read.parquet(dir).filter($"o_orderstatus" === "F")
     val plan = pruned.queryExecution.executedPlan.toString
@@ -76,7 +74,7 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("JSON sink/scan round-trip with explicit schema (north-star: JSON/Parquet)") {
-    val dir = Files.createTempDirectory("graft_json").toString + "/events"
+    val dir = tempDir("graft_json").toString + "/events"
     val src = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value", $"props")
     src.write.json(dir)
@@ -97,7 +95,7 @@ class MiscOpsSpec extends SparkSpec {
   test("zstd parquet round-trips and beats snappy on text (the 100 TB codec)") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     def write(codec: String): (String, Long) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$codec").toString
+      val dir = tempDir(s"graft_$codec").toString
       docs.coalesce(1).write.mode("overwrite")
         .option("compression", codec).parquet(dir)
       val bytes = new java.io.File(dir).listFiles()

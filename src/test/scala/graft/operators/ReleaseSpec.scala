@@ -4,15 +4,15 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class ReleaseSpec extends SparkSpec {
+class ReleaseSpec extends SparkSpec with TempDirs {
 
   private val d = Tables.documents(spark, sfDir).select("doc_id", "text")
 
   test("writeRelease: files on disk re-derive the exact returned manifest") {
-    val dir = Files.createTempDirectory("graft_release").toString
+    val dir = tempDir("graft_release").toString
     val m = Release.writeRelease(d, col("doc_id"), col("text"), 8, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3))).toMap

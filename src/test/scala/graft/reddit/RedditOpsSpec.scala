@@ -2,13 +2,13 @@ package graft.reddit
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** End-to-end replication of the reference's query chains on the
   * synthetic Reddit fixtures (SURVEY.md §5 golden plan: structure and
   * invariants of the data/csv goldens, re-derived since the original
   * inputs are unreachable). */
-class RedditOpsSpec extends SparkSpec {
+class RedditOpsSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   lazy val submissions = RedditFixtures.submissions(spark).cache()
@@ -113,7 +113,7 @@ class RedditOpsSpec extends SparkSpec {
   test("games CSV round-trips quoted column names with an explicit schema (S3)") {
     // the reference ingests this file via a pandas hop (Data_Gathering.py:113,137);
     // the engine reads CSV with a declared StructType - no inference, no pandas
-    val dir = java.nio.file.Files.createTempDirectory("graft_games").toString + "/games"
+    val dir = tempDir("graft_games").toString + "/games"
     games.write.option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").schema(RedditSchema.games).csv(dir)
     assert(back.count() == games.count())

@@ -2,10 +2,10 @@ package graft.similarity
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   lazy val emb = Tables.embeddings(spark, sfDir).cache()
@@ -117,7 +117,7 @@ class SimilaritySpec extends SparkSpec {
   test("persisted IVF index: delta build == one-shot, replay replaces, codebook drift rejected") {
     val cents = Similarity.seededCentroids(emb, col("vec_id"), col("embedding"),
       Seq(1L, 2L, 3L, 4L))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_spec").toString
+    val dir = tempDir("ivf_spec").toString
     def ingest(m: Int, id: Long): Unit =
       Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 2 === m),
         col("vec_id"), col("embedding"), cents, dir, id)
@@ -153,7 +153,7 @@ class SimilaritySpec extends SparkSpec {
     // no special-casing (same batch id overwrites its own partition).
     val cents = Similarity.seededCentroids(emb, col("vec_id"), col("embedding"),
       Seq(1L, 2L, 3L, 4L))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_crash").toString
+    val dir = tempDir("ivf_crash").toString
     Similarity.ivfIndexAppend(emb, col("vec_id"), col("embedding"), cents, dir, 0L)
     // "crash": delete the commit marker, leaving only the cells
     graft.streaming.EventsStream.deleteRecursively(

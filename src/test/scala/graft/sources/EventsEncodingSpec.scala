@@ -5,7 +5,7 @@ import java.nio.file.Paths
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.TimestampType
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.streaming.EventsStream
 
 /** Schema-drift regression guard for the events table.
@@ -20,7 +20,7 @@ import graft.streaming.EventsStream
   * regen that changes the encoding again either decodes identically or
   * fails these tests loudly — it can never ship a silent misread.
   */
-class EventsEncodingSpec extends SparkSpec {
+class EventsEncodingSpec extends SparkSpec with TempDirs {
 
   private def fixture(name: String): String =
     Paths.get(getClass.getResource(s"/events_ts_fixtures/$name/events.parquet").toURI)
@@ -92,27 +92,23 @@ class EventsEncodingSpec extends SparkSpec {
   }
 
   test("start-stream-before-data: loud without fallback, live with it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-events")
-    try {
-      // no files yet: the probe cannot know the encoding — must refuse
-      val err = intercept[IllegalStateException] {
-        EventsStream.read(spark, dir.toString)
-      }
-      assert(err.getMessage.contains("fallbackSchema"),
-        s"error should point at the opt-in: ${err.getMessage}")
-      // with the pinned-encoding opt-in the stream starts on the empty
-      // dir and picks up the first file on arrival
-      val stream = EventsStream.read(spark, dir.toString,
-        fallbackSchema = Some(EventsStream.defaultOnDiskSchema))
-      val src = Paths.get(
-        getClass.getResource("/events_ts_fixtures/us_ntz/events.parquet").toURI)
-      java.nio.file.Files.copy(src, dir.resolve("events.parquet"))
-      val streamed = EventsStream.runToMemory(stream, OutputMode.Append())
-      assert(canon(streamed) == canon(Tables.events(spark, fixture("us_ntz"))),
-        "pre-started stream decoded the late-arriving file differently from batch")
-    } finally {
-      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.deleteIfExists(dir)
+    val dir = tempDir("graft-empty-events")
+    // no files yet: the probe cannot know the encoding — must refuse
+    val err = intercept[IllegalStateException] {
+      EventsStream.read(spark, dir.toString)
     }
+    assert(err.getMessage.contains("fallbackSchema"),
+      s"error should point at the opt-in: ${err.getMessage}")
+    // with the pinned-encoding opt-in the stream starts on the empty
+    // dir and picks up the first file on arrival
+    val stream = EventsStream.read(spark, dir.toString,
+      fallbackSchema = Some(EventsStream.defaultOnDiskSchema))
+    val src = Paths.get(
+      getClass.getResource("/events_ts_fixtures/us_ntz/events.parquet").toURI)
+    java.nio.file.Files.copy(src, dir.resolve("events.parquet"))
+    val streamed = EventsStream.runToMemory(stream, OutputMode.Append())
+    assert(canon(streamed) == canon(Tables.events(spark, fixture("us_ntz"))),
+      "pre-started stream decoded the late-arriving file differently from batch")
   }
 
   test("an unknown ts encoding fails loudly instead of guessing") {

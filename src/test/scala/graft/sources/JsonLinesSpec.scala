@@ -4,14 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class JsonLinesSpec extends SparkSpec {
+class JsonLinesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("documents round-trip parquet -> jsonl -> frame, value for value") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDir("graft_jsonl").toString
     JsonLines.writeDocuments(docs, dir)
     val back = JsonLines.good(JsonLines.readDocuments(spark, dir))
     assert(back.count() == docs.count())
@@ -27,7 +27,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("gzip-compressed JSONL round-trips transparently") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_jsonl_gz").toString
+    val dir = tempDir("graft_jsonl_gz").toString
     JsonLines.writeDocuments(docs, dir, codec = Some("gzip"))
     val parts = new java.io.File(dir).listFiles().map(_.getName)
     assert(parts.exists(_.endsWith(".json.gz")), parts.mkString(","))
@@ -38,7 +38,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("malformed lines quarantine with full fidelity; good rows still parse") {
-    val dir = Files.createTempDirectory("graft_jsonl_bad")
+    val dir = tempDir("graft_jsonl_bad")
     val f = dir.resolve("part-000.jsonl")
     Files.writeString(f,
       """{"doc_id": 1, "text": "ok one", "lang": "en", "source": "s", "n_chars": 6}
@@ -55,7 +55,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("null-struct lines (blank, whitespace, literal null) quarantine, not phantom rows") {
-    val dir = Files.createTempDirectory("graft_jsonl_nullstruct")
+    val dir = tempDir("graft_jsonl_nullstruct")
     val f = dir.resolve("part-000.jsonl")
     // from_json returns a NULL STRUCT (not a corrupt record) for these
     // three middle lines — they must land in quarantine, never as

@@ -6,9 +6,9 @@ import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class WarcSpec extends SparkSpec {
+class WarcSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   /** Build one WARC/1.0 record: named headers + Content-Length computed
@@ -55,7 +55,7 @@ class WarcSpec extends SparkSpec {
         date = "2026-08-13T01:02:03Z")
 
   test("read parses every record type with headers, typed date, and exact blocks") {
-    val dir = Files.createTempDirectory("graft_warc")
+    val dir = tempDir("graft_warc")
     writeWarc(dir, "seg-00000.warc", corpus)
     val df = Warc.read(spark, dir.toString).cache()
     assert(df.count() == 4)
@@ -75,7 +75,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("content-length slicing is byte-based: multibyte bodies survive exactly") {
-    val dir = Files.createTempDirectory("graft_warc_mb")
+    val dir = tempDir("graft_warc_mb")
     writeWarc(dir, "seg.warc", corpus)
     val uni = Warc.read(spark, dir.toString)
       .filter($"target_uri" === "http://example.com/café")
@@ -84,7 +84,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("responses() yields the document-pipeline shape with HTTP bodies stripped") {
-    val dir = Files.createTempDirectory("graft_warc_resp")
+    val dir = tempDir("graft_warc_resp")
     writeWarc(dir, "seg.warc", corpus)
     val resp = Warc.responses(spark, dir.toString).cache()
     assert(resp.columns.toSeq == Seq("target_uri", "warc_date", "content_type", "html"))
@@ -100,7 +100,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("httpBody passes non-HTTP blocks (warcinfo, metadata) through whole") {
-    val dir = Files.createTempDirectory("graft_warc_info")
+    val dir = tempDir("graft_warc_info")
     writeWarc(dir, "seg.warc", corpus)
     val info = Warc.read(spark, dir.toString)
       .filter($"warc_type" === "warcinfo")
@@ -109,7 +109,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("gzip members read transparently; multi-file dirs parallelize per file") {
-    val dir = Files.createTempDirectory("graft_warc_gz")
+    val dir = tempDir("graft_warc_gz")
     writeWarc(dir, "seg-00000.warc.gz", corpus, gzip = true)
     writeWarc(dir, "seg-00001.warc.gz",
       record("response", "http://example.org/b", httpHtml), gzip = true)

@@ -5,15 +5,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 import graft.text.Instruct
 
-class ChatStreamSpec extends SparkSpec {
+class ChatStreamSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   lazy val streamDir: String = {
-    val d = Files.createTempDirectory("graft_chat_stream")
+    val d = suiteTempDir("graft_chat_stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     d.toString

@@ -7,19 +7,19 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The stream driver's lifecycle: what a run leaves behind in the
   * session (catalog views, active queries, the shuffle width) and on disk
   * (the throwaway checkpoint), on success and on failure. */
-class StreamDriverSpec extends SparkSpec {
+class StreamDriverSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val Width = "spark.sql.shuffle.partitions"
 
   /** A file stream over ids 0..99, split into two files. */
   private lazy val stream: DataFrame = {
-    val dir = Files.createTempDirectory("graft_driver_stream").toString
+    val dir = suiteTempDir("graft_driver_stream").toString
     spark.range(100).toDF("id").repartition(2).write.parquet(s"$dir/ids")
     spark.readStream.schema("id LONG").option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/ids")

@@ -3,9 +3,9 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
-class RetrievalSpec extends SparkSpec {
+class RetrievalSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): DataFrame =
@@ -88,7 +88,7 @@ class RetrievalSpec extends SparkSpec {
     val oneShot = topK(c, q, 3).collect().map(_.toSeq).toSet
     val ix = Retrieval.bm25Index(c, col("doc_id"), split(col("text"), " "))
     // the index IS the persistable artifact: parquet round-trip, query the reload
-    val tmp = java.nio.file.Files.createTempDirectory("bm25ix").toString
+    val tmp = tempDir("bm25ix").toString
     ix.postings.write.mode("overwrite").parquet(s"$tmp/postings")
     ix.stats.write.mode("overwrite").parquet(s"$tmp/stats")
     val reloaded = Retrieval.Bm25Index(

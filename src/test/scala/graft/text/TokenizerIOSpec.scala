@@ -1,17 +1,15 @@
 package graft.text
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.Tables
 
-class TokenizerIOSpec extends SparkSpec {
+class TokenizerIOSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def tmp(p: String): String =
-    Files.createTempDirectory(p).toString
+    tempDir(p).toString
 
   test("BPE merge table round-trips in learned order; encode is identical") {
     val d = Tables.documents(spark, sfDir)
