@@ -597,10 +597,12 @@ object Media {
     *   - `riff`: keep everything except `JUNK`, `id3 `, and
     *     `LIST INFO`;
     *   - any other fmt: keep (unrecognized containers pass through).
-    * The SAME rules stripPng/stripJpeg/stripRiff hard-code over bytes,
-    * expressed relationally so an external engine can audit a scrub
-    * manifest; `MediaScrubSpec` pins byte-vs-policy agreement
-    * chunk-for-chunk on real payloads via [[MediaCodec.chunkInventory]],
+    * The SAME rule the codec's byte scrub applies to every child its
+    * container readers (PNG chunks, JPEG segments, RIFF children at
+    * any depth) return, expressed relationally so an external engine
+    * can audit a scrub manifest; `MediaScrubSpec` pins byte-vs-policy
+    * agreement chunk-for-chunk on real payloads via
+    * [[MediaCodec.chunkInventory]],
     * and q218 hash-matches the policy + audit arithmetic tri-scale. */
   def scrubKeep(fmt: Column, kind: Column, marker: Column,
                 listType: Column): Column =
@@ -695,7 +697,19 @@ object Media {
   * and a RIFF/AVI parser for MJPEG video whose frames `ImageIO`
   * decodes (see module doc). Decode sniffs the payload container;
   * anything unrecognized passes through as opaque bytes (quarantine,
-  * not a crash — the histogram-embed fallback). */
+  * not a crash — the histogram-embed fallback).
+  *
+  * Each container layout has ONE reader — PNG chunks, JPEG segments,
+  * RIFF children — and decode, the metadata scrub and the inventory
+  * all read through it, with every declared length bounds-checked in
+  * `Long` (a length near 2^31 must not wrap past an `Int` check).
+  * Strict versus tolerant is decided once, here: [[chunkInventory]]
+  * and [[stripMetadata]] read STRICTLY — a child whose declared length
+  * runs past its container is malformed, so the inventory throws
+  * `IllegalArgumentException` and the scrub passes the payload through
+  * unchanged — while [[decode]] reads RIFF TOLERANTLY, clamping a
+  * truncated last child to the bytes present, so a cut-short AVI keeps
+  * the frames before the cut. */
 object MediaCodec {
   import java.awt.image.{BufferedImage, DataBufferByte}
   import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -721,43 +735,23 @@ object MediaCodec {
 
   private val PngSig = Array(0x89, 'P', 'N', 'G').map(_.toByte)
 
-  private def looksLikeImage(payload: Array[Byte]): Boolean =
-    payload.length >= 4 && (
-      payload.startsWith(PngSig) ||                                   // PNG
-      (payload(0) == 0xff.toByte && payload(1) == 0xd8.toByte) ||     // JPEG
-      (payload(0) == 'B' && payload(1) == 'M') ||                     // BMP
-      (payload(0) == 'G' && payload(1) == 'I' && payload(2) == 'F'))  // GIF
+  /** The container a payload's magic bytes name: "png", "jpeg" and
+    * "riff" have readers below, "image" (BMP, GIF) only decodes through
+    * ImageIO, "" is unrecognized. */
+  private def sniff(p: Array[Byte]): String =
+    if (p.length < 4) ""
+    else if (p.startsWith(PngSig)) "png"
+    else if ((p(0) & 0xff) == 0xFF && (p(1) & 0xff) == 0xD8) "jpeg"
+    else if (p.length >= 12 && p.startsWith(fourcc("RIFF"))) "riff"
+    else if ((p(0) == 'B' && p(1) == 'M') || (p(0) == 'G' && p(1) == 'I' && p(2) == 'F')) "image"
+    else ""
 
-  private def isRiff(payload: Array[Byte], form: String): Boolean =
-    payload.length >= 12 &&
-      payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' && payload(3) == 'F' &&
-      payload(8) == form(0) && payload(9) == form(1) &&
-      payload(10) == form(2) && payload(11) == form(3)
+  private def pixels(img: BufferedImage): Array[Byte] =
+    img.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
 
-  private def looksLikeWav(payload: Array[Byte]): Boolean = isRiff(payload, "WAVE")
-
-  private def looksLikeAvi(payload: Array[Byte]): Boolean = isRiff(payload, "AVI ")
-
-  private def toGray(img: BufferedImage): BufferedImage =
-    if (img.getType == BufferedImage.TYPE_BYTE_GRAY) img
-    else {
-      val g = new BufferedImage(img.getWidth, img.getHeight, BufferedImage.TYPE_BYTE_GRAY)
-      val g2 = g.createGraphics()
-      g2.drawImage(img, 0, 0, null)
-      g2.dispose()
-      g
-    }
-
-  private def grayImage(r: ImageRaster): BufferedImage = {
-    val img = new BufferedImage(r.width, r.height, BufferedImage.TYPE_BYTE_GRAY)
-    System.arraycopy(r.pixels, 0,
-      img.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData, 0, r.pixels.length)
-    img
-  }
-
-  private def encodePng(img: BufferedImage): Array[Byte] = {
+  private def encode(img: BufferedImage, format: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", out)
+    ImageIO.write(img, format, out)
     out.toByteArray
   }
 
@@ -767,14 +761,14 @@ object MediaCodec {
     * make every synthetic image trivially "similar" — gratings give each
     * seed a distinct pooled signature. */
   def synthPng(seed: Long, w: Int, h: Int): Array[Byte] =
-    encodePng(grating(seed, w, h, 0.0))
+    encode(grating(seed, w, h, 0.0), "png")
 
   /** The shared seeded-grating renderer behind [[synthPng]] and
     * [[synthAvi]] frames; `phaseShift` advances the texture per video
     * frame (motion, deterministically). */
   private def grating(seed: Long, w: Int, h: Int, phaseShift: Double): BufferedImage = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    val px = img.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+    val px = pixels(img)
     val fx = 1 + math.floorMod(seed, 5L).toInt
     val fy = 1 + math.floorMod(seed / 5, 5L).toInt
     val phase = math.floorMod(seed, 360L).toDouble.toRadians + phaseShift
@@ -804,28 +798,25 @@ object MediaCodec {
     * cosine-rounds to 1.0); harmonics spread the embedding across all
     * windows' crossing statistics. Duration clamps to [200 ms, 2 s] so
     * synthetic payloads stay small. */
-  def synthWav(seed: Long, durationMs: Long): Array[Byte] = {
+  def synthWav(seed: Long, durationMs: Long): Array[Byte] =
+    pcmToWav(tone(seed, durationMs), WavRate)
+
+  /** The seeded harmonic tone behind [[synthWav]] and [[synthWavGapped]]. */
+  private def tone(seed: Long, durationMs: Long): Array[Short] = {
     val f0 = 150.0 + math.floorMod(seed, 211L) * 5.0
     val h2 = math.floorMod(seed, 13L) / 20.0
     val h3 = math.floorMod(seed, 31L) / 40.0
     val amp = (0.25 + math.floorMod(seed, 89L) * 0.004) / (1.0 + h2 + h3)
     val ms = durationMs.max(200L).min(2000L)
-    val n = (WavRate * ms / 1000).toInt
-    val pcm = new Array[Byte](n * 2)
+    val samples = new Array[Short]((WavRate * ms / 1000).toInt)
     var i = 0
-    while (i < n) {
+    while (i < samples.length) {
       val t = 2 * math.Pi * f0 * i / WavRate
       val v = math.sin(t) + h2 * math.sin(2 * t) + h3 * math.sin(3 * t)
-      val s = (v * amp * 32767).toInt.toShort
-      pcm(2 * i) = (s & 0xff).toByte
-      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+      samples(i) = (v * amp * 32767).toInt.toShort
       i += 1
     }
-    val fmt = new AudioFormat(WavRate, 16, 1, true, false)
-    val ais = new AudioInputStream(new ByteArrayInputStream(pcm), fmt, n.toLong)
-    val out = new ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
+    samples
   }
 
   // ---------------------------------------------------------------- video
@@ -843,19 +834,15 @@ object MediaCodec {
     (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
       ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 
-  private def chunk(id: String, body: Array[Byte]): Array[Byte] = {
+  private def chunk(id: String, body: Array[Byte]): Array[Byte] = chunk(fourcc(id), body)
+
+  private def chunk(id: Array[Byte], body: Array[Byte]): Array[Byte] = {
     val pad = body.length % 2 // RIFF chunks are word-aligned
-    fourcc(id) ++ le32(body.length) ++ body ++ Array.fill[Byte](pad)(0)
+    id ++ le32(body.length) ++ body ++ Array.fill[Byte](pad)(0)
   }
 
   private def list(listType: String, children: Array[Byte]): Array[Byte] =
     chunk("LIST", fourcc(listType) ++ children)
-
-  private def encodeJpeg(img: BufferedImage): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    ImageIO.write(img, "jpg", out)
-    out.toByteArray
-  }
 
   /** Assemble an MJPEG AVI from already-encoded JPEG frames: RIFF('AVI ')
     * → LIST hdrl (avih + LIST strl(strh 'vids'/'MJPG' + strf
@@ -903,7 +890,7 @@ object MediaCodec {
   def synthAvi(seed: Long, w: Int, h: Int, durationMs: Long): Array[Byte] = {
     val n = (durationMs / (AviMicrosPerFrame / 1000)).max(2L).min(8L).toInt
     aviBytes((0 until n).map(i =>
-      encodeJpeg(grating(seed, w, h, i * math.Pi / 8))), w, h)
+      encode(grating(seed, w, h, i * math.Pi / 8), "jpg")), w, h)
   }
 
   /** [[synthAvi]] with a planted HARD CUT: frames before `cutAt` render
@@ -930,7 +917,7 @@ object MediaCodec {
     require(nFrames >= 2 && cutAt >= 1 && cutAt < nFrames,
       s"need 1 <= cutAt < nFrames (>= 2), got $cutAt/$nFrames")
     def hashOf(seed: Long, phaseShift: Double): Long =
-      frameRaster(encodeJpeg(grating(seed, w, h, phaseShift)))
+      frameRaster(encode(grating(seed, w, h, phaseShift), "jpg"))
         .flatMap(dHash64).getOrElse(
           throw new IllegalStateException("synthetic frame must decode"))
     val preCutHash = hashOf(seedA, (cutAt - 1) * math.Pi / 8)
@@ -939,8 +926,8 @@ object MediaCodec {
       .getOrElse(throw new IllegalStateException(
         s"no strong-cut seed near $seedB for ${w}x$h"))
     aviBytes((0 until nFrames).map { i =>
-      if (i < cutAt) encodeJpeg(grating(seedA, w, h, i * math.Pi / 8))
-      else encodeJpeg(grating(sB, w, h, (i - cutAt) * math.Pi / 8))
+      if (i < cutAt) encode(grating(seedA, w, h, i * math.Pi / 8), "jpg")
+      else encode(grating(sB, w, h, (i - cutAt) * math.Pi / 8), "jpg")
     }, w, h)
   }
 
@@ -952,63 +939,33 @@ object MediaCodec {
   def synthWavGapped(seed: Long, durationMs: Long, toneMs: Long,
                      gapMs: Long): Array[Byte] = {
     require(toneMs >= 1 && gapMs >= 1, s"need positive toneMs/gapMs, got $toneMs/$gapMs")
-    val base = synthWav(seed, durationMs)
-    val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(base))
-    val fmt = ais.getFormat
-    val bytes = ais.readAllBytes()
-    val n = bytes.length / 2
-    val period = toneMs + gapMs
+    val samples = tone(seed, durationMs)
     var i = 0
-    while (i < n) {
-      val ms = (i * 1000.0 / fmt.getSampleRate).toLong
-      if (ms % period >= toneMs) { bytes(2 * i) = 0; bytes(2 * i + 1) = 0 }
+    while (i < samples.length) {
+      if ((i * 1000.0 / WavRate).toLong % (toneMs + gapMs) >= toneMs) samples(i) = 0
       i += 1
     }
-    val out = new ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(new ByteArrayInputStream(bytes),
-      fmt, n.toLong), AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
+    pcmToWav(samples, WavRate)
   }
 
-  /** Parse an MJPEG AVI: walk the RIFF tree for `avih` (µs-per-frame)
-    * and the `movi` list's `..dc`/`..db` frame chunks. Tolerant of
-    * unknown chunks (skipped by size) and missing idx1 (the index is
-    * redundant with a full scan); malformed containers return None and
-    * the payload quarantines as Opaque. */
+  /** Parse an MJPEG AVI: fold the RIFF tree (read tolerantly) for
+    * `avih` (µs-per-frame) and the `movi` list's `..dc`/`..db` frame
+    * chunks. Tolerant of unknown chunks (skipped by size) and missing
+    * idx1 (the index is redundant with a full scan); malformed
+    * containers return None and the payload quarantines as Opaque. */
   private def parseAvi(payload: Array[Byte]): Option[VideoMjpeg] = {
     var microsPerFrame = AviMicrosPerFrame
     val frames = Vector.newBuilder[Array[Byte]]
-    def isFrameId(id: String): Boolean =
-      id.length == 4 && (id.endsWith("dc") || id.endsWith("db"))
-    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Unit = {
-      // real AVI nests LISTs ~3 deep; a crafted payload of back-to-back
-      // LIST headers would otherwise recurse once per level and throw
-      // StackOverflowError — an Error the quarantine catch below does
-      // NOT intercept. Bound the depth so malformed nesting stays an
-      // Exception and the row quarantines as Opaque like any other
-      // malformed container.
-      if (depth > 32)
-        throw new IllegalArgumentException("RIFF list nesting too deep")
-      var p = from
-      while (p + 8 <= until) {
-        val id = new String(payload, p, 4, "US-ASCII")
-        val size = readLe32(payload, p + 4).toInt
-        // a size whose u32 wraps negative would walk p BACKWARD and spin
-        // forever — malformed container, abort to the Opaque quarantine
-        if (size < 0) throw new IllegalArgumentException(s"bad RIFF chunk size $size")
-        val dataStart = p + 8
-        val dataEnd = math.min(dataStart + size, until)
-        if (id == "LIST" && size >= 4) {
-          val listType = new String(payload, dataStart, 4, "US-ASCII")
-          walk(dataStart + 4, dataEnd, inMovi || listType == "movi", depth + 1)
-        } else if (id == "avih" && size >= 4) {
-          microsPerFrame = readLe32(payload, dataStart)
-        } else if (inMovi && isFrameId(id) && size > 0) {
-          frames += java.util.Arrays.copyOfRange(payload, dataStart, dataEnd)
-        }
-        p = dataStart + size + (size % 2)
+    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Unit =
+      riffChildren(payload, from, until, strict = false, depth).foreach { c =>
+        if (c.row.listType.nonEmpty)
+          walk(c.at + 12, c.end, inMovi || c.row.listType == "movi", depth + 1)
+        // the clock is read only when its 4 bytes lie inside the list
+        else if (c.row.kind == "avih" && c.end - c.at >= 12)
+          microsPerFrame = readLe32(payload, c.at + 8)
+        else if (inMovi && isFrameId(c.row.kind) && c.row.size > 8)
+          frames += java.util.Arrays.copyOfRange(payload, c.at + 8, c.end)
       }
-    }
     try {
       walk(12, payload.length, inMovi = false, depth = 0)
       val fs = frames.result()
@@ -1017,58 +974,56 @@ object MediaCodec {
     } catch { case _: Exception => None }
   }
 
-  /** Decode one MJPEG frame to the grayscale raster the image pipeline
-    * uses — same ImageIO path as top-level images. */
+  private def isFrameId(kind: String): Boolean = kind.endsWith("dc") || kind.endsWith("db")
+
+  /** Decode one image (an MJPEG frame, or any payload [[decode]] sniffs
+    * as an image) to the grayscale raster the image pipeline uses. A
+    * payload can match an image magic by accident (text starting with
+    * "BM"/"GIF"), and ImageIO then throws on the garbage body: that is
+    * None, not a failed task. */
   def frameRaster(jpeg: Array[Byte]): Option[ImageRaster] =
     try {
-      val img = ImageIO.read(new ByteArrayInputStream(jpeg))
-      if (img == null) None
-      else {
-        val g = toGray(img)
-        Some(ImageRaster(g.getWidth, g.getHeight,
-          g.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData))
+      Option(ImageIO.read(new ByteArrayInputStream(jpeg))).map { img =>
+        val g =
+          if (img.getType == BufferedImage.TYPE_BYTE_GRAY) img
+          else {
+            val gray = new BufferedImage(img.getWidth, img.getHeight, BufferedImage.TYPE_BYTE_GRAY)
+            val g2 = gray.createGraphics()
+            g2.drawImage(img, 0, 0, null)
+            g2.dispose()
+            gray
+          }
+        ImageRaster(g.getWidth, g.getHeight, pixels(g))
       }
     } catch { case _: Exception => None }
 
   /** Real decode for recognized containers (ImageIO → grayscale raster,
     * AudioSystem → 16-bit PCM, RIFF/AVI walk → MJPEG frame list);
     * opaque passthrough otherwise. */
-  def decode(payload: Array[Byte]): Decoded =
-    if (looksLikeImage(payload)) {
-      // guard like the WAV branch: payloads can match an image magic by
-      // accident (text starting with "BM"/"GIF" — the stub-video rows
-      // carry raw text), and ImageIO then throws on the garbage body;
-      // a malformed image must quarantine as Opaque, not kill the task
-      try {
-        val img = ImageIO.read(new ByteArrayInputStream(payload))
-        if (img == null) Opaque(payload)
-        else {
-          val g = toGray(img)
-          val px = g.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
-          ImageRaster(g.getWidth, g.getHeight, px)
-        }
-      } catch { case _: Exception => Opaque(payload) }
-    } else if (looksLikeWav(payload)) {
-      try {
-        val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
-        val fmt = ais.getFormat
-        if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1) Opaque(payload)
-        else {
-          val bytes = ais.readAllBytes()
-          val n = bytes.length / 2
-          val samples = new Array[Short](n)
-          var i = 0
-          while (i < n) {
-            // WAV PCM is little-endian
-            samples(i) = (((bytes(2 * i + 1) & 0xff) << 8) | (bytes(2 * i) & 0xff)).toShort
-            i += 1
+  def decode(payload: Array[Byte]): Decoded = sniff(payload) match {
+    case "" => Opaque(payload)
+    case "riff" => new String(payload, 8, 4, "US-ASCII") match {
+      case "WAVE" =>
+        try {
+          val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
+          val fmt = ais.getFormat
+          if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1) Opaque(payload)
+          else {
+            val bytes = ais.readAllBytes()
+            val samples = new Array[Short](bytes.length / 2)
+            var i = 0
+            while (i < samples.length) { // WAV PCM is little-endian
+              samples(i) = (((bytes(2 * i + 1) & 0xff) << 8) | (bytes(2 * i) & 0xff)).toShort
+              i += 1
+            }
+            AudioPcm(fmt.getSampleRate, samples)
           }
-          AudioPcm(fmt.getSampleRate, samples)
-        }
-      } catch { case _: Exception => Opaque(payload) }
-    } else if (looksLikeAvi(payload)) {
-      parseAvi(payload).getOrElse(Opaque(payload))
-    } else Opaque(payload)
+        } catch { case _: Exception => Opaque(payload) }
+      case "AVI " => parseAvi(payload).getOrElse(Opaque(payload))
+      case _ => Opaque(payload)
+    }
+    case _ => frameRaster(payload).getOrElse(Opaque(payload))
+  }
 
   def checksum(payload: Array[Byte]): Long =
     payload.foldLeft(1469598103934665603L)((h, b) => (h ^ (b & 0xff)) * 1099511628211L)
@@ -1100,8 +1055,19 @@ object MediaCodec {
     }
   }
 
-  /** Render 16-bit mono PCM as a standard little-endian WAV. */
+  /** Render 16-bit mono PCM as a standard little-endian WAV — the one
+    * WAV writer (synthetic tones, resampled audio). */
   def pcmToWav(samples: Array[Short], rate: Float): Array[Byte] = {
+    val fmt = new AudioFormat(rate, 16, 1, true, false)
+    val ais = new AudioInputStream(new ByteArrayInputStream(pcmBytes(samples)), fmt,
+      samples.length.toLong)
+    val out = new ByteArrayOutputStream()
+    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
+    out.toByteArray
+  }
+
+  /** 16-bit samples as little-endian bytes (WAV's PCM layout). */
+  private def pcmBytes(samples: Array[Short]): Array[Byte] = {
     val bytes = new Array[Byte](samples.length * 2)
     var i = 0
     while (i < samples.length) {
@@ -1109,99 +1075,163 @@ object MediaCodec {
       bytes(2 * i + 1) = ((samples(i) >> 8) & 0xff).toByte
       i += 1
     }
-    val fmt = new AudioFormat(rate, 16, 1, true, false)
-    val ais = new AudioInputStream(new ByteArrayInputStream(bytes), fmt,
-      samples.length.toLong)
-    val out = new ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
+    bytes
+  }
+
+  // ---------------------------------------------------- container readers
+
+  /** One structural chunk/segment of a media container, as the
+    * byte-free projection [[chunkInventory]] emits: `fmt` ∈
+    * {png, jpeg, riff}, `kind` the chunk type / marker mnemonic /
+    * RIFF id, `marker` the JPEG marker byte (−1 elsewhere),
+    * `listType` a RIFF LIST's type fourcc ("" elsewhere), `size` the
+    * chunk's TOTAL container bytes (header + payload + CRC/padding —
+    * so Σ size over dropped rows is exactly the byte shrink a
+    * same-structure scrub produces). */
+  final case class ChunkRow(fmt: String, pos: Int, kind: String,
+                            marker: Int, listType: String, size: Long)
+
+  /** One direct child a reader found: its inventory row and its bytes
+    * `[at, end)` in the payload — header included, RIFF pad byte
+    * excluded, clamped to the enclosing list when read tolerantly. */
+  private final case class Child(row: ChunkRow, at: Int, end: Int)
+
+  /** PNG: every chunk after the 8-byte signature (size = 12 + len). */
+  private def pngChunks(payload: Array[Byte]): Vector[Child] = {
+    val out = Vector.newBuilder[Child]
+    var p = 8; var i = 0
+    while (p + 12 <= payload.length) {
+      val len = ((payload(p) & 0xff) << 24) | ((payload(p + 1) & 0xff) << 16) |
+        ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
+      val end = p + 12L + len
+      if (len < 0 || end > payload.length) throw new IllegalArgumentException("bad PNG chunk")
+      out += Child(ChunkRow("png", i, new String(payload, p + 4, 4, "US-ASCII"), -1, "",
+        12L + len), p, end.toInt)
+      p = end.toInt; i += 1
+    }
+    out.result()
+  }
+
+  /** JPEG: every marker segment after SOI up to and including SOS, whose
+    * size extends to EOF — the entropy-coded stream belongs to it. */
+  private def jpegSegments(payload: Array[Byte]): Vector[Child] = {
+    val out = Vector.newBuilder[Child]
+    var p = 2; var i = 0; var done = false
+    while (!done && p + 2 <= payload.length) {
+      if ((payload(p) & 0xff) != 0xFF) throw new IllegalArgumentException("bad JPEG segment")
+      val marker = payload(p + 1) & 0xff
+      done = marker == 0xDA
+      val size =
+        if (done) payload.length - p
+        else if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD7)) 2 // standalone
+        else {
+          if (p + 4 > payload.length)
+            throw new IllegalArgumentException("truncated JPEG segment")
+          val len = ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
+          if (len < 2 || p + 2L + len > payload.length)
+            throw new IllegalArgumentException("bad JPEG segment length")
+          2 + len
+        }
+      out += Child(ChunkRow("jpeg", i, if (done) "SOS" else f"m$marker%02X", marker, "",
+        size.toLong), p, p + size)
+      p += size; i += 1
+    }
+    if (!done) throw new IllegalArgumentException("JPEG without SOS")
+    out.result()
+  }
+
+  /** RIFF: the direct children of the list body `[from, until)`. A child
+    * whose size runs past `until` throws when `strict`, and is clamped
+    * to `until` (ending the list) otherwise. */
+  private def riffChildren(payload: Array[Byte], from: Int, until: Int,
+                           strict: Boolean, depth: Int): Vector[Child] = {
+    // real AVI nests LISTs ~3 deep; a crafted payload of back-to-back
+    // LIST headers would otherwise recurse once per level and throw
+    // StackOverflowError — an Error no quarantine catch intercepts.
+    // Bound the depth so malformed nesting stays an Exception.
+    if (depth > 32)
+      throw new IllegalArgumentException("RIFF list nesting too deep")
+    val out = Vector.newBuilder[Child]
+    var p = from.toLong; var i = 0
+    while (p + 8 <= until) {
+      val at = p.toInt
+      val size = readLe32(payload, at + 4).toInt
+      // a size whose u32 wraps negative would walk p BACKWARD and spin
+      // forever — malformed container
+      if (size < 0) throw new IllegalArgumentException(s"bad RIFF chunk size $size")
+      val dataEnd = at + 8L + size
+      if (strict && dataEnd > until) throw new IllegalArgumentException("truncated RIFF chunk")
+      val kind = new String(payload, at, 4, "US-ASCII")
+      val listType =
+        if (kind == "LIST" && size >= 4) new String(payload, at + 8, 4, "US-ASCII") else ""
+      out += Child(ChunkRow("riff", i, kind, -1, listType, 8L + size + size % 2), at,
+        math.min(dataEnd, until.toLong).toInt)
+      p = dataEnd + size % 2; i += 1
+    }
+    out.result()
+  }
+
+  /** A sniffed container's top-level children, read strictly. */
+  private def topLevel(payload: Array[Byte], fmt: String): Vector[Child] = fmt match {
+    case "png" => pngChunks(payload)
+    case "jpeg" => jpegSegments(payload)
+    case "riff" => riffChildren(payload, 12, payload.length, strict = true, depth = 0)
+    case _ => throw new IllegalArgumentException("unrecognized container")
+  }
+
+  /** The byte scrub's keep rule over one child ([[Media.scrubKeep]] is
+    * its Column twin). PNG: CRITICAL chunks (bit 5 of the first type
+    * byte clear — IHDR, PLTE, IDAT, IEND) plus `tRNS` (ancillary but
+    * render-affecting); every other ancillary chunk — tEXt/iTXt/zTXt
+    * (author, copyright), eXIf (GPS), tIME, pHYs, iCCP, … — drops.
+    * Criticality reads the RAW type byte: the decoded `kind` has lost
+    * bit 5 for bytes >= 0x80. JPEG: APPn (0xE0–0xEF — EXIF lives in
+    * APP1, thumbnails and editor fingerprints in the others; JFIF's
+    * APP0 too, decoders don't need it) and COM (0xFE) drop. RIFF:
+    * `LIST INFO` (author/copyright/software fields), `JUNK` and `id3 `
+    * drop. */
+  private def keeps(payload: Array[Byte], c: Child): Boolean = c.row.fmt match {
+    case "png" => (payload(c.at + 4) & 0x20) == 0 || c.row.kind == "tRNS"
+    case "jpeg" => !((c.row.marker >= 0xE0 && c.row.marker <= 0xEF) || c.row.marker == 0xFE)
+    case _ => !(c.row.kind == "JUNK" || c.row.kind == "id3 " || c.row.listType == "INFO")
   }
 
   // ------------------------------------------------------ metadata strip
 
   /** Byte-surgical metadata removal (see [[Media.scrubMetadata]]):
-    * container chunks/segments that carry METADATA are dropped; the
-    * compressed image/sample data is copied verbatim. Malformed
-    * structures return the payload unchanged (scrubbing must never
-    * corrupt — the quarantine stance of [[decode]]). */
+    * container chunks/segments that carry METADATA are dropped (the
+    * rule is [[keeps]]); the compressed image/sample data is copied
+    * verbatim. Malformed structures return the payload unchanged
+    * (scrubbing must never corrupt — the quarantine stance of
+    * [[decode]]). */
   def stripMetadata(payload: Array[Byte]): Array[Byte] =
-    try {
-      if (startsWith(payload, PngSig)) stripPng(payload)
-      else if (payload.length >= 3 && (payload(0) & 0xff) == 0xFF &&
-        (payload(1) & 0xff) == 0xD8) stripJpeg(payload)
-      else if (payload.length >= 12 &&
-        new String(payload, 0, 4, "US-ASCII") == "RIFF") stripRiff(payload)
-      else payload
+    try sniff(payload) match {
+      case "riff" => stripRiff(payload)
+      case fmt @ ("png" | "jpeg") => stripFlat(payload, fmt)
+      case _ => payload
     } catch { case _: Exception => payload }
 
-  private def startsWith(payload: Array[Byte], sig: Array[Byte]): Boolean =
-    payload.length >= sig.length && sig.indices.forall(i => payload(i) == sig(i))
-
-  /** PNG: keep CRITICAL chunks (uppercase first type letter — IHDR,
-    * PLTE, IDAT, IEND) plus `tRNS` (ancillary but render-affecting);
-    * drop every other ancillary chunk — tEXt/iTXt/zTXt (author,
-    * copyright), eXIf (GPS), tIME, pHYs, iCCP, … Per-chunk CRCs copy
-    * with their chunks, so the output is a valid PNG. */
-  private def stripPng(payload: Array[Byte]): Array[Byte] = {
+  /** PNG/JPEG: the signature, then every kept top-level child verbatim
+    * (PNG chunks carry their CRCs; JPEG's SOS row carries the
+    * entropy-coded stream), so the output is a valid file. */
+  private def stripFlat(payload: Array[Byte], fmt: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    out.write(payload, 0, 8)
-    var p = 8
-    while (p + 12 <= payload.length) {
-      val len = ((payload(p) & 0xff) << 24) | ((payload(p + 1) & 0xff) << 16) |
-        ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
-      if (len < 0 || p + 12 + len > payload.length)
-        throw new IllegalArgumentException("bad PNG chunk")
-      val tpe = new String(payload, p + 4, 4, "US-ASCII")
-      val critical = (payload(p + 4) & 0x20) == 0
-      if (critical || tpe == "tRNS") out.write(payload, p, 12 + len)
-      p += 12 + len
-    }
+    out.write(payload, 0, if (fmt == "png") 8 else 2)
+    topLevel(payload, fmt).filter(keeps(payload, _))
+      .foreach(c => out.write(payload, c.at, c.end - c.at))
     out.toByteArray
   }
 
-  /** JPEG: drop APPn (0xE0–0xEF — EXIF lives in APP1, thumbnails and
-    * editor fingerprints in the others) and COM (0xFE) segments; from
-    * SOS on, the entropy-coded stream copies verbatim. JFIF's APP0 is
-    * dropped too — decoders don't need it (spec-pinned through the
-    * real ImageIO decode). */
-  private def stripJpeg(payload: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    out.write(0xFF); out.write(0xD8)
-    var p = 2
-    var done = false
-    while (!done && p + 2 <= payload.length) {
-      if ((payload(p) & 0xff) != 0xFF)
-        throw new IllegalArgumentException("bad JPEG segment")
-      val marker = payload(p + 1) & 0xff
-      if (marker == 0xDA) { // SOS: copy the rest verbatim
-        out.write(payload, p, payload.length - p)
-        done = true
-      } else if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD7)) {
-        out.write(payload, p, 2); p += 2 // standalone markers
-      } else {
-        if (p + 4 > payload.length)
-          throw new IllegalArgumentException("truncated JPEG segment")
-        val len = ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
-        if (len < 2 || p + 2 + len > payload.length)
-          throw new IllegalArgumentException("bad JPEG segment length")
-        val drop = (marker >= 0xE0 && marker <= 0xEF) || marker == 0xFE
-        if (!drop) out.write(payload, p, 2 + len)
-        p += 2 + len
-      }
-    }
-    if (!done) throw new IllegalArgumentException("JPEG without SOS")
-    out.toByteArray
-  }
-
-  /** RIFF (WAV, AVI): drop `LIST INFO` (author/copyright/software
-    * fields), `JUNK`, and `id3 ` chunks at EVERY nesting level, and —
-    * the part a top-level-only scrub silently misses — recurse into the
-    * `movi` list and run [[stripJpeg]] on each `..dc`/`..db` MJPEG
-    * frame, because real camera MJPEG AVIs carry per-frame EXIF/GPS in
-    * APPn segments. Frame pixels are untouched (APPn never affects the
-    * entropy-coded stream), so every persisted perceptual hash stays
-    * valid; a frame that is not a parseable JPEG (some other codec)
-    * copies verbatim — scrubbing must never corrupt.
+  /** RIFF (WAV, AVI): drop `LIST INFO`, `JUNK`, and `id3 ` chunks at
+    * EVERY nesting level, and — the part a top-level-only scrub silently
+    * misses — recurse into the `movi` list and strip each `..dc`/`..db`
+    * MJPEG frame as a JPEG, because real camera MJPEG AVIs carry
+    * per-frame EXIF/GPS in APPn segments. Frame pixels are untouched
+    * (APPn never affects the entropy-coded stream), so every persisted
+    * perceptual hash stays valid; a frame that is not a parseable JPEG
+    * (some other codec) copies verbatim — scrubbing must never corrupt.
+    * Chunk ids copy as raw bytes. A LIST too short to hold its type
+    * fourcc copies as an opaque chunk.
     *
     * Because stripped frames SHRINK, the original `idx1` offsets and
     * sizes go stale; the scrub rebuilds `idx1` from the rewritten
@@ -1215,117 +1245,56 @@ object MediaCodec {
     * recover by scanning movi — which also keeps the never-grow
     * invariant ([[MediaProperties]]) unconditional. */
   private def stripRiff(payload: Array[Byte]): Array[Byte] = {
-    val isAvi = payload.length >= 12 &&
-      new String(payload, 8, 4, "US-ASCII") == "AVI "
-    // (id, flags) per original idx1 entry, in order — flags re-attach to
-    // the rebuilt index; None when the container has no idx1.
-    var origIdx: Option[Vector[(Array[Byte], Array[Byte])]] = None
+    val isAvi = new String(payload, 8, 4, "US-ASCII") == "AVI "
+    // flags per original idx1 entry, in order — they re-attach to the
+    // rebuilt index; None when the container has no idx1.
+    var origFlags: Option[Seq[Array[Byte]]] = None
     // (id, offset-from-movi-fourcc, size) per direct child of the NEW movi
     val newEntries = Vector.newBuilder[(Array[Byte], Long, Int)]
     var sawMovi = false
 
-    def isFrameId(id: String): Boolean =
-      id.length == 4 && (id.endsWith("dc") || id.endsWith("db"))
-    def looksJpeg(from: Int, size: Int): Boolean =
-      size >= 3 && (payload(from) & 0xff) == 0xFF && (payload(from + 1) & 0xff) == 0xD8
-
     /** Rewrite the children in [from, until); returns the new body. */
-    def stripChildren(from: Int, until: Int, inMovi: Boolean,
-                      topLevel: Boolean, depth: Int): Array[Byte] = {
-      if (depth > 32)
-        throw new IllegalArgumentException("RIFF list nesting too deep")
+    def strip(from: Int, until: Int, inMovi: Boolean, depth: Int): Array[Byte] = {
       val body = new ByteArrayOutputStream()
-      var p = from
-      while (p + 8 <= until) {
-        val id = new String(payload, p, 4, "US-ASCII")
-        val size = readLe32(payload, p + 4).toInt
-        if (size < 0) throw new IllegalArgumentException("bad RIFF chunk size")
-        if (p + 8 + size > until)
-          throw new IllegalArgumentException("truncated RIFF chunk")
-        val total = 8 + size + (size % 2)
-        val listType =
-          if (id == "LIST" && size >= 4) new String(payload, p + 8, 4, "US-ASCII")
-          else ""
-        val drop = id == "JUNK" || id == "id3 " || listType == "INFO"
-        if (!drop) {
-          if (topLevel && isAvi && id == "idx1") {
-            // capture (id, flags) per 16-byte entry; rebuilt at the end
-            val entries = Vector.newBuilder[(Array[Byte], Array[Byte])]
-            var q = p + 8
-            while (q + 16 <= p + 8 + size) {
-              entries += ((payload.slice(q, q + 4), payload.slice(q + 4, q + 8)))
-              q += 16
-            }
-            origIdx = Some(entries.result())
-          } else if (id == "LIST") {
-            val thisIsMovi = isAvi && listType == "movi"
-            if (thisIsMovi) sawMovi = true
-            val inner = stripChildren(p + 12, p + 8 + size, thisIsMovi,
-              topLevel = false, depth + 1)
-            body.write(fourcc("LIST")); body.write(le32(inner.length + 4L))
-            body.write(payload, p + 8, 4) // list type fourcc
-            body.write(inner)
-            if ((inner.length + 4) % 2 == 1) body.write(0)
+      riffChildren(payload, from, until, strict = true, depth).filter(keeps(payload, _))
+        .foreach { c =>
+          val id = payload.slice(c.at, c.at + 4)
+          if (depth == 0 && isAvi && c.row.kind == "idx1")
+            origFlags = Some((c.at + 8 until c.end - 15 by 16).map(q => payload.slice(q + 4, q + 8)))
+          else if (c.row.listType.nonEmpty) {
+            val thisIsMovi = isAvi && c.row.listType == "movi"
+            sawMovi ||= thisIsMovi
+            body.write(chunk(id, payload.slice(c.at + 8, c.at + 12) ++
+              strip(c.at + 12, c.end, thisIsMovi, depth + 1)))
           } else {
+            val raw = payload.slice(c.at + 8, c.end)
             val data =
-              if (inMovi && isFrameId(id) && looksJpeg(p + 8, size))
-                try stripJpeg(payload.slice(p + 8, p + 8 + size))
-                catch { case _: Exception => payload.slice(p + 8, p + 8 + size) }
-              else payload.slice(p + 8, p + 8 + size)
-            if (inMovi)
-              // offset counts from the movi type fourcc: 4 (the fourcc
-              // itself) + bytes of children already written
-              newEntries += ((fourcc(id), 4L + body.size(), data.length))
-            body.write(payload, p, 4) // chunk id
-            body.write(le32(data.length.toLong))
-            body.write(data)
-            if (data.length % 2 == 1) body.write(0)
+              if (inMovi && isFrameId(c.row.kind) && sniff(raw) == "jpeg")
+                try stripFlat(raw, "jpeg") catch { case _: Exception => raw }
+              else raw
+            // offset counts from the movi type fourcc: 4 (the fourcc
+            // itself) + bytes of children already written
+            if (inMovi) newEntries += ((fourcc(c.row.kind), 4L + body.size(), data.length))
+            body.write(chunk(id, data))
           }
         }
-        p += total
-      }
       body.toByteArray
     }
 
-    val bodyBytes =
-      stripChildren(12, payload.length, inMovi = false, topLevel = true, 0)
-    val out = new ByteArrayOutputStream()
+    val bodyBytes = strip(12, payload.length, inMovi = false, depth = 0)
     val entries = newEntries.result()
-    val idx1 = origIdx match {
-      case Some(orig) if sawMovi && orig.length == entries.length =>
-        // same chunk sequence as the original movi (the scrub never drops
-        // a movi child), so order pairing of the original flags is exact
-        val b = new ByteArrayOutputStream()
-        entries.zipWithIndex.foreach { case ((id, off, sz), i) =>
-          b.write(id); b.write(orig(i)._2)
-          b.write(le32(off)); b.write(le32(sz.toLong))
-        }
-        val ib = b.toByteArray
-        fourcc("idx1") ++ le32(ib.length.toLong) ++ ib
+    val idx1 = origFlags match {
+      case Some(flags) if sawMovi && flags.length == entries.length =>
+        chunk("idx1", entries.zip(flags).flatMap { case ((id, off, sz), f) =>
+          id ++ f ++ le32(off) ++ le32(sz.toLong) }.toArray)
       case _ => Array.emptyByteArray
     }
-    out.write(fourcc("RIFF"))
-    out.write(le32(bodyBytes.length + 4L + idx1.length))
-    out.write(payload, 8, 4) // form type (WAVE / AVI )
-    out.write(bodyBytes)
-    out.write(idx1)
-    out.toByteArray
+    chunk(payload.slice(0, 4), payload.slice(8, 12) ++ bodyBytes ++ idx1)
   }
 
   // ------------------------------------------------ container inventory
 
-  /** One structural chunk/segment of a media container, as the
-    * byte-free projection [[chunkInventory]] emits: `fmt` ∈
-    * {png, jpeg, riff}, `kind` the chunk type / marker mnemonic /
-    * RIFF id, `marker` the JPEG marker byte (−1 elsewhere),
-    * `listType` a RIFF LIST's type fourcc ("" elsewhere), `size` the
-    * chunk's TOTAL container bytes (header + payload + CRC/padding —
-    * so Σ size over dropped rows is exactly the byte shrink a
-    * same-structure scrub produces). */
-  final case class ChunkRow(fmt: String, pos: Int, kind: String,
-                            marker: Int, listType: String, size: Long)
-
-  /** Walk a container's TOP-LEVEL structure into [[ChunkRow]]s — the
+  /** A container's TOP-LEVEL structure as [[ChunkRow]]s — the
     * inventory [[Media.scrubKeep]] decides over. PNG: every chunk
     * (size = 12 + len). JPEG: every marker segment up to and including
     * SOS (whose size extends to EOF — the entropy stream copies
@@ -1335,64 +1304,11 @@ object MediaCodec {
     * a kept LIST in place, which the top-level inventory sees only as
     * that LIST's size; `MediaScrubSpec`'s byte-tie therefore compares
     * kind sequences for RIFF and full rows for PNG/JPEG). Malformed
-    * payloads throw — inventory is a diagnostic tool; the scrub's own
-    * quarantine stance lives in [[stripMetadata]]. */
-  def chunkInventory(payload: Array[Byte]): Seq[ChunkRow] = {
-    val rows = Vector.newBuilder[ChunkRow]
-    if (startsWith(payload, PngSig)) {
-      var p = 8; var i = 0
-      while (p + 12 <= payload.length) {
-        val len = ((payload(p) & 0xff) << 24) | ((payload(p + 1) & 0xff) << 16) |
-          ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
-        if (len < 0 || p + 12 + len > payload.length)
-          throw new IllegalArgumentException("bad PNG chunk")
-        rows += ChunkRow("png", i, new String(payload, p + 4, 4, "US-ASCII"),
-          -1, "", 12L + len)
-        p += 12 + len; i += 1
-      }
-    } else if (payload.length >= 3 && (payload(0) & 0xff) == 0xFF &&
-      (payload(1) & 0xff) == 0xD8) {
-      var p = 2; var i = 0; var done = false
-      while (!done && p + 2 <= payload.length) {
-        if ((payload(p) & 0xff) != 0xFF)
-          throw new IllegalArgumentException("bad JPEG segment")
-        val marker = payload(p + 1) & 0xff
-        if (marker == 0xDA) {
-          rows += ChunkRow("jpeg", i, "SOS", marker, "",
-            (payload.length - p).toLong)
-          done = true
-        } else if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD7)) {
-          rows += ChunkRow("jpeg", i, f"m$marker%02X", marker, "", 2L)
-          p += 2; i += 1
-        } else {
-          if (p + 4 > payload.length)
-            throw new IllegalArgumentException("truncated JPEG segment")
-          val len = ((payload(p + 2) & 0xff) << 8) | (payload(p + 3) & 0xff)
-          if (len < 2 || p + 2 + len > payload.length)
-            throw new IllegalArgumentException("bad JPEG segment length")
-          rows += ChunkRow("jpeg", i, f"m$marker%02X", marker, "", 2L + len)
-          p += 2 + len; i += 1
-        }
-      }
-      if (!done) throw new IllegalArgumentException("JPEG without SOS")
-    } else if (payload.length >= 12 &&
-      new String(payload, 0, 4, "US-ASCII") == "RIFF") {
-      var p = 12; var i = 0
-      while (p + 8 <= payload.length) {
-        val id = new String(payload, p, 4, "US-ASCII")
-        val size = readLe32(payload, p + 4).toInt
-        if (size < 0 || p + 8 + size > payload.length)
-          throw new IllegalArgumentException("bad RIFF chunk")
-        val listType =
-          if (id == "LIST" && size >= 4) new String(payload, p + 8, 4, "US-ASCII")
-          else ""
-        val total = 8L + size + (size % 2)
-        rows += ChunkRow("riff", i, id, -1, listType, total)
-        p += total.toInt; i += 1
-      }
-    } else throw new IllegalArgumentException("unrecognized container")
-    rows.result()
-  }
+    * payloads throw `IllegalArgumentException` — inventory is a
+    * diagnostic tool; the scrub's own quarantine stance lives in
+    * [[stripMetadata]]. */
+  def chunkInventory(payload: Array[Byte]): Seq[ChunkRow] =
+    topLevel(payload, sniff(payload)).map(_.row)
 
   // ---- deterministic metadata PLANTERS (spec/query fixtures) ----------
 
@@ -1596,6 +1512,19 @@ object MediaCodec {
     acc
   }
 
+  /** Bilinear rescale of a grayscale raster to `w`×`h`. */
+  private def rescale(r: ImageRaster, w: Int, h: Int): BufferedImage = {
+    val src = new BufferedImage(r.width, r.height, BufferedImage.TYPE_BYTE_GRAY)
+    System.arraycopy(r.pixels, 0, pixels(src), 0, r.pixels.length)
+    val dst = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+    val g2 = dst.createGraphics()
+    g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+    g2.drawImage(src, 0, 0, w, h, null)
+    g2.dispose()
+    dst
+  }
+
   /** Resize. Images: bilinear `BufferedImage` rescale, re-encoded as
     * PNG. Video: every MJPEG frame bilinear-rescaled and the AVI
     * container rebuilt at the new dimensions (same clock, same frame
@@ -1603,29 +1532,15 @@ object MediaCodec {
     * (output size tracks the requested dimensions like a real bitmap
     * would) — [[Media.resized]] only exercises the image path. */
   def resize(decoded: Decoded, w: Int, h: Int): Array[Byte] = decoded match {
-    case r: ImageRaster =>
-      val dst = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-      val g2 = dst.createGraphics()
-      g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-      g2.drawImage(grayImage(r), 0, 0, w, h, null)
-      g2.dispose()
-      encodePng(dst)
+    case r: ImageRaster => encode(rescale(r, w, h), "png")
     case VideoMjpeg(mpf, frames) =>
       aviBytes(frames.toSeq.map { j =>
         val src = frameRaster(j).getOrElse(ImageRaster(1, 1, Array[Byte](0)))
-        val dst = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-        val g2 = dst.createGraphics()
-        g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g2.drawImage(grayImage(src), 0, 0, w, h, null)
-        g2.dispose()
-        encodeJpeg(dst)
+        encode(rescale(src, w, h), "jpg")
       }, w, h, mpf)
     case other =>
       val src = other match {
-        case AudioPcm(_, samples) => samples.flatMap(s =>
-          Array((s & 0xff).toByte, ((s >> 8) & 0xff).toByte))
+        case AudioPcm(_, samples) => pcmBytes(samples)
         case Opaque(bytes) => bytes
         case _ => Array.empty[Byte]
       }
@@ -1650,13 +1565,7 @@ object MediaCodec {
     * images dedup via dHash, audio/video via the embed path. */
   def dHash64(decoded: Decoded): Option[Long] = decoded match {
     case r: ImageRaster =>
-      val dst = new BufferedImage(9, 8, BufferedImage.TYPE_BYTE_GRAY)
-      val g2 = dst.createGraphics()
-      g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-      g2.drawImage(grayImage(r), 0, 0, 9, 8, null)
-      g2.dispose()
-      val px = dst.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+      val px = pixels(rescale(r, 9, 8))
       var bits = 0L
       var y = 0
       while (y < 8) {
@@ -1693,15 +1602,7 @@ object MediaCodec {
         frames(idx)
       case AudioPcm(rate, samples) if samples.nonEmpty =>
         val idx = ((offsetMs * rate / 1000).toLong).min(samples.length - 1L).max(0L).toInt
-        val out = new Array[Byte](math.min(8, (samples.length - idx) * 2))
-        var i = 0
-        while (i < out.length / 2) {
-          val s = samples(idx + i)
-          out(2 * i) = (s & 0xff).toByte
-          out(2 * i + 1) = ((s >> 8) & 0xff).toByte
-          i += 1
-        }
-        out
+        pcmBytes(samples.slice(idx, idx + 4))
       case _ =>
         val start = ((offsetMs % math.max(payload.length, 1)).toInt)
           .min(math.max(payload.length - 8, 0))

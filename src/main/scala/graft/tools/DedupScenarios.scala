@@ -299,7 +299,7 @@ object DedupScenarios {
     val clustered = copiesOf(documents(spark, p), 20)
     val n = clustered.count()
     println(s"[webcorpus] clustered corpus: $n docs " +
-      "(20 copies — every doc in a 20-strong near-dup class)")
+      "(20 copies -- every doc in a 20-strong near-dup class)")
     rm.stage(s"pairs + CC + best-quality election ($n docs)") {
       val pairs = Dedup.nearDuplicates(clustered, col("doc_id"), col("text"), 0.8, fastCfg)
       noop(Dedup.bestQualityCanon(pairs, col("d1"), col("d2"),

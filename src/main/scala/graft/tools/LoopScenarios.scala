@@ -55,7 +55,7 @@ object LoopScenarios {
     rm.stage("triangles") {
       val agg = Graph.triangleCounts(edges, col("src"), col("dst"))
         .agg(sum("n_tri"), max("deg"), avg("lcc")).head
-      println(f"[graph]   Σtri/3 = ${agg.getLong(0) / 3}%,d triangles, " +
+      println(f"[graph]   sum(tri)/3 = ${agg.getLong(0) / 3}%,d triangles, " +
         f"max deg = ${agg.getLong(1)}, mean lcc = ${agg.getDouble(2)}%.6f")
     }
     rm.stage("label_prop(3)")(

@@ -67,7 +67,7 @@ object MediaScenarios {
     rm.stage(s"banding FLOODED: $flood-row hot value, cap 1000") {
       val pairs = Media.phashNearDupPairsFromHashes(flooded, 3, 1000L)
       println(s"[media]   pairs = ${"%,d".format(pairs.count())} " +
-        "(flood bucket contributes ZERO — capped, not 1.25G pairs)")
+        "(flood bucket contributes ZERO -- capped, not 1.25G pairs)")
     }
     rm.stage("band audit: flood buckets named") {
       val a = Media.phashBandAuditFromHashes(flooded, 3, 1000L)
@@ -110,7 +110,7 @@ object MediaScenarios {
     }
     println(s"[mediacap] real solid-thumbnail dHashes: " +
       solidHashes.map(h => f"0x$h%x").distinct.mkString(", ") +
-      s" (max popcount ${solidHashes.map(java.lang.Long.bitCount).max} — the cluster sits on 0)")
+      s" (max popcount ${solidHashes.map(java.lang.Long.bitCount).max} -- the cluster sits on 0)")
 
     // hot rows: dHash 0 with up to 2 hash-random bits; background random
     def bit(tag: String) = expr(s"shiftleft(1L, cast(pmod(xxhash64('$tag', id), 64L) as int))")
@@ -122,7 +122,7 @@ object MediaScenarios {
         .otherwise(xxhash64(lit("phash"), col("id"))).as("phash"))
       .persist()
     println(s"[mediacap] ${"%,d".format(n)} hashes, $hotPct% in the " +
-      s"solid cluster (hamming <= 2 of 0x0) — hot in ALL 4 bands at once")
+      s"solid cluster (hamming <= 2 of 0x0) -- hot in ALL 4 bands at once")
     // the production banding at radius 3: 4 bands x 16 bits
     val bands = hashes.select(col("media_id"), posexplode(array((0 until 4).map(b =>
       shiftright(col("phash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))

@@ -294,7 +294,7 @@ object TableScenarios {
       say(f"frontier urls = ${r.getLong(0)}%,d  refs = ${r.getLong(1)}%,d")
     }
     rm.stage("frontier_budget(16)")(
-      say(f"budgeted urls = ${Frontier.hostBudget(expanded, 16).count()}%,d (≤ 16 × 1000 hosts)"))
+      say(f"budgeted urls = ${Frontier.hostBudget(expanded, 16).count()}%,d (<= 16 x 1000 hosts)"))
     // expand → robots gate → politeness budget: every host disallows
     // /p1* and /p2*, every third host sets a Crawl-delay, so the budget
     // exercises both the default k and the delay-derived cap
@@ -308,7 +308,7 @@ object TableScenarios {
       val r = Frontier.politenessBudget(gated.filter(col("allowed")).drop("host", "allowed"),
           robots, col("host"), col("txt"), roundSeconds = 60L, k = 16)
         .agg(count(lit(1)), count_distinct(col("host")), max("rk")).head
-      say(f"admitted = ${r.getLong(0)}%,d over ${r.getLong(1)}%,d hosts, max rk = ${r.getLong(2)}%,d (≤ 16)")
+      say(f"admitted = ${r.getLong(0)}%,d over ${r.getLong(1)}%,d hosts, max rk = ${r.getLong(2)}%,d (<= 16)")
     }
 
     // the salted two-level target-side top-k must stay funnel-free as

@@ -169,6 +169,75 @@ object MediaProperties extends Properties("graft.multimodal") {
       java.util.Arrays.equals(out, malformed)
     }
 
+  // ---- hostile mutations of REAL containers ----------------------------
+  // Byte soup almost never carries a valid signature, so the walkers
+  // behind the signatures only meet malformed input here: a real PNG,
+  // JPEG, WAV, AVI or metadata-planted AVI, truncated at a random offset
+  // or with one declared length overwritten by an extreme or random value
+  // (lengths near 2^31 are the ones that overflow an Int bounds check).
+
+  private def plantedAvi(seed: Long): Array[Byte] =
+    MediaCodec.decode(MediaCodec.synthAvi(seed, 24, 16, 120L)) match {
+      case MediaCodec.VideoMjpeg(mpf, fs) => MediaCodec.withRiffInfo(
+        MediaCodec.aviBytes(fs.toSeq.map(MediaCodec.withJpegComment(_, s"cam-$seed")),
+          24, 16, mpf), s"artist-$seed")
+      case other => sys.error(s"expected MJPEG: $other")
+    }
+
+  /** (offset, width, littleEndian) of every length field the container
+    * declares: PNG and JPEG from the inventory's top-level rows, RIFF at
+    * the form header and after every known chunk id at any depth. */
+  private def lengthFields(p: Array[Byte]): Seq[(Int, Int, Boolean)] = {
+    val rows = MediaCodec.chunkInventory(p)
+    val starts = rows.scanLeft(0L)(_ + _.size).init.map(_.toInt)
+    rows.head.fmt match {
+      case "png" => starts.map(s => (8 + s, 4, false))
+      case "jpeg" => rows.zip(starts).filter(_._1.size > 2).map(r => (2 + r._2 + 2, 2, false))
+      case _ =>
+        val ids = Set("LIST", "avih", "strh", "strf", "00dc", "idx1", "fmt ", "data", "IART")
+        (4, 4, true) +: (12 until p.length - 8 by 2)
+          .filter(i => ids(new String(p, i, 4, "ISO-8859-1"))).map(i => (i + 4, 4, true))
+    }
+  }
+
+  private val extremeLength: Gen[Long] = Gen.frequency(
+    3 -> Gen.oneOf(0x7FFFFFF0L, 0x7FFFFFF8L, 0x7FFFFFFFL, 0x80000000L, 0xFFFFFFFFL,
+      0xFFFFL, 0L, 1L, 3L),
+    1 -> Gen.chooseNum(0L, 0xFFFFFFFFL))
+
+  private val hostileContainer: Gen[Array[Byte]] = for {
+    seed <- Gen.chooseNum(1L, 5000L)
+    base <- Gen.oneOf[Long => Array[Byte]](
+      s => MediaCodec.synthPng(s, 16, 12), jpegOf(_), s => MediaCodec.synthWav(s, 200L),
+      s => MediaCodec.synthAvi(s, 24, 16, 120L), plantedAvi(_))
+    truncate <- Gen.oneOf(true, false)
+    at <- Gen.chooseNum(0, Int.MaxValue)
+    value <- extremeLength
+  } yield {
+    val clean = base(seed)
+    if (truncate) clean.take(at % clean.length)
+    else {
+      val fields = lengthFields(clean)
+      val (off, width, le) = fields(at % fields.length)
+      val out = clean.clone()
+      (0 until width).foreach { k =>
+        val shift = 8 * (if (le) k else width - 1 - k)
+        out(off + k) = (value >>> shift).toByte
+      }
+      out
+    }
+  }
+
+  property("mutated real containers: decode/strip never throw, inventory rejects cleanly") =
+    Prop.forAll(hostileContainer) { payload =>
+      val decoded = MediaCodec.decode(payload)
+      val stripped = MediaCodec.stripMetadata(payload)
+      val inventory =
+        try { MediaCodec.chunkInventory(payload); true }
+        catch { case _: IllegalArgumentException => true }
+      decoded.isInstanceOf[MediaCodec.Decoded] && stripped.length <= payload.length && inventory
+    }
+
   property("decode-identity invariant holds on every scrubbed payload shape") =
     Prop.forAll(Gen.chooseNum(1L, 5000L), Gen.chooseNum(0, 3)) { (seed, shape) =>
       val payload = shape match {

@@ -158,6 +158,21 @@ class MediaScrubSpec extends SparkSpec {
     assert(MediaCodec.stripMetadata(badPng).toSeq === badPng.toSeq)
   }
 
+  test("a truncated last RIFF chunk: decode tolerates it, scrub and inventory reject it") {
+    val full = MediaCodec.synthAvi(3L, 16, 16, 200L)
+    val cut = full.dropRight(50) // lands inside the trailing idx1
+    val fullFrames = MediaCodec.decode(full) match {
+      case v: MediaCodec.VideoMjpeg => v.frames.map(_.toSeq).toSeq
+      case other => fail(s"expected MJPEG: $other")
+    }
+    MediaCodec.decode(cut) match {
+      case v: MediaCodec.VideoMjpeg => assert(v.frames.map(_.toSeq).toSeq === fullFrames)
+      case other => fail(s"a cut idx1 must not cost the frames before it: $other")
+    }
+    assert(MediaCodec.stripMetadata(cut).toSeq === cut.toSeq)
+    intercept[IllegalArgumentException](MediaCodec.chunkInventory(cut))
+  }
+
   test("scrubMetadata/scrubMetadataStats: per-row rewrite with audit trail") {
     val rows = Seq(
       MediaRow(1L, "image",
